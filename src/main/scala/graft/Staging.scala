@@ -2,27 +2,29 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialization cache for derived relations that a plan would otherwise
-  * recompute several times (a self-joined subtree is evaluated once PER
-  * REFERENCE in Spark — the minhash signature table appears 4× in its
-  * plan). Writes the relation once to a tmpdir parquet keyed by the SOURCE
-  * file's fingerprint (so regenerated testdata can never hit a stale
-  * copy — same scheme as the staged stream dir and the bucketed tables)
-  * and serves every subsequent reference from the columnar file.
+/** The engine's one artifact store. Every staged artifact — derived
+  * relations ([[materialize]]), publish-once sink artifacts
+  * (`ops.Sinks`), bucketed tables (`ops.Joins.ensureBucketed`), stream
+  * source copies and splits (`streaming.Streams.stageDir`/`stageDirSplit`)
+  * — is written through [[publish]], so crash safety, the lost-race
+  * policy, the staleness token and reclamation are argued once, here.
   *
-  * This is the production shape too: at 100 TB, dedup signatures are
-  * materialized incrementally next to the corpus, not recomputed per run.
-  * The `_SUCCESS` marker gates reuse, so a write killed halfway is redone.
+  * A self-joined subtree is evaluated once PER REFERENCE in Spark (the
+  * minhash signature table appears 4× in its plan), and a sink layout is a
+  * full rewrite of its source: both are built once per corpus version and
+  * served from the published copy after that. This is the production
+  * shape too: at 100 TB, dedup signatures are materialized incrementally
+  * next to the corpus, not recomputed per run.
   */
 object Staging {
-  import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+  import java.nio.file.{Files, FileSystemException, Path, Paths,
+    StandardCopyOption}
+  import scala.util.control.NonFatal
 
   /** Monotone count of staged-artifact BUILDS (cache misses) across every
-    * staging layer in the engine — derived relations here, the stream
-    * source copies/splits in Streams.stageDir/stageDirSplit, the
-    * publish-once sink artifacts in Sinks, the bucketed tables in Joins.
-    * Degraded reads (staged copy unreadable → uncached plan) count too:
-    * the caller did not get a warm staged read. Bench samples deltas
+    * artifact in the engine: [[publish]] increments it once per build it
+    * runs. Degraded reads (staged copy unreadable → uncached plan) count
+    * too: the caller did not get a warm staged read. Bench samples deltas
     * around each timed key and reports per-key `staged_hit` booleans, so
     * a cross-round bench diff can tell a warm-read measurement from one
     * that silently paid an artifact build (the r10 driver-vs-builder
@@ -32,35 +34,280 @@ object Staging {
   /** Set `-Dgraft.staging=false` to bypass materialization: plan-only
     * consumers (graft.Explain, PlanAuditSpec) use it so they see the full
     * computation subtree instead of a staged-file scan, and pay no
-    * execution cost for a plan. */
+    * execution cost for a plan. Sinks, bucketed tables and stream copies
+    * are published regardless: their files ARE the operator. */
   def enabled: Boolean =
     sys.props.getOrElse("graft.staging", "true").toBoolean
 
-  /** Engine-wide staging FORMAT version, part of EVERY staged-artifact
-    * key (derived relations here, split stream dirs in Streams). Bump it
-    * whenever any staging writer changes what its bytes MEAN — a source
+  /** Engine-wide staging FORMAT version, part of EVERY artifact key. Bump
+    * it whenever any writer changes what its bytes MEAN — a source
     * fingerprint can't see that (the source didn't change, the staging
     * code did), and r9 shipped a stale-artifact bug exactly because a
     * writer's semantics changed under an unversioned key (µs-as-long
     * split files read as nanos). One constant, so a semantic change
-    * anywhere invalidates everything at once instead of case-by-case.
-    * Old-version artifacts are swept as orphans (see [[sweepOrphans]]). */
-  val formatVersion = 2
+    * anywhere invalidates everything at once. v3: `_SUCCESS` carries the
+    * publish nonce that readers key their memos on. Old-version artifacts
+    * are reclaimed by [[sweep]]. */
+  val formatVersion = 3
   private[graft] def versionTag(v: Int = formatVersion) = s"v$v"
 
-  /** The staged-artifact directory for (source, name) under version `v` —
+  /** Artifact roots: `graft_`-prefixed dirs of `java.io.tmpdir`, resolved
+    * on every call (a runner may repoint the tmpdir after start-up). */
+  val DerivedRoot = "graft_derived"
+  val SinkRoot = "graft_sink"
+  val StreamSrcRoot = "graft_stream_src"
+  val BucketedRoot = "graft_bucketed"
+  private val roots = Seq(DerivedRoot, SinkRoot, StreamSrcRoot, BucketedRoot)
+  private[graft] def rootDir(root: String): Path =
+    Paths.get(sys.props("java.io.tmpdir"), root)
+
+  /** What an artifact is keyed by. `fingerprint` names the input
+    * generation (a corpus table's [[Tables.sourceFingerprint]], or an
+    * input artifact's publish nonce), so regenerated input always lands
+    * in a fresh dir and can never be served from a stale copy. `source` is
+    * the corpus table the artifact ultimately derives from; its tree
+    * decides liveness in [[sweep]]. */
+  final case class Key(source: String, fingerprint: String, name: String) {
+    private[graft] def dirName(v: Int = formatVersion): String =
+      s"${fingerprint}_${name}_${versionTag(v)}"
+  }
+  object Key {
+    /** An artifact built from corpus table `source`. */
+    def apply(source: String, name: String): Key =
+      Key(source, Tables.sourceFingerprint(source), name)
+
+    /** An artifact built from the published artifact `input` (a delete
+      * applied to a store, a vacuum of a littered store): keyed by the
+      * input's nonce, so a rebuilt input re-keys — and therefore rebuilds —
+      * every downstream artifact, even within the same millisecond. */
+    def derived(source: String, input: String, name: String): Key =
+      Key(source, artifactFingerprint(Paths.get(input)).getOrElse(
+        throw new IllegalStateException(s"$input is not a published artifact")),
+        name)
+  }
+
+  /** The nonce [[publish]] stamped into `dir/_SUCCESS`; None unless `dir`
+    * is a complete artifact. This is the ONE completeness test and the ONE
+    * staleness token: readers memoize on it (`Tables.memoizedSourceRead`)
+    * and derived keys embed it. */
+  private[graft] def nonce(dir: Path): Option[String] =
+    try Some(new String(Files.readAllBytes(dir.resolve("_SUCCESS")),
+      java.nio.charset.StandardCharsets.UTF_8)).filter(_.nonEmpty)
+    catch { case NonFatal(_) => None }
+
+  private def artifactFingerprint(dir: Path): Option[String] =
+    nonce(dir).map(Tables.fnv48)
+
+  /** Age guards. A crash leftover is a dir in place WITHOUT a nonce
+    * (only a pre-protocol writer or an interrupted eviction leaves one);
+    * a temp's mtime is set when its WRITE STARTS, so a large artifact
+    * still being written must not be reaped by a sibling's sweep — temps
+    * are invisible to readers either way, so patience costs nothing; a
+    * retired artifact may still be open in a long-running reader. */
+  private[graft] val CrashAgeMs = 60000L
+  private[graft] val TempAgeMs = 21600000L
+  private[graft] val RetiredAgeMs = 3600000L
+  /** How long a lost race waits for the winner's `_SUCCESS`. */
+  private[graft] val LostRaceWaitMs = 30000L
+
+  /** Per-artifact locks: two threads publishing DIFFERENT artifacts
+    * proceed concurrently (a build can be a minutes-long CC fixpoint or
+    * Lloyd pass); two threads racing the SAME artifact build it once.
+    * Entries are tiny monitors over a bounded key space, never evicted. */
+  private val dirLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val sweptRoots =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Publish-once: return the complete artifact for `key` under `root`,
+    * building it with `write` only if no complete copy exists.
+    *  1. `write` fills `<key>.tmp-<uuid>` (it may create the dir itself);
+    *  2. a fresh nonce is stamped into its `_SUCCESS`;
+    *  3. the dir is ATOMIC_MOVEd into place — a reader sees a complete
+    *     artifact or nothing, and a crash at any step leaves only a temp;
+    *  4. [[buildCount]] is incremented once per build;
+    *  5. a lost race (a complete copy appeared first) discards the temp
+    *     and serves the winner — see [[commit]];
+    *  6. [[sweep]] runs over `root` after each build, and once per root
+    *     per JVM so a format bump reclaims the old copies even when the
+    *     new ones are already built.
+    * A failing `write` propagates; its temp is removed. */
+  def publish(root: String, key: Key)(write: Path => Unit): Path = {
+    val dir = rootDir(root).resolve(key.dirName())
+    if (sweptRoots.add(dir.getParent.toString)) sweep(dir.getParent, key)
+    dirLocks.computeIfAbsent(dir.toString, _ => new Object).synchronized {
+      if (nonce(dir).isEmpty) {
+        val tmp = tmpFor(dir)
+        buildCount.incrementAndGet()
+        try { write(tmp); stamp(tmp); commit(tmp, dir) }
+        finally { // no-op once moved into place
+          try deleteRecursively(tmp) catch { case NonFatal(_) => () }
+        }
+        sweep(dir.getParent, key)
+      }
+    }
+    dir
+  }
+
+  private[graft] def tmpFor(dir: Path): Path =
+    Paths.get(dir.toString + ".tmp-" + java.util.UUID.randomUUID)
+
+  /** Step 2: the nonce goes into `_SUCCESS` (Spark writes it zero-byte;
+    * multi-write builders leave none at the root). Hadoop's local-FS
+    * checksum twin no longer matches, so it is dropped — nothing reads
+    * `_SUCCESS` through ChecksumFileSystem and trips on a stale crc. */
+  private[graft] def stamp(tmp: Path): Unit = {
+    Files.createDirectories(tmp)
+    Files.write(tmp.resolve("_SUCCESS"), java.util.UUID.randomUUID.toString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.deleteIfExists(tmp.resolve("._SUCCESS.crc"))
+  }
+
+  /** Step 3 plus the lost-race policy. A rename onto a non-empty dir
+    * fails (Linux JDKs report it as a plain FileSystemException, not
+    * DirectoryNotEmptyException); the destination is then:
+    *  - complete (nonce present): a racing JVM won — use its copy;
+    *  - gone: it vanished under us — move again;
+    *  - incomplete and older than [[CrashAgeMs]]: a crash leftover —
+    *    evict it and move again;
+    *  - incomplete and fresh: possibly mid-eviction by another JVM —
+    *    wait for it, at most `waitMs`, then fail with a named
+    *    IllegalStateException (never delete files a fresh writer owns). */
+  private[graft] def commit(tmp: Path, dir: Path,
+                            waitMs: Long = LostRaceWaitMs): Unit = {
+    val deadline = System.currentTimeMillis() + waitMs
+    var done = false
+    while (!done) {
+      try { Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE); done = true }
+      catch {
+        case e: java.nio.file.AtomicMoveNotSupportedException => throw e
+        case _: FileSystemException if Files.exists(dir) =>
+          if (nonce(dir).isDefined) done = true
+          else lastModified(dir) match {
+            case None => ()
+            case Some(t) if t < System.currentTimeMillis() - CrashAgeMs =>
+              evict(dir)
+            case Some(_) if System.currentTimeMillis() > deadline =>
+              throw new IllegalStateException(s"staged artifact $dir " +
+                s"contended and never complete after $waitMs ms")
+            case Some(_) => Thread.sleep(100L)
+          }
+      }
+    }
+  }
+
+  /** The one sweep policy for a root. Removes, past its age guard:
+    *  - `.tmp-` dirs: crashed writers, lost races, interrupted evictions
+    *    ([[TempAgeMs]]);
+    *  - retired FORMATS: names without the current `_v<N>` tag;
+    *  - retired NAMES: [[retiredArtifactNames]];
+    *  - retired SOURCES: a fingerprint prefix matching neither a live
+    *    corpus table of `key.source`'s tree ([[liveSourceFingerprints]])
+    *    nor a published artifact in the root (derived-chain keys) — a
+    *    testdata regeneration strands full copies that still carry the
+    *    current format tag, and only liveness identifies them. An empty
+    *    live set means liveness could NOT be established: no retired-source
+    *    sweep then.
+    * Caveat: an artifact keyed to a live corpus OUTSIDE `key.source`'s
+    * tree (a probe's replica corpus elsewhere in tmp) looks retired from
+    * here once past the guard — such a run must tolerate a rebuild of the
+    * other tree's artifacts. Best-effort: failures are ignored. */
+  private[graft] def sweep(root: Path, key: Key): Unit =
+    try {
+      val entries = list(root)
+      val live = liveSourceFingerprints(Paths.get(key.source))
+      val published = entries.flatMap(artifactFingerprint).toSet
+      val fmt = "_" + versionTag()
+      val now = System.currentTimeMillis()
+      entries.foreach { c =>
+        val n = c.getFileName.toString
+        val fp = n.takeWhile(_ != '_')
+        val temp = n.contains(".tmp-")
+        val retired = temp || !n.endsWith(fmt) ||
+          retiredArtifactNames.exists(r => n.endsWith(s"_$r$fmt")) ||
+          (live.nonEmpty && !live(fp) && !published(fp))
+        val guard = if (temp) TempAgeMs else RetiredAgeMs
+        if (retired && lastModified(c).exists(_ < now - guard))
+          if (temp) deleteRecursively(c) else evict(c)
+      }
+    } catch { case NonFatal(_) => () }
+
+  /** Artifact NAMES no current writer produces — a renamed key leaves the
+    * old name's full copy stranded for a LIVE corpus (current format tag,
+    * live fingerprint: no other rule can see it is dead). Append here
+    * whenever a published name is renamed without a format bump. (The v3
+    * bump retired the two names listed under v2.) */
+  private[graft] val retiredArtifactNames: Seq[String] = Seq.empty
+
+  /** Fingerprints of every table file/dir the CURRENTLY-LIVE corpus
+    * generations carry: `src`'s corpus root (its grandparent — corpora
+    * lay out as <root>/<sfDir>/<table>) is listed and every immediate
+    * child of every sibling scale-factor dir is fingerprinted (the sf dirs
+    * coexist — sf0.001 tests, sf0.01 verify, sf0.1 bench — so one artifact
+    * class legitimately has one live copy per scale factor). Empty result
+    * means liveness could NOT be established — `src` itself is gone, so
+    * the tree around it proves nothing. */
+  private[graft] def liveSourceFingerprints(src: Path): Set[String] =
+    try {
+      val root = Option(src.getParent).flatMap(p => Option(p.getParent))
+      if (!Files.exists(src)) Set.empty
+      else root.filter(Files.isDirectory(_)) match {
+        case Some(r) =>
+          list(r).filter(Files.isDirectory(_)).flatMap(list).flatMap { t =>
+            try Some(Tables.sourceFingerprint(t.toString))
+            catch { case NonFatal(_) => None }
+          }.toSet
+        case None => Set(Tables.sourceFingerprint(src.toString))
+      }
+    } catch { case NonFatal(_) => Set.empty }
+
+  /** Remove every artifact keyed by `fingerprint` in every root, then
+    * TRANSITIVELY the artifacts keyed by the nonces of what was removed
+    * (the derived chain: store → delete/littered → vacuumed). Cleanup
+    * for retired synthetic corpora (a 500k-doc leg's staged trigram
+    * relation is ~1 GB; repeated probe runs must not stack copies). No
+    * age guard: the caller owns the corpus it retires. */
+  private[graft] def retire(fingerprint: String): Unit = {
+    var frontier = Set(fingerprint)
+    while (frontier.nonEmpty) {
+      val doomed = roots.flatMap(r => list(rootDir(r))).filter { c =>
+        val n = c.getFileName.toString
+        frontier.exists(fp => n.startsWith(fp + "_"))
+      }
+      frontier = doomed.flatMap(artifactFingerprint).toSet
+      doomed.foreach(evict)
+    }
+  }
+
+  /** Remove staged artifacts of `sourcePath` whose NAME starts with
+    * `namePrefix` but is not `keep` — reclamation for artifacts whose
+    * name embeds a SECOND source's fingerprint (agg_gini folds the
+    * customer-table fingerprint into an orders-keyed name): when that
+    * inner source regenerates, the new name strands the old artifact
+    * with a LIVE outer fingerprint and a CURRENT format tag, invisible
+    * to [[sweep]] (r19 ADVICE). Only current-format siblings are touched
+    * (older formats are the sweep's), with the retired age guard. */
+  private[graft] def retireSiblings(sourcePath: String, namePrefix: String,
+                                    keep: String): Unit =
+    try {
+      val fp = Tables.sourceFingerprint(sourcePath)
+      val keepDir = derivedDir(sourcePath, keep)
+      val cutoff = System.currentTimeMillis() - RetiredAgeMs
+      list(keepDir.getParent).foreach { c =>
+        val n = c.getFileName.toString
+        if (n.startsWith(s"${fp}_$namePrefix") &&
+            n.endsWith(s"_${versionTag()}") && c != keepDir &&
+            lastModified(c).exists(_ < cutoff))
+          evict(c)
+      }
+    } catch { case NonFatal(_) => () } // best-effort
+
+  /** The derived-relation dir for (source, name) under version `v` —
     * exposed so tests can pin that a version bump relocates every key
-    * (forcing a cold rebuild) while an unchanged version is byte-stable.
-    *
-    * INVARIANT: every write under the `graft_derived` root MUST take its
-    * path from this method. [[sweepOrphans]] reaps ANY entry there (older
-    * than 1h) whose name lacks the current `_v<N>` suffix — a writer that
-    * invents its own name under this root will have its artifact silently
-    * deleted as a retired-format orphan. */
+    * (forcing a cold rebuild) while an unchanged version is byte-stable. */
   private[graft] def derivedDir(sourcePath: String, name: String,
                                 v: Int = formatVersion): Path =
-    Paths.get(sys.props("java.io.tmpdir"), "graft_derived",
-      s"${Tables.sourceFingerprint(sourcePath)}_${name}_${versionTag(v)}")
+    rootDir(DerivedRoot).resolve(Key(sourcePath, name).dirName(v))
 
   def materialize(df: DataFrame, sourcePath: String, name: String): DataFrame =
     materialize(df.sparkSession, sourcePath, name)(df)
@@ -75,6 +322,9 @@ object Staging {
       build: => DataFrame): DataFrame =
     materializeWithStatus(session, sourcePath, name)(build)._1
 
+  private final case class BuildFailed(cause: Throwable)
+    extends RuntimeException(cause)
+
   /** Like the thunked `materialize`, but also reports WHERE the result
     * comes from: `._2` is true iff the returned DataFrame reads the
     * staged artifact. Callers that reclaim upstream storage once a
@@ -82,139 +332,59 @@ object Staging {
     * checkpoint) MUST key off this status, not off the artifact's
     * existence on disk — with staging disabled, or on any degraded exit,
     * the returned frame is still backed by the build's own storage even
-    * when a (possibly stale, possibly another JVM's) artifact exists. */
-  /** Per-artifact-directory locks: two threads materializing DIFFERENT
-    * artifacts on one session proceed concurrently (a build can be a
-    * minutes-long CC fixpoint or Lloyd pass — serializing every staging
-    * call in the JVM behind one of those starves unrelated queries);
-    * two threads racing the SAME artifact still build it exactly once.
-    * Entries are tiny monitor objects keyed by a bounded artifact-name
-    * space — never evicted, by design. */
-  private val dirLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
+    * when a (possibly stale, possibly another JVM's) artifact exists.
+    *
+    * A failing build is a real query error and propagates — retrying it
+    * would re-run the whole eager construction just to fail again. Any
+    * other failure (unwritable or full tmpdir, a lost race that never
+    * completed, an unreadable staged copy) degrades to the uncached plan:
+    * results are identical either way. */
   private[graft] def materializeWithStatus(
       session: SparkSession, sourcePath: String, name: String)(
       build: => DataFrame): (DataFrame, Boolean) = {
     if (!enabled) return (build, false)
-    val dir = derivedDir(sourcePath, name)
-    dirLocks.computeIfAbsent(dir.toString, _ => new Object).synchronized {
-      // Cache hit: serve the staged copy without touching `build` at all.
-      // Only a broken READ degrades to the uncached plan here.
-      try {
-        if (Files.exists(dir.resolve("_SUCCESS")))
-          // memoized (Tables.memoizedDirRead): a warm staged READ paid a
-          // ~50-100 ms listing+footer construct per reference before r21
-          return (Tables.memoizedDirRead(session, dir.toString), true)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[staging] $name staged copy unreadable (${e.getMessage}); running uncached")
-          buildCount.incrementAndGet()
-          return (build, false)
-      }
-      // Cache miss: force the build ONCE, outside the IO-degradation
-      // try. A failing build is a real query error and must propagate —
-      // retrying it from a catch handler would re-run the entire eager
-      // construction (CC fixpoint, Lloyd pass) just to fail again.
-      buildCount.incrementAndGet()
-      val df = build
-      try {
-        // Write to a private temp dir, then atomically rename into place:
-        // a concurrent JVM racing the same key either wins the rename or
-        // finds the winner's completed dir — never a half-written one,
-        // and never a delete under a reader (overwrite-in-place would
-        // first delete files another JVM's running query is scanning).
-        val tmp = Paths.get(dir.toString + ".tmp-" +
-          java.util.UUID.randomUUID.toString)
+    var built: Option[DataFrame] = None
+    try {
+      val dir = publish(DerivedRoot, Key(sourcePath, name)) { tmp =>
+        val df = try build catch { case NonFatal(e) => throw BuildFailed(e) }
+        built = Some(df)
         df.write.mode("overwrite").parquet(tmp.toString)
-        var attempts = 0
-        var done = false
-        while (!done && attempts < 3) {
-          attempts += 1
-          try { Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE); done = true }
-          catch { case _: java.nio.file.FileAlreadyExistsException |
-                       _: java.nio.file.DirectoryNotEmptyException =>
-            // Destination exists — EITHER a racing JVM completed it
-            // (gated by _SUCCESS) or it's a stale partial from a crashed
-            // pre-atomic-rename write. The exception alone can't tell
-            // them apart, so re-check the _SUCCESS gate: present → use
-            // the winner's copy; absent → evict ONLY if the dir is old.
-            // The age guard closes a TOCTOU hole: without it, JVM A's
-            // stale _SUCCESS check could run just before JVM B publishes
-            // a complete copy, and A's delete would rip files out from
-            // under B's already-planned query. A fresh mtime means
-            // "possibly just published / mid-publish" → treat as a lost
-            // race and serve the plan uncached; only genuinely old
-            // crash-leftovers (no _SUCCESS after 60 s) are evicted.
-            if (Files.exists(dir.resolve("_SUCCESS"))) {
-              deleteRecursively(tmp); done = true
-            } else if (Files.getLastModifiedTime(dir).toMillis <
-                         System.currentTimeMillis() - 60000L) {
-              deleteRecursively(dir)
-            } else {
-              deleteRecursively(tmp)
-              return (df, false)
-            }
-          }
-        }
-        if (!done) { // contended + never complete: give up on the cache
-          deleteRecursively(tmp)
-          if (!Files.exists(dir.resolve("_SUCCESS"))) return (df, false)
-        }
-        sweepOrphans(dir.getParent)
-        sweepRetiredSources(dir.getParent, Paths.get(sourcePath))
-        (Tables.memoizedDirRead(session, dir.toString), true)
-      } catch {
-        // Unwritable/full tmpdir must degrade to the slower uncached plan,
-        // not fail the query — results are identical either way. (Spark
-        // wraps IO failures in SparkException, so catch broadly.)
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[staging] $name not materialized (${e.getMessage}); running uncached")
-          (df, false)
       }
+      // memoized: a warm staged READ paid a ~50-100 ms listing+footer
+      // construct per reference before r21
+      (Tables.memoizedDirRead(session, dir.toString), true)
+    } catch {
+      case BuildFailed(e) => throw e
+      case NonFatal(e) =>
+        System.err.println(
+          s"[staging] $name not materialized (${e.getMessage}); running uncached")
+        built.map((_, false)).getOrElse {
+          buildCount.incrementAndGet() // degraded read: not a warm hit
+          (build, false)
+        }
     }
   }
 
-  /** Remove staged artifacts of `sourcePath` whose NAME starts with
-    * `namePrefix` but is not `keep` — reclamation for artifacts whose
-    * name embeds a SECOND source's fingerprint (agg_gini folds the
-    * customer-table fingerprint into an orders-keyed name): when that
-    * inner source regenerates, the new name strands the old artifact
-    * with a LIVE outer fingerprint and a CURRENT format tag, invisible
-    * to both sweepOrphans and sweepRetiredSources (r19 ADVICE). Only
-    * current-format siblings are touched (older formats are
-    * sweepOrphans' job), with the same 1h age guard so a concurrent
-    * JVM's fresh publish is never raced. */
-  private[graft] def retireSiblings(sourcePath: String, namePrefix: String,
-                                    keep: String): Unit =
-    try {
-      val parent = derivedDir(sourcePath, keep).getParent
-      if (parent == null || !Files.isDirectory(parent)) return
-      val fp = Tables.sourceFingerprint(sourcePath)
-      val keepName = s"${fp}_${keep}_${versionTag()}"
-      val cutoff = System.currentTimeMillis() - 3600000L
-      val ls = Files.list(parent)
-      try ls.forEach { c =>
-        val n = c.getFileName.toString
-        if (n.startsWith(s"${fp}_$namePrefix") &&
-            n.endsWith(s"_${versionTag()}") && n != keepName &&
-            Files.getLastModifiedTime(c).toMillis < cutoff)
-          deleteRecursively(c)
-      } finally ls.close()
-    } catch { case scala.util.control.NonFatal(_) => () } // best-effort
-
-  /** Remove every staged artifact keyed by `fingerprint` — probe cleanup
-    * for retired synthetic corpora (a 500k-doc leg's staged trigram
-    * relation is ~1 GB; repeated probe runs must not stack copies). */
-  private[graft] def retireDerived(fingerprint: String): Unit = {
-    val derived = Paths.get(sys.props("java.io.tmpdir"), "graft_derived")
-    if (Files.isDirectory(derived)) {
-      val ls = Files.list(derived)
-      try ls.filter(_.getFileName.toString.startsWith(fingerprint + "_"))
-        .forEach(p => deleteRecursively(p))
-      finally ls.close()
+  private def list(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.toArray.toSeq.map(_.asInstanceOf[Path]) finally s.close()
     }
+
+  private def lastModified(p: Path): Option[Long] =
+    try Some(Files.getLastModifiedTime(p).toMillis)
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Take `p` out of readers' sight with one rename, then delete it: a
+    * reader never sees a half-deleted artifact, and a crash mid-delete
+    * leaves only a temp for [[sweep]]. */
+  private def evict(p: Path): Unit = {
+    val tomb = tmpFor(p)
+    val moved =
+      try { Files.move(p, tomb, StandardCopyOption.ATOMIC_MOVE); true }
+      catch { case NonFatal(_) => false } // already gone
+    if (moved) deleteRecursively(tomb)
   }
 
   private[graft] def deleteRecursively(p: Path): Unit = {
@@ -224,108 +394,4 @@ object Staging {
     }
     Files.deleteIfExists(p)
   }
-
-  /** Artifact NAMES no current writer produces — renamed keys leave the
-    * old name's full-corpus copy stranded for LIVE corpora (the format
-    * tag is still current, the fingerprint is still live, so neither
-    * other sweep can touch it; only this registry knows the name is
-    * dead). Append here whenever a materialize name is renamed. */
-  private[graft] val retiredArtifactNames: Seq[String] =
-    Seq("ivf_cells16_v1",   // re-keyed ivf_cells16_lloyd1_v1 (Lloyd round)
-        "pq_codes8x16_v1")  // re-keyed pq_codes8x16_v2_lloyd1*
-
-  /** Remove `.tmp-<uuid>` staging dirs orphaned by a crashed writer or a
-    * lost race, retired-FORMAT artifacts (dirs not carrying the current
-    * [[formatVersion]] tag), and retired-NAME artifacts
-    * ([[retiredArtifactNames]]) — all full dataset copies no current
-    * code will ever read again — so none accumulates in the tmpdir
-    * across runs/rounds. Age guards so a concurrent publish is never
-    * raced: 1h for retired dirs; 6h for `.tmp-` temps, because a
-    * temp's mtime is set when its WRITE STARTS (Spark creates _temporary
-    * immediately, commits at the end), so a large artifact still being
-    * written when it crosses the shorter cutoff would have its live temp
-    * deleted mid-write by a sibling publish's sweep — temps are
-    * invisible to readers either way, so patience costs nothing. */
-  private[graft] def sweepOrphans(parent: Path): Unit =
-    try {
-      if (parent != null && Files.isDirectory(parent)) {
-        val now = System.currentTimeMillis()
-        val s = Files.list(parent)
-        try s.forEach { c =>
-          val n = c.getFileName.toString
-          val cutoff =
-            if (n.contains(".tmp-")) now - 21600000L else now - 3600000L
-          val retiredName = retiredArtifactNames
-            .exists(r => n.endsWith(s"_${r}_${versionTag()}"))
-          if ((n.contains(".tmp-") || !n.endsWith(s"_${versionTag()}") ||
-               retiredName) &&
-              Files.getLastModifiedTime(c).toMillis < cutoff)
-            deleteRecursively(c)
-        } finally s.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () } // best-effort
-
-  /** Fingerprints of every table file/dir the CURRENTLY-LIVE corpus
-    * generations carry: `src`'s corpus root (its grandparent — corpora
-    * lay out as <root>/<sfDir>/<table>) is listed and every immediate
-    * child of every sibling scale-factor dir is fingerprinted. Same
-    * liveness notion as [[graft.ops.Sinks.sweepRetired]]'s, widened to
-    * every table (one derived root holds artifacts of several tables).
-    * Empty result means liveness could NOT be established — callers must
-    * sweep nothing in that case. */
-  private[graft] def liveSourceFingerprints(src: Path): Set[String] =
-    try {
-      val root = Option(src.getParent).flatMap(p => Option(p.getParent))
-      root match {
-        case Some(r) if Files.isDirectory(r) =>
-          val out = scala.collection.mutable.Set[String]()
-          val ls = Files.list(r)
-          try ls.forEach { sf =>
-            if (Files.isDirectory(sf)) {
-              val ls2 = Files.list(sf)
-              try ls2.forEach { t =>
-                try out += Tables.sourceFingerprint(t.toString)
-                catch { case scala.util.control.NonFatal(_) => () }
-              } finally ls2.close()
-            }
-          } finally ls.close()
-          out.toSet
-        case _ if Files.exists(src) =>
-          Set(Tables.sourceFingerprint(src.toString))
-        case _ => Set.empty
-      }
-    } catch { case scala.util.control.NonFatal(_) => Set.empty }
-
-  /** Sweep RETIRED-SOURCE artifacts under `root`: entries whose
-    * fingerprint prefix (up to the first '_', or the whole name for
-    * stageDir's plain copies) matches NO currently-live corpus
-    * generation of `src`'s tree. This is the reclamation
-    * [[sweepOrphans]] cannot do — a testdata regeneration changes every
-    * source fingerprint, so the stranded artifacts (full dataset copies:
-    * derived relations, split stream dirs) still carry the CURRENT
-    * format tag and look perfectly healthy; only liveness against the
-    * corpus tree identifies them. Runs on cold builds (a regeneration
-    * forces one). Guards mirror sweepRetired's: 1h age so a concurrent
-    * JVM's fresh build is never raced, empty live set → sweep nothing,
-    * `.tmp-`/dot temps left to [[sweepOrphans]]'s own cutoffs.
-    * Caveat (documented tradeoff): an artifact keyed to a live corpus
-    * OUTSIDE `src`'s tree (a probe's temp corpus elsewhere in tmp) looks
-    * retired from here once >1h old — probes must either finish inside
-    * the hour or tolerate a staged rebuild. */
-  private[graft] def sweepRetiredSources(root: Path, src: Path): Unit =
-    try {
-      if (!Files.isDirectory(root)) return
-      val live = liveSourceFingerprints(src)
-      if (live.isEmpty) return
-      val cutoff = System.currentTimeMillis() - 3600000L
-      val ls = Files.list(root)
-      try ls.forEach { c =>
-        val n = c.getFileName.toString
-        val fp = n.takeWhile(_ != '_')
-        if (fp.nonEmpty && !n.startsWith(".") && !n.contains(".tmp-") &&
-            !live.contains(fp) &&
-            Files.getLastModifiedTime(c).toMillis < cutoff)
-          deleteRecursively(c)
-      } finally ls.close()
-    } catch { case scala.util.control.NonFatal(_) => () } // best-effort
 }

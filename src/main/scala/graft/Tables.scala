@@ -84,13 +84,9 @@ object Tables {
     memoized(spark, variant + "|" + p + "|" + fp)(build(p))
   }
 
-  /** Memoized read of a published-once parquet DIRECTORY (staged derived
-    * relations, sink stores): same fixed-cost rationale as the table
-    * memo above. Staleness token = the dir's and its `_SUCCESS` marker's
-    * mtimes — these stores are publish-then-immutable (replaced copies
-    * get NEW fingerprint-keyed names), so the token only exists to catch
-    * a republished dir. An unreadable/absent dir falls through to the
-    * direct read so errors stay loud and unmemoized. */
+  /** Memoized read of a published artifact's parquet DIRECTORY (staged
+    * derived relations, sink stores): same fixed-cost rationale as the
+    * table memo above. */
   private[graft] def memoizedDirRead(spark: SparkSession,
                                      dirPath: String): DataFrame =
     memoizedSourceRead(spark, dirPath, "dir")(spark.read.parquet(_))
@@ -101,28 +97,21 @@ object Tables {
     * metadata cost — file listing (binaryFile: one entry per document),
     * footer-merge planning (mergeSchema), a JDBC bounds round-trip —
     * that is identical on every call against the same published-once
-    * artifact. Same staleness token and fall-through-on-error behavior
-    * as the parquet dir memo. The builder must produce a LAZY relation;
-    * bounded metadata lookups (partition bounds, derived schemas) may
-    * run inside it — they are relation metadata, never row data. */
+    * artifact. Staleness token = the artifact's publish nonce
+    * ([[Staging.nonce]]): unique per publish, so a republished dir always
+    * re-reads, however fast it was replaced. A dir without one (absent,
+    * unreadable, not published) falls through to the direct read, so
+    * errors stay loud and unmemoized. The builder must produce a LAZY
+    * relation; bounded metadata lookups (partition bounds, derived
+    * schemas) may run inside it — they are relation metadata, never row
+    * data. */
   private[graft] def memoizedSourceRead(spark: SparkSession, dirPath: String,
-      variant: String)(build: String => DataFrame): DataFrame = {
-    val token =
-      try {
-        val d = java.nio.file.Paths.get(dirPath)
-        val succ = d.resolve("_SUCCESS")
-        val dm = java.nio.file.Files.getLastModifiedTime(d).toMillis
-        val sm =
-          if (java.nio.file.Files.exists(succ))
-            java.nio.file.Files.getLastModifiedTime(succ).toMillis
-          else -1L
-        s"$dm:$sm"
-      } catch {
-        case scala.util.control.NonFatal(_) =>
-          return build(dirPath)
-      }
-    memoized(spark, variant + "|" + dirPath + "|" + token)(build(dirPath))
-  }
+      variant: String)(build: String => DataFrame): DataFrame =
+    Staging.nonce(java.nio.file.Paths.get(dirPath)) match {
+      case Some(n) =>
+        memoized(spark, variant + "|" + dirPath + "|" + n)(build(dirPath))
+      case None => build(dirPath)
+    }
 
   private def memoized(spark: SparkSession, key: String)(
       build: => DataFrame): DataFrame = {
@@ -196,14 +185,12 @@ object Tables {
     }
   }
 
-  /** 48-bit staleness key for derived copies of a source file (staged
-    * stream dirs, bucketed tables), so a regenerated testdata tree always
-    * maps to a fresh name and can never be served from a stale derivative.
-    * Fields are mixed POSITIONALLY (string hash of "path:size:mtime"), not
-    * XORed — XOR lets a simultaneous size+mtime change cancel out and
-    * collide with the old key. Shared by Streams.stageDir,
-    * Joins.ensureBucketed, and Staging.materialize — a change to the
-    * scheme must consider all three key spaces. */
+  /** 48-bit staleness key for artifacts derived from a source file
+    * (every [[Staging.Key]] built from a corpus table), so a regenerated
+    * testdata tree always maps to a fresh name and can never be served
+    * from a stale derivative. Fields are mixed POSITIONALLY (string hash
+    * of "path:size:mtime"), not XORed — XOR lets a simultaneous
+    * size+mtime change cancel out and collide with the old key. */
   def sourceFingerprint(path: String): String = {
     val p = java.nio.file.Paths.get(path)
     fnv48(path + ":" + java.nio.file.Files.size(p) + ":" +
@@ -213,9 +200,8 @@ object Tables {
   /** FNV-1a 64-bit over an identity string, rendered as 48-bit hex:
     * every byte position shifts the accumulator, so any single-field
     * change always changes the key. The ONE fingerprint fold — shared by
-    * [[sourceFingerprint]] and Sinks' content-inclusive
-    * successFingerprint so the two key spaces can never drift (r16
-    * review: the fold was previously duplicated verbatim). */
+    * [[sourceFingerprint]] and the publish-nonce keys of derived
+    * artifacts ([[Staging.Key.derived]]). */
   private[graft] def fnv48(ident: String): String = {
     var h = 0xcbf29ce484222325L
     ident.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }

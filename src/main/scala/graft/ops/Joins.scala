@@ -746,7 +746,8 @@ object Joins {
     s"graft_bkt_${Tables.sourceFingerprint(Tables.path(dir, table))}_$table"
 
   /** Persist orders/lineitem bucketed by join key (once per MACHINE+sf):
-    * external tables under the JVM tmpdir, `bucketBy(8, key)` +
+    * external tables over artifacts published through
+    * [[graft.Staging.publish]], `bucketBy(8, key)` +
     * `sortBy(key)` so bucket files are also key-sorted. A later JVM whose
     * in-memory catalog lost the table but whose files survived re-attaches
     * them with CREATE TABLE … CLUSTERED BY … LOCATION — re-declaring the
@@ -757,77 +758,23 @@ object Joins {
     for ((t, key) <- Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey")) {
       val name = bucketedName(dir, t)
       if (!s.catalog.tableExists(name)) {
-        val loc = java.nio.file.Paths
-          .get(sys.props("java.io.tmpdir"), "graft_bucketed", name)
-        if (java.nio.file.Files.exists(loc.resolve("_SUCCESS"))) {
-          val schema = Tables.table(s, dir, t).schema.toDDL
-          s.sql(s"CREATE TABLE $name ($schema) USING parquet " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS " +
-            s"LOCATION '${loc.toString}'")
-        } else {
-          // Unique-temp + atomic-rename (same scheme as Staging.materialize):
-          // writing straight at `loc` with overwrite would delete bucket
-          // files under another JVM's running query, or interleave two
-          // concurrent writers while _SUCCESS is present. Instead: write
-          // the bucketed files via a throwaway EXTERNAL table at a private
-          // temp path (saveAsTable is the only API that emits bucket
-          // metadata), drop the catalog entry (files survive — external),
-          // atomically publish the dir, then attach the real name to it.
-          import java.nio.file.{Files, Paths, StandardCopyOption}
-          Staging.buildCount.incrementAndGet() // cold bucketed-table build
-          val tmpLoc = Paths.get(loc.toString + ".tmp-" +
-            java.util.UUID.randomUUID.toString)
+        // saveAsTable is the only API that emits bucket metadata: write
+        // the files via a throwaway EXTERNAL table at the publish temp
+        // path, drop the catalog entry (files survive — external), then
+        // attach the real name to the published dir.
+        val loc = Staging.publish(Staging.BucketedRoot,
+            Staging.Key(Tables.path(dir, t), s"bkt_$t")) { tmp =>
           val tmpName = name + "_w" // scratch name; session-local catalog
           Tables.table(s, dir, t).write
             .bucketBy(Buckets, key).sortBy(key)
-            .option("path", tmpLoc.toString).mode("overwrite").format("parquet")
+            .option("path", tmp.toString).mode("overwrite").format("parquet")
             .saveAsTable(tmpName)
           s.sql(s"DROP TABLE $tmpName")
-          Files.createDirectories(loc.getParent)
-          // Bounded publish loop, same scheme (and same TOCTOU age guard)
-          // as Staging.materialize: a racing JVM's complete copy (gated by
-          // _SUCCESS) is used as-is; an OLD dir without _SUCCESS is a
-          // crash leftover and is evicted; a FRESH one may be mid-publish
-          // by another JVM, so wait for its _SUCCESS rather than deleting
-          // files from under its query. A double race on the retry move
-          // loops instead of throwing (the previous single unguarded retry
-          // failed the whole query when two JVMs evicted concurrently).
-          var attempts = 0
-          var published = false
-          while (!published && attempts < 5) {
-            attempts += 1
-            try { Files.move(tmpLoc, loc, StandardCopyOption.ATOMIC_MOVE); published = true }
-            catch { case _: java.nio.file.FileAlreadyExistsException |
-                         _: java.nio.file.DirectoryNotEmptyException =>
-              if (Files.exists(loc.resolve("_SUCCESS"))) {
-                Staging.deleteRecursively(tmpLoc); published = true
-              } else {
-                // A racing JVM can delete loc between the failed move and
-                // this mtime read — NoSuchFileException then means the
-                // destination vanished: just retry the move next attempt.
-                val mtime =
-                  try Some(Files.getLastModifiedTime(loc).toMillis)
-                  catch { case _: java.nio.file.NoSuchFileException => None }
-                mtime match {
-                  case Some(t) if t < System.currentTimeMillis() - 60000L =>
-                    Staging.deleteRecursively(loc) // crash leftover
-                  case Some(_) => Thread.sleep(1000L) // racing publisher; let it finish
-                  case None => () // vanished under us — next attempt moves
-                }
-              }
-            }
-          }
-          if (!published) {
-            Staging.deleteRecursively(tmpLoc)
-            if (!Files.exists(loc.resolve("_SUCCESS")))
-              throw new IllegalStateException(
-                s"could not publish bucketed table at $loc after $attempts attempts")
-          }
-          val schema = Tables.table(s, dir, t).schema.toDDL
-          s.sql(s"CREATE TABLE $name ($schema) USING parquet " +
-            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS " +
-            s"LOCATION '${loc.toString}'")
         }
+        val schema = Tables.table(s, dir, t).schema.toDDL
+        s.sql(s"CREATE TABLE $name ($schema) USING parquet " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS " +
+          s"LOCATION '${loc.toString}'")
       }
     }
   }

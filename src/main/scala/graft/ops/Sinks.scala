@@ -17,244 +17,26 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Build-once publish for fingerprint-keyed derived dirs: `build` writes
-    * into a unique temp dir (leaving a `_SUCCESS` at its root — Spark's
-    * own writers do; multi-write builders create one explicitly), which is
-    * then atomically renamed into place. `_SUCCESS`-gated reuse; same
-    * TOCTOU discipline as Staging.materialize — a racing JVM either wins
-    * the rename or uses the winner's complete copy (a complete racing copy
-    * is used as-is; an OLD dir without `_SUCCESS` is a crash leftover and
-    * is evicted; a FRESH one may be mid-publish — wait for its `_SUCCESS`
-    * rather than deleting files under another JVM's query). A reader never
-    * sees a half-written dir. */
-  private def publishOnce(out: java.nio.file.Path,
-                          src: java.nio.file.Path)
-                         (build: java.nio.file.Path => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    locks.computeIfAbsent(out.toString, _ => new Object).synchronized {
-      if (!Files.exists(out.resolve("_SUCCESS"))) {
-        graft.Staging.buildCount.incrementAndGet() // cold publish, not a warm read
-        val tmp = Paths.get(out.toString + ".tmp-" +
-          java.util.UUID.randomUUID.toString)
-        build(tmp)
-        // Stamp a UUID nonce into `_SUCCESS` (zero-byte as Spark writes
-        // it): derived artifacts key off this file's fingerprint, and a
-        // zero-byte file degenerates that key to path+millisecond-mtime —
-        // a same-path rebuild landing in the same millisecond would serve
-        // a stale derived chain (r15 ADVICE). With content folded into
-        // successFingerprint, every rebuild re-keys downstream.
-        Files.write(tmp.resolve("_SUCCESS"),
-          java.util.UUID.randomUUID.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // the nonce invalidates Hadoop's local-FS checksum twin — drop it
-        // so nothing ever reads `_SUCCESS` through ChecksumFileSystem and
-        // trips on the stale crc
-        Files.deleteIfExists(tmp.resolve("._SUCCESS.crc"))
-        Files.createDirectories(out.getParent)
-        var attempts = 0
-        var done = false
-        while (!done && attempts < 3) {
-          attempts += 1
-          try { Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE); done = true }
-          catch { case _: java.nio.file.FileAlreadyExistsException |
-                       _: java.nio.file.DirectoryNotEmptyException =>
-            if (Files.exists(out.resolve("_SUCCESS"))) {
-              graft.Staging.deleteRecursively(tmp); done = true
-            } else if (Files.getLastModifiedTime(out).toMillis <
-                         System.currentTimeMillis() - 60000L) {
-              graft.Staging.deleteRecursively(out)
-            } else {
-              Thread.sleep(1000L)
-            }
-          }
-        }
-        if (!done) {
-          graft.Staging.deleteRecursively(tmp)
-          if (!Files.exists(out.resolve("_SUCCESS")))
-            throw new IllegalStateException(
-              s"derived sink $out contended and never complete")
-        }
-        sweepRetired(out, src)
-      }
-      out.toString
-    }
-  }
-
-  /** Sweep RETIRED-corpus siblings of a just-published sink artifact:
-    * same `_tag` suffix (same artifact class), different fingerprint
-    * prefix (a prior testdata generation nothing will read again — the
-    * driver regenerates parquet between rounds, and the day-partitioned
-    * events copy alone is events-sized, so leaked generations stack fast).
-    *
-    * Two guards keep "retired" exact (r11 ADVICE):
-    *  - the class match is the EXACT post-fingerprint suffix
-    *    (`dropWhile(_ != '_') == tag`), not endsWith — a future tag that
-    *    happens to be a suffix of another tag must not cross-delete
-    *    artifact classes;
-    *  - a sibling is only retired if its fingerprint matches NO
-    *    currently-live corpus generation of this table: the sf dirs
-    *    coexist (sf0.001 tests, sf0.01 verify, sf0.1 bench), so the same
-    *    artifact class legitimately has one live publish per scale
-    *    factor, and age alone cannot distinguish "old generation" from
-    *    "other-SF artifact a long-running reader may still hold open".
-    *    Live fingerprints are recomputed from disk at sweep time (stat
-    *    of each corpus sibling dir's same-named table file — exactly the
-    *    identity [[graft.Tables.sourceFingerprint]] hashes).
-    *
-    * Same discipline as Staging.sweepOrphans / stageDirSplit's sweep:
-    * 1h age guard so a concurrent JVM's fresh publish is never raced;
-    * `.tmp-` dirs of any age belong to live writers and are left to the
-    * publish loop's own handling. Best-effort. */
-  private[graft] def sweepRetired(published: java.nio.file.Path,
-                                  src: java.nio.file.Path): Unit =
-    try {
-      import java.nio.file.Files
-      // Probe suppression (r15): a probe publishing artifacts for a
-      // REPLICA corpus under /tmp computes its liveness universe from
-      // the replica's tree — which knows nothing about the real testdata
-      // generations, so every live-corpus sibling of the same class
-      // looks retired and gets reclaimed (the r15 mixed-pair incident;
-      // publishDerived's chain re-keying makes that correctness-neutral,
-      // but the spurious full-chain rebuild is still probe pollution).
-      // Probes set this property and clean up via [[sweepSinkChain]].
-      if (sys.props.get("graft.sink.sweepRetired").contains("false")) return
-      val name = published.getFileName.toString
-      val tag = name.dropWhile(_ != '_') // "_<tag>", fingerprint stripped
-      val parent = published.getParent
-      if (tag.nonEmpty && parent != null && Files.isDirectory(parent)) {
-        val live: Set[String] = {
-          val root = Option(src.getParent).flatMap(p => Option(p.getParent))
-          root match {
-            case Some(r) if Files.isDirectory(r) =>
-              // Files.exists, not isRegularFile: Spark-written corpora are
-              // parquet DIRECTORIES (sourceFingerprint handles both), and
-              // filtering them out here would shrink `live` below the
-              // truth — worst case to EMPTY, which would re-enable the
-              // exact cross-generation deletion this guard exists to stop.
-              // `_SUCCESS` sources (derived artifacts) key on the
-              // content-inclusive successFingerprint — the liveness
-              // universe must hash the same way or every live derived
-              // sibling's prefix mismatches and it looks retired.
-              val fp: java.nio.file.Path => String =
-                if (src.getFileName.toString == "_SUCCESS") successFingerprint
-                else p => Tables.sourceFingerprint(p.toString)
-              val ls = Files.list(r)
-              try ls.toArray.map(_.asInstanceOf[java.nio.file.Path])
-                .map(_.resolve(src.getFileName))
-                .filter(Files.exists(_))
-                .map(fp).toSet
-              finally ls.close()
-            case _ if Files.exists(src) =>
-              Set(if (src.getFileName.toString == "_SUCCESS")
-                successFingerprint(src)
-              else Tables.sourceFingerprint(src.toString))
-            case _ => Set.empty
-          }
-        }
-        // An empty live set means no sibling dir carries this table at
-        // all — liveness CANNOT be established, so sweep nothing (the
-        // only safe reading; "nothing is live" is never distinguishable
-        // from "we looked in the wrong place" from here).
-        if (live.isEmpty) return
-        val cutoff = System.currentTimeMillis() - 3600000L
-        val ls = Files.list(parent)
-        try ls.forEach { c =>
-          val n = c.getFileName.toString
-          if (n != name && n.dropWhile(_ != '_') == tag &&
-              !n.contains(".tmp-") &&
-              !live.contains(n.takeWhile(_ != '_')) &&
-              Files.getLastModifiedTime(c).toMillis < cutoff)
-            graft.Staging.deleteRecursively(c)
-        } finally ls.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private def sinkPath(dir: String, table: String, tag: String) =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_sink",
-      s"${Tables.sourceFingerprint(Tables.path(dir, table))}_$tag")
-
-  /** [[publishOnce]] with the fingerprint key + live-corpus source both
-    * derived from the same (dir, table) — keeps the two in lockstep so
-    * [[sweepRetired]]'s liveness check always stats the file the key
-    * hashed. */
+  /** Publish-once sink artifact built from corpus table `table` of
+    * `dir` ([[graft.Staging.publish]]: atomic, `_SUCCESS`-gated, swept). */
   private def publishSink(dir: String, table: String, tag: String)
-                         (build: java.nio.file.Path => Unit): String =
-    publishOnce(sinkPath(dir, table, tag),
-      java.nio.file.Paths.get(Tables.path(dir, table)))(build)
+                         (write: java.nio.file.Path => Unit): String =
+    graft.Staging.publish(graft.Staging.SinkRoot,
+      graft.Staging.Key(Tables.path(dir, table), tag))(write).toString
 
-  /** [[publishOnce]] for an artifact DERIVED FROM ANOTHER ARTIFACT
+  /** [[publishSink]] for an artifact DERIVED FROM ANOTHER ARTIFACT
     * (delete from store, vacuum from littered, compaction from
-    * fragmented): keyed by the INPUT artifact's `_SUCCESS` fingerprint,
-    * not the raw corpus. Keying off the corpus left the pair
-    * INDEPENDENTLY rebuildable, and a partial reclaim (r15: a probe's
-    * replica-corpus publish computed its liveness universe from /tmp and
-    * swept the live store class but not the delete class) produced a
-    * mixed-generation pair whose byte-identity laws then failed. With
-    * the input's publish identity in the key, a rebuilt input re-keys —
-    * and therefore rebuilds — every downstream artifact; the stranded
-    * old-key entries are ordinary retired siblings the next same-tag
-    * publish reclaims (their input `_SUCCESS` fingerprint is no longer
-    * live). Liveness for sweepRetired scans the graft_sink tree itself:
-    * every live artifact's own files are the universe, so a derived
-    * entry stays live exactly while its input artifact exists. */
-  private def publishDerived(inputRoot: String, tag: String)
-                            (build: java.nio.file.Path => Unit): String = {
-    val success = java.nio.file.Paths.get(inputRoot, "_SUCCESS")
-    val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_sink", s"${successFingerprint(success)}_$tag")
-    publishOnce(out, success)(build)
-  }
-
-  /** Fingerprint of a published artifact's `_SUCCESS`, CONTENT-inclusive:
-    * publishOnce stamps a UUID nonce into the file, and this hash folds
-    * that content in on top of [[graft.Tables.sourceFingerprint]]'s
-    * path+size+mtime, so a rebuilt input ALWAYS re-keys its derived chain
-    * even when the rebuild lands in the same millisecond (r15 ADVICE: the
-    * zero-byte `_SUCCESS` left mtime as the only distinguishing field).
-    * Reads ≤ 64 bytes. Pre-nonce artifacts (empty `_SUCCESS`) hash to
-    * fnv48(plainFp + ":") — a DIFFERENT value from the plain fingerprint,
-    * not equal to it; they get reclaimed anyway because their dirs were
-    * NAMED with the plain fingerprint, which no live successFingerprint
-    * key matches (r16 review: the comment previously claimed equality). */
-  private def successFingerprint(success: java.nio.file.Path): String = {
-    val content =
-      try new String(java.nio.file.Files.readAllBytes(success),
-        java.nio.charset.StandardCharsets.UTF_8)
-      catch { case scala.util.control.NonFatal(_) => "" }
-    Tables.fnv48(Tables.sourceFingerprint(success.toString) + ":" + content)
-  }
-
-  /** Remove the graft_sink artifacts keyed by any of `prefixes`, then
-    * TRANSITIVELY the artifacts keyed by the `_SUCCESS` fingerprints of
-    * what was just removed (the derived chain: store → delete/littered →
-    * vacuumed). Probe cleanup (KneeProbe legs F/G) uses this so replica-
-    * corpus chains don't linger until the next same-tag publish's
-    * retired-sibling sweep. */
-  private[graft] def sweepSinkChain(prefixes: Set[String]): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(sys.props("java.io.tmpdir"), "graft_sink")
-    var frontier = prefixes
-    var rounds = 0
-    while (frontier.nonEmpty && rounds < 8 && Files.isDirectory(root)) {
-      rounds += 1
-      val next = scala.collection.mutable.Set[String]()
-      listUnder(root)(_.foreach { p =>
-        if (frontier.exists(fp => p.getFileName.toString.startsWith(fp + "_"))) {
-          val succ = p.resolve("_SUCCESS")
-          if (Files.exists(succ))
-            // same content-inclusive key publishDerived uses, or the
-            // chain walk would miss every nonce-stamped descendant
-            try next += successFingerprint(succ)
-            catch { case scala.util.control.NonFatal(_) => () }
-          graft.Staging.deleteRecursively(p)
-        }
-      })
-      frontier = next.toSet
-    }
-  }
+    * fragmented): keyed by the INPUT artifact's publish nonce, not the
+    * raw corpus. Keying off the corpus left the pair INDEPENDENTLY
+    * rebuildable, and a partial reclaim (r15) produced a mixed-generation
+    * pair whose byte-identity laws then failed. With the input's nonce in
+    * the key, a rebuilt input re-keys — and therefore rebuilds — every
+    * downstream artifact; the stranded old-key entries are swept once
+    * their input is gone. Every chain here derives from `events`. */
+  private def publishDerived(dir: String, input: String, tag: String)
+                            (write: java.nio.file.Path => Unit): String =
+    graft.Staging.publish(graft.Staging.SinkRoot, graft.Staging.Key
+      .derived(Tables.path(dir, "events"), input, tag))(write).toString
 
   /** Day-partitioned events sink, written once per MACHINE + corpus
     * version. NOT gated by `graft.staging`: the partitioned files ARE this
@@ -304,8 +86,6 @@ object Sinks {
       o.where(col("o_orderkey") % 2 === 1)
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
         .write.parquet(s"$tmp/gen2")
-      // subdir writes leave _SUCCESS in gen1/gen2, not the publish root
-      java.nio.file.Files.createFile(tmp.resolve("_SUCCESS"))
     }
 
   /** Columns `orders` round-trips through the ORC source (everything but
@@ -371,7 +151,6 @@ object Sinks {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      java.nio.file.Files.createFile(tmp.resolve("_SUCCESS"))
     }
 
   /** Columns `orders` round-trips through the Derby JDBC source — same
@@ -411,7 +190,6 @@ object Sinks {
         java.sql.DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true")
         ()
       } catch { case _: java.sql.SQLException => () }
-      java.nio.file.Files.createFile(tmp.resolve("_SUCCESS"))
     }
 
   /** `orders` re-written as header'd CSV — the delimited-text source
@@ -451,7 +229,7 @@ object Sinks {
     * file contents deterministic, not just counts. */
   def ensureCompactedEvents(s: SparkSession, dir: String): String = {
     val fragRoot = ensureFragmentedEvents(s, dir)
-    publishDerived(fragRoot, "events_compact_v1") { tmp =>
+    publishDerived(dir, fragRoot, "events_compact_v1") { tmp =>
       s.read.parquet(fragRoot)
         .repartition(col("day"))
         .sortWithinPartitions("day", "event_id")
@@ -570,7 +348,7 @@ object Sinks {
 
   def ensureDeletedStore(s: SparkSession, dir: String): String = {
     val storeRoot = ensureRetentionStore(s, dir)
-    publishDerived(storeRoot, "events_ret_del_v1") { tmp =>
+    publishDerived(dir, storeRoot, "events_ret_del_v1") { tmp =>
       val store = s.read.parquet(storeRoot)
       val touched = touchedCells(store, isForget)
       writeCells(prunedCellRows(store, touched).where(!isForget), tmp)
@@ -600,7 +378,7 @@ object Sinks {
   private def isTwinV2 = col("event_id") % 97 === 11 && !(col("user_id") % 37 === 7)
   def ensureUpsertedStore(s: SparkSession, dir: String): String = {
     val v1Root = ensureDeletedStore(s, dir)
-    publishDerived(v1Root, "events_ret_ups_v1") { tmp =>
+    publishDerived(dir, v1Root, "events_ret_ups_v1") { tmp =>
       val v1 = s.read.parquet(v1Root)
       val touched = touchedCells(v1, isDelV2 || isUpdV2 || isTwinV2)
       val cellRows = prunedCellRows(v1, touched)
@@ -632,7 +410,7 @@ object Sinks {
     * orphans are a storage problem, not a correctness one. */
   def ensureLitteredStore(s: SparkSession, dir: String): String = {
     val store = ensureRetentionStore(s, dir)
-    publishDerived(store, "events_ret_lit_v1") { tmp =>
+    publishDerived(dir, store, "events_ret_lit_v1") { tmp =>
       import java.nio.file.{Files, Paths}
       copyTree(Paths.get(store), tmp)
       listUnder(tmp) { it => it.foreach { dayDir =>
@@ -659,7 +437,7 @@ object Sinks {
     * real lake). */
   def ensureVacuumedStore(s: SparkSession, dir: String): String = {
     val lit = ensureLitteredStore(s, dir)
-    publishDerived(lit, "events_ret_vac_v1") { tmp =>
+    publishDerived(dir, lit, "events_ret_vac_v1") { tmp =>
       vacuumCopy(java.nio.file.Paths.get(lit), tmp)
     }
   }

@@ -84,127 +84,37 @@ object Streams {
   private val sinkId = new AtomicLong(0)
   private val ckptRootLogged =
     new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val splitSweepDone =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Spark's file stream source lists a DIRECTORY for new files, so the
-    * single-file `events.parquet` is staged (copied once per sf dir) into
-    * a tmpdir directory — the same place Spark puts its own temp stream
-    * checkpoints. Idempotent and cheap (one file copy per JVM per sf). */
+    * single-file `events.parquet` is staged into a published artifact dir
+    * holding a copy of it (once per source fingerprint, through
+    * [[graft.Staging.publish]]): the stream only ever lists a complete
+    * dir, whose one other entry, `_SUCCESS`, is hidden from its listing. */
   def stageDir(path: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(path)
-    // Stage key includes the source's size+mtime (Tables.sourceFingerprint):
-    // a regenerated testdata tree lands in a fresh directory instead of
-    // silently reusing a stale copy (which would make every stream diverge
-    // from the batch oracle).
-    val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_src",
-      Tables.sourceFingerprint(path))
-    Files.createDirectories(dir)
-    val dst = dir.resolve(src.getFileName)
-    if (!Files.exists(dst)) {
-      graft.Staging.buildCount.incrementAndGet() // cold copy, not a warm read
-      // copy via a UNIQUE temp name + atomic rename: a JVM killed mid-copy
-      // must not leave a truncated file the existence check would trust,
-      // and two concurrent JVMs must not share a temp path (a fixed name
-      // would let one JVM promote the other's partial copy). The temp is
-      // DOT-PREFIXED because this directory is the one the file-source
-      // stream lists — Spark's listing skips hidden ('.'/'_') files, so a
-      // crash-orphaned temp or a concurrent JVM's in-flight copy is never
-      // read as stream input (it would double-count vs the batch oracle).
-      val tmp = Files.createTempFile(dir,
-        "." + src.getFileName.toString, ".tmp")
-      Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
-      try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp) // concurrent JVM won; its copy is complete
-      }
-      // best-effort sweep of hidden temps orphaned by crashed JVMs (they
-      // are invisible to the stream either way; this is just hygiene)
-      try {
-        val ls = Files.list(dir)
-        try ls.forEach { c =>
-          val n = c.getFileName.toString
-          if (n.startsWith(".") && n.endsWith(".tmp") &&
-              Files.getLastModifiedTime(c).toMillis <
-                System.currentTimeMillis() - 3600000L)
-            Files.deleteIfExists(c)
-        } finally ls.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-      // retired-SOURCE copies (a testdata regeneration strands the old
-      // fingerprint's full events copy here forever — sweepOrphans can't
-      // see it, the format tag is still current): reclaim on cold builds
-      graft.Staging.sweepRetiredSources(dir.getParent, src)
-    }
-    dir.toString
+    val src = java.nio.file.Paths.get(path)
+    graft.Staging.publish(graft.Staging.StreamSrcRoot,
+        graft.Staging.Key(path, "copy")) { tmp =>
+      java.nio.file.Files.createDirectories(tmp)
+      java.nio.file.Files.copy(src, tmp.resolve(src.getFileName))
+    }.toString
   }
 
   /** Stage `events.parquet` as an N-file directory (range-split on
-    * event_id, raw long-nanos `ts` preserved so [[eventsStreamDir]]'s
-    * conversion applies uniformly) so a maxFilesPerTrigger=1 drain runs N
-    * genuine micro-batches. Built once per (source, n) fingerprint via
-    * dot-prefixed temp dir + atomic rename — the same crash/concurrency
-    * discipline as [[stageDir]] (a half-written split is never listed;
-    * the loser of a concurrent build race discards its copy). */
-  def stageDirSplit(s: SparkSession, path: String, n: Int): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val root = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_src")
-    // The key carries graft.Staging.formatVersion (engine-wide): v1
-    // (unversioned) split dirs were written through a forced long-`ts`
-    // schema, so a v1 artifact built from µs testdata holds µs-as-long
-    // rows that the adaptive reader would then mis-convert as nanos. The
-    // source fingerprint alone can't see that (the source didn't change —
-    // the staging code did). Bump the shared constant whenever ANY
-    // staging writer's bytes change meaning.
-    val vtag = graft.Staging.versionTag()
-    val dir = root.resolve(Tables.sourceFingerprint(path) + s"_split$n$vtag")
-    // Sweep (a) .split* build dirs orphaned by a JVM killed mid-build,
-    // (b) retired-FORMAT split artifacts — any version tag but the
-    // current one, including the unversioned v1 shape. Both hold a full
-    // dataset copy nothing will read again; 1h age guard so a concurrent
-    // same-version build's fresh rename is never raced. Runs once per JVM
-    // UNCONDITIONALLY (not only on a cache miss): a format bump strands
-    // the old artifacts precisely when the new ones are already built.
-    // (Plain stageDir copies carry no version: they are byte-identical
-    // to the source, so their meaning cannot drift with staging code.)
-    // isDirectory FIRST: CAS-ing before the check would consume the
-    // once-per-JVM flag even when the root doesn't exist yet, so a root
-    // created later in the same JVM would never be swept.
-    if (Files.isDirectory(root) && splitSweepDone.compareAndSet(false, true))
-      try {
-        val ls = Files.list(root)
-        try ls.forEach { c =>
-          val nm = c.getFileName.toString
-          val orphan = nm.startsWith(".split") ||
-            (nm.contains("_split") && !nm.endsWith(vtag))
-          if (orphan && Files.isDirectory(c) &&
-              Files.getLastModifiedTime(c).toMillis <
-                System.currentTimeMillis() - 3600000L)
-            graft.Staging.deleteRecursively(c)
-        } finally ls.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    if (!Files.isDirectory(dir)) {
-      graft.Staging.buildCount.incrementAndGet() // cold split build
-      // reclaim retired-SOURCE split copies on the same cold-build
-      // trigger as the derived root (see Staging.sweepRetiredSources)
-      graft.Staging.sweepRetiredSources(root, Paths.get(path))
-      Files.createDirectories(root)
-      val tmp = Files.createTempDirectory(root, ".split")
+    * event_id, raw `ts` preserved — footer schema as-is, whatever its
+    * physical type — so [[eventsStreamDir]]'s normalization applies
+    * uniformly) so a maxFilesPerTrigger=1 drain runs N genuine
+    * micro-batches. Published once per (source, n) like [[stageDir]]; the
+    * key carries the staging format version, because a v1 split written
+    * through a forced long-`ts` schema held µs-as-long rows that the
+    * adaptive reader then mis-converted as nanos. */
+  def stageDirSplit(s: SparkSession, path: String, n: Int): String =
+    graft.Staging.publish(graft.Staging.StreamSrcRoot,
+        graft.Staging.Key(path, s"split$n")) { tmp =>
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Footer schema as-is (raw `ts` preserved, whatever its physical
-      // type) so [[eventsStreamDir]]'s normalization applies uniformly.
       s.read.parquet(path)
         .repartitionByRange(n, col("event_id"))
         .write.mode("overwrite").parquet(tmp.toString)
-      try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException =>
-          graft.Staging.deleteRecursively(tmp) // concurrent builder won
-      }
-    }
-    dir.toString
-  }
+    }.toString
 
   /** File-source stream over a DIRECTORY of events parquet files, with
     * microsecond TimestampType ts. `maxFiles` bounds files per micro-batch —

@@ -43,23 +43,6 @@ import org.apache.spark.sql.functions._
   */
 object KneeProbe {
   def main(args: Array[String]): Unit = {
-    // Replica corpora live under /tmp: a sink publish keyed to them would
-    // compute its retired-sibling liveness from the WRONG tree and
-    // reclaim the live testdata artifacts (the r15 mixed-pair incident).
-    // Suppress retired sweeps for the probe; cleanup below uses
-    // Sinks.sweepSinkChain instead. Save/restore the prior value so a
-    // shared JVM (sbt in-process runMain) gets its retired-sibling sweeps
-    // back after the probe (r15 ADVICE).
-    val priorSweep = sys.props.get("graft.sink.sweepRetired")
-    sys.props("graft.sink.sweepRetired") = "false"
-    try run(args)
-    finally priorSweep match {
-      case Some(v) => sys.props("graft.sink.sweepRetired") = v
-      case None    => sys.props -= "graft.sink.sweepRetired"
-    }
-  }
-
-  private def run(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val legs = args.lift(1).getOrElse("ABCDEFGHIJ").toUpperCase
     val spark = SparkSession.builder()
@@ -83,20 +66,18 @@ object KneeProbe {
         d.withColumn(c, col(c) + col("k") * off)).drop("k")
     }
 
-    /** Shared replica-corpus cleanup for legs F/G/H (was copy-pasted
-      * three times; the r15 sweepSinkChain upgrade had to be applied to
-      * every copy — r15 review finding): fingerprints BEFORE the delete,
-      * then derived-relation retirement, then the TRANSITIVE sink-chain
-      * sweep (derived store artifacts are keyed by their input's
-      * _SUCCESS fingerprint, which the corpus fp alone can't reach). */
+    /** Shared replica-corpus cleanup for every leg:
+      * fingerprints BEFORE the delete, then every artifact keyed by them
+      * and their derived chains ([[graft.Staging.retire]]). A replica's
+      * publishes sweep with the replica's tree as the live corpus, so the
+      * real testdata's artifacts may be rebuilt after a long probe run. */
     def cleanupReplicas(dir: java.nio.file.Path, tables: Seq[String]): Unit = {
       val fps = tables.flatMap { f =>
         try Some(Tables.sourceFingerprint(s"$dir/$f"))
         catch { case scala.util.control.NonFatal(_) => None }
       }
       graft.Staging.deleteRecursively(dir)
-      fps.foreach(graft.Staging.retireDerived)
-      graft.ops.Sinks.sweepSinkChain(fps.toSet)
+      fps.foreach(graft.Staging.retire)
     }
 
     // ---- A. ngram prefix: lex vs df-ordered vs df-ordered+cap ----------
@@ -223,27 +204,7 @@ object KneeProbe {
                 graft.SparkEntry.queries(k)(spark, dir.toString).count())
           }
         }
-      } finally {
-        // fingerprints must be computed BEFORE the dir is deleted
-        val fps = Seq("embeddings.parquet", "events.parquet").flatMap { f =>
-          try Some(Tables.sourceFingerprint(s"$dir/$f"))
-          catch { case scala.util.control.NonFatal(_) => None }
-        }
-        graft.Staging.deleteRecursively(dir)
-        fps.foreach { fp =>
-          graft.Staging.retireDerived(fp)
-          // the upsert leg's split stream-source artifact lives under its
-          // own root, keyed by the same corpus fingerprint
-          val splitRoot = java.nio.file.Paths.get(
-            sys.props("java.io.tmpdir"), "graft_stream_src")
-          if (java.nio.file.Files.isDirectory(splitRoot)) {
-            val ls = java.nio.file.Files.list(splitRoot)
-            try ls.filter(_.getFileName.toString.startsWith(fp + "_"))
-              .forEach(p => graft.Staging.deleteRecursively(p))
-            finally ls.close()
-          }
-        }
-      }
+      } finally cleanupReplicas(dir, Seq("embeddings.parquet", "events.parquet"))
     }
 
     // ---- F. r14 warehouse/ER keys: linear-decade check on m× replicas.

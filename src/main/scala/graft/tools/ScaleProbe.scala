@@ -31,7 +31,7 @@ object ScaleProbe {
   private[tools] def retireLeg(dir: String, sourceFile: String): Unit = {
     val fp = graft.Tables.sourceFingerprint(s"$dir/$sourceFile")
     graft.Staging.deleteRecursively(java.nio.file.Paths.get(dir))
-    graft.Staging.retireDerived(fp)
+    graft.Staging.retire(fp)
   }
 
   /** Deterministic corpus in the documents schema. ~5% of docs are a
@@ -262,15 +262,8 @@ object ScaleProbe {
           s"upsert snapshot rows $snapRows != distinct users $users")
         println(f"[scale] n=$n%7d stream_upsert_snapshot=$wall%6.1f s " +
           f"(snapshot=$snapRows rows)")
-        // the split copy + any single-file stage live under
-        // graft_stream_src keyed by the corpus fingerprint — retire them
-        // with the leg or each run leaks a full events copy
-        val fp = graft.Tables.sourceFingerprint(s"$dir/events.parquet")
-        val srcRoot = java.nio.file.Paths
-          .get(sys.props("java.io.tmpdir"), "graft_stream_src")
-        Seq(fp, fp + "_split4").foreach { d =>
-          graft.Staging.deleteRecursively(srcRoot.resolve(d))
-        }
+        // retires the split stream copy with every other artifact
+        // keyed by the corpus fingerprint
         retireLeg(dir, "events.parquet")
         (n, wall)
       }

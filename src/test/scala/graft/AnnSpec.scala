@@ -300,7 +300,7 @@ class AnnSpec extends AnyFunSuite {
         assert(rks === Seq(1, 2, 3, 4, 5), s"probe $q ranks: $rks")
       }
     } finally {
-      Staging.retireDerived(
+      Staging.retire(
         Tables.sourceFingerprint(s"$dir/embeddings.parquet"))
       Staging.deleteRecursively(java.nio.file.Paths.get(dir))
     }

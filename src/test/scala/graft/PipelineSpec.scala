@@ -689,7 +689,7 @@ class PipelineSpec extends AnyFunSuite {
         s"cc-* checkpoint namespace not reclaimed after staging: $left")
     } finally {
       spark.conf.unset("graft.cc.checkpointDir")
-      Staging.retireDerived(Tables.sourceFingerprint(s"$dir/documents.parquet"))
+      Staging.retire(Tables.sourceFingerprint(s"$dir/documents.parquet"))
       Staging.deleteRecursively(java.nio.file.Paths.get(dir))
       Staging.deleteRecursively(java.nio.file.Paths.get(ckpt))
     }

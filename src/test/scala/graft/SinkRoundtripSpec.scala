@@ -47,63 +47,12 @@ class SinkRoundtripSpec extends AnyFunSuite {
     assert(back.schema === raw.schema)
   }
 
-  test("sink publish sweeps retired-corpus siblings of the same class only") {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    val parent = Files.createTempDirectory("graft_sink_sweep_")
-    // A fake corpus root with two LIVE scale-factor dirs holding the
-    // same table file — the sweep must protect artifacts keyed to EITHER
-    // live generation, not just the one being published against.
-    val corpus = Files.createTempDirectory("graft_sink_corpus_")
-    Files.createDirectories(corpus.resolve("sfA"))
-    Files.createDirectories(corpus.resolve("sfB"))
-    Files.write(corpus.resolve("sfA").resolve("tbl.parquet"), Array[Byte](1))
-    Files.write(corpus.resolve("sfB").resolve("tbl.parquet"), Array[Byte](1, 2))
-    val srcA = corpus.resolve("sfA").resolve("tbl.parquet")
-    val fpA = Tables.sourceFingerprint(srcA.toString)
-    val fpB = Tables.sourceFingerprint(
-      corpus.resolve("sfB").resolve("tbl.parquet").toString)
-    def mk(name: String, old: Boolean): java.nio.file.Path = {
-      val d = Files.createDirectories(parent.resolve(name))
-      Files.createFile(d.resolve("_SUCCESS"))
-      if (old) Files.setLastModifiedTime(d,
-        FileTime.fromMillis(System.currentTimeMillis() - 7200000L))
-      d
-    }
-    try {
-      val kept = mk(s"${fpA}_foo_v1", old = false)  // the live publish
-      mk("aaaa12345678_foo_v1", old = true)          // retired, same class
-      val young = mk("cccc12345678_foo_v1", old = false) // other fp, too fresh
-      val otherClass = mk("aaaa12345678_bar_v1", old = true) // different tag
-      // old + same class, but keyed to the OTHER still-live SF dir: the
-      // r11 endsWith/age sweep would have deleted this (forcing rebuilds
-      // and potentially yanking files under a concurrent reader)
-      val otherSf = mk(s"${fpB}_foo_v1", old = true)
-      // old + tag that merely ENDS WITH "_foo_v1" — a different class;
-      // the exact-suffix match must leave it alone
-      val suffixClass = mk("dddd12345678_my_foo_v1", old = true)
-      ops.Sinks.sweepRetired(kept, srcA)
-      assert(!Files.exists(parent.resolve("aaaa12345678_foo_v1")),
-        "old same-class sibling not swept")
-      assert(Files.exists(kept) && Files.exists(young) &&
-        Files.exists(otherClass),
-        "sweep touched the live publish, a fresh sibling, or another class")
-      assert(Files.exists(otherSf),
-        "sweep deleted an artifact keyed to a still-live corpus dir")
-      assert(Files.exists(suffixClass),
-        "sweep cross-deleted a class whose tag is a suffix of this tag")
-    } finally {
-      Staging.deleteRecursively(parent)
-      Staging.deleteRecursively(corpus)
-    }
-  }
-
   test("sweep treats DIRECTORY-shaped corpus tables as live and refuses " +
        "to sweep when liveness cannot be established") {
     import java.nio.file.Files
     import java.nio.file.attribute.FileTime
-    val parent = Files.createTempDirectory("graft_sink_sweep2_")
-    val corpus = Files.createTempDirectory("graft_sink_corpus2_")
+    val parent = Files.createTempDirectory("graft_sink_sweep_")
+    val corpus = Files.createTempDirectory("graft_sink_corpus_")
     // Spark-written corpora are parquet DIRECTORIES, not single files —
     // a liveness check that only fingerprints regular files would see an
     // empty live set here and delete the other generation's artifact.
@@ -124,20 +73,22 @@ class SinkRoundtripSpec extends AnyFunSuite {
         FileTime.fromMillis(System.currentTimeMillis() - 7200000L))
       d
     }
+    val v = "_foo_v" + Staging.formatVersion
     try {
-      val kept = mk(s"${fpA}_foo_v1", old = false)
-      val otherSfDir = mk(s"${fpB}_foo_v1", old = true) // live, dir-shaped
-      val retired = mk("aaaa12345678_foo_v1", old = true)
-      ops.Sinks.sweepRetired(kept, srcA)
+      val kept = mk(fpA + v, old = false)
+      val otherSfDir = mk(fpB + v, old = true) // live, dir-shaped
+      val retired = mk("aaaa12345678" + v, old = true)
+      Staging.sweep(parent, Staging.Key(srcA.toString, "foo"))
       assert(Files.exists(otherSfDir),
         "sweep deleted an artifact keyed to a live DIRECTORY-shaped corpus")
-      assert(!Files.exists(retired), "old same-class sibling not swept")
+      assert(Files.exists(kept) && !Files.exists(retired),
+        "sweep kept a retired-corpus artifact or took the live publish")
       // Liveness unestablishable (no sibling dir carries the table at
       // all): the sweep must do NOTHING — "nothing is live" is never
       // distinguishable from "looked in the wrong place".
       val ghostSrc = corpus.resolve("sfGhost").resolve("none.parquet")
-      val survivor = mk("eeee12345678_foo_v1", old = true)
-      ops.Sinks.sweepRetired(kept, ghostSrc)
+      val survivor = mk("eeee12345678" + v, old = true)
+      Staging.sweep(parent, Staging.Key(ghostSrc.toString, "ffff", "foo"))
       assert(Files.exists(survivor),
         "sweep ran with an empty live set — cross-generation deletion risk")
     } finally {

@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Compute-or-load semantics of the thunked `Staging.materialize`
-  * overload: the build thunk must run on a cache miss and must NOT run
-  * when the staged artifact is served — that laziness is what lets
-  * eager-to-construct artifacts (the PQ codebook's seed collect + Lloyd
-  * corpus pass) cost their build once per corpus version instead of once
-  * per query. */
+/** The artifact store: the publish-once protocol (crash points, a
+  * racing second JVM, the lost-race policy, the nonce staleness token),
+  * its one sweep policy, and the compute-or-load semantics of the thunked
+  * `Staging.materialize` overload — the build thunk must run on a cache
+  * miss and must NOT run when the staged artifact is served, which is
+  * what lets eager-to-construct artifacts (the PQ codebook's seed collect
+  * + Lloyd corpus pass) cost their build once per corpus version instead
+  * of once per query. */
 class StagingSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -162,29 +164,235 @@ class StagingSpec extends AnyFunSuite {
         FileTime.fromMillis(System.currentTimeMillis() - 7200000L))
       d
     }
+    val v = "_x_v" + Staging.formatVersion
     try {
-      val liveA = mk(s"${fpA}_x_v2", old = true)   // live fp, old — keep
-      val liveB = mk(s"${fpB}_x_v2", old = true)   // other live SF — keep
-      val deadOld = mk("aaaa12345678_x_v2", old = true)   // retired — sweep
-      val deadNew = mk("bbbb12345678_x_v2", old = false)  // too fresh — keep
-      val tmp = mk("cccc12345678_x_v2.tmp-abc", old = true) // temps skipped
-      Staging.sweepRetiredSources(root, src)
+      val liveA = mk(fpA + v, old = true)   // live fp, old — keep
+      val liveB = mk(fpB + v, old = true)   // other live SF — keep
+      val deadOld = mk("aaaa12345678" + v, old = true)   // retired — sweep
+      val deadNew = mk("bbbb12345678" + v, old = false)  // too fresh — keep
+      val tmp = mk("cccc12345678" + v + ".tmp-abc", old = true) // temp guard
+      Staging.sweep(root, Staging.Key(src.toString, "x"))
       assert(Files.exists(liveA) && Files.exists(liveB),
         "sweep deleted an artifact keyed to a live corpus generation")
       assert(!Files.exists(deadOld), "retired-source artifact not reclaimed")
       assert(Files.exists(deadNew), "age guard ignored")
-      assert(Files.exists(tmp), "live-writer temp raced by the sweep")
+      assert(Files.exists(tmp), "temp reaped inside its own age guard")
       // liveness unestablishable (corpus root itself is gone — e.g. a
       // probe's deleted temp tree): must sweep NOTHING
       val ghost = java.nio.file.Paths.get(
         root.toString + "_gone", "sfX", "none.parquet")
-      val survivor = mk("dddd12345678_x_v2", old = true)
-      Staging.sweepRetiredSources(root, ghost)
+      val survivor = mk("dddd12345678" + v, old = true)
+      Staging.sweep(root, Staging.Key(ghost.toString, "ffff", "x"))
       assert(Files.exists(survivor),
         "sweep ran with an empty live set — deletion with no liveness proof")
     } finally {
       Staging.deleteRecursively(root)
       Staging.deleteRecursively(corpus)
     }
+  }
+
+  import java.nio.file.{Files, Path}
+  import java.nio.file.attribute.FileTime
+
+  /** A throwaway corpus (<root>/sfA/tbl.parquet, one plain file) and a
+    * private artifact root, so the protocol runs with no Spark job. */
+  private def withStore(body: (String, Staging.Key) => Unit): Unit = {
+    val corpus = Files.createTempDirectory("graft_stg_corpus_")
+    val src = Files.createDirectories(corpus.resolve("sfA")).resolve("tbl.parquet")
+    Files.write(src, Array[Byte](1, 2, 3))
+    val root = "graft_stagingspec_" + java.util.UUID.randomUUID
+    try body(root, Staging.Key(src.toString, "probe"))
+    finally {
+      Staging.deleteRecursively(Staging.rootDir(root))
+      Staging.deleteRecursively(corpus)
+    }
+  }
+
+  private def age(p: Path, ms: Long): Unit =
+    Files.setLastModifiedTime(p,
+      FileTime.fromMillis(System.currentTimeMillis() - ms))
+
+  private def temps(root: String): Seq[String] = {
+    val ls = Files.list(Staging.rootDir(root))
+    try ls.toArray.map(_.toString).filter(_.contains(".tmp-")).toSeq
+    finally ls.close()
+  }
+
+  test("publish: a crash after the write, after the stamp or after the " +
+       "rename is rebuilt exactly once or reused; orphans swept past the guard") {
+    withStore { (root, base) =>
+      def write(tmp: Path): Unit = {
+        Files.createDirectories(tmp)
+        Files.write(tmp.resolve("part-0"), Array[Byte](4, 5, 6))
+      }
+      def dirOf(k: Staging.Key) = Staging.rootDir(root).resolve(k.dirName())
+      // what any reader can observe at the artifact path: nothing, or a
+      // complete dir — never one without its _SUCCESS nonce
+      def readerSafe(k: Staging.Key) =
+        !Files.exists(dirOf(k)) || Staging.nonce(dirOf(k)).isDefined
+      def builds(k: Staging.Key)(f: => Unit): Long = {
+        val b0 = Staging.buildCount.get(); f; Staging.buildCount.get() - b0
+      }
+      def publish(k: Staging.Key): Path = Staging.publish(root, k) { tmp =>
+        assert(readerSafe(k), "partial artifact visible during the build")
+        write(tmp)
+      }
+      // each crash point leaves the state a killed JVM leaves: the
+      // protocol's own steps, run up to the crash
+      val afterWrite = base.copy(name = "after_write")
+      val t1 = Staging.tmpFor(dirOf(afterWrite))
+      write(t1)
+      val afterStamp = base.copy(name = "after_stamp")
+      val t2 = Staging.tmpFor(dirOf(afterStamp))
+      write(t2); Staging.stamp(t2)
+      val afterRename = base.copy(name = "after_rename")
+      val t3 = Staging.tmpFor(dirOf(afterRename))
+      write(t3); Staging.stamp(t3); Staging.commit(t3, dirOf(afterRename))
+      val renamedNonce = Staging.nonce(dirOf(afterRename))
+      Seq(afterWrite, afterStamp, afterRename).foreach(k =>
+        assert(readerSafe(k), s"${k.name}: crash left a partial artifact"))
+
+      assert(builds(afterWrite)(publish(afterWrite)) === 1)
+      assert(builds(afterStamp)(publish(afterStamp)) === 1)
+      assert(builds(afterRename)(publish(afterRename)) === 0,
+        "a complete artifact was rebuilt")
+      assert(Staging.nonce(dirOf(afterRename)) === renamedNonce)
+      Seq(afterWrite, afterStamp, afterRename).foreach { k =>
+        assert(Staging.nonce(dirOf(k)).isDefined)
+        assert(Files.readAllBytes(dirOf(k).resolve("part-0")).toSeq ===
+          Seq[Byte](4, 5, 6))
+        assert(builds(k)(publish(k)) === 0, s"${k.name}: warm hit rebuilt")
+      }
+      // the crashed temps are fresh: a sweep inside their guard keeps them
+      assert(Files.exists(t1) && Files.exists(t2))
+      age(t1, Staging.TempAgeMs + 60000L)
+      age(t2, Staging.TempAgeMs + 60000L)
+      val fresh = Staging.tmpFor(dirOf(base.copy(name = "in_flight")))
+      write(fresh)
+      publish(base.copy(name = "trigger")) // a build sweeps its root
+      assert(!Files.exists(t1) && !Files.exists(t2), "orphan temp not swept")
+      assert(Files.exists(fresh), "an in-flight temp was reaped")
+    }
+  }
+
+  test("publish: an incomplete dir in place is evicted only past the crash " +
+       "guard; a fresh one fails the publish by name") {
+    withStore { (root, key) =>
+      val dir = Staging.rootDir(root).resolve(key.dirName())
+      Files.createDirectories(dir.resolve("partial"))
+      val tmp = Staging.tmpFor(dir)
+      Files.createDirectories(tmp)
+      Staging.stamp(tmp)
+      val e = intercept[IllegalStateException](Staging.commit(tmp, dir, 300L))
+      assert(e.getMessage.contains("never complete"))
+      assert(Files.exists(dir.resolve("partial")), "a fresh dir was deleted")
+      age(dir, Staging.CrashAgeMs + 60000L)
+      Staging.commit(tmp, dir, 300L)
+      assert(Staging.nonce(dir).isDefined && !Files.exists(dir.resolve("partial")))
+    }
+  }
+
+  test("a republished artifact is never served from the read memo") {
+    withStore { (root, key) =>
+      var reads = 0
+      def read(dir: Path) = Tables.memoizedSourceRead(spark, dir.toString,
+        "stagingspec") { _ => reads += 1; spark.emptyDataFrame }
+      def publish() = Staging.publish(root, key)(Staging.stamp)
+      read(publish()); read(publish())
+      assert(reads === 1, "warm read missed the memo")
+      Staging.deleteRecursively(publish())
+      read(publish()) // same path, new nonce
+      assert(reads === 2, "republished dir served a stale memo entry")
+    }
+  }
+
+  test("graft_bucketed: retired-fingerprint and crashed entries are " +
+       "reclaimed after a publish") {
+    val root = Staging.BucketedRoot
+    val src = Tables.path(sf, "orders")
+    val rootDir = Staging.rootDir(root)
+    Files.createDirectories(rootDir)
+    val v = "_bkt_orders_v" + Staging.formatVersion
+    def plant(name: String, ms: Long): Path = {
+      val d = Files.createDirectories(rootDir.resolve(name))
+      Files.write(d.resolve("part-0"), Array[Byte](1))
+      age(d, ms)
+      d
+    }
+    val retiredCorpus = plant("aaaa12345678" + v, Staging.RetiredAgeMs + 60000L)
+    val preProtocol = plant("graft_bkt_aaaa12345678_orders",
+      Staging.RetiredAgeMs + 60000L)
+    val crashed = plant("bbbb12345678" + v + ".tmp-x", Staging.TempAgeMs + 60000L)
+    val key = Staging.Key(src, "stagingspec_bkt")
+    try {
+      Staging.publish(root, key)(Staging.stamp)
+      Seq(retiredCorpus, preProtocol, crashed).foreach(p =>
+        assert(!Files.exists(p), s"$p survived the bucketed root's sweep"))
+    } finally {
+      Seq(retiredCorpus, preProtocol, crashed,
+        rootDir.resolve(key.dirName())).foreach(Staging.deleteRecursively)
+    }
+  }
+
+  test("two JVMs racing one key: 1-2 builds, one complete nonce, no temps") {
+    withStore { (root, key) =>
+      val go = Files.createTempFile("graft_stg_go_", "")
+      Files.delete(go)
+      val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java")
+      val child = new ProcessBuilder(javaBin.toString, "-Xmx128m",
+          "-Djava.io.tmpdir=" + sys.props("java.io.tmpdir"),
+          "-cp", sys.props("java.class.path"), "graft.PublishRaceMain",
+          root, key.source, key.name, go.toString)
+        .redirectErrorStream(true).start()
+      try {
+        Thread.sleep(1500L) // let the child JVM reach its wait loop
+        val b0 = Staging.buildCount.get()
+        Files.createFile(go)
+        val dir = Staging.publish(root, key)(StagingSpec.slowWrite)
+        val mine = Staging.buildCount.get() - b0
+        val out = new String(child.getInputStream.readAllBytes(), "UTF-8")
+        assert(child.waitFor(60, java.util.concurrent.TimeUnit.SECONDS))
+        assert(child.exitValue() === 0, out)
+        val m = "builds=(\\d+) nonce=(\\S+)".r.findFirstMatchIn(out)
+          .getOrElse(fail(s"child printed no result: $out"))
+        val total = mine + m.group(1).toLong
+        assert(total >= 1 && total <= 2, s"builds summed over both JVMs: $total")
+        assert(Staging.nonce(dir) === Some(m.group(2)),
+          "the JVMs were served different artifacts")
+        assert(temps(root).isEmpty, s"temps left: ${temps(root)}")
+      } finally {
+        child.destroyForcibly()
+        Files.deleteIfExists(go)
+      }
+    }
+  }
+
+  test("ATOMIC_MOVE, .tmp- names and buildCount increments live only in " +
+       "Staging.scala") {
+    val main = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(main), s"no sources at $main")
+    val walk = Files.walk(main)
+    val files = try walk.toArray.map(_.asInstanceOf[Path])
+      .filter(_.toString.endsWith(".scala")).toSeq finally walk.close()
+    assert(files.exists(_.getFileName.toString == "Staging.scala"))
+    val offenders = for {
+      f <- files if f.getFileName.toString != "Staging.scala"
+      (line, i) <- Files.readAllLines(f).toArray.map(_.toString).zipWithIndex
+      if line.contains("ATOMIC_MOVE") || line.contains("\".tmp-\"") ||
+        line.contains("buildCount.incrementAndGet")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "hand-written publish path outside Staging.publish:\n" +
+        offenders.mkString("\n"))
+  }
+}
+
+object StagingSpec {
+  /** A plain-file artifact body slow enough that two racing JVMs both
+    * miss and both build. */
+  def slowWrite(tmp: java.nio.file.Path): Unit = {
+    java.nio.file.Files.createDirectories(tmp)
+    java.nio.file.Files.write(tmp.resolve("part-0"), Array[Byte](7, 8, 9))
+    Thread.sleep(500L)
   }
 }
