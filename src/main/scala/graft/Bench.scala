@@ -59,24 +59,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Whole-stage-codegen compile cache (static conf, default 100
-      // entries): a 293-query pass generates far more codegen units than
-      // 100, so every entry is evicted before the second timed pass and
-      // Janino re-compiles each stage (~10-30 ms per unit) on EVERY
-      // pass. 4096 entries holds the suite (bounded: entries are
-      // compiled classes + source text, well under the 8g heap). This is
-      // query-COUNT-dependent, not scale- or core-count-dependent — a
-      // production driver running a large query suite sets it the same
-      // way — so the low-core bench comparison is unaffected. (r21,
-      // guide §1.2 step 3.)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // Stream-drain checkpoints live on per-drain tmpfs dirs since r7
     // (Streams.drain self-manages and deletes them), so Bench no longer
     // needs a global checkpoint override. try/finally so a fatal error
@@ -167,7 +151,7 @@ object Bench {
         val t0 = System.nanoTime()
         // bit_xor, not sum: full-range hash values overflow a long SUM
         // under ANSI mode; xor is overflow-free and just as codegen'd
-        spark.range(0L, rows, 1L, cpus.toInt)
+        spark.range(0L, rows, 1L, cpus)
           .selectExpr("bit_xor(xxhash64(id))").head()
         (System.nanoTime() - t0) / 1e9
       }
@@ -179,7 +163,7 @@ object Bench {
       val c2 = calibOnce(CalibRows)
       // Third pass for the NOISY keys only (r12 verdict item 1): the
       // streaming drain keys' per-run swing on a loaded box is up to 2.2×
-      // on identical code (two back-to-back DrainTune sweeps, r12 notes) —
+      // on identical code (back-to-back drain sweeps, ROUND12_NOTES.md) —
       // wider than min-of-2 can absorb, so one scheduler spike in both
       // passes set stream_upsert_snapshot's driver record 2× over its
       // same-box control. One extra run of just those keys (+~10 s) makes

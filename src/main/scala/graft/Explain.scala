@@ -1,14 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan-audit helper: print the formatted physical plan for the named
+/** Plan capture: print the formatted physical plan for the named
   * declared queries (or all). Used to check the scale checklist — filters
   * pushed to the scan, small sides broadcast, whole-stage codegen spans,
-  * no stray shuffles (`sbt "runMain graft.Explain <sfDir> <name ...>"`). */
+  * no stray shuffles. `--run` executes each query first, so the printed
+  * plan is the FINAL adaptive plan (AQE exchange reuse, runtime join
+  * demotions) instead of the initial one. Per-subtree codegen sizes are
+  * checked by PlanAuditSpec's sweep test.
+  * Usage: `sbt "runMain graft.Explain <sfDir> [name ...] [--run]"`. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val operands = args.filterNot(_.startsWith("--"))
+    val run = args.contains("--run")
+    val sfDir = operands.headOption.getOrElse("/root/testdata/sf0.01")
     // Draining streaming keys are excluded from the explain-all default:
     // invoking one RUNS a full AvailableNow drain and the returned
     // DataFrame is just the memory-sink table, so the printed plan would
@@ -16,22 +20,23 @@ object Explain {
     // one explicitly to override. Staging is bypassed so plans show the
     // full computation subtrees instead of staged-file scans.
     sys.props("graft.staging") = "false"
-    val names = if (args.length > 1) args.drop(1).toSeq
+    val names = if (operands.length > 1) operands.drop(1).toSeq
                 else (SparkEntry.queries.keySet --
                   graft.streaming.Streams.drainKeys --
                   graft.ops.Pipeline.loopKeys).toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     names.foreach { n =>
       println(s"\n########## $n ##########")
-      try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        // collect, not count: count() plans and runs a NEW
+        // QueryExecution, so this one would print its initial plan
+        if (run) df.collect()
+        println(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      } catch {
+        case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}")
+      }
     }
     spark.stop()
   }

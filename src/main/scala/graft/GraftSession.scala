@@ -19,8 +19,12 @@ import org.apache.spark.sql.SparkSession
   *    cluster locale.
   *
   * `shufflePartitions` should be ≈ 2-3× total executor cores on a real
-  * cluster (AQE coalesces down from there); the local harnesses pass
-  * their core count.
+  * cluster (AQE coalesces down from there).
+  *
+  * `local` is the one session factory for the local harnesses (Bench,
+  * Verify, Smoke, Explain, the tools, the test suite). A harness that
+  * needs AQE off or a `graft.*` flag sets it with `spark.conf.set` after
+  * building the session.
   */
 object GraftSession {
   /** The recommended conf set, exposed as data so tests can assert it
@@ -38,7 +42,33 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC")
 
   def builder(shufflePartitions: Int = 200): SparkSession.Builder =
-    recommended(shufflePartitions).foldLeft(SparkSession.builder()) {
+    configured(recommended(shufflePartitions))
+
+  /** Core count for the local harnesses: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** The local harness conf set, as data for the same reason as
+    * `recommended`. Shuffle partitions = cores. The whole-stage-codegen
+    * compile cache (static conf, default 100 entries) is raised to 4096:
+    * a 293-query pass generates far more codegen units than 100, so
+    * every entry would be evicted before the next pass and Janino would
+    * re-compile each stage (~10-30 ms per unit) on every pass. The bound
+    * depends on the query count, not on scale or cores. */
+  def localConfs(cpus: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC")
+
+  def local(cpus: Int): SparkSession = {
+    val spark = configured(localConfs(cpus)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def configured(confs: Seq[(String, String)]): SparkSession.Builder =
+    confs.foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }
 }

@@ -33,7 +33,7 @@ object QueryDefs {
   * visible) but owns its conf — the returned frame carries the scoped
   * session, and nothing else in the JVM sees the overrides.
   *
-  * Memoized per (parent, tag, confs) so PlanSweep/Bench's repeated
+  * Memoized per (parent, tag, confs) so the sweep's and Bench's repeated
   * constructions reuse one child; weak keys so children die with their
   * parent. The CONFS are part of the memo key on purpose: keying by tag
   * alone made the first caller win silently, so a test carrying a

@@ -57,7 +57,7 @@ object Tables {
   /** Memoized source DataFrames, keyed (session, variant, path, source
     * fingerprint) — the r21 fixed-cost fix: every `spark.read.parquet`
     * construction pays a file-listing + footer-schema read measured at
-    * ~50-105 ms per call on this box (tools/R21Probe), and a bench pass
+    * ~50-105 ms per call (OPTIMIZATION_r21.md), and a bench pass
     * makes ~1500 `Tables.table` calls inside timed regions. The memo
     * caches the resolved source RELATION (a lazy plan — never rows or
     * results; every action still scans the parquet), exactly the

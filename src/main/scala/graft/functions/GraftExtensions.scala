@@ -9,9 +9,10 @@ import org.apache.spark.sql.graft.CosineSim
 /** SparkSessionExtensions entry point: makes graft's native expressions
   * callable from SQL text. Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * or programmatically via `SparkSession.builder.withExtensions(new
-  * GraftExtensions)`; after that `SELECT graft_cosine(a, b)` works in
-  * `spark.sql(...)` exactly like a built-in (full codegen, no UDF tax).
+  * (as `graft.GraftSession.builder` does) or programmatically via the
+  * session builder's `withExtensions(new GraftExtensions)`; after that
+  * `SELECT graft_cosine(a, b)` works in `spark.sql(...)` exactly like a
+  * built-in (full codegen, no UDF tax).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -986,7 +986,7 @@ object Aggs {
       // the per-order sorted item-set relation feeds all three legs
       // (pair mass, per-part counts, the order total) — staged per
       // corpus version so the fact scan + distinct run ONCE, not once
-      // per consumer branch (PlanSweep flagged lineitem×3 on the
+      // per consumer branch (the plan sweep flagged lineitem×3 on the
       // self-join form; the q21 rescan class). Pairs then explode
       // map-side from each array (i < j ⇒ a < b after the sort) —
       // bounded by the per-order line count exactly like the join form.

@@ -466,7 +466,7 @@ object Analytics {
       // the 1-row max and the winner filter — without the barrier each
       // branch re-ran the full quarter scan + aggregate (column pruning
       // makes the branches structurally different, so AQE exchange reuse
-      // cannot dedupe them; r14 PlanSweep: lineitem×2). Q15's own
+      // cannot dedupe them; r14 plan sweep: lineitem×2). Q15's own
       // definition is a materialized revenue VIEW — this is that,
       // executor-local. eager=false is only truly lazy BELOW an AQE
       // root: rev contains an exchange, so under AQE the checkpoint's

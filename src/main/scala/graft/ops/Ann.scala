@@ -1029,7 +1029,7 @@ object Ann {
     * buffer keeps the aggregate inside codegen'd HashAggregateExec,
     * where ANY struct/array buffer (the old min(struct) + first(v) form)
     * silently demoted the whole aggregate to SortAggregateExec: a
-    * per-partition SORT of the N·C scored stream (r14 PlanSweep
+    * per-partition SORT of the N·C scored stream (r14 plan sweep
     * finding, the same class of degradation as join_fuzzy_blocked's
     * window argmin). */
   private def packScore(v: Column, cv: Column, id: Column): Column =

@@ -432,7 +432,7 @@ object Joins {
           // the 9 digits as per-ROW int columns: the per-CANDIDATE
           // Hamming then compares 9 attributes — the div/mod-per-
           // candidate form generated a 19 KB join-stage method, past the
-          // JIT HugeMethodLimit (r14 PlanSweep after the detector fix)
+          // JIT HugeMethodLimit (r14 plan sweep; PlanAuditSpec gates it)
           val p = math.pow(10, 8 - i).toLong
           d.withColumn(s"g$i", ((col("num") / p).cast("long") % 10)
             .cast("int"))
@@ -454,7 +454,7 @@ object Joins {
       // conditional unequal-prefix branch instead put the whole CASE —
       // twice, once in the join condition and once in the project —
       // at 8965 B of generated bytecode, past the JIT HugeMethodLimit
-      // (r14 PlanSweep after the detector fix).
+      // (r14 plan sweep; PlanAuditSpec gates it).
       val hamming = (0 to 8).map { i =>
         (col(s"dg$i") =!= col(s"cg$i")).cast("int")
       }.reduce(_ + _)

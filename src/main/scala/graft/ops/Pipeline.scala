@@ -72,7 +72,7 @@ object Pipeline {
 
   /** Bucket width for the scale-safe two-level packing prefix sum, read
     * from session conf `graft.pack.bucketWidth` (unset/≤0 → the single-key
-    * window). Conf-gated like `graft.drain.statePartitions` so the declared
+    * window). Conf-gated like `graft.dedup.groupExact` so the declared
     * keys keep today's plan by default while the spec and a 100 TB
     * deployment flip the composite path on. */
   private def packBucketWidth(s: SparkSession): Option[Long] =
@@ -1240,7 +1240,7 @@ object Pipeline {
       // its previous label); the convergence count then rides the
       // checkpoint job itself as an observed metric (CollectMetrics →
       // Observation — exact, delivered by the cut's eager action on
-      // both checkpoint paths, tools/ObsProbe) instead of paying a
+      // both checkpoint paths, OPTIMIZATION_r21.md) instead of paying a
       // second count job per round, and the checkpointed relation
       // narrows to (doc, lbl) because `old` is consumed by the metric
       // BEFORE the cut (r21 wave 6; guide §5 driver-roundtrip cut —
@@ -1259,7 +1259,7 @@ object Pipeline {
       // already completed here, so delivery is only listener-bus latency —
       // but a plain obs.get would HANG the fixpoint forever if a Spark
       // behavior change stopped CollectMetrics firing on either cut path.
-      // Fail loudly instead, like the round cap (and tools/ObsProbe).
+      // Fail loudly instead, like the round cap.
       // NOTE the metric's contract is SIGN-ONLY on the reliable-checkpoint
       // path: eager df.checkpoint() re-executes the plan in the
       // checkpoint-write job after the materializing count, so the
@@ -1277,7 +1277,7 @@ object Pipeline {
             throw new IllegalStateException(
               "ccJump: convergence metric not delivered within 120 s of " +
                 "the checkpoint action — the cut path no longer fires " +
-                "CollectMetrics (see tools/ObsProbe)")
+                "CollectMetrics (see OPTIMIZATION_r21.md)")
         }
       // Round N-1's labels were last read by the union inside `next` —
       // retire their checkpoint now that round N is on disk.

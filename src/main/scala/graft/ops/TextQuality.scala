@@ -418,7 +418,7 @@ object TextQuality {
       // every frame): the three-consumer form (tot + mx + topw join)
       // re-computed wc — and the corpus explode under it — once per
       // branch, since differently-pruned branches defeat AQE exchange
-      // reuse (r14 PlanSweep: documents×4), and its min(w) string
+      // reuse (r14 plan sweep: documents×4), and its min(w) string
       // aggregate forced a SortAggregate besides.
       val dw = Window.partitionBy("doc_id")
       val topw = wc

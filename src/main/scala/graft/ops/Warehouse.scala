@@ -99,7 +99,7 @@ object Warehouse {
       // not rebuild it from the changelog. This is also what keeps the
       // query at two events scans (both delta-pruned): unstaged, the
       // base build re-ran once per plan reference (events×5 in the r14
-      // PlanSweep).
+      // plan sweep; PlanAuditSpec gates it).
       val base = graft.Staging.materialize(
         s, Tables.path(dir, "events"), "scd2_base_20240116_v1") {
         scd2(changesOnly(lastPerTs(ev.where(col("ts") < cutoff))))
@@ -336,7 +336,7 @@ object Warehouse {
     // time — the returned DataFrame is a driver-materialized 6-row
     // report, exactly deequ's mechanism, and the r14 verdict accepted
     // the trade. What the r14 ADVICE asked to fix is the REPEAT cost:
-    // plan-only consumers (PlanSweep iterates every key; Bench builds
+    // plan-only consumers (PlanAuditSpec's sweep; Bench builds
     // each key per pass) paid the full scans again per construction.
     // The report is a pure function of the two source files, so it is
     // memoized by their fingerprints — the first construction pays the

@@ -49,7 +49,7 @@ object Windows {
       // LAZY barrier inside the one-time build (the q15 pattern): the
       // hourly aggregate feeds BOTH the per-type [min,max] spine bounds
       // and the spine join — without it the build scans events TWICE
-      // (PlanSweep r19). Also the plan-audit shape when staging is
+      // (r19 plan sweep). Also the plan-audit shape when staging is
       // disabled (-Dgraft.staging=false).
       val hourly = Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as(hourCol),

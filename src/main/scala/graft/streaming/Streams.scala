@@ -133,23 +133,24 @@ object Streams {
   def eventsStream(s: SparkSession, path: String): DataFrame =
     eventsStreamDir(s, stageDir(path))
 
-  /** Drain a streaming DataFrame to completion into a memory sink and
-    * return the sink contents as a batch DataFrame.
-    *
-    * State partitioning is scoped down to 1 for the drain (overridable via
-    * session conf `graft.drain.statePartitions`): each stateful operator
-    * spins up one state-store instance PER shuffle partition per
-    * micro-batch, a fixed cost that dwarfs the per-row work at test SF.
-    * Probed on this box (tools/StreamProbe, sf0.1, 5 keys): 8 partitions
-    * 8.85 s / 4: 7.09 / 2: 6.19 / 1: 5.93; RocksDB at 8 partitions
-    * 7.62 s — still behind HDFS-backed at low partition counts, so it
-    * stays off for drains. tools/DrainTune sized the r7 defaults over all
-    * 7 draining keys: statePartitions 2→1 and the 4 MB drain-scoped
-    * maxPartitionBytes are each worth ~5-8%. Results are unaffected —
-    * state partition count never changes WHAT is computed — and the
-    * previous values are always restored. On a real cluster raise it to
-    * the executor-core count via the same conf before starting jobs.
-    */
+  /** Session confs every drain runs under (via ConfScope). Neither
+    * changes WHAT is computed.
+    *  - One shuffle/state partition: each stateful operator spins up one
+    *    state-store instance PER shuffle partition per micro-batch, a
+    *    fixed cost that dwarfs the per-row work at test SF. Measured at
+    *    sf0.1 in ROUND3_NOTES.md (item 7), ROUND7_NOTES.md (item 4) and
+    *    OPTIMIZATION_r21.md (sp=1 16.57 s vs sp=2..8 ~22.2 s over the 14
+    *    draining keys; RocksDB slower still, so it stays off for drains).
+    *    On a real cluster this would be the executor-core count.
+    *  - 1 MiB scan splits: the staged events file is ONE parquet file well
+    *    under the default 128 MB split size, so the micro-batch's map side
+    *    would run as a single task; 1 MiB gives ~10 map tasks at bench SF
+    *    (ROUND7_NOTES.md item 4). On a real cluster the source is many
+    *    files and this is moot. */
+  private val DrainScope = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.files.maxPartitionBytes" -> "1048576")
+
   /** Depth-counted scoping for the session confs a drain narrows.
     * A plain save/restore pair is not re-entrant: if two drains ever
     * overlap on one session, the inner one captures the OUTER one's
@@ -192,6 +193,8 @@ object Streams {
     }
   }
 
+  /** Drain a streaming DataFrame to completion into a memory sink and
+    * return the sink contents as a batch DataFrame, under `DrainScope`. */
   def drain(out: DataFrame, mode: OutputMode,
             noDataBatch: Option[Boolean] = None): DataFrame = {
     val s = out.sparkSession
@@ -207,17 +210,6 @@ object Streams {
     // join passes Some(false): its matches emit in the data batch and
     // the no-data batch only evicts state).
     val runNoData = noDataBatch.getOrElse(mode != OutputMode.Complete())
-    // The staged events file is ONE parquet file well under the default
-    // 128 MB split size, so the micro-batch's map side (scan + project +
-    // partial agg of ~100k rows at sf0.1) would run as a SINGLE task —
-    // measured as the bulk of addBatch. Scoping maxPartitionBytes down
-    // for the drain splits the file across cores (1 MB → ~10 map tasks
-    // at bench SF — tools/DrainTune measured 1 MB consistently fastest;
-    // tune via `graft.drain.maxPartitionBytes`, ≤0 disables). Split-size
-    // never changes WHAT is computed, only scan parallelism — on a real
-    // cluster the source is many files and this is moot.
-    val mpb = s.conf.getOption("graft.drain.maxPartitionBytes")
-      .getOrElse("1048576").toLong
     // restored (via ConfScope) only AFTER the drain completes:
     // micro-batch planning runs on the stream's own thread after start()
     // returns, so an earlier restore would race it.
@@ -244,12 +236,8 @@ object Streams {
       System.err.println("[drain] checkpoint root: " +
         (if (shmCkpt.isDefined) "/dev/shm (tmpfs)"
          else s"${sys.props("java.io.tmpdir")} (no /dev/shm)"))
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" ->
-        s.conf.getOption("graft.drain.statePartitions").getOrElse("1"),
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> runNoData.toString
-    ) ++ (if (mpb > 0)
-      Seq("spark.sql.files.maxPartitionBytes" -> mpb.toString) else Nil)
+    val scoped = DrainScope :+
+      ("spark.sql.streaming.noDataMicroBatches.enabled" -> runNoData.toString)
     ConfScope.enter(s, scoped)
     try {
       val w = out.writeStream.format("memory").queryName(name)
@@ -687,7 +675,7 @@ object Streams {
         if (java.nio.file.Files.isDirectory(shm)) shm
         else java.nio.file.Paths.get(sys.props("java.io.tmpdir")),
         "graft_upsert_")
-      // Same conf scoping as drain(): tiny snapshot merges don't want 32
+      // Same DrainScope as drain(): tiny snapshot merges don't want 32
       // shuffle partitions' fixed cost, and the split files want map
       // parallelism. Restored after the drain completes via the same
       // depth-counted ConfScope (see drain()).
@@ -698,15 +686,7 @@ object Streams {
       @volatile var cur: Option[(String, String)] = None
       val mergeBatch: (DataFrame, Long) => Unit =
         mergeBatchFn(s, snapRoot, runTag, c => cur = Some(c))
-      // honor the same tuning conf drain() does (≤0 disables the scoping)
-      val mpb = s.conf.getOption("graft.drain.maxPartitionBytes")
-        .getOrElse("1048576").toLong
-      val scoped = Seq(
-        "spark.sql.shuffle.partitions" ->
-          s.conf.getOption("graft.drain.statePartitions").getOrElse("1")
-      ) ++ (if (mpb > 0)
-        Seq("spark.sql.files.maxPartitionBytes" -> mpb.toString) else Nil)
-      ConfScope.enter(s, scoped)
+      ConfScope.enter(s, DrainScope)
       try {
         val q = stream.writeStream
           .foreachBatch(mergeBatch)
@@ -722,7 +702,7 @@ object Streams {
           .orderBy("user_id")
           .localCheckpoint(true)
       } finally {
-        ConfScope.exit(s, scoped.map(_._1))
+        ConfScope.exit(s, DrainScope.map(_._1))
         // retirement is deferred one batch (see mergeBatchFn), so up to
         // TWO versions are still catalog-live here
         dropRunTables(s, runTag)
@@ -761,16 +741,10 @@ object Streams {
       def windowed = eventsStreamDir(s, src, maxFiles = Some(1))
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .count()
-      val mpb = s.conf.getOption("graft.drain.maxPartitionBytes")
-        .getOrElse("1048576").toLong
-      val scoped = Seq(
-        "spark.sql.shuffle.partitions" ->
-          s.conf.getOption("graft.drain.statePartitions").getOrElse("1"),
-        // complete-mode agg: the trailing no-data batch can't change the
-        // sink (same reasoning as drain()); skip its planning cycle ×2 runs
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
-      ) ++ (if (mpb > 0)
-        Seq("spark.sql.files.maxPartitionBytes" -> mpb.toString) else Nil)
+      // complete-mode agg: the trailing no-data batch can't change the
+      // sink (same reasoning as drain()); skip its planning cycle ×2 runs
+      val scoped = DrainScope :+
+        ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
       def run(kill: Boolean): Unit = {
         val q = windowed.writeStream
           .outputMode(OutputMode.Complete())

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.functions._
 
 /** Scale smoke probe for the embedding-similarity family
@@ -32,13 +31,7 @@ object AnnScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0).toInt else 5000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-ann-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     // Corpus-sized rankings auto-arm the sharded two-stage shape since
     // round 7 (LOSSLESS — total order, AnnSpec asserts bit-parity), so
     // the probe's default leg measures exactly what the declared keys
@@ -46,7 +39,6 @@ object AnnScaleProbe {
     // an integer forces that shard count everywhere (incl. IVF/LSH).
     sys.env.get("GRAFT_TOPK_SHARDS")
       .foreach(v => spark.conf.set("graft.ann.topkShards", v))
-    spark.sparkContext.setLogLevel("ERROR")
 
     // JVM warm-up on the real sf0.001 corpus, staging bypassed so the
     // full compute path (index build included) executes and leg 1 doesn't

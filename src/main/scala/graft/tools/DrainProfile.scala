@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Scratch harness: per-micro-batch durationMs breakdown for one streaming
   * key, to locate the drain's fixed-cost floor. Not part of the contract. */
@@ -9,13 +8,7 @@ object DrainProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val key = args.lift(1).getOrElse("stream_tumbling")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     SparkEntry.queries(key)(spark, sfDir).count() // warm
     spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._

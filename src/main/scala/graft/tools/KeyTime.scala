@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Repeated warm timings of ONE declared key — the quiet-box confirmation
   * tool the r14 verdict asked for (join_fuzzy_blocked's bench readings
@@ -17,13 +17,7 @@ object KeyTime {
       sys.error("usage: KeyTime <key> [sfDir] [n]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val n = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val fn = graft.SparkEntry.queries.getOrElse(key,
       sys.error(s"unknown key $key"))
     // untimed warm-up: JIT + any staged-artifact build

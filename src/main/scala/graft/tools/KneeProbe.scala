@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.{Dedup, Pipeline}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Knee-point probe for the flag-gated scale paths (r11 verdict item 5):
@@ -45,13 +45,7 @@ object KneeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val legs = args.lift(1).getOrElse("ABCDEFGHIJ").toUpperCase
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     def t(tag: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** R21 probe: split one key's warm wall time into plan-construction /
   * analysis+optimization (QueryExecution.tracker phases) / execution,
@@ -13,12 +13,7 @@ object R21Phase {
       sys.error("usage: R21Phase <key,...> [sfDir] [n]")).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val n = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     keys.foreach { key =>
       val fn = graft.SparkEntry.queries(key)
       fn(spark, sfDir).count() // warm-up: JIT + staged builds

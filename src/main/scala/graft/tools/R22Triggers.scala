@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** R22 optimization-round probe: per streaming key, how many streaming
@@ -20,13 +20,7 @@ object R22Triggers {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val keys = args.lift(1).map(_.split(",").toSeq).getOrElse(
       graft.SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // (queryRunId, batchId, numInputRows, trigger wall ms) per progress event
     val events = new ConcurrentLinkedQueue[(String, Long, Long, Long)]()

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import graft.ops.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** Scale smoke probe for the two heaviest pipelines (`dedup_cluster`,
   * `pipeline_clean_pack`): synthesizes corpora at 1×, 10× and 100× the
@@ -148,19 +147,14 @@ object ScaleProbe {
     val upsertMode = mode == "upsert"
     val rest = if (mode.nonEmpty) args.drop(1) else args
     val base = rest.headOption.map(_.toInt).getOrElse(5000)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The documented Zipfian-corpus posture (LOSSLESS — identical pair
-      // set, see Dedup.ngramPairs): rarest-grams-first prefix indexing.
-      // The probe corpus is deliberately Zipf-ish, and at the 500k leg the
-      // default lexicographic prefix's hot-gram fan-out (quadratic in gram
-      // df) overruns the box's spill volume — this flag IS the scale path
-      // under test.
-      .config("graft.ngram.dfOrderedPrefix", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
+    // The documented Zipfian-corpus posture (LOSSLESS — identical pair
+    // set, see Dedup.ngramPairs): rarest-grams-first prefix indexing.
+    // The probe corpus is deliberately Zipf-ish, and at the 500k leg the
+    // default lexicographic prefix's hot-gram fan-out (quadratic in gram
+    // df) overruns the box's spill volume — this flag IS the scale path
+    // under test.
+    spark.conf.set("graft.ngram.dfOrderedPrefix", "true")
     // dupheavy mode arms the documented duplicate-heavy posture
     // (LOSSLESS — PipelineSpec asserts label equality): without it the
     // 500k leg's pair graph alone is ~5·10⁸ edges.
@@ -175,7 +169,6 @@ object ScaleProbe {
       .foreach(spark.conf.set("graft.ngram.hotGramCap", _))
     sys.env.get("GRAFT_CC_LARGESTAR")
       .foreach(spark.conf.set("graft.cc.largeStar", _))
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     // JVM warm-up on the real sf0.001 corpus so scale-1 doesn't absorb

@@ -1,8 +1,9 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.streaming.Streams.{publishVersion, upsertLatest, upsertMerge, writeBucketedSnapshot}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicLong
 
@@ -29,13 +30,7 @@ object UpsertProbe {
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
                 else Seq(100000L, 1000000L, 4000000L)
     val batchUsers = 10000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     import spark.implicits._
 
     // shuffle accounting: sum of per-stage shuffle WRITE bytes (every

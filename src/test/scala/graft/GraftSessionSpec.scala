@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftSession's recommended confs are asserted as DATA (building a
-  * session against the already-running shared test context would silently
-  * drop static confs and mutate the shared session — proving nothing and
-  * leaking settings into later suites). The extension mechanics — the one
+/** GraftSession's recommended and local confs are asserted as DATA
+  * (building a session against the already-running shared test context
+  * would silently drop static confs and mutate the shared session —
+  * proving nothing and leaking settings into later suites). The extension mechanics — the one
   * part that needs a live session — are exercised on an isolated
   * newSession whose state is not shared. */
 class GraftSessionSpec extends AnyFunSuite {
@@ -20,6 +20,13 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.sql.session.timeZone") === "UTC")
     // builder() must accept the full set without throwing
     GraftSession.builder(7)
+    // local(cpus): the one factory every local harness builds through
+    assert(GraftSession.localConfs(3).toMap === Map(
+      "spark.master" -> "local[3]",
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "UTC"))
   }
 
   test("the extension makes graft_cosine callable from SQL text") {

@@ -367,22 +367,29 @@ class StagingSpec extends AnyFunSuite {
     }
   }
 
-  test("ATOMIC_MOVE, .tmp- names and buildCount increments live only in " +
-       "Staging.scala") {
+  test("publish paths live only in Staging, session builders only in " +
+       "GraftSession") {
+    // pattern → the one file under src/main/scala allowed to hold it
+    val owners = Seq(
+      "ATOMIC_MOVE" -> "Staging.scala",
+      "\".tmp-\"" -> "Staging.scala",
+      "buildCount.incrementAndGet" -> "Staging.scala",
+      "SparkSession.builder" -> "GraftSession.scala")
     val main = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(main), s"no sources at $main")
     val walk = Files.walk(main)
     val files = try walk.toArray.map(_.asInstanceOf[Path])
       .filter(_.toString.endsWith(".scala")).toSeq finally walk.close()
-    assert(files.exists(_.getFileName.toString == "Staging.scala"))
+    val names = files.map(_.getFileName.toString).toSet
+    owners.foreach { case (_, owner) => assert(names(owner), s"no $owner") }
     val offenders = for {
-      f <- files if f.getFileName.toString != "Staging.scala"
+      f <- files
       (line, i) <- Files.readAllLines(f).toArray.map(_.toString).zipWithIndex
-      if line.contains("ATOMIC_MOVE") || line.contains("\".tmp-\"") ||
-        line.contains("buildCount.incrementAndGet")
-    } yield s"$f:${i + 1}: ${line.trim}"
+      (pattern, owner) <- owners
+      if line.contains(pattern) && f.getFileName.toString != owner
+    } yield s"$f:${i + 1}: ${line.trim} (belongs in $owner)"
     assert(offenders.isEmpty,
-      "hand-written publish path outside Staging.publish:\n" +
+      "hand-written publish path or session builder outside its owner:\n" +
         offenders.mkString("\n"))
   }
 }

@@ -6,13 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sequentially in the forked test JVM; a per-suite session would pay
   * ~5 s of SparkContext startup each). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Smallest scale factor: tests assert semantics, not throughput. */
   val sf = "/root/testdata/sf0.001"
