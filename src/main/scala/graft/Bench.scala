@@ -52,8 +52,9 @@ object Bench {
     "embed_ann_nsw", // r16: stages the k=12 kNN edge artifact
     "embed_mips_ivf", // r16: stages the augmented-space IVF pair
     "text_bpe_tokenize", "pack_sequences_bpe", // r17: staged BPE vocab
-    "win_acf",                 // r20: staged dense_hourly_v1 (count spine)
-    "win_interpolate_linear",  // r20: staged dense_hourly_cents_v1
+    "win_acf",                 // staged dense_hourly_v2 (count spine; its
+                               // warm-up build serves all ten readers)
+    "win_interpolate_linear",  // staged dense_hourly_cents_v2
     "embed_ann_recall_lsh", "embed_ann_recall_nsw", // r20: route artifacts
     "agg_gini")                // r20: staged spend histogram
 

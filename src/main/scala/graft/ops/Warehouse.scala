@@ -251,10 +251,12 @@ object Warehouse {
     // algebraic form z = (n·x − Σx) / √(n·Σx² − (Σx)²) — one cast and
     // one IEEE division/sqrt at the very end, identical expression text
     // on both engines, so the rounded value is bit-stable (the repo's
-    // standard exact-ints-then-IEEE posture). Scale: one (day, type)
-    // aggregate over the corpus, then a broadcast of the per-type stats
-    // (|event_types| rows) back onto the daily relation — history never
-    // re-scans the raw events.
+    // standard exact-ints-then-IEEE posture). Scale: the (day, type)
+    // counts are the day grain of the staged hourly spine
+    // (Windows.dailyCounts — types × hours rows, no events scan; the
+    // oracle replays them from raw events), then per-type stats ride a
+    // window over that daily relation — history never re-scans the raw
+    // events.
     "dq_anomaly_volume" -> ((s, dir) => {
       // per-type stats ride a WINDOW over the daily relation, not a
       // second aggregate branch joined back: the branch form re-scanned
@@ -273,9 +275,7 @@ object Warehouse {
       // Cauchy-Schwarz over exact ints, so wraparound would surface as
       // den2 < 0 → z = NULL-free garbage; WarehouseSpec pins den2 ≥ 0.
       val wt = Window.partitionBy("event_type")
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
+      val daily = Windows.dailyCounts(s, dir)
         .withColumn("nd", count(lit(1)).over(wt))
         .withColumn("s1", sum(col("n")).over(wt))
         .withColumn("m2", sum(col("n") * col("n")).over(wt))
@@ -426,13 +426,12 @@ object Warehouse {
     // shared double expression, rounded 6dp. A zero MAD (≥ half the
     // days carry the median count exactly) NULL-gates z AND the flag
     // (the agg_ab_ttest degenerate-group posture from birth). Scale:
-    // one corpus pass to the (day, type) rollup; the two median passes
-    // run over the BOUNDED daily relation (|days|·|types| rows) and
-    // broadcast back — raw events are never re-scanned.
+    // the (day, type) counts are the day grain of the staged hourly
+    // spine (Windows.dailyCounts — no events scan; the oracle replays
+    // them from raw events); the two median passes run over the BOUNDED
+    // daily relation (|days|·|types| rows) and broadcast back.
     "dq_outlier_mad" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
+      val daily = Windows.dailyCounts(s, dir)
       val med = daily.groupBy("event_type")
         .agg(expr("cast(percentile(n, 0.5) * 2 as long)").as("med2"))
       val dev = daily.join(broadcast(med), "event_type")

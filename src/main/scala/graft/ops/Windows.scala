@@ -17,17 +17,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Windows {
 
-  /** The DENSIFIED hourly volume series (event_type, hw, n) — each
-    * type's calendar hours from its first to its last observed hour,
-    * zero-filled where no events landed. Shared by win_acf and
-    * win_seasonal_baseline: zero-volume hours are real observations for
-    * a volume monitor (a lag over the observed-rows-only rollup would
-    * treat hours across a gap as adjacent; a seasonal mean would skip
-    * exactly the hours that drag a sparse slot down — r17 review
-    * finding; the dq_drift_psi explode(sequence) densification
-    * precedent). The spine is per-type (no fabricated hours before a
-    * type first existed) and stays |days|·24·|types| rows — calendar-
-    * bounded, never event-bounded. */
   /** Build-or-load a densified per-type hourly spine over `events`:
     * `aggExpr` per (event_type, hour), hours from each type's first to
     * last observed hour, gaps carrying `fill` (or NULL when None — the
@@ -39,7 +28,11 @@ object Windows {
     * bounded derived relation (types × hours — dim-sized), exactly what
     * the Staging contract is for. ONE parameterized builder so the
     * count and cents spines can never drift in barrier/staging/spine
-    * rules (r20 review). */
+    * rules (r20 review). The spine join is NULL-safe on event_type: a
+    * NULL type is a group like any other (the raw GROUP BY keeps it), so
+    * its observed hours must carry their aggregate, not the gap fill.
+    * Rows with a NULL `ts` have no hour and are not in the spine
+    * (FIXTURES.md: no NULLs in any profiled column). */
   private def denseHourlySpine(s: org.apache.spark.sql.SparkSession,
       dir: String, name: String, hourCol: String,
       aggExpr: org.apache.spark.sql.Column, aggName: String,
@@ -61,16 +54,60 @@ object Windows {
         .select(col("event_type"),
           explode(sequence(col("h0"), col("h1"), expr("interval 1 hour")))
             .as(hourCol))
-        .join(hourly, Seq("event_type", hourCol), "left")
-        .select(col("event_type"), col(hourCol),
-          fill.map(f => coalesce(col(aggName), f))
-            .getOrElse(col(aggName)).as(aggName))
+        .as("sp")
+        .join(hourly.as("h"),
+          col("sp.event_type") <=> col("h.event_type") &&
+            col(s"sp.$hourCol") === col(s"h.$hourCol"), "left")
+        .select(col("sp.event_type"), col(s"sp.$hourCol"),
+          fill.map(f => coalesce(col(s"h.$aggName"), f))
+            .getOrElse(col(s"h.$aggName")).as(aggName))
     }
 
+  /** The DENSIFIED hourly volume series (event_type, hw, n) — each
+    * type's calendar hours from its first to its last observed hour,
+    * zero-filled where no events landed. Read by win_acf,
+    * win_seasonal_baseline, win_changepoint, win_forecast_des,
+    * win_forecast_hw and win_rolling_corr, and (through [[hourlyCounts]]
+    * and [[dailyCounts]]) by win_trend_theil_sen, win_cusum,
+    * dq_anomaly_volume and dq_outlier_mad: zero-volume hours are real
+    * observations for a volume monitor (a lag over the observed-rows-only
+    * rollup would treat hours across a gap as adjacent; a seasonal mean
+    * would skip exactly the hours that drag a sparse slot down — r17
+    * review finding; the dq_drift_psi explode(sequence) densification
+    * precedent). The spine is per-type (no fabricated hours before a
+    * type first existed) and stays |days|·24·|types| rows — calendar-
+    * bounded, never event-bounded. */
   private def denseHourly(s: org.apache.spark.sql.SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame =
-    denseHourlySpine(s, dir, "dense_hourly_v1", "hw",
+    denseHourlySpine(s, dir, "dense_hourly_v2", "hw",
       count(lit(1)), "n", Some(lit(0L)))
+
+  /** The OBSERVED per-type hourly counts (event_type, hw, n): the count
+    * spine's rows with n > 0, which are exactly the rows of
+    * `events.groupBy(event_type, date_trunc('hour', ts)).count()` — so a
+    * key that needs the raw hourly rollup reads types × hours staged
+    * rows instead of scanning the fact table (Catalyst has no rule that
+    * answers an aggregate from a staged rollup; the routing is ours).
+    * NULL event_type is kept (the spine joins NULL-safely); rows with a
+    * NULL `ts` have no hour and are not counted (FIXTURES.md: no NULLs in
+    * any profiled column). `n` stays non-nullable like `count`'s — the
+    * staged parquet read marks every column nullable. HourlySpineSpec
+    * pins the equivalence. */
+  private[graft] def hourlyCounts(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    denseHourly(s, dir).where(col("n") > 0)
+      .select(col("event_type"), col("hw"),
+        coalesce(col("n"), lit(0L)).as("n"))
+
+  /** The per-type DAILY counts (day, event_type, n) — the day grain of
+    * [[hourlyCounts]], equal to `events.groupBy(to_date(ts),
+    * event_type).count()` under the same NULL rules; a day with no
+    * events has no row. */
+  private[graft] def dailyCounts(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    hourlyCounts(s, dir)
+      .groupBy(to_date(col("hw")).as("day"), col("event_type"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n"))
 
   /** Two-sided CUSUM DECISION rule with alarm-reset (the Page–Hinkley
     * readout `win_cusum` stops short of), factored so DataQualitySpec
@@ -466,11 +503,11 @@ object Windows {
     // slope is ONE IEEE division of exact ints (correctly rounded both
     // engines), and the median interpolates two slopes with (a+b)/2 —
     // also exact-identical. Emitted with the pair count and a rising
-    // flag at the 6dp-rounded slope.
+    // flag at the 6dp-rounded slope. The daily counts come from the
+    // staged hourly spine ([[dailyCounts]]), not a scan of events; the
+    // oracle still replays them from raw events.
     "win_trend_theil_sen" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
         .withColumn("d", datediff(col("day"), lit("1970-01-01")))
       val slopes = daily.as("x").join(daily.as("y"),
           col("x.event_type") === col("y.event_type") &&
@@ -821,7 +858,7 @@ object Windows {
       // Own cents-valued hourly spine (denseHourly carries counts),
       // same staged shape via the shared builder; gaps stay NULL — they
       // ARE the missing observations the interpolation exists to fill.
-      val m = denseHourlySpine(s, dir, "dense_hourly_cents_v1", "hr",
+      val m = denseHourlySpine(s, dir, "dense_hourly_cents_v2", "hr",
         sum(round(col("value") * 100, 0).cast("long")), "cents", None)
         .withColumn("is_masked", hour(col("hr")) % 5 === 2)
         .withColumn("v", when(!col("is_masked"), col("cents")))
@@ -889,12 +926,13 @@ object Windows {
       * different order than Spark's running frame — exact ints are
       * order-free); the single division by n happens once per OUTPUT
       * row. Alarm = S > μ/4 ⟺ 4·S′ > total, again pure integers.
-      * Scale: one hourly pre-aggregate (the win_range_frame posture),
-      * then windows over the BOUNDED hours-per-type relation. */
+      * Scale: the observed hourly counts come from the staged spine
+      * ([[hourlyCounts]] — types × hours rows, no events scan; the
+      * oracle replays them from raw events), then windows over that
+      * BOUNDED hours-per-type relation. */
     "win_cusum" -> ((s, dir) => {
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("x"))
+      val hourly = hourlyCounts(s, dir)
+        .select(col("event_type"), col("hw").as("hr"), col("n").as("x"))
       val tw = Window.partitionBy("event_type")
       val rw = Window.partitionBy("event_type").orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -918,8 +956,9 @@ object Windows {
     "PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey"
 
   /** denseHourly's DuckDB replay, ending in `d(event_type, hw, n)` —
-    * one constant shared by the win_acf and win_seasonal_baseline
-    * oracles so the spine rule can never drift between them. */
+    * one constant shared by the dense-spine oracles so the spine rule
+    * can never drift between them; the join is NULL-safe on event_type
+    * like the Spark side's. */
   private val DenseHourlyCte =
     "h AS (SELECT date_trunc('hour', ts) AS hw, event_type, " +
     "count(*) AS n FROM events GROUP BY 1, 2), " +
@@ -928,7 +967,8 @@ object Windows {
     "FROM h GROUP BY event_type), " +
     "d AS (SELECT sp.event_type, sp.hw, " +
     "CAST(coalesce(h.n, 0) AS BIGINT) AS n FROM sp " +
-    "LEFT JOIN h ON sp.event_type = h.event_type AND sp.hw = h.hw)"
+    "LEFT JOIN h ON sp.event_type IS NOT DISTINCT FROM h.event_type " +
+    "AND sp.hw = h.hw)"
 
   val oracles: Map[String, String] = Map(
     // Same dense spine, same exact-integer window sums (HUGEINT ↔
@@ -1331,7 +1371,8 @@ object Windows {
        "CASE WHEN hour(s.hr) % 5 = 2 THEN NULL ELSE h.cents END AS v, " +
        "CAST(floor(epoch(s.hr)) / 3600 AS BIGINT) AS t " +
        "FROM spine s LEFT JOIN hourly h " +
-       "ON s.event_type = h.event_type AND s.hr = h.hr), " +
+       "ON s.event_type IS NOT DISTINCT FROM h.event_type " +
+       "AND s.hr = h.hr), " +
        "f AS (SELECT *, " +
        "last_value(v IGNORE NULLS) OVER wp AS pv, " +
        "last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS) " +

@@ -1140,9 +1140,27 @@ class PlanAuditSpec extends AnyFunSuite {
   //    subtree failed Janino compilation outright);
   //  - no-codegen: no whole-stage-codegen subtree is visible;
   //  - plan-failed: building the plan threw.
+  // The same pass fails outright if a spine consumer's plan reads
+  // `events` (no allowlist: those keys must read the staged spine).
   private val HugeMethodLimit = 8000
   private val factTables =
     Seq("lineitem", "events", "documents", "embeddings", "orders")
+
+  /** How many times plan text `p` reads fact table `t`. Counts Location:
+    * entries, not raw path mentions — a V2 BatchScan node prints its path
+    * twice (header + Location). */
+  private def scans(p: String, t: String): Int =
+    s"InMemoryFileIndex\\([^)]*\\)\\[[^\\]]*$t\\.parquet".r.findAllIn(p).length
+
+  /** The keys served by the staged hourly spines (Windows.denseHourly and
+    * the cents spine). Their plans must read the staged spine, never
+    * `events`: a refactor that inlines a raw hourly or daily rollup again
+    * brings back a full fact scan per call. */
+  private val spineConsumers = Set(
+    "win_acf", "win_seasonal_baseline", "win_changepoint",
+    "win_forecast_des", "win_forecast_hw", "win_rolling_corr",
+    "win_interpolate_linear", "win_trend_theil_sen", "win_cusum",
+    "dq_anomaly_volume", "dq_outlier_mad")
 
   private def sweepFlags(plan: org.apache.spark.sql.execution.SparkPlan)
       : Set[String] = {
@@ -1150,11 +1168,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val cg = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
     val huge = cg.map(_._3.maxMethodCodeSize)
       .exists(sz => sz > HugeMethodLimit || sz < 0)
-    // count Location: entries, not raw path mentions — a V2 BatchScan
-    // node prints its path twice (header + Location)
     val rescans = factTables.flatMap { t =>
-      val n = s"InMemoryFileIndex\\([^)]*\\)\\[[^\\]]*$t\\.parquet".r
-        .findAllIn(p).length
+      val n = scans(p, t)
       if (n > 1) Some(s"rescan:$t×$n") else None
     }
     Set("SortAggregate" -> p.contains("SortAggregate"),
@@ -1262,12 +1277,20 @@ class PlanAuditSpec extends AnyFunSuite {
     // InMemoryTableScan in for the plan under audit.
     spark.catalog.clearCache()
     spark.conf.set(aqe, "false")
+    val spineBypass = Seq.newBuilder[String]
     val found = try (SparkEntry.queries.keySet -- streamingKeys).toSeq.map { k =>
-      k -> (try sweepFlags(sweepPlan(k))
-            catch { case scala.util.control.NonFatal(e) =>
+      k -> (try {
+              val plan = sweepPlan(k)
+              if (spineConsumers(k) && scans(plan.toString, "events") > 0)
+                spineBypass += k
+              sweepFlags(plan)
+            } catch { case scala.util.control.NonFatal(e) =>
               Set(s"plan-failed(${e.getClass.getSimpleName})") })
     }.filter(_._2.nonEmpty).toMap
     finally spark.conf.unset(aqe)
+    assert(spineBypass.result().isEmpty,
+      s"spine consumers scanning events instead of the staged spine: " +
+        spineBypass.result().sorted.mkString(", "))
     val allowed = sweepAllowlist.map { case (k, (fs, _)) => k -> fs }
     def minus(a: Map[String, Set[String]], b: Map[String, Set[String]]) =
       (for ((k, fs) <- a.toSeq; f <- fs -- b.getOrElse(k, Set.empty))
