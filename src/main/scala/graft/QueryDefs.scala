@@ -7,9 +7,9 @@ object QueryDefs {
   type Q = (SparkSession, String) => DataFrame
 
   /** Parse an optional integer tuning conf, naming the conf in the error —
-    * a bare `.toLong` on a mis-set 100 TB knob (`bucketWidth=50k`) throws
-    * an anonymous NumberFormatException at plan time with no hint of
-    * WHICH conf is malformed. Same contract as Ann.pqTrainStride's
+    * a bare `.toLong` on a mis-set knob (`hotGramCap=50k`) throws an
+    * anonymous NumberFormatException at plan time with no hint of WHICH
+    * conf is malformed. Same contract as Ann.pqTrainStride's
     * validation. */
   def longConf(s: SparkSession, key: String): Option[Long] =
     s.conf.getOption(key).map { v =>
@@ -69,7 +69,24 @@ object Scoped {
   */
 object D {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.round
+  import org.apache.spark.sql.functions.{count, pmod, round, sum}
   def r2(c: Column): Column = round(c, 2)
   def r6(c: Column): Column = round(c, 6)
+
+  /** `round(avg(c), 2)` decided on integers, for an integral non-negative
+    * `c`: floor((200·Σc + n) / 2n) / 100 is Σc/n rounded HALF_UP to two
+    * places. `r2(avg(c))` rounds a double that can sit on an x.xx5 tie,
+    * where Spark (shortest decimal string) and DuckDB (binary value)
+    * disagree. The oracle spells it `(200*sum(c) + count(c)) //
+    * (2*count(c)) / 100.0`. */
+  def avg2(c: Column): Column = {
+    val n = count(c)
+    intDiv(sum(c) * 200 + n, n * 2) / 100.0
+  }
+
+  /** Exact long integer division a div b for non-negative operands: the
+    * subtract-remainder numerator is an exact multiple of b, so the
+    * double division is exact and the cast is safe. */
+  def intDiv(a: Column, b: Column): Column =
+    ((a - pmod(a, b)) / b).cast("long")
 }

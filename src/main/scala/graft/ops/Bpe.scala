@@ -160,15 +160,13 @@ object Bpe {
       * rollup) driven by the LEARNED token counts instead of whitespace
       * counts — the real pre-training packing pipeline (tokenize →
       * budget-pack) end to end. Shares Pipeline.packRollup, so the
-      * shard arithmetic (exclusive-prefix div budget, the
-      * graft.pack.bucketWidth two-level path included) can never drift
+      * shard arithmetic (exclusive-prefix div budget) can never drift
       * from the whitespace key's. */
     "pack_sequences_bpe" -> ((s, dir) =>
       Pipeline.packRollup(
         encoded(s, dir)
           .groupBy(col("source"), col("doc_id"))
-          .agg(sum(col("ntok")).cast("long").as("toks")),
-        s))
+          .agg(sum(col("ntok")).cast("long").as("toks"))))
   )
 
   // ---------------------------------------------------------------------

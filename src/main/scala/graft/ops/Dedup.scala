@@ -145,20 +145,18 @@ object Dedup {
       // in ngramPairs so the rep-level PPJoin runs the same plan.
       if (!groupedReportOn(s)) ngramPairs(s, dir).orderBy("doc_a", "doc_b")
       else {
-        val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
-        val dfOrdered = cap.isDefined ||
-          s.conf.getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean)
+        val posture = ngramPosture(s)
         // Staged like the plain pair list; the cap posture is lossy and
         // gets its own artifact name (dfOrdered alone is lossless — same
         // pair set, same name), mirroring ngramPairs exactly. THUNKED:
         // the build runs an eager localCheckpoint job — cache-miss only.
         graft.Staging.materialize(s, Tables.path(dir, "documents"),
-          cap.fold("ngram_grouped08_v1")(c => s"ngram_grouped08_cap${c}_v1")) {
+          posture.artifact("ngram_grouped08")) {
           groupedReport(Tables.table(s, dir, "documents")
               .select(col("doc_id"), col("text")),
             "jac", lit(1.0), size(split(lower(col("text")), " ")) >= 3)(reps =>
             ngramJaccardFromGrams(ngramGrams(reps).localCheckpoint(true),
-              dfOrdered, cap))
+              posture.dfOrdered, posture.cap))
         }.orderBy("doc_a", "doc_b")
       }),
 
@@ -181,13 +179,10 @@ object Dedup {
       val mx = Tables.table(s, dir, "documents").agg(max("doc_id").as("mx"))
         .localCheckpoint(false)
       val g2 = grams.crossJoin(broadcast(mx))
-      // Same conf coupling as ngramPairs: a set hotGramCap IMPLIES the
-      // df-ordered posture (the cap itself stays with the full-corpus
-      // path — running uncapped here only ever returns MORE pairs, which
-      // the cap's explicitly-lossy contract allows).
-      val dfOrdered =
-        s.conf.getOption("graft.ngram.hotGramCap").isDefined ||
-        s.conf.getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean)
+      // Same posture as ngramPairs, minus the cap: it stays with the
+      // full-corpus path — running uncapped here only ever returns MORE
+      // pairs, which the cap's explicitly-lossy contract allows.
+      val dfOrdered = ngramPosture(s).dfOrdered
       val indexG =
         g2.where(col("doc_id") * 10 < col("mx") * 9).select("doc_id", "g")
       // The index side's gram-df order is a pure function of the corpus
@@ -446,16 +441,35 @@ object Dedup {
     *    (LOSSLESS, identical pair set, so it shares the artifact name);
     *  - `graft.ngram.hotGramCap=N` → additionally drop grams with df > N
     *    from the prefix index (EXPLICITLY LOSSY → its own artifact name,
-    *    never served to an uncapped read). Implies dfOrderedPrefix. */
+    *    never served to an uncapped read). Implies dfOrderedPrefix.
+    * Both are read by [[ngramPosture]] alone. */
   def ngramPairs(s: SparkSession, dir: String): DataFrame = {
-    val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
-    val dfOrdered = cap.isDefined ||
-      s.conf.getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean)
+    val posture = ngramPosture(s)
     graft.Staging.materialize(
       ngramJaccardFromGrams(stagedGrams(s, dir),
-        dfOrderedPrefix = dfOrdered, hotGramCap = cap),
-      Tables.path(dir, "documents"),
-      cap.fold("ngram_pairs08_v1")(c => s"ngram_pairs08_cap${c}_v1"))
+        dfOrderedPrefix = posture.dfOrdered, hotGramCap = posture.cap),
+      Tables.path(dir, "documents"), posture.artifact("ngram_pairs08"))
+  }
+
+  /** The n-gram PPJoin scale posture of a session: `dfOrdered` (rarest
+    * grams first) and the optional hot-gram `cap`. A set cap implies
+    * `dfOrdered`. */
+  private[ops] final case class NgramPosture(dfOrdered: Boolean,
+                                             cap: Option[Long]) {
+    /** Staged name of an artifact derived from the pair graph:
+      * `<base>_v1` uncapped, `<base>_cap<N><capTag>_v1` capped. A capped
+      * graph is lossy, so it never shares an uncapped artifact's name;
+      * `dfOrdered` alone is lossless and does. */
+    def artifact(base: String, capTag: String = ""): String =
+      cap.fold(s"${base}_v1")(c => s"${base}_cap$c${capTag}_v1")
+  }
+
+  /** The one reader of `graft.ngram.hotGramCap` and
+    * `graft.ngram.dfOrderedPrefix`. */
+  private[ops] def ngramPosture(s: SparkSession): NgramPosture = {
+    val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
+    NgramPosture(cap.isDefined ||
+      s.conf.getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean), cap)
   }
 
   /** The corpus's sorted-distinct-trigram relation, staged per corpus

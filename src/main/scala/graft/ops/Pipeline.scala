@@ -20,11 +20,7 @@ import org.apache.spark.sql.functions._
   *  - `pack_sequences`: contiguous token-budget packing — docs in a fixed
   *    deterministic order per stratum, exclusive running token count,
   *    shard = cum div budget. One shuffle (partition by stratum) + one
-  *    in-partition window by default; at 100 TB set
-  *    `graft.pack.bucketWidth` to switch `packShards` to the two-level
-  *    (source, doc_id-bucket) prefix sum — window partitions stay
-  *    executor-sized and shard ids are bit-identical (PipelineSpec
-  *    property).
+  *    in-partition window.
   *  - `text_scrub_terms`: denylist redaction (word-boundary regex) counted
   *    and applied map-side in one pass — corpus-linear, no shuffle before
   *    the tiny per-source aggregate.
@@ -70,75 +66,33 @@ object Pipeline {
   // the selection, not a pass-through.
   private val SelectBudget = 1500L
 
-  /** Bucket width for the scale-safe two-level packing prefix sum, read
-    * from session conf `graft.pack.bucketWidth` (unset/≤0 → the single-key
-    * window). Conf-gated like `graft.dedup.groupExact` so the declared
-    * keys keep today's plan by default while the spec and a 100 TB
-    * deployment flip the composite path on. */
-  private def packBucketWidth(s: SparkSession): Option[Long] =
-    graft.QueryDefs.longConf(s, "graft.pack.bucketWidth").filter(_ > 0)
-
   /** Assign each doc its global token-budget shard id: shard = (exclusive
     * prefix sum of `toks` per `source` in `doc_id` order) div `budget`.
     * Input must have columns (source, doc_id, toks); output adds `shard`.
     *
-    * Two execution shapes, bit-identical output (PipelineSpec property):
-    *
-    *  - `bucketWidth = None`: one window partitioned by `source` alone.
-    *    Correct, single-exchange — but a window partition holds an entire
-    *    stratum, so at 100 TB one task sorts corpus/|sources|. Fine at
-    *    bench SF, the declared default.
-    *
-    *  - `bucketWidth = Some(B)`: the distributed two-pass prefix sum.
-    *    `bucket = doc_id div B` is MONOTONE in doc_id, so ordering by
-    *    doc_id within (source, bucket) plus bucket-order offsets
-    *    reconstructs the exact global prefix: within-bucket exclusive
-    *    sums come from a window over (source, bucket) — each partition
-    *    now holds ≤ B docs regardless of corpus size — and each bucket's
-    *    starting offset is the exclusive sum of per-bucket subtotals,
-    *    computed by a second window over the TINY (source, bucket)
-    *    subtotal relation (O(corpus/B) rows) and broadcast back. The
-    *    subtotal pass re-scans the narrow (source, doc_id, toks)
-    *    projection — a map-side partial agg, the standard price of a
-    *    two-pass distributed scan — rather than re-evaluating the window.
+    * One window partitioned by `source`: a single exchange, and a window
+    * partition holds a whole stratum. A two-level (source, doc_id-bucket)
+    * prefix sum bounds window partitions but measured slower at every
+    * size tried, 0.5M/5M/50M docs (0.59/1.69/72.7 s against
+    * 0.08/0.18/24.5 s, ROUND12_NOTES §B).
     */
-  def packShards(docs: DataFrame, budget: Int,
-                 bucketWidth: Option[Long]): DataFrame =
-    bucketWidth match {
-      case None =>
-        val w = Window.partitionBy("source").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        // Integral `div` (not float `/`): cumulative token sums at 100 TB
-        // can exceed 2^53, where double division truncates wrongly; the
-        // DuckDB oracle uses integral `//`.
-        docs.withColumn("off", coalesce(sum("toks").over(w), lit(0L)))
-          .withColumn("shard", expr(s"off div $budget"))
-          .drop("off")
-      case Some(b) =>
-        // `div` (not `/`): exact integral division on longs — float floor
-        // would wobble for doc_ids beyond 2^53.
-        val bucketed = docs.withColumn("bucket", expr(s"doc_id div $b"))
-        val wl = Window.partitionBy("source", "bucket").orderBy("doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val wb = Window.partitionBy("source").orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy("source", "bucket")
-          .agg(sum("toks").as("bt"))
-          .withColumn("off", coalesce(sum("bt").over(wb), lit(0L)))
-          .select("source", "bucket", "off")
-        bucketed
-          .withColumn("loc", coalesce(sum("toks").over(wl), lit(0L)))
-          .join(broadcast(offsets), Seq("source", "bucket"))
-          .withColumn("shard", expr(s"(off + loc) div $budget"))
-          .drop("bucket", "loc", "off")
-    }
+  private def packShards(docs: DataFrame, budget: Int): DataFrame = {
+    val w = Window.partitionBy("source").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    // Integral `div` (not float `/`): cumulative token sums at 100 TB
+    // can exceed 2^53, where double division truncates wrongly; the
+    // DuckDB oracle uses integral `//`.
+    docs.withColumn("off", coalesce(sum("toks").over(w), lit(0L)))
+      .withColumn("shard", expr(s"off div $budget"))
+      .drop("off")
+  }
 
   /** The declared packing rollup: per-(source, shard) doc/token counts.
     * private[ops] since r17: the BPE composition key
     * (Bpe.pack_sequences_bpe) shares the exact shard arithmetic so the
     * two packings can never drift. */
-  private[ops] def packRollup(docs: DataFrame, s: SparkSession): DataFrame =
-    packShards(docs, SeqBudget, packBucketWidth(s))
+  private[ops] def packRollup(docs: DataFrame): DataFrame =
+    packShards(docs, SeqBudget)
       .groupBy("source", "shard")
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("sum_toks"))
       .orderBy("source", "shard")
@@ -386,19 +340,17 @@ object Pipeline {
       packRollup(
         Tables.table(s, dir, "documents")
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")),
-        s)),
+            size(split(col("text"), " ")).cast("long").as("toks")))),
 
     // The doc-level packing manifest — the artifact a training run
     // actually consumes (doc → shard assignment), sharing packShards with
-    // the pack_sequences rollup so the two can never drift. Same scale
-    // story (and the same graft.pack.bucketWidth composite-key path).
+    // the pack_sequences rollup so the two can never drift.
     "pack_manifest" -> ((s, dir) =>
       packShards(
         Tables.table(s, dir, "documents")
           .select(col("source"), col("doc_id"),
             size(split(col("text"), " ")).cast("long").as("toks")),
-        SeqBudget, packBucketWidth(s))
+        SeqBudget)
         .select("source", "doc_id", "toks", "shard")
         .orderBy("doc_id")),
 
@@ -635,8 +587,7 @@ object Pipeline {
           .where(TextQuality.qualityScore >= 0.5)
           .where(draw < rate)
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")),
-        s)
+            size(split(col("text"), " ")).cast("long").as("toks")))
     }),
 
     // INCREMENTAL connected components (round 19) — the update step the
@@ -657,15 +608,11 @@ object Pipeline {
       val mxdf = Tables.table(s, dir, "documents")
         .agg(max("doc_id").as("mx"))
       // The old-labels artifact name mirrors ccLabels' cap-awareness
-      // (r19 review): the pair graph depends on the LOSSY
-      // graft.ngram.hotGramCap conf, and a fixed name would serve a
-      // capped session's labels to an uncapped one (the aliasing bug
-      // ccLabels' naming exists to prevent).
-      val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
-      val oldName = if (cap.isEmpty) "cc_labels08_old90_v1"
-                    else s"cc_labels08_old90_cap${cap.get}_v1"
-      val oldLabels = stagedComponents(
-        s, Tables.path(dir, "documents"), oldName) {
+      // (r19 review): the pair graph depends on the LOSSY hot-gram cap,
+      // and a fixed name would serve a capped session's labels to an
+      // uncapped one (the aliasing bug ccLabels' naming exists to prevent).
+      val oldLabels = stagedComponents(s, Tables.path(dir, "documents"),
+        Dedup.ngramPosture(s).artifact("cc_labels08_old90")) {
         pairs.crossJoin(broadcast(mxdf))
           .where(col("doc_a") * 10 < col("mx") * 9 &&
                  col("doc_b") * 10 < col("mx") * 9)
@@ -742,8 +689,7 @@ object Pipeline {
           .where(TextQuality.qualityScore >= 0.5)
           .where(draw < rate)
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")),
-        s)
+            size(split(col("text"), " ")).cast("long").as("toks")))
     }),
 
     // Context-window CHUNKING with overlap — the RAG/pretraining prep
@@ -1000,24 +946,6 @@ object Pipeline {
     })
   )
 
-  /** CC labels over the staged near-dup pair graph, themselves staged per
-    * corpus version — the production shape the clean_pack scaladoc
-    * describes: at 100 TB the pair lists AND the cluster labels live next
-    * to the corpus and update incrementally; queries read them. The
-    * compute-or-load overload means the fixpoint loop only runs on a
-    * cache miss (`lastCcRounds` is only meaningful after one — ScaleProbe
-    * always measures fresh corpora, so always cold). The artifact name
-    * mirrors `Dedup.ngramPairs`' cap suffix: a capped (explicitly lossy)
-    * pair graph yields its own label artifact and can never poison the
-    * uncapped one. */
-  /** The staged (doc_id, distinct word-4-gram) relation — one artifact
-    * per corpus version, shared by `text_contamination` (benchmark
-    * overlap) and `text_dup_spans` (cross-doc duplication mass). The
-    * explode feeds multiple join sides across both consumers, so it is
-    * materialized once (the same two-reference rule as the dedup
-    * signatures): at 100 TB the gram relation is built next to the
-    * corpus and every consumer reads the columnar artifact instead of
-    * re-exploding the text. */
   /** Per-doc average unigram negative log-likelihood (doc_id, avg_nll) —
     * shared by `text_unigram_nll` (direct) and `text_ppl_buckets` (rank
     * input), so score and bucketing can never drift. The exploded-token
@@ -1041,30 +969,23 @@ object Pipeline {
     // summing the vocab-sized cnt relation replaces a second full pass
     // over the corpus-sized staged toks (r21, guide §2.4)
     val total = cnt.agg(sum("cnt").as("total"))
-    // The token join is Zipf-hot at scale ("the" → one reducer). Two
-    // defenses: AQE skew-split is armed session-wide and this is the
-    // sort-merge shape it can split (PlanAuditSpec asserts both); and
-    // `graft.nll.saltReplicas` = R flips on an explicit salted join —
-    // the BIG side salts by doc hash, the SMALL per-token count side
-    // replicates R× (R ≪ vocab growth, so the overhead is bounded), so
-    // the hottest token spreads over R reducers deterministically
-    // instead of relying on runtime stats. Output is identical
-    // (PipelineSpec property).
-    val joined = graft.QueryDefs.longConf(s, "graft.nll.saltReplicas")
-      .map(_.toInt).filter(_ > 1) match {
-      case None => toks.join(cnt, "tok")
-      case Some(r) =>
-        toks.withColumn("salt", pmod(hash(col("doc_id")), lit(r)))
-          .join(cnt.withColumn("salt",
-            explode(sequence(lit(0), lit(r - 1)))), Seq("tok", "salt"))
-          .drop("salt")
-    }
-    joined.crossJoin(broadcast(total))
+    // The token join is Zipf-hot at scale ("the" → one reducer). The
+    // defense is AQE skew-split: it is armed session-wide and this is the
+    // sort-merge shape it can split (PlanAuditSpec asserts both).
+    toks.join(cnt, "tok").crossJoin(broadcast(total))
       .groupBy("doc_id")
       .agg(round(avg(-log(col("cnt").cast("double") / col("total"))), 6)
         .as("avg_nll"))
   }
 
+  /** The staged (doc_id, distinct word-4-gram) relation — one artifact
+    * per corpus version, shared by `text_contamination` (benchmark
+    * overlap) and `text_dup_spans` (cross-doc duplication mass). The
+    * explode feeds multiple join sides across both consumers, so it is
+    * materialized once (the same two-reference rule as the dedup
+    * signatures): at 100 TB the gram relation is built next to the
+    * corpus and every consumer reads the columnar artifact instead of
+    * re-exploding the text. */
   private def grams4(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.table(s, dir, "documents")
       .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
@@ -1078,16 +999,24 @@ object Pipeline {
       Tables.path(dir, "documents"), "contam_grams4_v1")
   }
 
+  /** CC labels over the staged near-dup pair graph, themselves staged per
+    * corpus version — the production shape the clean_pack scaladoc
+    * describes: at 100 TB the pair lists AND the cluster labels live next
+    * to the corpus and update incrementally; queries read them. The
+    * compute-or-load overload means the fixpoint loop only runs on a
+    * cache miss (`lastCcRounds` is only meaningful after one — ScaleProbe
+    * always measures fresh corpora, so always cold). The artifact name
+    * mirrors `Dedup.ngramPairs`' cap suffix: a capped (explicitly lossy)
+    * pair graph yields its own label artifact and can never poison the
+    * uncapped one. */
   private def ccLabels(s: SparkSession, dir: String): DataFrame = {
-    val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
+    val posture = Dedup.ngramPosture(s)
     val groupExact =
       s.conf.getOption("graft.dedup.groupExact").exists(_.toBoolean)
     // Lossless posture shares the artifact name; the capped variant is
     // lossy AND df-dependent (rep-level gram df ≠ full-corpus df), so
     // capped+grouped gets its own name and can never alias either.
-    val name =
-      if (cap.isEmpty) "cc_labels08_v1"
-      else s"cc_labels08_cap${cap.get}${if (groupExact) "_ge" else ""}_v1"
+    val name = posture.artifact("cc_labels08", if (groupExact) "_ge" else "")
     stagedComponents(s, Tables.path(dir, "documents"), name) {
       if (!groupExact)
         Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
@@ -1119,9 +1048,7 @@ object Pipeline {
           withRep.where(col("doc_id") === col("rep"))
             .select(col("doc_id"), col("text"))
             .repartition(col("doc_id")),
-          dfOrderedPrefix = cap.isDefined || s.conf
-            .getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean),
-          hotGramCap = cap)
+          dfOrderedPrefix = posture.dfOrdered, hotGramCap = posture.cap)
         star.union(repPairs.select("doc_a", "doc_b"))
       }
     }

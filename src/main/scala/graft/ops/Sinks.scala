@@ -511,12 +511,6 @@ object Sinks {
 
   private[graft] val ZBuckets = 64
 
-  /** Exact long integer division a div b for non-negative operands: the
-    * subtract-remainder numerator is an exact multiple of b, so the
-    * double division is exact and the cast is safe. */
-  private def intDiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   /** lineitem rewritten in Z-order on (l_partkey, l_suppkey) — the
     * multi-dimensional clustering that makes min/max data skipping work
     * for BOTH keys at once (a single-column sort serves one predicate;
@@ -539,12 +533,12 @@ object Sinks {
         (max("l_suppkey") + 1).as("ms"))
       val li = li0.crossJoin(broadcast(m))
         .withColumn("zv", morton16(
-          intDiv(col("l_partkey") * 65536L, col("mp")),
-          intDiv(col("l_suppkey") * 65536L, col("ms"))))
+          D.intDiv(col("l_partkey") * 65536L, col("mp")),
+          D.intDiv(col("l_suppkey") * 65536L, col("ms"))))
         .drop("mp", "ms")
       val w = li.agg((floor(max("zv") / ZBuckets) + 1).cast("long").as("w"))
       li.crossJoin(broadcast(w))
-        .withColumn("zb", intDiv(col("zv"), col("w")))
+        .withColumn("zb", D.intDiv(col("zv"), col("w")))
         .drop("w")
         .repartition(col("zb"))
         .sortWithinPartitions("zb", "zv", "l_orderkey", "l_linenumber")

@@ -191,8 +191,8 @@ object Text {
       Tables.table(s, dir, "documents")
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
-             D.r2(avg("n_chars")).as("avg_chars"),
-             D.r2(avg(size(split(col("text"), " ")))).as("avg_toks"))
+             D.avg2(col("n_chars")).as("avg_chars"),
+             D.avg2(size(split(col("text"), " "))).as("avg_toks"))
         .orderBy("lang", "source")),
 
     "dedup_exact" -> ((s, dir) =>
@@ -515,9 +515,11 @@ object Text {
        "WHERE rk <= 5 ORDER BY term, rnk"),
     "text_stats" ->
       ("SELECT lang, source, count(*) AS n_docs, " +
-       "round(avg(n_chars), 2) AS avg_chars, " +
-       "round(avg(len(string_split(text, ' '))), 2) AS avg_toks " +
-       "FROM documents GROUP BY lang, source ORDER BY lang, source"),
+       "(200 * sum(n_chars) + count(n_chars)) // (2 * count(n_chars)) " +
+       "/ 100.0 AS avg_chars, " +
+       "(200 * sum(nt) + count(nt)) // (2 * count(nt)) / 100.0 AS avg_toks " +
+       "FROM (SELECT *, len(string_split(text, ' ')) AS nt FROM documents) " +
+       "GROUP BY lang, source ORDER BY lang, source"),
     "dedup_exact" ->
       ("SELECT lang, count(DISTINCT lower(trim(text))) AS uniq_docs, " +
        "count(*) AS total_docs FROM documents GROUP BY lang ORDER BY lang")

@@ -89,11 +89,9 @@ object Vector {
         .map { case (v, i) => (i, v) }.toDF("pos", "uval")
     }.collect().sortBy(_.getInt(0)).map(_.getDouble(1)).toSeq
 
-  /** Shard count for a corpus-sized ranking when the session conf leaves
-    * the choice to the engine. 8 bounds the local[32] bench's widest
-    * candidate sets at ~1/8 corpus per task; a 1000-executor deployment
-    * sets `graft.ann.topkShards` to its core count. */
-  private val DefaultTopkShards = 8
+  /** Shard count for a corpus-sized ranking. 8 bounds the local[32]
+    * bench's widest candidate sets at ~1/8 corpus per task. */
+  private val TopkShards = 8
 
   /** Top-k rows per probe under a TOTAL order (tie-broken — required for
     * determinism and for the sharded variant's losslessness): appends
@@ -109,53 +107,33 @@ object Vector {
     *
     * Which shape runs is NOT an opt-in: callers whose candidate side is
     * corpus-sized (the exact scan, kNN, the PQ ADC scan) pass
-    * `corpusSized = true` and get the sharded plan BY DEFAULT — the
-    * scale-safe shape is what the declared key runs. Bucket-bounded
-    * callers keep the single window. `graft.ann.topkShards` overrides
-    * both ways: an integer ≥ 2 forces S shards everywhere, `off` forces
-    * the single-window plan (the A/B baseline). Anything else fails fast
-    * at plan time — 0 would pmod every row into one NULL shard and
-    * silently defeat the posture. */
-  private[ops] def rankPerProbe(df: DataFrame, order: Seq[Column], k: Int,
-                                rankCol: String,
-                                corpusSized: Boolean = false): DataFrame = {
-    val shards: Option[Int] =
-      df.sparkSession.conf.getOption("graft.ann.topkShards") match {
-        case Some("off") => None
-        case Some(v) =>
-          val n =
-            try v.toInt
-            catch { case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"graft.ann.topkShards must be 'off' or an integer >= 2, got '$v'")
-            }
-          require(n >= 2,
-            s"graft.ann.topkShards must be >= 2 (got $n); use 'off' for the unsharded plan")
-          Some(n)
-        case None => if (corpusSized) Some(DefaultTopkShards) else None
-      }
+    * `corpusSized = true` and get the sharded plan — the scale-safe shape
+    * is what the declared key runs. Bucket-bounded callers keep the
+    * single window. */
+  private[graft] def rankPerProbe(df: DataFrame, order: Seq[Column], k: Int,
+                                  rankCol: String,
+                                  corpusSized: Boolean = false): DataFrame = {
     val w = Window.partitionBy("q_id").orderBy(order: _*)
-    shards match {
-      case None =>
-        df.withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
-      case Some(s) =>
-        // Improbable internal names: an input relation that already
-        // carried a column of the same name would be silently replaced
-        // by withColumn — guarded, not just unlikely.
-        val (shardCol, prCol) = ("__graft_topk_shard", "__graft_topk_pr")
-        require(!df.columns.contains(shardCol) && !df.columns.contains(prCol),
-          s"input relation already carries $shardCol/$prCol")
-        val pw = Window.partitionBy(col("q_id"), col(shardCol)).orderBy(order: _*)
-        df.withColumn(shardCol, pmod(xxhash64(col("vec_id")), lit(s)))
-          .withColumn(prCol, row_number().over(pw)).where(col(prCol) <= k)
-          .drop(shardCol, prCol)
-          .withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
+    if (!corpusSized)
+      df.withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
+    else {
+      // Improbable internal names: an input relation that already
+      // carried a column of the same name would be silently replaced
+      // by withColumn — guarded, not just unlikely.
+      val (shardCol, prCol) = ("__graft_topk_shard", "__graft_topk_pr")
+      require(!df.columns.contains(shardCol) && !df.columns.contains(prCol),
+        s"input relation already carries $shardCol/$prCol")
+      val pw = Window.partitionBy(col("q_id"), col(shardCol)).orderBy(order: _*)
+      df.withColumn(shardCol, pmod(xxhash64(col("vec_id")), lit(TopkShards)))
+        .withColumn(prCol, row_number().over(pw)).where(col(prCol) <= k)
+        .drop(shardCol, prCol)
+        .withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
     }
   }
 
   /** Broadcast `probes` (q_id, q) against the corpus, rank neighbors by
     * rounded cosine, keep top k per probe. The candidate set IS the
-    * corpus, so the ranking defaults to the sharded two-stage shape.
+    * corpus, so the ranking runs the sharded two-stage shape.
     * The ranking input is projected NARROW (ids + label + rounded sim)
     * before any window: the 64-dim vectors are consumed by the map-side
     * cosine and must not ride the ranking shuffles — at corpus scale

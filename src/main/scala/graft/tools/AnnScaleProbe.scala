@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * sharded two-stage top-k BY DEFAULT (see Vector.rankPerProbe) — the
   * probe measures the declared plan as-is. Without the sharding, every
   * probe's candidate set funnels into a single window task, the first
-  * thing to break on a real cluster; `GRAFT_TOPK_SHARDS=off` re-measures
-  * that baseline for A/B. AnnSpec asserts the shapes are bit-identical.
+  * thing to break on a real cluster. AnnSpec asserts the two shapes are
+  * bit-identical.
   *
   * Not part of the driver contract; run manually, numbers recorded in
   * ROUND6_NOTES.md. Exit code 1 on a violated bound.
@@ -32,13 +32,6 @@ object AnnScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0).toInt else 5000
     val spark = GraftSession.local(GraftSession.cpus)
-    // Corpus-sized rankings auto-arm the sharded two-stage shape since
-    // round 7 (LOSSLESS — total order, AnnSpec asserts bit-parity), so
-    // the probe's default leg measures exactly what the declared keys
-    // run. GRAFT_TOPK_SHARDS=off forces the unsharded baseline for A/B;
-    // an integer forces that shard count everywhere (incl. IVF/LSH).
-    sys.env.get("GRAFT_TOPK_SHARDS")
-      .foreach(v => spark.conf.set("graft.ann.topkShards", v))
 
     // JVM warm-up on the real sf0.001 corpus, staging bypassed so the
     // full compute path (index build included) executes and leg 1 doesn't

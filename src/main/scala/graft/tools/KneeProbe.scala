@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions._
   *     without it df-ordering has no rare grams to prefer at ANY scale).
   *     Lex-prefix candidates grow ~m² (C(df,2) per hot gram); df-ordered
   *     picks the df=1 salt grams first and stays ~m.
-  *  B. two-level packing (`graft.pack.bucketWidth`): narrow
-  *     (source, doc_id, toks) replication at large m — the single-window
-  *     default sorts corpus/20 rows in ONE task per source, the
-  *     two-level path bounds every window partition to ≤ bucketWidth.
   *  C. connected components (`graft.cc.largeStar`): pointer-jump vs
   *     large-star/small-star over the m-replicated near-dup graph
   *     (m disjoint copies: edges ×m, diameter constant — the drift-safe
@@ -38,13 +34,13 @@ import org.apache.spark.sql.functions._
   * is snapshot/batch ratio, not corpus multiplier, so it keeps its own
   * harness. Scratch tool, not part of the driver contract; numbers in
   * ROUND12_NOTES.md. Usage: runMain graft.tools.KneeProbe [sfDir] [legs]
-  * — `legs` is an optional subset of "ABCDEFGHIJ" (default all); the D/E loop
+  * — `legs` is an optional subset of "ACDEFGHIJ" (default all); the D/E loop
   * runs when either letter is selected.
   */
 object KneeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val legs = args.lift(1).getOrElse("ABCDEFGHIJ").toUpperCase
+    val legs = args.lift(1).getOrElse("ACDEFGHIJ").toUpperCase
     val spark = GraftSession.local(GraftSession.cpus)
 
     def t(tag: String)(f: => Long): Unit = {
@@ -131,23 +127,6 @@ object KneeProbe {
       try t(s"C m=$m largeStar")(Pipeline.connectedComponents(pairs).count())
       finally spark.conf.unset("graft.cc.largeStar")
       pairs.unpersist()
-    }
-    }
-
-    // ---- B. packing: single window vs two-level prefix sum ------------
-    val toks0 = Tables.table(spark, sfDir, "documents")
-      .select(col("source"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("toks"))
-    if (legs.contains('B')) {
-    Pipeline.packShards(replicate(toks0, 10, 10000000L, "doc_id"), 512, None)
-      .agg(max("shard")).count() // warm
-    for (m <- Seq(100, 1000, 10000)) {
-      val d = replicate(toks0, m, 10000000L, "doc_id").localCheckpoint(true)
-      t(s"B m=$m single  ")(Pipeline.packShards(d, 512, None)
-        .agg(max("shard")).count())
-      t(s"B m=$m 2lvl-50k")(Pipeline.packShards(d, 512, Some(50000L))
-        .agg(max("shard")).count())
-      d.unpersist()
     }
     }
 

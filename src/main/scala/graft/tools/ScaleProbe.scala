@@ -160,11 +160,11 @@ object ScaleProbe {
     // 500k leg's pair graph alone is ~5·10⁸ edges.
     if (dupHeavy) spark.conf.set("graft.dedup.groupExact", "true")
     // Env passthrough for conf-gated postures, so extended decades can be
-    // probed under the documented scale defenses without a code edit
-    // (AnnScaleProbe's GRAFT_TOPK_SHARDS pattern). The 5M leg measurably
-    // NEEDS these: the fixed-2000-word probe vocab makes every gram's df
-    // grow linearly with n, so the (lossless) prefix candidate volume
-    // grows quadratically — the regime graft.ngram.hotGramCap exists for.
+    // probed under the documented scale defenses without a code edit.
+    // The 5M leg measurably NEEDS these: the fixed-2000-word probe vocab
+    // makes every gram's df grow linearly with n, so the (lossless) prefix
+    // candidate volume grows quadratically — the regime
+    // graft.ngram.hotGramCap exists for.
     sys.env.get("GRAFT_HOTGRAM_CAP")
       .foreach(spark.conf.set("graft.ngram.hotGramCap", _))
     sys.env.get("GRAFT_CC_LARGESTAR")

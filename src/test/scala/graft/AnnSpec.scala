@@ -237,44 +237,32 @@ class AnnSpec extends AnyFunSuite {
     assert(pqGot() === pqExpected(stride = 1))
   }
 
-  test("sharded two-stage top-k (graft.ann.topkShards) is bit-identical to the unsharded plan") {
+  test("sharded two-stage top-k is bit-identical to the single window, ties included") {
     // The scale posture for probe-vs-corpus rankings: partial top-k per
-    // hash shard, final top-k over the survivors. Lossless because every
-    // ranking order is total (score + vec_id tie-break) — assert exact
-    // row equality against the FORCED-UNSHARDED baseline ('off') for the
-    // engine-chosen default (conf unset — corpus-sized rankings auto-arm)
-    // and two explicit shard counts (including one that doesn't divide
-    // the corpus evenly).
-    val keys = Seq("embed_cosine_topk", "embed_knn_label",
-      "embed_ann_ivf", "embed_ann_lsh", "embed_ann_pq")
-    spark.conf.set("graft.ann.topkShards", "off")
-    val base =
-      try keys.map(k => k -> rowSet(SparkEntry.queries(k)(spark, sf))).toMap
-      finally spark.conf.unset("graft.ann.topkShards")
-    keys.foreach { k =>
-      assert(rowSet(SparkEntry.queries(k)(spark, sf)) === base(k),
-        s"$k diverged under the auto-armed default")
-    }
-    for (shards <- Seq(3, 8)) {
-      spark.conf.set("graft.ann.topkShards", shards.toString)
-      try keys.foreach { k =>
-        assert(rowSet(SparkEntry.queries(k)(spark, sf)) === base(k),
-          s"$k diverged under topkShards=$shards")
-      } finally spark.conf.unset("graft.ann.topkShards")
-    }
-  }
-
-  test("graft.ann.topkShards rejects 0/1/garbage at plan time") {
-    for (bad <- Seq("0", "1", "-3", "eight")) {
-      spark.conf.set("graft.ann.topkShards", bad)
-      try {
-        val e = intercept[Exception] {
-          SparkEntry.queries("embed_cosine_topk")(spark, sf).count()
-        }
-        assert(e.getMessage.contains("graft.ann.topkShards"),
-          s"'$bad' failed with an unrelated error: ${e.getMessage}")
-      } finally spark.conf.unset("graft.ann.topkShards")
-    }
+    // hash shard, final top-k over the survivors. Lossless only because
+    // the order is total, so the candidates carry 3 distinct scores over
+    // 600 vec_ids per probe, listed out of vec_id order: each shard holds
+    // more top-score rows than k, so both the partial and the final
+    // top-10 are decided by the vec_id tie-break.
+    import spark.implicits._
+    val k = 10
+    def sim(q: Long, v: Long): Double = ((q * 7 + v) % 3) / 2.0
+    val cands = (for (q <- 0L until 4L; i <- 0L until 600L)
+      yield { val v = i * 7919 % 600; (q, v, sim(q, v), s"l${v % 5}") })
+      .toDF("q_id", "vec_id", "sim", "label")
+    val order = Seq(col("sim").desc, col("vec_id"))
+    def ranked(corpusSized: Boolean): Seq[(Long, Long, Double, String, Int)] =
+      ops.Vector.rankPerProbe(cands, order, k, "rnk", corpusSized)
+        .as[(Long, Long, Double, String, Int)].collect().sorted.toSeq
+    val single = ranked(corpusSized = false)
+    assert(ranked(corpusSized = true) === single)
+    // both equal the driver-side ranking: top score, lowest vec_ids first
+    val expected = (0L until 4L).flatMap { q =>
+      (0L until 600L).sortBy(v => (-sim(q, v), v)).take(k).zipWithIndex
+        .map { case (v, i) => (q, v, sim(q, v), s"l${v % 5}", i + 1) }
+    }.sorted
+    assert(single === expected)
+    assert(expected.forall(_._3 == 1.0), "top-k is not all ties")
   }
 
   test("PQ survives a corpus smaller than the codebook size") {

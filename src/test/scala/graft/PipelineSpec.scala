@@ -585,39 +585,6 @@ class PipelineSpec extends AnyFunSuite {
     docs.foreach { case (id, text) => assert(rebuilt(id) === text) }
   }
 
-  test("composite-key packing is bit-identical to the single-key window") {
-    import spark.implicits._
-    // Generated corpus: few sources, sparse non-contiguous doc_ids, varied
-    // token counts — bucket boundaries land mid-stratum at every width.
-    val rnd = new scala.util.Random(7)
-    val docs = (0L until 500L).map { i =>
-      (s"src_${rnd.nextInt(3)}", i * 3 + rnd.nextInt(2), 1L + rnd.nextInt(40))
-    }.toDF("source", "doc_id", "toks")
-    val single = ops.Pipeline.packShards(docs, 64, None)
-      .collect().map(_.toString).sorted.toSeq
-    for (b <- Seq(1L, 7L, 100L, 100000L)) {
-      val comp = ops.Pipeline.packShards(docs, 64, Some(b))
-        .collect().map(_.toString).sorted.toSeq
-      assert(comp === single, s"bucketWidth=$b diverged from single-key")
-    }
-    // Window-partition cardinality actually scales with the bucket count
-    // (the point of the composite key): many (source, bucket) groups vs
-    // a handful of sources.
-    val nb = docs.select(col("source"), expr("doc_id div 7")).distinct().count()
-    val ns = docs.select("source").distinct().count()
-    assert(nb > 10 * ns, s"only $nb (source,bucket) groups vs $ns sources")
-    // And through the declared keys on the real corpus via the conf gate.
-    for (key <- Seq("pack_sequences", "pipeline_clean_pack")) {
-      val q = ops.Pipeline.queries(key)
-      val base = q(spark, sf).collect().map(_.toString).toSeq
-      spark.conf.set("graft.pack.bucketWidth", "37")
-      try {
-        val got = q(spark, sf).collect().map(_.toString).toSeq
-        assert(got === base, s"$key output changed under composite packing")
-      } finally spark.conf.unset("graft.pack.bucketWidth")
-    }
-  }
-
   test("reliable-checkpoint CC path matches the localCheckpoint default") {
     import spark.implicits._
     // A two-component graph incl. a chain — enough rounds to exercise
@@ -704,16 +671,6 @@ class PipelineSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n_docs"), sum("toks").as("sum_toks"))
     assert(rowSet(rolled) ===
       rowSet(ops.Pipeline.queries("pack_sequences")(spark, sf)))
-  }
-
-  test("salted unigram_nll is row-identical to the unsalted join") {
-    val q = ops.Pipeline.queries("text_unigram_nll")
-    val base = q(spark, sf).collect().map(_.toString).toSeq
-    spark.conf.set("graft.nll.saltReplicas", "8")
-    try {
-      val got = q(spark, sf).collect().map(_.toString).toSeq
-      assert(got === base, "salting changed text_unigram_nll output")
-    } finally spark.conf.unset("graft.nll.saltReplicas")
   }
 
   test("sequence packing: shards contiguous from 0, boundary respects budget") {

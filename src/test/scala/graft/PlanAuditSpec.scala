@@ -563,8 +563,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * off (a real vocab exceeds the threshold, so the tok join SHUFFLES —
     * at bench SF the tiny count side broadcasts and no shuffle join
     * exists to audit), staging bypassed. */
-  private def nllPlanAtScale(confs: (String, String)*): String = {
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+  private def nllPlanAtScale(): String = {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     sys.props("graft.staging") = "false"
     try SparkEntry.queries("text_unigram_nll")(spark, sf)
@@ -572,7 +571,6 @@ class PlanAuditSpec extends AnyFunSuite {
     finally {
       sys.props.remove("graft.staging")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      confs.foreach { case (k, _) => spark.conf.unset(k) }
     }
   }
 
@@ -588,14 +586,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = nllPlanAtScale()
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
       "tok join is not a shape AQE skew-split can act on")
-  }
-
-  test("salted unigram_nll partitions the token join on (tok, salt)") {
-    // The deterministic defense: graft.nll.saltReplicas spreads each
-    // token over R reducers regardless of runtime stats.
-    val p = nllPlanAtScale("graft.nll.saltReplicas" -> "8")
-    assert("hashpartitioning\\(tok#\\d+, salt#\\d+".r.findFirstIn(p).isDefined,
-      "salted nll join is not partitioned by (tok, salt)")
   }
 
   test("heavy hitters: rank limit pushes into WindowGroupLimit over the agg") {
@@ -622,28 +612,10 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(n == 1, s"pack_manifest has $n hash exchanges, expected 1")
   }
 
-  test("composite packing partitions its window by (source, bucket)") {
-    // The 100 TB path: with graft.pack.bucketWidth set, the prefix-sum
-    // window must hash-partition on BOTH keys, so window partition count
-    // scales with corpus size / bucket width instead of |sources|.
-    spark.conf.set("graft.pack.bucketWidth", "1000")
-    sys.props("graft.staging") = "false"
-    try {
-      val p = SparkEntry.queries("pack_sequences")(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert("hashpartitioning\\(source#\\d+, bucket#\\d+".r.findFirstIn(p).isDefined,
-        "composite packing window is not partitioned by (source, bucket)")
-    } finally {
-      sys.props.remove("graft.staging")
-      spark.conf.unset("graft.pack.bucketWidth")
-    }
-  }
-
   test("corpus-sized rankings DEFAULT to the two-stage window; bucketed stay single") {
     // The scale-safe shape must be what the declared key RUNS, not an
-    // opt-in: with the conf unset, a corpus-sized ranking (exact scan)
-    // plans partial+final windows, a bucket-bounded one (IVF) keeps the
-    // single window, and 'off' forces the unsharded baseline back.
+    // opt-in: a corpus-sized ranking (exact scan) plans partial+final
+    // windows, and a bucket-bounded one (IVF) keeps the single window.
     def windows(plan: String): Int = plan.linesIterator.count(
       _.replaceAll("^[-+:*\\s()0-9]*", "").startsWith("Window "))
     sys.props("graft.staging") = "false"
@@ -654,12 +626,6 @@ class PlanAuditSpec extends AnyFunSuite {
         s"corpus-sized ranking did not auto-arm the two-stage plan:\n$dflt")
       assert(windows(plans("embed_ann_ivf")) === 1,
         "bucket-bounded IVF ranking should keep the single window")
-      spark.conf.set("graft.ann.topkShards", "off")
-      val off =
-        try SparkEntry.queries("embed_cosine_topk")(spark, sf)
-          .queryExecution.executedPlan.toString
-        finally spark.conf.unset("graft.ann.topkShards")
-      assert(windows(off) === 1, s"'off' did not force the single window:\n$off")
     } finally sys.props.remove("graft.staging")
   }
 

@@ -375,11 +375,7 @@ class StagingSpec extends AnyFunSuite {
       "\".tmp-\"" -> "Staging.scala",
       "buildCount.incrementAndGet" -> "Staging.scala",
       "SparkSession.builder" -> "GraftSession.scala")
-    val main = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    assert(Files.isDirectory(main), s"no sources at $main")
-    val walk = Files.walk(main)
-    val files = try walk.toArray.map(_.asInstanceOf[Path])
-      .filter(_.toString.endsWith(".scala")).toSeq finally walk.close()
+    val files = StagingSpec.mainSources()
     val names = files.map(_.getFileName.toString).toSet
     owners.foreach { case (_, owner) => assert(names(owner), s"no $owner") }
     val offenders = for {
@@ -395,6 +391,17 @@ class StagingSpec extends AnyFunSuite {
 }
 
 object StagingSpec {
+  /** Every `.scala` file under src/main/scala — the tree the structural
+    * guards here and in GraftSessionSpec scan. */
+  def mainSources(): Seq[java.nio.file.Path] = {
+    import java.nio.file.{Files, Path, Paths}
+    val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(main), s"no sources at $main")
+    val walk = Files.walk(main)
+    try walk.toArray.map(_.asInstanceOf[Path])
+      .filter(_.toString.endsWith(".scala")).toSeq finally walk.close()
+  }
+
   /** A plain-file artifact body slow enough that two racing JVMs both
     * miss and both build. */
   def slowWrite(tmp: java.nio.file.Path): Unit = {
