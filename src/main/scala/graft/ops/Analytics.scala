@@ -177,8 +177,10 @@ object Analytics {
     // TPC-H Q4 shape (order priority checking): orders in one quarter
     // that had at least one returned lineitem, counted per priority. The
     // EXISTS is a LEFT SEMI join — the orders side never duplicates no
-    // matter how many R lineitems an order has, and the semi build side
-    // carries only l_orderkey. Both filters sit on the scans.
+    // matter how many R lineitems an order has. The build side carries
+    // only l_orderkey; it is a fact slice, so it is shuffled and
+    // hash-built once per key (`Joins.existenceJoin`), never broadcast
+    // row by row. Both filters sit on the scans.
     // (The corpus has no l_commitdate/l_receiptdate, so "late" is proxied
     // by l_returnflag = 'R' — same plan shape as the TPC-H original.)
     "q4_order_priority" -> ((s, dir) => {
@@ -189,7 +191,8 @@ object Analytics {
       val ret = Tables.table(s, dir, "lineitem")
         .where(col("l_returnflag") === "R")
         .select("l_orderkey")
-      ord.join(ret, col("o_orderkey") === col("l_orderkey"), "left_semi")
+      Joins.existenceJoin(ord, ret, col("o_orderkey") === col("l_orderkey"),
+          "left_semi")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
@@ -367,7 +370,9 @@ object Analytics {
     // average is a 1-row aggregate cross-broadcast into the filter; the
     // comparison is exact BIGINT (bal·cnt > sum — no double avg), and
     // "no recent orders" is a LEFT ANTI join against the date-pruned
-    // orders scan.
+    // orders scan, shuffled and hash-built on distinct o_custkey
+    // (`Joins.existenceJoin`) — the recent orders are a fact slice, never
+    // broadcast.
     "q22_dormant_value" -> ((s, dir) => {
       // the positive-balance population filter runs on the RAW c_acctbal
       // on both sides (r14, ADVICE fix): filtering on the rounded cents
@@ -382,9 +387,10 @@ object Analytics {
       val recent = Tables.table(s, dir, "orders")
         .where(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
         .select("o_custkey")
-      cust.crossJoin(broadcast(pos))
+      val rich = cust.crossJoin(broadcast(pos))
         .where(col("bal_c") * col("p_cnt") > col("p_sum"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
+      Joins.existenceJoin(rich, recent, col("c_custkey") === col("o_custkey"),
+          "left_anti")
         .groupBy("cntrycode")
         .agg(count(lit(1)).as("numcust"),
           (sum(col("bal_c")) / 100.0).as("totacctbal"))

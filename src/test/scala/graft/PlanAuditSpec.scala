@@ -121,6 +121,19 @@ class PlanAuditSpec extends AnyFunSuite {
     assert("LeftAnti, BuildRight, true".r
       .findFirstIn(plans("join_null_anti")).isDefined,
       "NOT IN did not plan a null-aware anti join")
+    // EXISTS / NOT EXISTS over a fact build (Joins.existenceJoin) must
+    // shuffle-hash, which keeps each build key once, and never broadcast
+    // every orders / lineitem row. None of these plans has another hash
+    // join (q22's threshold is a nested-loop cross join).
+    for ((k, jt) <- Seq("join_left_anti" -> "LeftAnti",
+        "join_left_semi" -> "LeftSemi", "q4_order_priority" -> "LeftSemi",
+        "q22_dormant_value" -> "LeftAnti")) {
+      assert(("ShuffledHashJoin \\[[^\\]]*\\], \\[[^\\]]*\\], " +
+        s"$jt, BuildRight").r.findFirstIn(plans(k)).isDefined,
+        s"$k existence join is not a shuffled hash join")
+      assert(!plans(k).contains("BroadcastHashJoin"),
+        s"$k broadcasts its fact build")
+    }
     // The LATERAL correlated LIMIT must decorrelate into a partitioned
     // rank with the group-limit pushed map-side (WindowGroupLimit
     // Partial before the shuffle) — a per-outer-row rescan of the inner
