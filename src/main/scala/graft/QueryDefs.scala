@@ -9,8 +9,7 @@ object QueryDefs {
   /** Parse an optional integer tuning conf, naming the conf in the error —
     * a bare `.toLong` on a mis-set knob (`hotGramCap=50k`) throws an
     * anonymous NumberFormatException at plan time with no hint of WHICH
-    * conf is malformed. Same contract as Ann.pqTrainStride's
-    * validation. */
+    * conf is malformed. */
   def longConf(s: SparkSession, key: String): Option[Long] =
     s.conf.getOption(key).map { v =>
       try v.toLong catch { case _: NumberFormatException =>

@@ -89,29 +89,6 @@ object Ann {
                           rounds: Int): Seq[Seq[Seq[Double]]] =
     (1 to rounds).foldLeft(seed)((cb, _) => lloydRound(e, cb))
 
-  /** Lloyd-training stride: the refinement round trains on every
-    * `stride`-th vector (`vec_id % stride == 0` — deterministic and
-    * driver-replayable, unlike a sample()). AUTO (conf unset): ~65k
-    * training vectors are plenty to place an 8×16 codebook, so stride
-    * grows linearly past that — a 500k corpus trains on 1/7 of itself
-    * and the Lloyd pass stops scaling with corpus size. The ENCODE pass
-    * still touches every vector (the codes ARE the index); training is
-    * the only stage a subsample can bound without changing what the
-    * index covers. `graft.pq.trainStride` forces a value (≥ 1; 1 = train
-    * on everything, the exact pre-r7 behavior). AnnSpec replays a
-    * strided build bit-exactly. */
-  private def pqTrainStride(s: SparkSession, n: => Long): Long =
-    s.conf.getOption("graft.pq.trainStride") match {
-      case Some(v) =>
-        val k = try v.toLong catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"graft.pq.trainStride must be an integer >= 1, got '$v'")
-        }
-        require(k >= 1, s"graft.pq.trainStride must be >= 1 (got $k)")
-        k
-      case None => math.max(1L, n / 65536L)
-    }
-
   private def lloydRound(e: DataFrame, seed: Seq[Seq[Seq[Double]]])
       : Seq[Seq[Seq[Double]]] = {
     val seedLit: Seq[Seq[Column]] =
@@ -745,9 +722,10 @@ object Ann {
     * embed_ann_pq plan, factored so `embed_ann_recall_pq` scores the
     * IDENTICAL route. See the embed_ann_pq scaladoc for the ADC scan +
     * IVFADC+R exact re-rank contract. */
-  private[graft] def pqTop5(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def pqTop5(s: SparkSession, dir: String,
+                            trainStride: Option[Long] = None): DataFrame = {
     val e = embDouble(s, dir)
-    val (_, codebook, encoded) = pqIndex(s, dir, e)
+    val (_, codebook, encoded) = pqIndex(s, dir, e, trainStride)
     def sub(v: Column, j: Int): Column = slice(v, j * PqDim + 1, PqDim)
     // per-probe ADC lookup table: lut(j)(c) = d(q_subvec_j, codeword_jc)
     val lut = array((0 until PqSub).map { j =>
@@ -957,26 +935,31 @@ object Ann {
     *
     * Codebook = index metadata: seed (subspace-j slices of the PqK
     * lowest-vec_id vectors, deterministic bounded collect) + ONE Lloyd
-    * round over the stride-subsampled training set (see pqTrainStride;
-    * stride 1 at driver SFs) — see lloydRefine for the exact-fixed-point
-    * determinism story. The 8×16 result is staged per corpus version
+    * round over every stride-th vector (`vec_id % stride == 0` —
+    * deterministic and driver-replayable, unlike a sample()) — see
+    * lloydRefine for the exact-fixed-point determinism story. The stride
+    * derives from the corpus count: ~65k training vectors are plenty to
+    * place an 8×16 codebook, so it grows linearly past that (a 500k
+    * corpus trains on 1/7 of itself; stride 1 at driver SFs) and the
+    * Lloyd pass stops scaling with corpus size. The ENCODE pass still
+    * touches every vector (the codes ARE the index). The count is a
+    * parquet-metadata count — no row scan — memoized per source
+    * fingerprint. `trainStride` pins the stride without forcing that
+    * count (AnnSpec replays a strided build on a corpus too small to
+    * derive one). The 8×16 result is staged per corpus version
     * alongside the code table: built once at index time, every search
     * loads 128 rows (doubles round-trip parquet bit-exactly, so staged ==
     * freshly refined). A stride > 1 yields a DIFFERENT codebook, so
     * strided artifacts carry the stride in their names and can never
-    * alias the full-train ones. (The corpus count feeding the auto stride
-    * is a parquet-metadata count — no row scan — and memoized per source
-    * fingerprint, so only the first invocation pays even the metadata
-    * job. By-name count: with graft.pq.trainStride pinned, the Some
-    * branch never forces `n`, so the pinned path launches no count job at
-    * all.) The code table IS the PQ index — staged per corpus version
-    * like the dedup artifacts (encode once, every search reads the
-    * codes). v2: Lloyd-refined codebook — a new artifact, never mixes
-    * with the v1 seed-codebook codes. */
-  private def pqIndex(s: SparkSession, dir: String, e: DataFrame)
+    * alias the full-train ones. The code table IS the PQ index — staged
+    * per corpus version like the dedup artifacts (encode once, every
+    * search reads the codes). v2: Lloyd-refined codebook — a new
+    * artifact, never mixes with the v1 seed-codebook codes. */
+  private def pqIndex(s: SparkSession, dir: String, e: DataFrame,
+                      trainStride: Option[Long] = None)
       : (String, Seq[Seq[Column]], DataFrame) = {
-    val stride = pqTrainStride(s,
-      Tables.rowCount(s, Tables.path(dir, "embeddings")))
+    val stride = trainStride.getOrElse(math.max(1L,
+      Tables.rowCount(s, Tables.path(dir, "embeddings")) / 65536L))
     val sfx = if (stride > 1) s"_s$stride" else ""
     val cbDf = graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), s"pq_codebook8x16_lloyd1${sfx}_v1") {

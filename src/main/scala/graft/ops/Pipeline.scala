@@ -27,12 +27,11 @@ import org.apache.spark.sql.functions._
   *  - `dedup_cluster`: connected components over the exact near-dup pair
   *    graph (PPJoin trigram-Jaccard ≥ 0.8 edges) by iterative min-label
   *    propagation — each doc ends up labeled with the smallest doc_id in
-  *    its component (the canonical "keep one per cluster" key). The loop
-  *    is O(component diameter) joins; near-dup graphs are overwhelmingly
-  *    tiny cliques (diameter ≤ 2-3), so it converges in a few rounds. At
-  *    100 TB swap the plain propagation for the large-star/small-star
-  *    variant and checkpoint between rounds — the loop structure (join,
-  *    min-aggregate, convergence count) is identical.
+  *    its component (the canonical "keep one per cluster" key). Pointer
+  *    jumping makes the loop O(log component diameter) rounds, each cut
+  *    by a checkpoint (see `connectedComponents`); near-dup graphs are
+  *    overwhelmingly tiny cliques (diameter ≤ 2-3), so it converges in a
+  *    few rounds.
   */
 object Pipeline {
 
@@ -1063,7 +1062,7 @@ object Pipeline {
       "graph_components", "dedup_cluster_incremental",
       "pipeline_dataset_card")
 
-  /** Per-round lineage-cut plumbing shared by both CC variants. Default:
+  /** Per-round lineage-cut plumbing of the CC fixpoint. Default:
     * localCheckpoint — executor-local blocks, no configured dir needed,
     * right for local mode and the bench. On a real cluster an executor
     * loss would kill a localCheckpoint'd lineage mid-fixpoint, so
@@ -1106,45 +1105,28 @@ object Pipeline {
     }
   }
 
-  /** Connected components over an undirected (doc_a, doc_b) pair relation.
-    * Two variants, identical deterministic output (labels = component-min
-    * doc_id; PipelineSpec asserts equality against each other and a
-    * driver-side union-find on random/chain/star graphs):
-    *
-    *  - default: min-label propagation WITH pointer jumping — each round a
-    *    node takes the min over its own label, its neighbors' labels, AND
-    *    its label's label (path halving), so label distance shrinks
-    *    geometrically and convergence needs O(log diameter) rounds, not
-    *    O(diameter).
-    *  - `graft.cc.largeStar=true`: alternating large-star/small-star —
-    *    the classic MapReduce CC formulation that rewrites the EDGE set
-    *    itself toward a star forest instead of carrying a separate label
-    *    relation (see [[ccStar]] for the shape trade-off).
+  /** Connected components over an undirected (doc_a, doc_b) pair relation:
+    * min-label propagation WITH pointer jumping. Each round a node takes
+    * the min over its own label, its neighbors' labels, AND its label's
+    * label (path halving), so label distance shrinks geometrically and
+    * convergence needs O(log diameter) rounds, not O(diameter). Labels =
+    * component-min doc_id.
     *
     * The 30-round cap covers any graph a real corpus can produce
     * (diameter up to ~2^30); if it's ever hit the loop FAILS LOUDLY
     * instead of returning silently wrong labels (plain propagation with a
     * cap would mislabel any near-dup chain longer than the cap — e.g.
     * incrementally edited doc chains). Factored out of `dedup_cluster` so
-    * PipelineSpec can run both variants against generated graphs
-    * (including a chain longer than an unjumped cap) and a driver-side
-    * union-find reference. Both fixpoints are schedule-independent (min
-    * is idempotent/commutative/associative), so the result is
-    * deterministic regardless of round count or partitioning. */
-  def connectedComponents(pairs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    if (pairs.sparkSession.conf.getOption("graft.cc.largeStar")
-          .exists(_.toBoolean)) ccStar(pairs)
-    else ccJump(pairs)
-
-  private def ccJump(pairs: DataFrame): DataFrame = {
-    val sess = pairs.sparkSession
-    val cuts = new CcCuts(sess)
-    def cut(df: DataFrame, tag: String): DataFrame = cuts.cut(df, tag)
-    def rmCut(tag: String): Unit = cuts.rm(tag)
+    * PipelineSpec can run it against generated graphs (including a chain
+    * longer than an unjumped cap) and a driver-side union-find reference.
+    * The fixpoint is schedule-independent (min is idempotent/commutative/
+    * associative), so the result is deterministic regardless of round
+    * count or partitioning. */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val cuts = new CcCuts(pairs.sparkSession)
     // undirected edge list, both directions, so one join propagates
     // labels along every edge
-    val edges = cut(pairs.union(
+    val edges = cuts.cut(pairs.union(
       pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))),
       "edges")
       // computed once; the loop re-reads it
@@ -1173,7 +1155,7 @@ object Pipeline {
       // BEFORE the cut (r21 wave 6; guide §5 driver-roundtrip cut —
       // at corpus scale each round saves one full-relation pass)
       val obs = org.apache.spark.sql.Observation()
-      val next = cut(labels.select(col("doc"), col("lbl"),
+      val next = cuts.cut(labels.select(col("doc"), col("lbl"),
           col("lbl").as("old"))
         .union(viaEdge.withColumn("old", lit(null).cast("long")))
         .union(viaLabel.withColumn("old", lit(null).cast("long")))
@@ -1202,125 +1184,29 @@ object Pipeline {
         } catch {
           case _: java.util.concurrent.TimeoutException =>
             throw new IllegalStateException(
-              "ccJump: convergence metric not delivered within 120 s of " +
-                "the checkpoint action — the cut path no longer fires " +
-                "CollectMetrics (see OPTIMIZATION_r21.md)")
+              "connectedComponents: convergence metric not delivered " +
+                "within 120 s of the checkpoint action — the cut path no " +
+                "longer fires CollectMetrics (see OPTIMIZATION_r21.md)")
         }
       // Round N-1's labels were last read by the union inside `next` —
       // retire their checkpoint now that round N is on disk.
-      if (iter > 0) rmCut(s"round-${iter - 1}")
+      if (iter > 0) cuts.rm(s"round-${iter - 1}")
       labels = next
       iter += 1
     }
-    rmCut("edges") // the returned labels scan their own checkpoint only
+    cuts.rm("edges") // the returned labels scan their own checkpoint only
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $MaxRounds rounds — " +
-          "pathological component; raise the cap or switch to large-star/small-star")
+          "pathological component; raise the cap")
     lastCcRounds.set(iter)
     labels
   }
 
-  /** Alternating large-star/small-star connected components — the classic
-    * MapReduce CC formulation (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond"): instead of carrying a (node, label) relation
-    * next to a static edge set, each round REWRITES the edge set itself.
-    *
-    *  - large-star: every node u looks at its full neighborhood Γ(u);
-    *    each strictly-larger neighbor is re-pointed at
-    *    m = min(Γ(u) ∪ {u}).
-    *  - small-star: with edges oriented toward the larger endpoint, each
-    *    node's smaller-or-equal neighbors (and the node itself) are
-    *    re-pointed at the smallest of them.
-    *
-    * Both steps preserve connectivity exactly (every rewritten edge stays
-    * inside its component, and reachability to the component min only
-    * ever improves); at fixpoint the edge set IS a star forest rooted at
-    * each component's min, so labels fall straight out of the final
-    * edges. Shape trade-off vs the default pointer-jumping propagation:
-    * the per-round state is ONE relation (the edges) instead of
-    * edges + labels — no per-round edge-label join, so rounds are
-    * cheaper on dense graphs and the edge set physically SHRINKS as
-    * high-degree regions collapse (propagation's edge relation never
-    * shrinks). The cost: per-node neighborhood grouping concentrates a
-    * giant component's final rounds into the min-node's window partition
-    * (the formulation's known skew point — production mitigation is
-    * hash-splitting high-degree neighborhoods before the min). Rounds
-    * are O(log n); the same 30-round loud-failure cap applies.
-    * tools/ScaleProbe's `chain` mode measures both variants on a planted
-    * pathological chain component. */
-  private def ccStar(pairs: DataFrame): DataFrame = {
-    val sess = pairs.sparkSession
-    val cuts = new CcCuts(sess)
-    // Node set CUT BEFORE the fixpoint: the final label join needs every
-    // doc `pairs` mentions (self-loop-only docs included), and deriving
-    // it from `pairs` AFTER the loop would re-evaluate the caller's
-    // whole plan twice more — on the groupExact posture that plan is the
-    // full un-staged PPJoin pipeline, the most expensive thing in the
-    // query (the initial edge checkpoint that could have served is
-    // already retired by then). Not rm'd here: the returned frame reads
-    // it lazily; ccLabels reclaims the namespace once labels are staged.
-    val nodes = cuts.cut(
-      pairs.select(col("doc_a").as("doc"))
-        .union(pairs.select(col("doc_b").as("doc"))).distinct(), "nodes")
-    // canonical (big, small) orientation, self-loops dropped, deduped —
-    // the invariant both star steps maintain
-    var edges = cuts.cut(
-      pairs.where(col("doc_a") =!= col("doc_b"))
-        .select(greatest(col("doc_a"), col("doc_b")).as("u"),
-          least(col("doc_a"), col("doc_b")).as("v"))
-        .distinct(), "edges")
-    var prevTag = "edges"
-    var iter = 0
-    val MaxRounds = 30
-    var converged = edges.isEmpty
-    val wU = Window.partitionBy("u")
-    while (!converged && iter < MaxRounds) {
-      // large-star over the undirected neighborhood: m = min(Γ(u) ∪ {u});
-      // every neighbor v > u re-points to m. Output rows are (v, m) with
-      // v > u ≥ m, so the (big, small) orientation is already restored.
-      val bidir = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val ls = bidir
-        .withColumn("m", least(min(col("v")).over(wU), col("u")))
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-      // small-star on the oriented result: every smaller neighbor AND u
-      // itself re-point to the group's min.
-      val ss0 = ls.withColumn("m", min(col("v")).over(wU))
-      val next = cuts.cut(
-        ss0.select(col("v").as("u"), col("m").as("v"))
-          .union(ss0.select(col("u"), col("m").as("v")))
-          .where(col("u") =!= col("v"))
-          .distinct(), s"round-$iter")
-      // Convergence: the canonical edge set is stable. Both sides are
-      // distinct'd, so equal counts + empty one-way difference ⇔ set
-      // equality (the count also forces `next` to materialize before the
-      // prior round's checkpoint is retired).
-      converged = next.count() == edges.count() && next.except(edges).isEmpty
-      cuts.rm(prevTag)
-      prevTag = s"round-$iter"
-      edges = next
-      iter += 1
-    }
-    if (!converged && iter >= MaxRounds)
-      throw new IllegalStateException(
-        s"large-star CC did not converge in $MaxRounds rounds — " +
-          "pathological component; raise the cap")
-    lastCcRounds.set(iter)
-    // At fixpoint the edges are (member, component-min) stars. Nodes that
-    // never had a non-self edge (or roots) label themselves — same
-    // semantics as the default variant. (`nodes` was cut pre-loop.)
-    nodes
-      .join(edges.select(col("u").as("doc"), col("v").as("lbl")),
-        Seq("doc"), "left")
-      .select(col("doc"), coalesce(col("lbl"), col("doc")).as("lbl"))
-  }
-
   /** Rounds the most recent `connectedComponents` call in this JVM took —
-    * probe instrumentation (tools/ScaleProbe asserts the count stays flat
-    * as the corpus grows; callers are sequential). */
+    * probe instrumentation: tools/ScaleProbe prints it per leg and, in its
+    * default mode, asserts it stays flat as the corpus grows (callers are
+    * sequential). */
   val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Reliable-checkpoint namespace of this THREAD's most recent call

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, Tables}
-import graft.ops.{Dedup, Pipeline}
+import graft.ops.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions._
   *     without it df-ordering has no rare grams to prefer at ANY scale).
   *     Lex-prefix candidates grow ~m² (C(df,2) per hot gram); df-ordered
   *     picks the df=1 salt grams first and stays ~m.
-  *  C. connected components (`graft.cc.largeStar`): pointer-jump vs
-  *     large-star/small-star over the m-replicated near-dup graph
-  *     (m disjoint copies: edges ×m, diameter constant — the drift-safe
-  *     graph scale-up).
   *  D/E. end-to-end linear checks, cold (staging builds included):
   *     ANN family on m× embeddings (fixed probe set, m× corpus — the
   *     production ingest shape) and the CDC upsert on m× events.
@@ -34,13 +30,13 @@ import org.apache.spark.sql.functions._
   * is snapshot/batch ratio, not corpus multiplier, so it keeps its own
   * harness. Scratch tool, not part of the driver contract; numbers in
   * ROUND12_NOTES.md. Usage: runMain graft.tools.KneeProbe [sfDir] [legs]
-  * — `legs` is an optional subset of "ACDEFGHIJ" (default all); the D/E loop
+  * — `legs` is an optional subset of "ADEFGHIJ" (default all); the D/E loop
   * runs when either letter is selected.
   */
 object KneeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val legs = args.lift(1).getOrElse("ACDEFGHIJ").toUpperCase
+    val legs = args.lift(1).getOrElse("ADEFGHIJ").toUpperCase
     val spark = GraftSession.local(GraftSession.cpus)
 
     def t(tag: String)(f: => Long): Unit = {
@@ -98,35 +94,6 @@ object KneeProbe {
       t(s"A m=$m cap256   ")(Dedup.ngramJaccardFromGrams(g, dfOrderedPrefix = true,
         hotGramCap = Some(256L)).count())
       g.unpersist()
-    }
-    }
-
-    // ---- C. CC: pointer-jump vs large-star over the m× pair graph -----
-    // Drift-safe graph scale-up: m disjoint offset copies of a fixed
-    // near-dup-shaped base graph (chains of length 64 — the worst case
-    // for plain propagation and the shape incremental edit-chains
-    // produce — plus 64-leaf stars, the crawl-hub shape), so edges grow
-    // ×m while diameter stays constant.
-    def ccGraph(m: Int): DataFrame = {
-      val chains = spark.range(100L * 64).toDF("i")
-        .where(col("i") % 64 =!= 63)
-        .select(col("i").as("doc_a"), (col("i") + 1).as("doc_b"))
-      val stars = spark.range(100L * 64).toDF("i")
-        .where(col("i") % 64 =!= 0)
-        .select((col("i") - col("i") % 64 + 1000000L).as("doc_a"),
-                (col("i") + 1000000L).as("doc_b"))
-      replicate(chains.union(stars), m, 10000000L, "doc_a", "doc_b")
-        .localCheckpoint(true)
-    }
-    if (legs.contains('C')) {
-    Pipeline.connectedComponents(ccGraph(1)).count() // warm
-    for (m <- Seq(1, 3, 10)) {
-      val pairs = ccGraph(m)
-      t(s"C m=$m jump     ")(Pipeline.connectedComponents(pairs).count())
-      spark.conf.set("graft.cc.largeStar", "true")
-      try t(s"C m=$m largeStar")(Pipeline.connectedComponents(pairs).count())
-      finally spark.conf.unset("graft.cc.largeStar")
-      pairs.unpersist()
     }
     }
 

@@ -218,21 +218,27 @@ class AnnSpec extends AnyFunSuite {
     }.toSeq
   }
 
-  private def pqGot(): Seq[(Long, Int, Long, Double)] =
-    SparkEntry.queries("embed_ann_pq")(spark, sf).collect()
+  /** embed_ann_pq's rows; a pinned `trainStride` builds the index
+    * through `pqTop5` with that stride instead of the derived one. */
+  private def pqGot(trainStride: Option[Long] = None)
+      : Seq[(Long, Int, Long, Double)] =
+    (trainStride match {
+      case None => SparkEntry.queries("embed_ann_pq")(spark, sf)
+      case Some(_) => ops.Ann.pqTop5(spark, sf, trainStride)
+        .select("q_id", "rnk", "vec_id", "dist").orderBy("q_id", "rnk")
+    }).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
 
   test("PQ output equals a full driver-side ADC replay (scores exact)") {
     assert(pqGot() === pqExpected(stride = 1))
   }
 
-  test("stride-subsampled Lloyd training replays bit-exactly (graft.pq.trainStride)") {
+  test("stride-subsampled Lloyd training replays bit-exactly") {
     // The 100×-corpus build posture: training on every stride-th vector
     // must stay deterministic and driver-replayable, and the strided
     // artifacts must not alias the full-train ones (distinct names).
-    spark.conf.set("graft.pq.trainStride", "4")
-    try assert(pqGot() === pqExpected(stride = 4))
-    finally spark.conf.unset("graft.pq.trainStride")
+    // The test corpus derives stride 1, so the stride is pinned.
+    assert(pqGot(trainStride = Some(4L)) === pqExpected(stride = 4))
     // and the full-train path is untouched by the strided run
     assert(pqGot() === pqExpected(stride = 1))
   }

@@ -29,7 +29,7 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.session.timeZone" -> "UTC"))
   }
 
-  test("the graft.* option surface outside tools/ is exactly the 8 kept options") {
+  test("the graft.* option surface outside tools/ is exactly the 6 kept options") {
     // A quoted `graft.<lowercase>...` literal is an option name; class
     // names (graft.functions.GraftExtensions) end in an uppercase segment.
     val opt = "\"(graft(?:\\.[a-z][A-Za-z]*)+)\"".r
@@ -43,8 +43,7 @@ class GraftSessionSpec extends AnyFunSuite {
       "graft.staging",               // plan-only mode (Explain)
       "graft.ngram.dfOrderedPrefix", "graft.ngram.hotGramCap",
       "graft.dedup.groupExact", "graft.dedup.groupedReport",
-      "graft.cc.largeStar", "graft.cc.checkpointDir",
-      "graft.pq.trainStride"))
+      "graft.cc.checkpointDir"))
     val ngramFiles = uses.collect { case (o, f) if o.startsWith("graft.ngram.") => f }
     assert(ngramFiles.toSet === Set("Dedup.scala"),
       "the n-gram posture must be read only by Dedup.ngramPosture")

@@ -131,58 +131,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(viaSpark(Seq((7L, 3L))) === Map(7L -> 3L, 3L -> 3L))
   }
 
-  private def viaStar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    spark.conf.set("graft.cc.largeStar", "true")
-    try viaSpark(edges) finally spark.conf.unset("graft.cc.largeStar")
-  }
-
-  test("large-star/small-star CC == union-find on random, chain, star, edge cases") {
-    // The alternating-star variant must produce the IDENTICAL labels as
-    // the default (labels are component minima — algorithm-independent,
-    // which is also why the staged label artifact name is shared).
-    val rnd = new scala.util.Random(11)
-    for (round <- 0 until 3) {
-      val edges = (0 until 80).map { _ =>
-        (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong)
-      }.filter(e => e._1 != e._2)
-      assert(viaStar(edges) === unionFind(edges), s"round $round diverged")
-    }
-    val chain = (0L until 60L).map(i => (i, i + 1))
-    assert(viaStar(chain).values.toSet === Set(0L))
-    val hubStar = (1L to 10L).map(i => (100L, i))
-    assert(viaStar(hubStar).values.toSet === Set(1L))
-    assert(viaStar(Seq.empty) === Map.empty)
-    assert(viaStar(Seq((7L, 3L))) === Map(7L -> 3L, 3L -> 3L))
-  }
-
-  test("large-star CC through the reliable checkpoint path, rounds retired") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("doc_a", "doc_b")
-    val base = ops.Pipeline.connectedComponents(pairs)
-      .collect().map(_.toString).sorted.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccls-ckpt").toString
-    spark.conf.set("graft.cc.checkpointDir", dir)
-    spark.conf.set("graft.cc.largeStar", "true")
-    try {
-      val got = ops.Pipeline.connectedComponents(pairs)
-        .collect().map(_.toString).sorted.toSeq
-      assert(got === base, "reliable-checkpoint star CC diverged")
-      val nsDirs = new java.io.File(dir).listFiles().toSeq
-      assert(nsDirs.nonEmpty && nsDirs.forall(_.getName.startsWith("cc-")))
-      nsDirs.foreach { ns =>
-        val left = ns.listFiles().map(_.getName).toSeq
-        assert(left.count(_.startsWith("round-")) <= 2 &&
-          !left.contains("edges"),
-          s"star CC checkpoints not retired as the loop advanced: $left")
-      }
-    } finally {
-      spark.conf.unset("graft.cc.largeStar")
-      spark.conf.unset("graft.cc.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("capped CC labels stage under their own artifact name") {
     // The labels artifact must carry the hot-gram-cap suffix, mirroring
     // the pair list: a lossy pair graph's clusters can never be served to
