@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{D, Tables}
 import graft.QueryDefs.Q
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Training-data text-analysis operators over `documents` (SURVEY.md §2.10
@@ -124,6 +124,92 @@ object TextQuality {
     "der", "die", "das", "und", "le", "la", "et", "el", "y")
   private def rakeStopsSql: String =
     RakeStops.map(w => s"'$w'").mkString(", ")
+
+  /** Evaluates `v` once and hands it to `body` as a lambda variable.
+    * Higher-order functions evaluate their lambda bodies interpreted, per
+    * element, with no common-subexpression elimination, so a computed
+    * array named inside a lambda body would be recomputed for every
+    * element; a bound variable is a plain read. */
+  private def bind(v: Column)(body: Column => Column): Column =
+    get(transform(array(v), body), lit(0))
+
+  /** Value counts of an array, computed inside the row: the distinct
+    * values with their multiplicities, as `array<struct<v, c>>` in
+    * ascending binary order. Sorts once; a run starts at each 1-based
+    * position whose value differs (null-safe) from its left neighbour,
+    * and runs until the next start. `get` is 0-based and NULL off either
+    * end, so no index can throw under ANSI mode, and an empty array has
+    * no runs. Cost per row: one O(n log n) sort plus O(n). */
+  private def valueCounts(xs: Column): Column = bind(array_sort(xs)) { s =>
+    val n = size(s)
+    bind(filter(sequence(lit(1), n),
+        i => !(get(s, i - 1) <=> get(s, i - 2)))) { starts =>
+      transform(starts, (st, k) => struct(
+        get(s, st - 1).as("v"),
+        (coalesce(get(starts, k + 1), n + 1) - st).as("c")))
+    }
+  }
+
+  /** Per-document repetition signals: most frequent word and its mass,
+    * repeated-word mass, most frequent adjacent bigram's mass. Every
+    * output depends on one document only, so everything is counted
+    * inside the row ([[valueCounts]]) — one scan, no shuffle before the
+    * output sort. Ties on the top word break to the smallest word:
+    * the (−count, word) minimum over the runs, the order a
+    * `row_number() over (c desc, w)` window picks by. Bigrams zip the
+    * token array with its own tail (the text_collocations idiom). All
+    * fractions are ratios of exact integer counts (bit-identical double
+    * division in both engines, same posture as win_distribution)
+    * rounded 6dp. Single-word and NULL-text documents have no bigram
+    * and drop out — identically in the oracle (its bigram CTE is empty
+    * for them). */
+  private[graft] def repetition(docs: DataFrame): DataFrame = {
+    val ws = col("ws")
+    val bigrams = zip_with(
+      slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
+      (a, b) => concat(a, lit(" "), b))
+    docs.select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
+      .where(size(ws) >= 2)
+      .select(col("doc_id"), size(ws).cast("long").as("n_words"),
+        valueCounts(ws).as("wc"),
+        array_max(transform(valueCounts(bigrams), _("c"))).as("bc"))
+      .select(col("doc_id"), col("n_words"), col("bc"),
+        size(col("wc")).as("n_distinct"),
+        array_min(transform(col("wc"),
+          x => struct((-x("c")).as("nc"), x("v").as("v")))).as("top"))
+      .select(col("doc_id"), col("n_words"), col("top")("v").as("top_word"),
+        D.r6(-col("top")("nc") / col("n_words")).as("top_word_frac"),
+        D.r6(lit(1.0) - col("n_distinct") / col("n_words"))
+          .as("dup_word_frac"),
+        D.r6(col("bc") / (col("n_words") - lit(1)))
+          .as("top_bigram_frac"))
+      .orderBy("doc_id")
+  }
+
+  /** Per-document token entropy in NATS (−Σ p·ln p), with token and
+    * vocabulary counts: a near-zero entropy flags template/repetition
+    * spam that fraction thresholds can miss (the classic diversity
+    * filter in LLM-corpus quality stacks). Nats because Spark `log` ≡
+    * DuckDB `ln` is the proven cross-engine pair (text_unigram_nll /
+    * text_bigram_nll, green at 6dp since r6). Determinism: the fold runs
+    * over the value counts in ascending token order (≡ the oracle's
+    * list(... ORDER BY w)), so both engines add the identical doubles in
+    * the identical order; p = c/n is exact-int division in both. Counted
+    * inside the row like [[repetition]]: one scan, no shuffle. NULL-text
+    * documents drop out; single-word and empty-string ones stay (one
+    * token, entropy 0). */
+  private[graft] def entropy(docs: DataFrame): DataFrame = {
+    def p(x: Column) = x("c").cast("double") / col("n_toks")
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
+      .select(col("doc_id"), size(col("ws")).cast("long").as("n_toks"),
+        valueCounts(col("ws")).as("wc"))
+      .select(col("doc_id"), col("n_toks"),
+        size(col("wc")).cast("long").as("n_distinct"),
+        round(aggregate(col("wc"), lit(0.0),
+          (acc, x) => acc - p(x) * log(p(x))), 6).as("ent"))
+      .orderBy("doc_id")
+  }
 
   val queries: Map[String, Q] = Map(
     // RAKE keyword extraction (round 19) — the document-keywords member
@@ -386,95 +472,15 @@ object TextQuality {
     // filters (top-n-gram mass, duplicate-token mass) every LLM corpus
     // pipeline scores before training, adapted to this corpus's flat
     // word streams (no line structure exists to measure dup-line
-    // fractions on). Per document: most frequent word and its mass,
-    // repeated-word mass, most frequent adjacent bigram's mass. Ties on
-    // the top word break to the lexicographically smallest, so the
-    // emitted word is deterministic. All fractions are ratios of exact
-    // integer counts (bit-identical double division in both engines,
-    // same posture as win_distribution) rounded 6dp. Scale shape: two
-    // map-side explodes of the per-doc token array (words + zipped
-    // adjacent bigrams), then every shuffle hashes on doc_id (the
-    // top-word window + the count aggregates) — per-task state is
-    // bounded by document length. Single-word documents have no bigram
-    // and drop out via the inner join — identically in the oracle (its
-    // bigram CTE is empty for them).
-    "text_repetition" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // r21 wave 5: the bigram branch rode lead() over a (doc_id, pos)
-      // window — a full token-relation exchange + per-doc sort just to
-      // see the next token. Adjacency is a property of the token ARRAY,
-      // so the bigrams are built map-side by zipping the array with its
-      // own tail (the text_collocations idiom; len−1 bigrams per doc ≡
-      // the non-null lead pairs, and single-word docs still vanish via
-      // the inner join). The word-count branch never used positions, so
-      // it explodes without them. One Exchange (tokens by doc_id for the
-      // lead sort) removed outright — guide §2.4.
-      val docs = Tables.table(s, dir, "documents")
-        .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
-      val wc = docs.select(col("doc_id"), explode(col("ws")).as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      // totals, max count, AND the tie-broken top word all ride ONE
-      // window pass over the word counts (same doc_id exchange serves
-      // every frame): the three-consumer form (tot + mx + topw join)
-      // re-computed wc — and the corpus explode under it — once per
-      // branch, since differently-pruned branches defeat AQE exchange
-      // reuse (r14 plan sweep: documents×4), and its min(w) string
-      // aggregate forced a SortAggregate besides.
-      val dw = Window.partitionBy("doc_id")
-      val topw = wc
-        .withColumn("n_words", sum("c").over(dw))
-        .withColumn("n_distinct", count(lit(1)).over(dw))
-        .withColumn("rk", row_number().over(
-          dw.orderBy(col("c").desc, col("w"))))
-        .where(col("rk") === 1)
-        .select(col("doc_id"), col("w").as("top_word"), col("c").as("mc"),
-          col("n_words"), col("n_distinct"))
-      val bc = docs
-        .select(col("doc_id"), explode(zip_with(
-          slice(col("ws"), lit(1), size(col("ws")) - 1),
-          slice(col("ws"), lit(2), size(col("ws")) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      val bmx = bc.groupBy("doc_id").agg(max("c").as("bc"))
-      topw.join(bmx, "doc_id")
-        .select(col("doc_id"), col("n_words"), col("top_word"),
-          D.r6(col("mc") / col("n_words")).as("top_word_frac"),
-          D.r6(lit(1.0) - col("n_distinct") / col("n_words"))
-            .as("dup_word_frac"),
-          D.r6(col("bc") / (col("n_words") - lit(1)))
-            .as("top_bigram_frac"))
-        .orderBy("doc_id")
-    }),
+    // fractions on). See [[repetition]].
+    "text_repetition" -> ((s, dir) =>
+      repetition(Tables.table(s, dir, "documents"))),
 
     // Token-distribution Shannon entropy per document — the
     // information-theoretic twin of text_repetition's count-fraction
-    // signals (a near-zero entropy flags template/repetition spam that
-    // fraction thresholds can miss; the classic diversity filter in
-    // LLM-corpus quality stacks). Entropy is emitted in NATS
-    // (-Σ p·ln p) because Spark `log` ≡ DuckDB `ln` is the proven
-    // cross-engine pair (text_unigram_nll/text_bigram_nll, green at 6dp
-    // since r6) — a log2 variant would introduce an unproven libm pair
-    // for zero semantic gain. Determinism: the fold runs over the
-    // per-doc counts SORTED BY TOKEN (array_sort(collect_list(struct)) ≡
-    // list(... ORDER BY w)), so both engines add the identical doubles
-    // in the identical order; p = c/n is exact-int division in both.
-    // Scale shape: one explode, every shuffle hashes on doc_id, and the
-    // collected list is a document's VOCABULARY (bounded by doc length —
-    // the same per-doc bound text_repetition carries), never the corpus.
-    "text_entropy" -> ((s, dir) => {
-      val wc = Tables.table(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      def p(x: Column) = x("c").cast("double") / col("n_toks")
-      wc.groupBy("doc_id")
-        .agg(sum("c").as("n_toks"), count(lit(1)).as("n_distinct"),
-          array_sort(collect_list(struct(col("w"), col("c")))).as("lst"))
-        .select(col("doc_id"), col("n_toks"), col("n_distinct"),
-          round(aggregate(col("lst"), lit(0.0),
-            (acc, x) => acc - p(x) * log(p(x))), 6).as("ent"))
-        .orderBy("doc_id")
-    }),
+    // signals. See [[entropy]].
+    "text_entropy" -> ((s, dir) =>
+      entropy(Tables.table(s, dir, "documents"))),
 
     // PII detection + redaction (round 16) — the scrub step every LLM
     // training-data pipeline runs before a corpus ships (emails, phone
@@ -715,8 +721,9 @@ object TextQuality {
         "(a, b) -> (a * 31 + b) % 1000000007))), " +
         "(a, b) -> (a * 131 + b) % 1000000007) AS fp FROM documents ORDER BY doc_id"),
     // count(*)/count(DISTINCT) are BIGINT in DuckDB (no HUGEINT hazard);
-    // `w || ' ' || lead(w)` propagates the NULL lead at document end,
-    // matching the Spark side's concat + isNotNull filter.
+    // `w || ' ' || lead(w)` propagates the NULL lead at document end, so
+    // each doc keeps its len−1 adjacent pairs — the Spark side's zipped
+    // bigrams.
     "text_repetition" ->
       ("WITH toks AS (SELECT doc_id, " +
         "unnest(string_split(lower(text), ' ')) AS w, " +

@@ -695,15 +695,20 @@ object Warehouse {
       * constant-TRUE-law posture), so a Spark type-mapping change, a
       * fixture drift, or a broken footer read all fail the gate. Scale:
       * footer reads are metadata ops (no data scan — schema comes from
-      * the footer, not the rows); the diff relation is schema-sized. */
+      * the footer, not the rows), read once per publish of the store;
+      * the diff relation is schema-sized. */
     "dq_schema_drift" -> ((s, dir) => {
       import s.implicits._
       val root = Sinks.ensureEvolvedOrders(s, dir)
-      def cols(p: String): Map[String, String] =
-        s.read.parquet(p).schema.fields
+      // footer memo keyed on the store's publish nonce: the schema
+      // inference is a Spark job per generation, identical on every call
+      // until the store is republished
+      def cols(gen: String): Map[String, String] =
+        Tables.memoizedSourceRead(s, root, "footer_" + gen)(r =>
+          s.read.parquet(s"$r/$gen")).schema.fields
           .map(f => f.name -> f.dataType.typeName).toMap
-      val g1 = cols(s"$root/gen1")
-      val g2 = cols(s"$root/gen2")
+      val g1 = cols("gen1")
+      val g2 = cols("gen2")
       (g1.keySet ++ g2.keySet).toSeq.sorted.map { n =>
         val (t1, t2) = (g1.get(n), g2.get(n))
         val change =

@@ -716,6 +716,15 @@ class PlanAuditSpec extends AnyFunSuite {
       "text_normalize introduced a hash shuffle — no longer map-side")
   }
 
+  test("text_repetition and text_entropy count inside the row: no hash shuffle") {
+    // Every output is a function of one document, so words and bigrams
+    // are counted inside the row; the only exchange allowed is the
+    // declared output sort's range partitioning.
+    for (k <- Seq("text_repetition", "text_entropy"))
+      assert(!plans(k).contains("Exchange hashpartitioning"),
+        s"$k shuffles on a hash key — no longer row-local:\n${plans(k)}")
+  }
+
   test("text_pii_redact: one rollup shuffle, pruned scan, partial aggs") {
     // The scrub must scale as a scan: all regex work map-side inside the
     // projection, ONE (lang, source) rollup (partial+final — only
@@ -1228,8 +1237,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "sql_subquery_cte" -> (Set("rescan:orders×3"),
       "r22 declared: the declared SQL text"),
     "text_collocations" -> (Set("rescan:documents×2"),
-      Roles + ": the unigram and bigram explodes of one corpus"),
-    "text_repetition" -> (Set("rescan:documents×2"),
       Roles + ": the unigram and bigram explodes of one corpus"),
     "text_sentiment" -> (Set("SortAggregate"), Ordered))
 

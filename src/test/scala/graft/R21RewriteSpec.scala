@@ -16,10 +16,12 @@ class R21RewriteSpec extends AnyFunSuite {
 
   test("text_repetition: zipped-adjacency bigrams ≡ lead()-window formulation") {
     import org.apache.spark.sql.expressions.Window
+    // The declared key counts words and zipped bigrams inside each row;
+    // the reference explodes tokens and counts by shuffling on doc_id.
     val declared = SparkEntry.queries("text_repetition")(spark, sf)
     // pre-rewrite formulation: posexplode + lead() over (doc_id, pos),
-    // null lead at doc end dropped — verbatim the shape the key ran
-    // before wave 5.
+    // null lead at doc end dropped, counts by groupBy + a per-doc
+    // row_number window — verbatim the shape the key ran before wave 5.
     val tok = Tables.table(spark, sf, "documents")
       .select(col("doc_id"),
         posexplode(split(lower(col("text")), " ")).as(Seq("pos", "w")))
