@@ -16,6 +16,14 @@ import org.apache.spark.sql.expressions.Window
   * nprobe=4 nearest cells, so the candidate join touches ~nprobe/C of the
   * corpus instead of all of it; with a learned/larger centroid set the
   * same plan gives the classic IVF cost O(N·C/P + |probes|·N·nprobe/C).
+  *
+  * Every index building block has ONE definition the keys compose: the
+  * probe set ([[Vector.probeSet]]), nprobe cell routing ([[probeCell]]),
+  * the packed-long argmin cell assignment ([[assignCells]]), the
+  * fixed-point Lloyd round (driver-side [[Vector.lloydTrain]],
+  * distributed [[lloydMeans]]), the within-cell semantic dedup pass
+  * ([[withinCellDedup]]), the SQ8 decode ([[sq8Recon]]) and the PQ
+  * LUT + exact-L2 re-rank ([[pqLut]], [[l2Rerank]]).
   */
 object Ann {
 
@@ -29,10 +37,42 @@ object Ann {
       struct((-round(Vector.cosine(v, cv), 6)).as("neg"), lit(id).as("c_id"))
     }: _*)), 1, k)
 
+  /** nprobe routing: a probe row fanned out to the NProbe nearest cells
+    * of `v` (one row per cell, as `cell`) — the map-side half of every
+    * cell-routed search. */
+  private def probeCell(v: Column, cents: Seq[(Long, Column)]): Column =
+    explode(transform(nearestCells(v, cents, NProbe), x => x("c_id")))
+      .as("cell")
+
   private val PqSub = 8      // subspaces (64-dim → 8 dims each)
   private val PqK = 16       // codewords per subspace
   private val PqDim = 8      // dims per subspace
   private val PqRerank = 50  // ADC candidates kept for exact re-rank
+
+  /** Subspace j (0-based) of a vector: its j-th PqDim-wide slice. */
+  private def sub(v: Column, j: Int): Column = slice(v, j * PqDim + 1, PqDim)
+
+  /** Per-probe ADC lookup table: lut(j)(c) = d(q_subvec_j, codeword_jc). */
+  private def pqLut(codebook: Seq[Seq[Column]]): Column =
+    array((0 until PqSub).map { j =>
+      array(codebook(j).map(cw => round(l2sq(sub(col("v"), j), cw), 6)): _*)
+    }: _*)
+
+  /** Exact-L2 re-rank (IVFADC+R): fetch ONLY the R ADC survivors' full
+    * vectors (`cands`, R·|probes| rows — broadcast side of both joins)
+    * and keep the top 5 per probe by (rounded exact L2, vec_id). At
+    * 100 TB the fetch touches R rows per query instead of the corpus;
+    * the quantization error left in the ADC ordering affects WHICH R
+    * survive, not the final ranking. */
+  private def l2Rerank(e: DataFrame, cands: DataFrame,
+                       probes: DataFrame): DataFrame = {
+    val wEx = Window.partitionBy("q_id").orderBy(col("dist"), col("vec_id"))
+    e.join(broadcast(cands), "vec_id")
+      .join(broadcast(probes.select("q_id", "q")), "q_id")
+      .withColumn("dist", round(l2sq(col("q"), col("v")), 6))
+      .withColumn("rnk", row_number().over(wEx))
+      .where(col("rnk") <= 5)
+  }
 
   /** The ADC lookup sum Σ_j lut(j)(codes(j)) UNROLLED over the PqSub=8
     * subspaces: term order and associativity are identical to the
@@ -65,7 +105,7 @@ object Ann {
     * tie-break, the same expression the encoder uses. */
   private def argminCode(v: Column, j: Int, cb: Seq[Column]): Column =
     element_at(array_sort(array(cb.zipWithIndex.map { case (cw, c) =>
-      struct(round(l2sq(slice(v, j * PqDim + 1, PqDim), cw), 6).as("d"),
+      struct(round(l2sq(sub(v, j), cw), 6).as("d"),
         lit(c).as("c"))
     }: _*)), 1)("c")
 
@@ -95,8 +135,7 @@ object Ann {
       seed.map(_.map(cw => array(cw.map(lit): _*)))
     val assigned = e.select(inline(array((0 until PqSub).map { j =>
       struct(lit(j).as("j"), argminCode(col("v"), j, seedLit(j)).as("c"),
-        transform(slice(col("v"), j * PqDim + 1, PqDim),
-          x => round(x * 1e6).cast("long")).as("q"))
+        transform(sub(col("v"), j), x => round(x * 1e6).cast("long")).as("q"))
     }: _*)))
     val upd = assigned.groupBy("j", "c")
       .agg(count(lit(1)).as("n"),
@@ -212,8 +251,7 @@ object Ann {
       * precedent), approx side = the factored pqTop5. */
     "embed_ann_recall_pq" -> ((s, dir) => {
       val e = embDouble(s, dir)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
+      val probes = Vector.probeSet(e)
       val exact = Vector.rankPerProbe(
         e.crossJoin(broadcast(probes))
           .where(col("vec_id") =!= col("q_id"))
@@ -248,9 +286,7 @@ object Ann {
     // exactly what the vec_id<10 probe set is.
     "embed_ann_recall_audit" -> ((s, dir) => {
       val e = embDouble(s, dir)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
-      recallAudit(Vector.topK(e, probes, 5), ivfTop5(s, dir))
+      recallAudit(Vector.topK(e, Vector.probeSet(e), 5), ivfTop5(s, dir))
     }),
 
     /** Maximum-inner-product search (round 16) — the retrieval objective
@@ -286,11 +322,8 @@ object Ann {
             col("m2") - Vector.dot(col("v"), col("v"))))).as("v"))
       val centLit = ivfCentroids(s, dir, eAug, "mips_cent16_lloyd1_v1")
       val cells = ivfCells(s, dir, eAug, centLit, "mips_cells16_lloyd1_v1")
-      val probeCells = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"),
-          explode(transform(
-            nearestCells(concat(col("v"), array(lit(0.0))), centLit, NProbe),
-            x => x("c_id"))).as("cell"))
+      val probeCells = Vector.probeSet(e,
+        probeCell(concat(col("v"), array(lit(0.0))), centLit))
       Vector.rankPerProbe(
         cells.join(broadcast(probeCells), "cell")
           .where(col("vec_id") =!= col("q_id"))
@@ -332,8 +365,7 @@ object Ann {
         .where(col("vec_id") * 10 >= col("mx") * 9 &&
           col("vec_id") > col("mx") - 1000)
         .select(col("vec_id").as("q_id"), col("v").as("q"),
-          explode(transform(nearestCells(col("v"), centLit, NProbe),
-            x => x("c_id"))).as("cell"))
+          probeCell(col("v"), centLit))
       val older = cells.crossJoin(broadcast(mx))
         .where(col("vec_id") * 10 < col("mx") * 9)
         .select("vec_id", "v", "cell")
@@ -378,16 +410,12 @@ object Ann {
       * cost by definition (run over a probe sample at 100 TB). */
     "embed_ann_recall_lsh" -> ((s, dir) => {
       val e = embDouble(s, dir)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
-      recallAudit(Vector.topK(e, probes, 5), lshTop5(s, dir))
+      recallAudit(Vector.topK(e, Vector.probeSet(e), 5), lshTop5(s, dir))
     }),
 
     "embed_ann_recall_nsw" -> ((s, dir) => {
-      val corpus = nswCorpus(s, dir)
-      val probes = embDouble(s, dir).where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
-      recallAudit(Vector.topK(corpus, probes, 5), nswTop5(s, dir))
+      val probes = Vector.probeSet(embDouble(s, dir))
+      recallAudit(Vector.topK(nswCorpus(s, dir), probes, 5), nswTop5(s, dir))
     }),
 
     /** SemDeDup-style semantic dedup over the embedding corpus: a vector
@@ -409,23 +437,8 @@ object Ann {
       * per-vector argmin window. The oracle replays the DERIVED C from
       * count(*), so both engines compute the same inverted file at every
       * scale factor. */
-    "dedup_semantic" -> ((s, dir) => {
-      val e = embDouble(s, dir)
-      val cells = semCells(s, dir, e)
-      val a = cells.select(col("vec_id").as("keeper"), col("v").as("va"),
-        col("cell"))
-      val b = cells.select(col("vec_id"), col("v").as("vb"), col("cell"))
-      val pairs = a.join(b, "cell")
-        .where(col("keeper") < col("vec_id"))
-        .withColumn("sim", round(Vector.cosine(col("va"), col("vb")), 6))
-        .where(col("sim") >= 0.35)
-        .select("vec_id", "keeper", "sim") // vectors stay out of the window shuffle
-      val w = Window.partitionBy("vec_id").orderBy("keeper")
-      pairs.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select("vec_id", "keeper", "sim")
-        .orderBy("vec_id")
-    }),
+    "dedup_semantic" -> ((s, dir) =>
+      withinCellDedup(semCells(s, dir, embDouble(s, dir)))),
 
     /** Multi-probe semantic dedup — the recovery path for the cross-cell
       * loss `dedup_semantic` forfeits by contract: a BOUNDARY vector
@@ -444,23 +457,8 @@ object Ann {
       * carries the same values), so no distinct pass is spent — the
       * oracle's row_number has the same property. Flagged set is a
       * strict superset of dedup_semantic's (asserted in AnnSpec). */
-    "dedup_semantic_mp" -> ((s, dir) => {
-      val e = embDouble(s, dir)
-      val cells2 = semCellsMp(s, dir, e)
-      val a = cells2.select(col("vec_id").as("keeper"), col("v").as("va"),
-        col("cell"))
-      val b = cells2.select(col("vec_id"), col("v").as("vb"), col("cell"))
-      val pairs = a.join(b, "cell")
-        .where(col("keeper") < col("vec_id"))
-        .withColumn("sim", round(Vector.cosine(col("va"), col("vb")), 6))
-        .where(col("sim") >= 0.35)
-        .select("vec_id", "keeper", "sim") // vectors stay out of the window shuffle
-      val w = Window.partitionBy("vec_id").orderBy("keeper")
-      pairs.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select("vec_id", "keeper", "sim")
-        .orderBy("vec_id")
-    }),
+    "dedup_semantic_mp" -> ((s, dir) =>
+      withinCellDedup(semCellsMp(s, dir, embDouble(s, dir)))),
 
     /** Two-level (hierarchically routed) semantic dedup — the sub-N^1.5
       * BUILD the single-level key's Scaladoc points at: `dedup_semantic`
@@ -477,23 +475,8 @@ object Ann {
       * min-keeper rule are identical to [[dedup_semantic]]; the same
       * Σ|cell|² ≈ N^1.5 pair-mass bound holds because the fine cell
       * count is the same C. */
-    "dedup_semantic_2l" -> ((s, dir) => {
-      val e = embDouble(s, dir)
-      val cells = semCells2l(s, dir, e)
-      val a = cells.select(col("vec_id").as("keeper"), col("v").as("va"),
-        col("cell"))
-      val b = cells.select(col("vec_id"), col("v").as("vb"), col("cell"))
-      val pairs = a.join(b, "cell")
-        .where(col("keeper") < col("vec_id"))
-        .withColumn("sim", round(Vector.cosine(col("va"), col("vb")), 6))
-        .where(col("sim") >= 0.35)
-        .select("vec_id", "keeper", "sim") // vectors stay out of the window shuffle
-      val w = Window.partitionBy("vec_id").orderBy("keeper")
-      pairs.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select("vec_id", "keeper", "sim")
-        .orderBy("vec_id")
-    }),
+    "dedup_semantic_2l" -> ((s, dir) =>
+      withinCellDedup(semCells2l(s, dir, embDouble(s, dir)))),
 
     /** Scalar int8 quantization of the embedding corpus — the compressed
       * vector store an ANN index keeps at 100 TB (64 B/vector vs 256 B
@@ -532,15 +515,8 @@ object Ann {
       * near-perfect; the oracle replays quantize → decode → rank
       * end-to-end from the raw table. */
     "embed_ann_sq8" -> ((s, dir) => {
-      val lims = sq8Lims(s, dir)
-      val mns = array(lims.map(l => lit(l._2)): _*)
-      val mxs = array(lims.map(l => lit(l._3)): _*)
-      val rv = transform(sequence(lit(1), lit(lims.size)), i =>
-        element_at(mns, i) +
-          element_at(col("codes"), i).cast("double") / 255 *
-            (element_at(mxs, i) - element_at(mns, i)))
-      val probes = embDouble(s, dir).where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
+      val rv = sq8Decoded(s, dir)
+      val probes = Vector.probeSet(embDouble(s, dir))
       // corpusSized: the flat scan ranks the WHOLE decoded corpus per
       // probe (that is what "flat" means), so the candidate set is
       // corpus-sized and must run the sharded two-stage top-k — the same
@@ -574,22 +550,13 @@ object Ann {
     "embed_ann_sq8_ivf" -> ((s, dir) => {
       val e = embDouble(s, dir)
       val centLit = ivfCentroids(s, dir, e)
-      val lims = sq8Lims(s, dir)
-      val mns = array(lims.map(l => lit(l._2)): _*)
-      val mxs = array(lims.map(l => lit(l._3)): _*)
-      val rv = transform(sequence(lit(1), lit(lims.size)), i =>
-        element_at(mns, i) +
-          element_at(col("codes"), i).cast("double") / 255 *
-            (element_at(mxs, i) - element_at(mns, i)))
+      val rv = sq8Decoded(s, dir)
       val idx = graft.Staging.materialize(
         s, Tables.path(dir, "embeddings"), "sq8_ivf_idx_v1") {
         ivfCells(s, dir, e, centLit).select("vec_id", "cell")
           .join(sq8Enc(s, dir).select("vec_id", "codes"), "vec_id")
       }
-      val probeCells = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"),
-          explode(transform(nearestCells(col("v"), centLit, NProbe),
-            x => x("c_id"))).as("cell"))
+      val probeCells = Vector.probeSet(e, probeCell(col("v"), centLit))
       Vector.rankPerProbe(
         idx.join(broadcast(probeCells), "cell")
           .where(col("vec_id") =!= col("q_id"))
@@ -624,22 +591,15 @@ object Ann {
       val e = embDouble(s, dir)
       val centLit = ivfCentroids(s, dir, e)
       val (sfx, codebook, encoded) = pqIndex(s, dir, e)
-      def sub(v: Column, j: Int): Column = slice(v, j * PqDim + 1, PqDim)
       val idx = graft.Staging.materialize(
         s, Tables.path(dir, "embeddings"), s"ivfpq_idx${sfx}_v1") {
         ivfCells(s, dir, e, centLit).select("vec_id", "cell")
           .join(encoded, "vec_id")
       }
-      val lut = array((0 until PqSub).map { j =>
-        array(codebook(j).map(cw =>
-          round(l2sq(sub(col("v"), j), cw), 6)): _*)
-      }: _*)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"), lut.as("lut"))
-      val probeCells = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), lut.as("lut"),
-          explode(transform(nearestCells(col("v"), centLit, NProbe),
-            x => x("c_id"))).as("cell"))
+      val lut = pqLut(codebook)
+      val probes = Vector.probeSet(e, lut.as("lut"))
+      val probeCells = Vector.probeSet(e, lut.as("lut"),
+        probeCell(col("v"), centLit))
       // Stage 1 — cell-routed ADC: each corpus vector lives in exactly
       // one cell and a probe's 4 cells are distinct, so the join yields
       // each (q_id, vec_id) candidate at most once. Projected narrow
@@ -651,14 +611,8 @@ object Ann {
           .select("q_id", "vec_id", "adist"),
         Seq(col("adist"), col("vec_id")), PqRerank, "cr")
         .select("q_id", "vec_id")
-      // Stage 2 — exact re-rank of ONLY the R survivors (broadcast side
-      // of both joins: R·|probes| rows).
-      val wEx = Window.partitionBy("q_id").orderBy(col("dist"), col("vec_id"))
-      e.join(broadcast(cands), "vec_id")
-        .join(broadcast(probes.select("q_id", "q")), "q_id")
-        .withColumn("dist", round(l2sq(col("q"), col("v")), 6))
-        .withColumn("rnk", row_number().over(wEx))
-        .where(col("rnk") <= 5)
+      // Stage 2 — exact re-rank of ONLY the R survivors.
+      l2Rerank(e, cands, probes)
         .select(col("q_id"), col("rnk"), col("vec_id"), col("dist"))
         .orderBy("q_id", "rnk")
     })
@@ -674,10 +628,7 @@ object Ann {
     val e = embDouble(s, dir)
     val centLit = ivfCentroids(s, dir, e)
     val cells = ivfCells(s, dir, e, centLit)
-    val probeCells = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q"),
-        explode(transform(nearestCells(col("v"), centLit, NProbe),
-          x => x("c_id"))).as("cell"))
+    val probeCells = Vector.probeSet(e, probeCell(col("v"), centLit))
     Vector.rankPerProbe(
       cells.join(broadcast(probeCells), "cell")
         .where(col("vec_id") =!= col("q_id"))
@@ -708,8 +659,7 @@ object Ann {
     val sig = graft.Staging.materialize(
       e.select(col("vec_id"), col("v"), bucket.as("bucket")),
       Tables.path(dir, "embeddings"), "lsh_sig6_v1")
-    val probes = sig.where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q"), col("bucket"))
+    val probes = Vector.probeSet(sig, col("bucket"))
     Vector.rankPerProbe(
       sig.join(broadcast(probes), "bucket")
         .where(col("vec_id") =!= col("q_id"))
@@ -726,14 +676,7 @@ object Ann {
                             trainStride: Option[Long] = None): DataFrame = {
     val e = embDouble(s, dir)
     val (_, codebook, encoded) = pqIndex(s, dir, e, trainStride)
-    def sub(v: Column, j: Int): Column = slice(v, j * PqDim + 1, PqDim)
-    // per-probe ADC lookup table: lut(j)(c) = d(q_subvec_j, codeword_jc)
-    val lut = array((0 until PqSub).map { j =>
-      array(codebook(j).map(cw =>
-        round(l2sq(sub(col("v"), j), cw), 6)): _*)
-    }: _*)
-    val probes = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q"), lut.as("lut"))
+    val probes = Vector.probeSet(e, pqLut(codebook).as("lut"))
     // Stage 1 — ADC scan: every corpus vector scored from its 8 codes
     // (8 table lookups, no full vectors touched), top-R survivors kept
     // per probe by (rounded ADC distance, vec_id). The ADC scan touches
@@ -749,19 +692,10 @@ object Ann {
         .select("q_id", "vec_id", "adist"),
       Seq(col("adist"), col("vec_id")), PqRerank, "cr", corpusSized = true)
       .select("q_id", "vec_id")
-    // Stage 2 — exact re-rank (IVFADC+R): fetch ONLY the R survivors'
-    // full vectors (R·|probes| rows — broadcast side of both joins)
-    // and rank by exact L2. At 100 TB the full-vector fetch touches
-    // R rows per query instead of the corpus; the quantization error
-    // left in the ADC ordering affects WHICH R survive, not the final
-    // ranking — recall jumps accordingly (AnnSpec: 0.22 ADC-only →
-    // measured with re-rank).
-    val wEx = Window.partitionBy("q_id").orderBy(col("dist"), col("vec_id"))
-    e.join(broadcast(cands), "vec_id")
-      .join(broadcast(probes.select("q_id", "q")), "q_id")
-      .withColumn("dist", round(l2sq(col("q"), col("v")), 6))
-      .withColumn("rnk", row_number().over(wEx))
-      .where(col("rnk") <= 5)
+    // Stage 2 — exact re-rank (IVFADC+R) of ONLY the R survivors —
+    // recall jumps accordingly (AnnSpec: 0.22 ADC-only → measured with
+    // re-rank).
+    l2Rerank(e, cands, probes)
   }
 
   /** The NSW top-5 neighbor relation (q_id, rnk, vec_id, sim) — the
@@ -771,8 +705,7 @@ object Ann {
     * unrolled beam-search contract. */
   private[graft] def nswTop5(s: SparkSession, dir: String): DataFrame = {
     val corpus = nswCorpus(s, dir)
-    val probes = embDouble(s, dir).where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("q"))
+    val probes = Vector.probeSet(embDouble(s, dir))
     val edges = graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), s"nsw_edges${NswK}_mpcell_v2") {
       val cellsHeld = semCellsMp(s, dir, embDouble(s, dir))
@@ -864,7 +797,8 @@ object Ann {
     * oracle can replay them). Assign every corpus vector to its nearest
     * SEED cell (the same map-side cosine argmax the search uses), then
     * move each centroid to the per-dim MEAN of its members; empty cells
-    * keep their seed.
+    * keep their seed — one round of [[Vector.lloydTrain]], the driver-
+    * side trainer embed_kmeans runs too.
     *
     * Determinism (the property the static SQL oracle and the
     * cross-partitioning verify diff both need): per-dim sums are EXACT
@@ -885,28 +819,10 @@ object Ann {
       : Seq[(Long, Column)] = {
     val cents = graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), artifact) {
-      // one bounded collect (16 rows — fixed model state): both the seed
-      // literal columns and the empty-cell fallback values derive from it
-      val seedRows: Seq[(Long, Seq[Double])] =
-        e.where(col("vec_id") < NumCentroids).collect()
-          .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
-      val seeds = seedRows.map { case (id, v) => id -> array(v.map(lit): _*) }
-      val dim = seedRows.headOption.map(_._2.size).getOrElse(0)
-      val assigned = e.select(
-        element_at(nearestCells(col("v"), seeds, 1), 1)("c_id").as("cell"),
-        transform(col("v"), x => round(x * 1e6).cast("long")).as("q"))
-      val upd = assigned.groupBy("cell")
-        .agg(count(lit(1)).as("n"),
-          array((0 until dim).map(i =>
-            sum(element_at(col("q"), i + 1))): _*).as("sums"))
-        .collect()
-        .map { r =>
-          val n = r.getLong(1)
-          r.getLong(0) -> r.getSeq[Long](2).map(sv => sv.toDouble / n / 1e6)
-        }.toMap
       import s.implicits._
-      seedRows.map { case (cid, sv) =>
-        (cid, upd.getOrElse(cid, sv)) }.toDF("c_id", "cv")
+      Vector.lloydTrain(e, NumCentroids, 1)(cs => element_at(nearestCells(
+        col("v"), cs.map { case (id, v) => id -> array(v.map(lit): _*) }, 1),
+        1)("c_id")).toDF("c_id", "cv")
     }
     cents.collect().toSeq.sortBy(_.getLong(0))
       .map(r => r.getLong(0) -> array(r.getSeq[Double](1).map(lit): _*))
@@ -1022,9 +938,13 @@ object Ann {
   private def packedCell(p: Column): Column =
     p.bitwiseAND(lit(0xFFFFFFFFL))
 
-  /** Nearest-cell assignment of `e` (vec_id, v) against a centroid
-    * RELATION (c_id, cv) — the derived-C twin of [[nearestCells]]'s
-    * literal-expression argmax. At C = √N the literal form stops being
+  /** Nearest-cell assignment of `e` (vec_id, v) over its scored
+    * candidate relation `cands` (vec_id, v, cv, `cid`) — `e` crossed
+    * with a broadcast centroid RELATION, or joined to one on a routing
+    * bucket — the derived-C twin of [[nearestCells]]'s
+    * literal-expression argmax. `withScore` also keeps the winning
+    * score's packed high word (`s1b` = 2e6 − sim1·1e6) for the
+    * multi-probe boundary test. At C = √N the literal form stops being
     * viable (hundreds of inlined cosines blow past codegen limits and
     * the driver would hold every centroid as an expression tree), so the
     * scale shape is a broadcast join + packed-long argmin
@@ -1036,35 +956,88 @@ object Ann {
     * keys' (rounded cosine DESC, c_id) row_number. The centroid side is
     * √N rows — broadcastable far beyond any corpus size that fits a
     * cluster (10¹² vectors → 10⁶ centroids). */
-  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+  private def assignCells(e: DataFrame, cands: DataFrame,
+                          cid: String = "c_id",
+                          withScore: Boolean = false): DataFrame =
     e.select(col("vec_id"), col("v")).join(
-      e.crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-          packScore(col("v"), col("cv"), col("c_id")).as("p"))
-        .groupBy("vec_id").agg(min(col("p")).as("p"))
-        .select(col("vec_id"), packedCell(col("p")).as("cell"))
+      packedArgmin(cands, cid)
+        .select(Seq(col("vec_id"), packedCell(col("p")).as("cell")) ++
+          (if (withScore) Seq(shiftright(col("p"), 32).as("s1b")) else Nil): _*)
         // narrow build side: hash join, never a sort of the wide rows
         .hint("shuffle_hash"),
       "vec_id")
+
+  /** Per-vector min [[packScore]] over scored candidates (vec_id, v, cv,
+    * `cid`) — the narrow (vec_id, p) argmin every cell assignment runs. */
+  private def packedArgmin(cands: DataFrame, cid: String): DataFrame =
+    cands.select(col("vec_id"), packScore(col("v"), col("cv"), col(cid)).as("p"))
+      .groupBy("vec_id").agg(min(col("p")).as("p"))
+
+  /** One distributed fixed-point Lloyd round's update: each cell of
+    * `members` (cell, v) moves to the per-dim MEAN of its members, as
+    * exact per-dim round(x·10⁶) long sums (associative, so bit-identical
+    * under any partitioning) in a (cell, dim) two-phase aggregate whose
+    * per-cell vector is re-assembled by array_sort(collect_list) — no
+    * driver collect, so it scales to C in the millions. The result is
+    * `seeds` with its `seedV` column replaced by the mean `cv`, keyed on
+    * `id` = cell; empty cells keep their seed (left-join coalesce ≡ the
+    * oracle's NOT IN union). */
+  private def lloydMeans(members: DataFrame, seeds: DataFrame, id: String,
+                         seedV: String): DataFrame = {
+    val sums = members.select(col("cell"),
+        posexplode(transform(col("v"), x => round(x * 1e6).cast("long")))
+          .as(Seq("d", "q")))
+      .groupBy("cell", "d")
+      .agg(sum("q").as("sm"), count(lit(1)).as("n"))
+    val centm = sums.groupBy("cell")
+      .agg(transform(array_sort(collect_list(struct(col("d").as("d"),
+        (col("sm").cast("double") / col("n") / lit(1e6)).as("m")))),
+        x => x("m")).as("cv"))
+      .select(col("cell").as(id), col("cv"))
+    seeds.join(centm, Seq(id), "left")
+      .select(seeds.columns.toSeq.map(c =>
+        if (c == seedV) coalesce(col("cv"), col(c)).as("cv") else col(c)): _*)
+  }
+
+  /** The within-cell semantic dedup pass over an inverted file (vec_id,
+    * v, cell): a vector is a duplicate iff a LOWER-id vector sharing one
+    * of its cells has rounded cosine ≥ 0.35; output (vec_id, keeper,
+    * sim) keeps the smallest such keeper (min-id-survives). The
+    * self-join shuffles on `cell` only, and vectors leave the plan
+    * before the per-vector argmin window. A multi-probe pair sharing
+    * BOTH cells yields identical duplicate rows, which the min-keeper
+    * window is insensitive to (the oracle's row_number has the same
+    * property), so no distinct pass is spent. */
+  private def withinCellDedup(cells: DataFrame): DataFrame = {
+    val a = cells.select(col("vec_id").as("keeper"), col("v").as("va"),
+      col("cell"))
+    val b = cells.select(col("vec_id"), col("v").as("vb"), col("cell"))
+    val pairs = a.join(b, "cell")
+      .where(col("keeper") < col("vec_id"))
+      .withColumn("sim", round(Vector.cosine(col("va"), col("vb")), 6))
+      .where(col("sim") >= 0.35)
+      .select("vec_id", "keeper", "sim") // vectors stay out of the window shuffle
+    val w = Window.partitionBy("vec_id").orderBy("keeper")
+    pairs.withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .select("vec_id", "keeper", "sim")
+      .orderBy("vec_id")
+  }
 
   /** The semantic-dedup inverted file: corpus assigned to C = √N
     * Lloyd-refined cells, staged per corpus version (the C in the
     * artifact name is derived from the same count both engines compute,
     * so it can never alias an artifact of a different formula). Unlike
     * [[ivfCentroids]]'s 16-literal build, EVERYTHING here is
-    * distributed: seed assignment is the broadcast-join argmin, and the
-    * Lloyd mean is the same exact fixed-point arithmetic (per-dim
-    * round(x·10⁶) long sums — associative, so bit-identical under any
-    * partitioning) computed as a (cell, dim) two-phase aggregate with
-    * the per-cell mean vector re-assembled by array_sort(collect_list) —
-    * no C-row driver collect anywhere, so the build scales to √N in the
-    * millions. Empty cells keep their seed (left-join coalesce ≡ the
-    * oracle's NOT IN union). */
+    * distributed: seed assignment is the broadcast-join argmin
+    * ([[assignCells]]) and the Lloyd mean is [[lloydMeans]] — no C-row
+    * driver collect anywhere, so the build scales to √N in the
+    * millions. */
   private[graft] def semCells(s: SparkSession, dir: String, e: DataFrame): DataFrame = {
     val c = semCellCount(s, dir)
     graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), s"sem_cells_c${c}_lloyd1_v1") {
-      assignCells(e, semCentroids(s, dir, e, c))
+      assignCells(e, e.crossJoin(broadcast(semCentroids(s, dir, e, c))))
     }
   }
 
@@ -1078,20 +1051,8 @@ object Ann {
       s, Tables.path(dir, "embeddings"), s"sem_cent_c${c}_lloyd1_v1") {
       val seeds = e.where(col("vec_id") < c)
         .select(col("vec_id").as("c_id"), col("v").as("cv"))
-      val a0 = assignCells(e, seeds)
-      val sums = a0.select(col("cell"),
-          posexplode(transform(col("v"), x => round(x * 1e6).cast("long")))
-            .as(Seq("d", "q")))
-        .groupBy("cell", "d")
-        .agg(sum("q").as("sm"), count(lit(1)).as("n"))
-      val centm = sums.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("d").as("d"),
-          (col("sm").cast("double") / col("n") / lit(1e6)).as("m")))),
-          x => x("m")).as("cv"))
-        .select(col("cell").as("c_id"), col("cv"))
-      seeds.select(col("c_id"), col("cv").as("cv0"))
-        .join(centm, Seq("c_id"), "left")
-        .select(col("c_id"), coalesce(col("cv"), col("cv0")).as("cv"))
+      lloydMeans(assignCells(e, e.crossJoin(broadcast(seeds))),
+        seeds.select(col("c_id"), col("cv").as("cv0")), "c_id", "cv0")
     }
 
   /** Multi-probe boundary threshold: a vector takes a second probe cell
@@ -1122,16 +1083,17 @@ object Ann {
     graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), s"sem_cells_mp2b01_c${c}_lloyd1_v1") {
       val cent = semCentroids(s, dir, e, c)
-      val a1 = assignCellsScored(e, cent)
+      // rank 1 carries its packed high word (s1b = 2e6 − sim1·1e6) for
+      // the boundary test below
+      val a1 = assignCells(e, e.crossJoin(broadcast(cent)), withScore = true)
       // rank-2 argmin over the OTHER cells, same narrow packed-long
       // shape as assignCells; the ε-boundary test runs in tick space
-      // (pure long arithmetic — ticks are exact, so this is the same
-      // predicate the oracle evaluates on the rounded sims)
-      val b2 = a1.crossJoin(broadcast(cent))
-        .where(col("c_id") =!= col("cell"))
-        .select(col("vec_id"),
-          packScore(col("v"), col("cv"), col("c_id")).as("p"))
-        .groupBy("vec_id").agg(min(col("p")).as("p"))
+      // (pure long arithmetic — ticks are exact, so sim1 − sim2 < ε ⟺
+      // s2b − s1b < ε·1e6, the predicate the oracle evaluates on the
+      // rounded sims)
+      val b2 = packedArgmin(
+          a1.crossJoin(broadcast(cent)).where(col("c_id") =!= col("cell")),
+          "c_id")
         .hint("shuffle_hash")
         .join(a1.select(col("vec_id"), col("v"), col("s1b")), "vec_id")
         .where(shiftright(col("p"), 32) - col("s1b") <
@@ -1141,38 +1103,6 @@ object Ann {
     }
   }
 
-  /** [[assignCells]] carrying the winning score's packed high word
-    * (`s1b` = 2e6 − sim1·1e6) — the rank-2 pass needs the rank-1 score
-    * for the boundary test, and in tick space that test is pure integer
-    * arithmetic: sim1 − sim2 < ε ⟺ s2b − s1b < ε·1e6. */
-  private def assignCellsScored(e: DataFrame, cents: DataFrame): DataFrame =
-    e.select(col("vec_id"), col("v")).join(
-      e.crossJoin(broadcast(cents))
-        .select(col("vec_id"),
-          packScore(col("v"), col("cv"), col("c_id")).as("p"))
-        .groupBy("vec_id").agg(min(col("p")).as("p"))
-        .select(col("vec_id"), packedCell(col("p")).as("cell"),
-          shiftright(col("p"), 32).as("s1b"))
-        .hint("shuffle_hash"),
-      "vec_id")
-
-  /** Nearest-centroid argmin WITHIN a routing bucket: vectors carrying a
-    * bucket id `g` joined to the broadcast (f_id, cv, g) fine-centroid
-    * relation on `g`, then the same narrow packed-long hash argmin as
-    * [[assignCells]] (vectors re-attached by the vec_id equi-join, never
-    * riding the aggregate) — scored pairs are Σ_g |Vg|·|Fg| instead of
-    * N·C, which is where the two-level build's N^1.25 lives. Same total
-    * order as the oracle's row_number (rounded cosine DESC, f_id). */
-  private def assignInBucket(vecs: DataFrame, cent: DataFrame): DataFrame =
-    vecs.select(col("vec_id"), col("v")).join(
-      vecs.join(broadcast(cent), "g")
-        .select(col("vec_id"),
-          packScore(col("v"), col("cv"), col("f_id")).as("p"))
-        .groupBy("vec_id").agg(min(col("p")).as("p"))
-        .select(col("vec_id"), packedCell(col("p")).as("cell"))
-        .hint("shuffle_hash"),
-      "vec_id")
-
   /** The two-level inverted file (see the `dedup_semantic_2l` Scaladoc):
     * C fine seeds, C1 = max(4, ⌈√C⌉) coarse seeds, fine seeds routed to
     * their nearest coarse seed ONCE (frozen through the Lloyd round —
@@ -1181,9 +1111,8 @@ object Ann {
     * the final one). Vectors route only to buckets that hold at least
     * one fine seed (a coarse seed can lose ALL its fine seeds to a
     * lower-id twin under the rounded-cosine tie-break; an empty bucket
-    * would strand its vectors). The fine Lloyd mean is the same exact
-    * fixed-point two-phase aggregate as [[semCentroids]] — fully
-    * distributed, no centroid collect. */
+    * would strand its vectors). The fine Lloyd mean is [[lloydMeans]],
+    * as for [[semCentroids]] — fully distributed, no centroid collect. */
   private[graft] def semCells2l(s: SparkSession, dir: String,
                                 e: DataFrame): DataFrame = {
     val c = semCellCount(s, dir)
@@ -1195,44 +1124,35 @@ object Ann {
       val g0 = e.where(col("vec_id") < c1)
         .select(col("vec_id").as("c_id"), col("v").as("cv"))
       // fine-seed → coarse-seed routing (C×C1 scores, broadcast-tiny)
-      val fr = assignCells(
-        s0.select(col("f_id").as("vec_id"), col("fv").as("v")), g0)
+      val sv = s0.select(col("f_id").as("vec_id"), col("fv").as("v"))
+      val fr = assignCells(sv, sv.crossJoin(broadcast(g0)))
         .select(col("vec_id").as("f_id"), col("v").as("fv"),
           col("cell").as("g"))
       val gs = fr.select("g").distinct()
       // vector → coarse bucket, restricted to non-empty buckets; coarse
       // seeds are fixed, so this N·C1 pass is shared by both hops below
-      val vg = assignCells(e,
-        g0.join(broadcast(gs), col("c_id") === col("g")).select("c_id", "cv"))
+      val vg = assignCells(e, e.crossJoin(broadcast(
+        g0.join(broadcast(gs), col("c_id") === col("g")).select("c_id", "cv"))))
         .select(col("vec_id"), col("v"), col("cell").as("g"))
-      // seed-phase fine assignment within the bucket
-      val m0 = assignInBucket(vg,
-        fr.select(col("f_id"), col("fv").as("cv"), col("g")))
-      // one fixed-point Lloyd round over the fine cells
-      val sums = m0.select(col("cell"),
-          posexplode(transform(col("v"), x => round(x * 1e6).cast("long")))
-            .as(Seq("d", "q")))
-        .groupBy("cell", "d")
-        .agg(sum("q").as("sm"), count(lit(1)).as("n"))
-      val centm = sums.groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("d").as("d"),
-          (col("sm").cast("double") / col("n") / lit(1e6)).as("m")))),
-          x => x("m")).as("cv"))
-        .select(col("cell").as("f_id"), col("cv"))
-      val cf = fr.join(centm, Seq("f_id"), "left")
-        .select(col("f_id"), coalesce(col("cv"), col("fv")).as("cv"),
-          col("g"))
-      // final assignment against the refined fine centroids, same hops
-      assignInBucket(vg, cf)
+      // nearest fine centroid WITHIN the vector's bucket: candidates join
+      // the broadcast (f_id, cv, g) relation on g, so scored pairs are
+      // Σ_g |Vg|·|Fg| instead of N·C — where the N^1.25 lives
+      def inBucket(cent: DataFrame): DataFrame =
+        assignCells(vg, vg.join(broadcast(cent), "g"), "f_id")
+      // seed-phase fine assignment, one fixed-point Lloyd round over the
+      // fine cells, then the final assignment against the refined ones
+      val m0 = inBucket(fr.select(col("f_id"), col("fv").as("cv"), col("g")))
+      inBucket(lloydMeans(m0, fr, "f_id", "fv"))
     }
   }
 
   /** Per-dim [min, max] of the embedding corpus — the SQ8 quantizer's
     * entire model state (64 rows), staged per corpus version and
     * collected on read (the ivfCentroids 16-row pattern: bounded model
-    * state, never data). Shared by the encoder and the SQ8 search's
-    * decoder, so the two can never drift. */
-  private def sq8Lims(s: SparkSession, dir: String): Seq[(Int, Double, Double)] = {
+    * state, never data), returned as the (mins, maxes) literal arrays
+    * and the dim. Shared by the encoder and the SQ8 searches' decoder,
+    * so the two can never drift. */
+  private def sq8Lims(s: SparkSession, dir: String): (Column, Column, Int) = {
     val lims = graft.Staging.materialize(s, Tables.path(dir, "embeddings"),
       "sq8_lims_v1") {
       embDouble(s, dir).select(posexplode(col("v")).as(Seq("d", "x")))
@@ -1244,7 +1164,23 @@ object Ann {
     // fail LOUDLY here, not silently diverge from the oracle (r12 ADVICE).
     require(lims.size == 64,
       s"SQ8 oracles assume 64-dim embeddings; corpus has dim ${lims.size}")
-    lims
+    (array(lims.map(l => lit(l._2)): _*), array(lims.map(l => lit(l._3)): _*),
+      lims.size)
+  }
+
+  /** SQ8 reconstruction of code `c` at 1-based dim `i`:
+    * mn + c/255·(mx − mn) — the encoder's error term and the searches'
+    * decoder are this one expression. */
+  private def sq8Recon(mns: Column, mxs: Column, i: Column, c: Column): Column =
+    element_at(mns, i) + c.cast("double") / 255 *
+      (element_at(mxs, i) - element_at(mns, i))
+
+  /** The `codes` column decoded back to array<double> (corpus decoded
+    * map-side against the broadcast limits). */
+  private def sq8Decoded(s: SparkSession, dir: String): Column = {
+    val (mns, mxs, dim) = sq8Lims(s, dir)
+    transform(sequence(lit(1), lit(dim)), i =>
+      sq8Recon(mns, mxs, i, element_at(col("codes"), i)))
   }
 
   /** The int8-encoded corpus (`sq8_enc_v1`: vec_id, codes, per-vector
@@ -1259,15 +1195,12 @@ object Ann {
     graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), "sq8_enc_v1") {
       val e = embDouble(s, dir)
-      val lims = sq8Lims(s, dir)
-      val mns = array(lims.map(l => lit(l._2)): _*)
-      val mxs = array(lims.map(l => lit(l._3)): _*)
-      val dim = lims.size
+      val (mns, mxs, dim) = sq8Lims(s, dir)
       def mn(i: Column) = element_at(mns, i)
       def mx(i: Column) = element_at(mxs, i)
       def x(i: Column) = element_at(col("v"), i)
-      def recon(i: Column, c: Column) =
-        mn(i) + c.cast("double") / 255 * (mx(i) - mn(i))
+      def err(i: Column) =
+        x(i) - sq8Recon(mns, mxs, i, element_at(col("codes"), i))
       val codes = transform(sequence(lit(1), lit(dim)), i =>
         when(mx(i) > mn(i),
           round((x(i) - mn(i)) / (mx(i) - mn(i)) * 255).cast("int"))
@@ -1275,9 +1208,7 @@ object Ann {
       e.select(col("vec_id"), col("v"), codes.as("codes"))
         .select(col("vec_id"), col("codes"),
           round(aggregate(sequence(lit(1), lit(dim)), lit(0.0),
-            (acc, i) => acc +
-              (x(i) - recon(i, element_at(col("codes"), i))) *
-              (x(i) - recon(i, element_at(col("codes"), i)))) / dim, 6)
+            (acc, i) => acc + err(i) * err(i)) / dim, 6)
             .as("mse"))
     }
 

@@ -37,20 +37,13 @@ object Text {
         .groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token"))),
 
-    // tf·idf with idf = ln((N+1)/(df+1)); the corpus size N is joined in as
-    // a broadcast one-row aggregate, not collected at the driver.
+    // tf·idf with idf = ln((N+1)/(df+1)) over the shared bm25Parts tf/df
+    // (one tf barrier feeds the scoring join and df); the corpus size N
+    // is joined in as a broadcast one-row aggregate, not collected at the
+    // driver.
     "text_tfidf" -> ((s, dir) => {
-      val docs = Tables.table(s, dir, "documents")
-      val toks = docs
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
-      // LAZY localCheckpoint barrier: tf feeds both the scoring join and
-      // df — the two references re-ran the tokenize+explode+aggregate
-      // twice under static planning (q21 rescan class, r21)
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(false)
-      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n"))
-      tf.join(df, "term").crossJoin(broadcast(n))
+      val p = bm25Parts(s, dir)
+      p.tf.join(p.df, "term").crossJoin(broadcast(p.n))
         .select(col("doc_id"), col("term"), tfidfScore.as("score"))
         .orderBy(col("score").desc, col("doc_id"), col("term"))
         .limit(100)
@@ -249,13 +242,13 @@ object Text {
     * token count over an exact doc count divided ONCE; one shared IEEE
     * expression tree per row, rounded 6dp at the end. */
   /** The shared tokenize → tf/dl/df → derived query set → corpus stats
-    * derivations behind text_bm25 AND text_rrf_fusion's second ranker —
-    * ONE definition so the fusion's inputs can never drift from the
-    * declared rankings (r17 review: the rrf key originally re-derived
+    * derivations behind text_tfidf, text_bm25 AND text_rrf_fusion's
+    * second ranker — ONE definition so the fusion's inputs can never
+    * drift from the declared rankings (r17 review: the rrf key originally re-derived
     * all four relations inline — two full corpus tokenize+aggregate
     * pipelines per run and a silent-drift risk the oracle side had
     * already eliminated with its shared CTE prefix). */
-  private case class Bm25Parts(tf: DataFrame, dl: DataFrame,
+  private case class Bm25Parts(tf: DataFrame, dl: DataFrame, df: DataFrame,
                                qterms: DataFrame, n: DataFrame,
                                stats: DataFrame)
   private def bm25Parts(s: org.apache.spark.sql.SparkSession,
@@ -285,7 +278,7 @@ object Text {
     val n = docs.agg(count(lit(1)).as("n"))
     val stats = tf.agg(sum("tf").as("toktot")).crossJoin(n)
       .select(col("n"), (col("toktot").cast("double") / col("n")).as("avgdl"))
-    Bm25Parts(tf, dl, qterms, n, stats)
+    Bm25Parts(tf, dl, df, qterms, n, stats)
   }
 
   /** The text_tfidf scoring expression (tf · ln((N+1)/(df+1)), 6dp) —

@@ -89,6 +89,43 @@ object Vector {
         .map { case (v, i) => (i, v) }.toDF("pos", "uval")
     }.collect().sortBy(_.getInt(0)).map(_.getDouble(1)).toSeq
 
+  /** The standard probe set every search key ranks for: vec_id < 10 of
+    * `e` as (q_id, q), plus any per-probe columns in `extra` (derived
+    * from the same row). */
+  private[ops] def probeSet(e: DataFrame, extra: Column*): DataFrame =
+    e.where(col("vec_id") < 10)
+      .select(Seq(col("vec_id").as("q_id"), col("v").as("q")) ++ extra: _*)
+
+  /** Driver-side fixed-point Lloyd training over `e` (vec_id, v) — the
+    * one definition behind Ann.ivfCentroids and embed_kmeans. Seeds are
+    * the `k` lowest-vec_id rows (one bounded collect, so the oracle can
+    * replay them); each of `rounds` rounds assigns every row to the
+    * cell id `nearest(centers)` picks, sums per-dim round(x·10⁶) as
+    * EXACT longs (associative, so bit-identical under any partitioning),
+    * collects the ≤ k cell rows and moves each center to sum / n / 1e6
+    * — the oracles' `CAST(sum AS DOUBLE)/n/1e6`. Empty cells keep their
+    * current center. */
+  private[ops] def lloydTrain(e: DataFrame, k: Int, rounds: Int)(
+      nearest: Seq[(Long, Seq[Double])] => Column): Seq[(Long, Seq[Double])] = {
+    val seeds = e.where(col("vec_id") < k).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
+    val dim = seeds.headOption.map(_._2.size).getOrElse(0)
+    (1 to rounds).foldLeft(seeds) { (cs, _) =>
+      val upd = e.select(nearest(cs).as("cell"),
+          transform(col("v"), x => round(x * 1e6).cast("long")).as("q"))
+        .groupBy("cell")
+        .agg(count(lit(1)).as("n"),
+          array((0 until dim).map(i =>
+            sum(element_at(col("q"), i + 1))): _*).as("sums"))
+        .collect()
+        .map { r =>
+          val n = r.getLong(1)
+          r.getLong(0) -> r.getSeq[Long](2).map(sv => sv.toDouble / n / 1e6)
+        }.toMap
+      cs.map { case (cid, cv) => cid -> upd.getOrElse(cid, cv) }
+    }
+  }
+
   /** Shard count for a corpus-sized ranking. 8 bounds the local[32]
     * bench's widest candidate sets at ~1/8 corpus per task. */
   private val TopkShards = 8
@@ -150,9 +187,7 @@ object Vector {
   val queries: Map[String, Q] = Map(
     "embed_cosine_topk" -> ((s, dir) => {
       val e = emb(s, dir)
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
-      topK(e, probes, 5)
+      topK(e, probeSet(e), 5)
         .select(col("q_id"), col("rnk"), col("vec_id"), col("sim"))
         .orderBy("q_id", "rnk")
     }),
@@ -180,9 +215,7 @@ object Vector {
       // LAZY barrier (r22): the 10-row probe relation feeds both the
       // prefix ranking and the re-rank broadcast — each reference
       // re-scanned embeddings for the probe filter without it.
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("q"))
-        .localCheckpoint(false)
+      val probes = probeSet(e).localCheckpoint(false)
       val pref = e.select(col("vec_id"), col("label"),
         slice(col("v"), 1, 32).as("v"))
       val probesPref = probes
@@ -420,29 +453,12 @@ object Vector {
         }: _*))
       val cents = graft.Staging.materialize(
         s, Tables.path(dir, "embeddings"), "kmeans8_lloyd3_v1") {
-        // one bounded collect (K rows — fixed model state), then
-        // Rounds × (corpus pass → K-row collect), all inside the build
-        // thunk so a warm staged hit launches exactly one job
-        val seedRows: Seq[(Long, Seq[Double])] =
-          e.where(col("vec_id") < K).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
-        val dim = seedRows.headOption.map(_._2.size).getOrElse(0)
-        val fin = (1 to Rounds).foldLeft(seedRows) { (cs, _) =>
-          val upd = e.select(element_at(scoredArr(cs), 1)("c").as("cl"),
-              transform(col("v"), x => round(x * 1e6).cast("long")).as("q"))
-            .groupBy("cl")
-            .agg(count(lit(1)).as("n"),
-              array((0 until dim).map(i =>
-                sum(element_at(col("q"), i + 1))): _*).as("sums"))
-            .collect()
-            .map { r =>
-              r.getLong(0) ->
-                r.getSeq[Long](2).map(sv => sv.toDouble / r.getLong(1) / 1e6)
-            }.toMap
-          cs.map { case (cid, cv) => cid -> upd.getOrElse(cid, cv) }
-        }
+        // K-row seed collect + Rounds × (corpus pass → K-row collect),
+        // all inside the build thunk so a warm staged hit launches
+        // exactly one job
         import s.implicits._
-        fin.toDF("c_id", "cv")
+        lloydTrain(e, K, Rounds)(cs => element_at(scoredArr(cs), 1)("c"))
+          .toDF("c_id", "cv")
       }
       val centLit: Seq[(Long, Seq[Double])] =
         cents.collect().toSeq.sortBy(_.getLong(0))

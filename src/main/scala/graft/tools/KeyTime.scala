@@ -1,39 +1,61 @@
 package graft.tools
 
-import graft.GraftSession
+import graft.{GraftSession, SparkEntry}
 
-/** Repeated warm timings of ONE declared key — the quiet-box confirmation
-  * tool the r14 verdict asked for (join_fuzzy_blocked's bench readings
-  * spread 1.6–2.7 s across rounds; box contention and staged-build cold
-  * starts were both suspects). Runs the key `n` times back-to-back on an
-  * otherwise-idle box and prints each wall time, so a spread that
-  * reproduces here is the key's own variance, not the suite's.
+/** Per-key timing probe. For each key of a comma-separated list it
+  * prints the cold first call's wall time (JIT plus any staged-artifact
+  * build), then `n` warm runs back-to-back, each split the way
+  * `perfbench/Runner.scala` splits a call:
+  *   - construct: building the DataFrame, eager driver jobs included;
+  *   - plan: `df.groupBy().count()` planned to its executed plan;
+  *   - exec: running that count;
+  *   - the `QueryPlanningTracker` phases (analysis, optimization,
+  *     planning) of the count plan that actually ran.
+  * Run it on an otherwise-idle box, so a spread that reproduces here is
+  * the key's own variance, not the suite's.
   *
-  * Usage: runMain graft.tools.KeyTime <key> [sfDir] [n]
+  * Usage: runMain graft.tools.KeyTime <key1,key2,...> [sfDir] [n]
   */
 object KeyTime {
   def main(args: Array[String]): Unit = {
-    val key = args.headOption.getOrElse(
-      sys.error("usage: KeyTime <key> [sfDir] [n]"))
+    val keys = args.headOption.getOrElse(
+      sys.error("usage: KeyTime <key,...> [sfDir] [n]")).split(",").toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val n = args.lift(2).map(_.toInt).getOrElse(3)
+    val unknown = keys.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(",")}")
     val spark = GraftSession.local(GraftSession.cpus)
-    val fn = graft.SparkEntry.queries.getOrElse(key,
-      sys.error(s"unknown key $key"))
-    // untimed warm-up: JIT + any staged-artifact build
-    fn(spark, sfDir).count()
-    val times = (1 to n).map { i =>
-      val t0 = System.nanoTime()
-      val rows = fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[keytime] $key run $i: $sec%6.2f s  rows=$rows")
-      sec
+    def ms(a: Long, b: Long): String = f"${(b - a) / 1e6}%.0fms"
+    keys.foreach { key =>
+      val fn = SparkEntry.queries(key)
+      val c0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      println(f"[keytime] $key cold: ${(System.nanoTime() - c0) / 1e9}%6.2f s")
+      val times = (1 to n).map { i =>
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        val ds = df.groupBy().count()
+        ds.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        val rows = ds.collect().head.getLong(0)
+        val t3 = System.nanoTime()
+        // read after collect: the tracker of the QueryExecution that ran
+        val tracked = ds.queryExecution.tracker.phases
+        val phases = Seq("analysis", "optimization", "planning").map(p =>
+          s"$p=${tracked.get(p).map(_.durationMs).getOrElse(0L)}ms")
+        val sec = (t3 - t0) / 1e9
+        println(f"[keytime] $key run $i: $sec%6.2f s  construct=${ms(t0, t1)} " +
+          s"plan=${ms(t1, t2)} exec=${ms(t2, t3)} rows=$rows  " +
+          phases.mkString(" "))
+        sec
+      }
+      // lower-middle for even n: size/2 would report the UPPER middle —
+      // for n=2 that prints the max labeled as the median
+      println(f"[keytime] $key min=${times.min}%.2f median=" +
+        f"${times.sorted.apply((times.size - 1) / 2)}%.2f max=${times.max}%.2f " +
+        s"over $n warm runs")
     }
-    // lower-middle for even n: size/2 would report the UPPER middle —
-    // for n=2 that prints the max labeled as the median
-    println(f"[keytime] $key min=${times.min}%.2f median=" +
-      f"${times.sorted.apply((times.size - 1) / 2)}%.2f max=${times.max}%.2f " +
-      s"over $n warm runs")
     spark.stop()
   }
 }

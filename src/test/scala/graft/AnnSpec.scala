@@ -385,30 +385,39 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("semantic dedup equals a driver-side within-cell min-id reference") {
-    // Cells come from the DERIVED-C inverted file the declared key reads
-    // (r13: C = max(16, ceil(sqrt(N))) — semCells, not the fixed-16
-    // search artifact); the pairing/argmin reference below is
-    // independent of how the cells were computed.
+    // All three keys run the same within-cell pass over their own
+    // inverted file (single-probe semCells at the derived C, multi-probe
+    // semCellsMp, two-level semCells2l); the pairing/argmin reference
+    // below is independent of how the cells were computed. A vector may
+    // sit in two multi-probe cells, so its keeper is the minimum
+    // qualifying lower id over EVERY cell it shares with one.
     val e = ops.Ann.embDouble(spark, sf)
-    val cells = ops.Ann.semCells(spark, sf, e).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-    // reference: for each vector, the smallest lower-id same-cell vector
-    // with rounded cosine >= 0.35 (and that pair's sim)
-    val byCell = cells.groupBy(_._3)
-    val want = byCell.values.flatMap { ms =>
-      val sorted = ms.sortBy(_._1)
-      sorted.flatMap { case (id, v, _) =>
-        sorted.iterator.takeWhile(_._1 < id)
-          .map { case (kid, kv, _) => (kid, r6(cosRef(kv, v))) }
-          .find(_._2 >= 0.35)
-          .map { case (kid, sim) => (id, kid, sim) }
+    val files = Seq(
+      "dedup_semantic" -> ops.Ann.semCells(spark, sf, e),
+      "dedup_semantic_mp" -> ops.Ann.semCellsMp(spark, sf, e),
+      "dedup_semantic_2l" -> ops.Ann.semCells2l(spark, sf, e))
+    for ((key, cellsDf) <- files) {
+      val cells = cellsDf.collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
+      // reference: every same-cell pair (keeper < id) with rounded
+      // cosine >= 0.35, then per vector the smallest keeper and that
+      // pair's sim
+      val pairs = cells.groupBy(_._3).values.toSeq.flatMap { ms =>
+        for {
+          (id, v, _) <- ms.toSeq
+          (kid, kv, _) <- ms.toSeq if kid < id
+          sim = r6(cosRef(kv, v)) if sim >= 0.35
+        } yield (id, kid, sim)
       }
-    }.toSet
-    val got = SparkEntry.queries("dedup_semantic")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got === want)
-    got.foreach { case (id, keeper, sim) =>
-      assert(keeper < id); assert(sim >= 0.35)
+      val want = pairs.groupBy(_._1).values.map(_.minBy(_._2)).toSet
+      val got = SparkEntry.queries(key)(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      info(s"$key: ${got.size} flagged")
+      assert(want.nonEmpty, s"$key: the reference flags nothing")
+      assert(got === want, s"$key differs from the within-cell reference")
+      got.foreach { case (id, keeper, sim) =>
+        assert(keeper < id); assert(sim >= 0.35)
+      }
     }
   }
 
