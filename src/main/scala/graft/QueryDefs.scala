@@ -72,20 +72,27 @@ object D {
   def r2(c: Column): Column = round(c, 2)
   def r6(c: Column): Column = round(c, 6)
 
-  /** `round(avg(c), 2)` decided on integers, for an integral non-negative
-    * `c`: floor((200·Σc + n) / 2n) / 100 is Σc/n rounded HALF_UP to two
-    * places. `r2(avg(c))` rounds a double that can sit on an x.xx5 tie,
-    * where Spark (shortest decimal string) and DuckDB (binary value)
-    * disagree. The oracle spells it `(200*sum(c) + count(c)) //
-    * (2*count(c)) / 100.0`. */
-  def avg2(c: Column): Column = {
+  /** The mean of `c / 10^scale`, rounded HALF_UP to `places` decimals and
+    * decided on integers, for an integral non-negative `c`: with
+    * u = 10^(places − scale), floor((2u·Σc + n) / 2n) / 10^places.
+    * Rounding the double `avg` instead can sit on a tie in the last kept
+    * place, where Spark (shortest decimal string) and DuckDB (binary
+    * value) disagree, and where a summation error breaks the tie either
+    * way. The oracle spells it `(2u * sum(c) + count(c)) //
+    * (2 * count(c)) / 10^places`. */
+  def avgHalfUp(c: Column, scale: Int, places: Int): Column = {
     val n = count(c)
-    intDiv(sum(c) * 200 + n, n * 2) / 100.0
+    val u = BigInt(10).pow(places - scale).toInt
+    intDiv(sum(c) * (2 * u) + n, n * 2) / math.pow(10, places)
   }
+
+  /** `round(avg(c), 2)` decided on integers, for an integral non-negative
+    * `c` ([[avgHalfUp]] at scale 0). */
+  def avg2(c: Column): Column = avgHalfUp(c, 0, 2)
 
   /** Exact long integer division a div b for non-negative operands: the
     * subtract-remainder numerator is an exact multiple of b, so the
-    * double division is exact and the cast is safe. */
+    * double division is exact (for a below 2^53) and the cast is safe. */
   def intDiv(a: Column, b: Column): Column =
     ((a - pmod(a, b)) / b).cast("long")
 }

@@ -710,21 +710,11 @@ object Ann {
       s, Tables.path(dir, "embeddings"), s"nsw_edges${NswK}_mpcell_v2") {
       val cellsHeld = semCellsMp(s, dir, embDouble(s, dir))
         .where(col("vec_id") >= 100)
-      val a = cellsHeld.select(col("vec_id").as("q_id"), col("v").as("q"),
-        col("cell"))
-      val b = cellsHeld.select(col("vec_id"), col("v"), col("cell"))
       // a boundary pair sharing BOTH probe cells would rank twice
       // under row_number — distinct on the narrow (ids, sim) triple
       // before the per-vector top-k (sim is a pure pair function, so
       // the duplicate rows are identical)
-      Vector.rankPerProbe(
-        a.join(b, "cell")
-          .where(col("vec_id") =!= col("q_id"))
-          .withColumn("sim", round(Vector.cosine(col("q"), col("v")), 6))
-          .select(col("q_id"), col("vec_id"), col("sim")).distinct(),
-        Seq(col("sim").desc, col("vec_id")), NswK, "rnk")
-        .select(least(col("q_id"), col("vec_id")).as("a"),
-          greatest(col("q_id"), col("vec_id")).as("b")).distinct()
+      Vector.knnUndirected(Vector.cellPairSims(cellsHeld).distinct(), NswK)
     }
     // bidirectional adjacency + self-loops: beam ⋈ adj yields neighbors
     // AND the beam itself in ONE reference to the accumulator
@@ -1212,34 +1202,58 @@ object Ann {
             .as("mse"))
     }
 
+  /** `e(vec_id, v)`, the embeddings as DOUBLE[]: the head of every
+    * embedding oracle. */
+  private[ops] val EmbCte =
+    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
+
+  /** The 10 probe vectors every search key answers. */
+  private val ProbesCte =
+    "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), "
+
+  /** `name`: each vector of `e` ranked against the centroids of `rel`
+    * by (rounded cosine DESC, c_id), the assignCells total order. */
+  private def cellRankCte(name: String, rel: String): String =
+    s"$name AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
+      "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
+      s"FROM e CROSS JOIN $rel), "
+
+  /** One fixed-point Lloyd mean per (cell, dim) over `m0(v, key)`:
+    * exact long sums of round(x * 1e6), mean = CAST(sm AS DOUBLE) / n /
+    * 1e6, the arithmetic `lloydMeans` and `Vector.lloydTrain` run, so
+    * the refined centroids match Spark's bit for bit. `sel` is the cell
+    * column of `centm(…, cv)`. */
+  private def lloydMeanCte(key: String, sel: String): String =
+    s"dx AS (SELECT $key, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
+      s"ds AS (SELECT $key, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
+      s"count(*) AS n FROM dx GROUP BY $key, d), " +
+      s"centm AS (SELECT $sel, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
+      s"FROM ds GROUP BY $key), "
+
   /** Shared oracle prefix builder: the full IVF index replay (seed cells
     * → one fixed-point Lloyd round → refined centroids → cell
     * assignment) parametrized over the SEED CTE — `vec_id < 16` for the
-    * fixed-C search keys, the count(*)-derived C for dedup_semantic.
-    * Ends with `cells(vec_id, v, cell)`. */
-  private def ivfReplayCte(seedCte: String): String =
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-      seedCte + ", " +
-      "a0 AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-      "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-      "FROM e CROSS JOIN cent0), " +
+    * fixed-C search keys, the count(*)-derived C for dedup_semantic —
+    * and over the `e` head (embed_mips_ivf augments the vectors first).
+    * Ends with `cells(vec_id, v, cell)`; empty cells keep their seed. */
+  private def ivfReplayCte(seedCte: String, head: String = EmbCte): String =
+    head + seedCte + ", " +
+      cellRankCte("a0", "cent0") +
       "m0 AS (SELECT v, c_id FROM a0 WHERE rc = 1), " +
-      "dx AS (SELECT c_id, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
-      "ds AS (SELECT c_id, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
-      "count(*) AS n FROM dx GROUP BY c_id, d), " +
-      "centm AS (SELECT c_id, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
-      "FROM ds GROUP BY c_id), " +
+      lloydMeanCte("c_id", "c_id") +
       "cent AS (SELECT c_id, cv FROM centm UNION ALL " +
       "SELECT c_id, cv FROM cent0 WHERE c_id NOT IN (SELECT c_id FROM centm)), " +
-      "assign AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-      "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-      "FROM e CROSS JOIN cent), " +
+      cellRankCte("assign", "cent") +
       "cells AS (SELECT vec_id, v, c_id AS cell FROM assign WHERE rc = 1), "
 
-  /** Fixed-C prefix for the search keys (embed_ann_ivf and friends hold
-    * C=16 — their nprobe=4-of-16 semantics are part of the contract). */
-  private val ivfCellsCte = ivfReplayCte(
-    "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16)")
+  /** The fixed-C seed cells of the search keys (embed_ann_ivf and
+    * friends hold C=16 — their nprobe=4-of-16 semantics are part of the
+    * contract). */
+  private val Cent16Cte =
+    "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16)"
+
+  /** Fixed-C prefix for the search keys. */
+  private val ivfCellsCte = ivfReplayCte(Cent16Cte)
 
   /** Derived-C prefix for dedup_semantic: C = greatest(16, ⌈√count(*)⌉)
     * computed from the raw table — the same integer semCellCount derives
@@ -1270,6 +1284,72 @@ object Ann {
     "ON m2.vec_id = m1.vec_id AND m1.rc = 1 AND m2.rc = 2 " +
     "WHERE CAST(round(m1.sim * 1e6) AS BIGINT) - " +
     "CAST(round(m2.sim * 1e6) AS BIGINT) < 100000), "
+
+  /** nprobe=4 routing against the refined centroids: each probe's 4
+    * nearest cells by (rounded cosine DESC, c_id) (`pcells`), then those
+    * cells' members (`cand(q_id, q, vec_id, v)`). `q` is the probe's
+    * routing vector, `v` the candidate vector column, `tail` what
+    * follows the cell join (extra joins and the candidate filter). */
+  private def probeRouteCte(q: String = "q", v: String = "c.v",
+      tail: String = " WHERE c.vec_id <> p.q_id"): String =
+    "pcells AS (SELECT q_id, q, c_id AS cell, row_number() OVER (PARTITION BY q_id " +
+      s"ORDER BY round(list_cosine_similarity($q, cv), 6) DESC, c_id) AS pr " +
+      "FROM probes CROSS JOIN cent), " +
+      s"cand AS (SELECT p.q_id, p.q, c.vec_id, $v " +
+      s"FROM (SELECT * FROM pcells WHERE pr <= 4) p JOIN cells c ON p.cell = c.cell$tail), "
+
+  /** `ranked(q_id, vec_id, sim, rnk)` over `cand`: exact rounded cosine
+    * of each probe against candidate column `v`, (sim DESC, vec_id). */
+  private def cosRankedCte(v: String): String =
+    s"ranked AS (SELECT q_id, vec_id, round(list_cosine_similarity(q, $v), 6) AS sim, " +
+      "row_number() OVER (PARTITION BY q_id " +
+      s"ORDER BY round(list_cosine_similarity(q, $v), 6) DESC, vec_id) AS rnk FROM cand)"
+
+  /** The top-5 readout of a route's `ranked` CTE, `score` its score. */
+  private def top5Sql(score: String): String =
+    s" SELECT q_id, rnk, vec_id, $score FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"
+
+  /** The embed_ann_ivf replay up to `ranked(q_id, vec_id, sim, rnk)` —
+    * one constant shared by the embed_ann_ivf and embed_ann_recall_audit
+    * oracles so the index replay can never drift between them. Also
+    * leaves `e` and `probes` in scope for the audit's exact side. */
+  private val IvfRankedCte =
+    ivfCellsCte + ProbesCte + probeRouteCte() + cosRankedCte("v")
+
+  /** The semantic dedup tail over the `cells`-shaped relation `rel`:
+    * within-cell pairs, keeper = the minimum lower id with rounded cosine
+    * >= 0.35 (row_number argmin, the Spark window's total order). Pairs
+    * sharing two cells yield identical rows, so the min-keeper pick needs
+    * no DISTINCT. */
+  private def semDedupTail(rel: String): String =
+    "pairs AS (SELECT a.vec_id AS keeper, b.vec_id AS vec_id, " +
+      "round(list_cosine_similarity(a.v, b.v), 6) AS sim " +
+      s"FROM $rel a JOIN $rel b ON a.cell = b.cell AND a.vec_id < b.vec_id " +
+      "WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35), " +
+      "pick AS (SELECT vec_id, keeper, sim, row_number() OVER " +
+      "(PARTITION BY vec_id ORDER BY keeper) AS rn FROM pairs) " +
+      "SELECT vec_id, keeper, sim FROM pick WHERE rn = 1 ORDER BY vec_id"
+
+  /** The SQ8 reconstruction of dim `i` (the [[sq8Recon]] expression). */
+  private val Sq8ReconSql =
+    "mns[i] + CAST(codes[i] AS DOUBLE) / 255 * (mxs[i] - mns[i])"
+
+  /** The SQ8 quantizer replay: per-dim exact min/max (`lims`) and the
+    * affine int8 encode (`enc(cols, codes)`). Every CTE name is prefixed
+    * with `p`, so it can follow the IVF replay, which owns `dx`. */
+  private def sq8EncodeCte(p: String, cols: String): String =
+    s"${p}dx AS (SELECT unnest(v) AS x, generate_subscripts(v, 1) AS d FROM e), " +
+      s"${p}mm AS (SELECT d, min(x) AS mn, max(x) AS mx FROM ${p}dx GROUP BY d), " +
+      s"${p}lims AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs FROM ${p}mm), " +
+      s"${p}enc AS (SELECT $cols, list_transform(range(1, 65), i -> " +
+      "CASE WHEN mxs[i] > mns[i] " +
+      "THEN CAST(round((v[i] - mns[i]) / (mxs[i] - mns[i]) * 255) AS INTEGER) " +
+      s"ELSE 0 END) AS codes FROM e, ${p}lims), "
+
+  /** `{p}dec(vec_id, rv)`: every vector decoded from its SQ8 codes. */
+  private def sq8DecodeCte(p: String): String =
+    s"${p}dec AS (SELECT vec_id, list_transform(range(1, 65), i -> " +
+      s"$Sq8ReconSql) AS rv FROM ${p}enc, ${p}lims), "
 
   /** Σ(aᵢ−bᵢ)² as the SAME left fold both engines run: list_reduce over
     * a 0.0-prepended squared-error list ≡ Spark's aggregate fold (the
@@ -1332,17 +1412,51 @@ object Ann {
       s"ORDER BY d, c) AS rc FROM ${p}enc0) WHERE rc = 1 GROUP BY vec_id), "
   }
 
+  /** Per-probe 8×16 ADC lookup table over codebook relation `cw`
+    * (`cw(j, c, cw)`), assembled ORDERED (c within j, j within the outer
+    * list) so positions mirror Spark's arrays and the ADC score is the
+    * identical left fold (sum() would re-order the additions). */
+  private def pqLutCte(cw: String): String =
+    "lutd AS (SELECT p.q_id, cw.j, cw.c, " +
+      s"round(${sqlL2sq(sqlSub("p.q", "cw.j"), "cw.cw", 8)}, 6) AS d " +
+      s"FROM probes p CROSS JOIN $cw), " +
+      "lutj AS (SELECT q_id, j, list(d ORDER BY c) AS lrow FROM lutd GROUP BY q_id, j), " +
+      "lut AS (SELECT q_id, list(lrow ORDER BY j) AS lut FROM lutj GROUP BY q_id), "
+
+  /** The ADC distance of codes `cs.codes` against LUT `l.lut`: the 8
+    * table lookups left-folded in j order (≡ Spark's
+    * aggregate(zip_with(codes, lut, element_at))). */
+  private val AdcSql =
+    "round(list_reduce(" +
+      "list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9), " +
+      "jj -> l.lut[jj][cs.codes[jj] + 1])), (x, y) -> x + y), 6) AS adist "
+
+  /** Top-R=50 of `scored` by (adist, vec_id), then the exact-L2 re-rank
+    * of ONLY the R survivors, up to `ranked(q_id, vec_id, dist, rnk)`. */
+  private val PqRerankCte =
+    "cand AS (SELECT q_id, vec_id FROM (SELECT q_id, vec_id, " +
+      "row_number() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rr " +
+      "FROM scored) WHERE rr <= 50), " +
+      "rer AS (SELECT c.q_id, c.vec_id, " +
+      s"round(${sqlL2sq("p.q", "e.v", 64)}, 6) AS dist " +
+      "FROM cand c JOIN e ON c.vec_id = e.vec_id " +
+      "JOIN probes p ON c.q_id = p.q_id), " +
+      "ranked AS (SELECT q_id, vec_id, dist, row_number() OVER " +
+      "(PARTITION BY q_id ORDER BY dist, vec_id) AS rnk FROM rer)"
+
   /** The recall@5 audit tail, appended after a route's `ranked` CTE
     * (with `probes(q_id, q, …)` still in scope): exact side = brute
-    * force over `corpusCte`, one left join + per-probe counting — one
-    * constant so the three audits' readout math can never drift. */
-  private def auditTailSql(corpusCte: String): String =
+    * force over `corpusCte` by `score` (rounded cosine unless given) in
+    * `order`, one left join + per-probe counting — one definition so
+    * the audits' readout math can never drift. */
+  private def auditTailSql(corpusCte: String,
+      score: String = "round(list_cosine_similarity(p.q, c.v), 6) AS sim",
+      order: String = "sim DESC"): String =
     ", approx AS (SELECT q_id, vec_id FROM ranked WHERE rnk <= 5), " +
-      "xsims AS (SELECT p.q_id, c.vec_id, " +
-      "round(list_cosine_similarity(p.q, c.v), 6) AS sim " +
+      s"xsims AS (SELECT p.q_id, c.vec_id, $score " +
       s"FROM probes p CROSS JOIN $corpusCte c WHERE c.vec_id <> p.q_id), " +
       "xr AS (SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id " +
-      "ORDER BY sim DESC, vec_id) AS rnk FROM xsims), " +
+      s"ORDER BY $order, vec_id) AS rnk FROM xsims), " +
       "exact AS (SELECT q_id, vec_id FROM xr WHERE rnk <= 5) " +
       "SELECT x.q_id, count(*) AS n_exact, " +
       "count(a.vec_id) AS n_hit, " +
@@ -1378,7 +1492,7 @@ object Ann {
     }.mkString(", ")
     mpCellsCte +
       "corpus AS (SELECT vec_id, v FROM e WHERE vec_id >= 100), " +
-      "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
+      ProbesCte +
       "hc AS (SELECT vec_id, v, cell FROM cells2 WHERE vec_id >= 100), " +
       // DISTINCT: a boundary pair sharing BOTH probe cells yields two
       // identical (src, dst, sim) rows that row_number would rank twice
@@ -1404,117 +1518,49 @@ object Ann {
   }
 
   val oracles: Map[String, String] = Map(
-    "embed_ann_nsw" ->
-      (NswRankedCte +
-        " SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 " +
-        "ORDER BY q_id, rnk"),
+    "embed_ann_nsw" -> (NswRankedCte + top5Sql("sim")),
     // NSW recall audit: identical route replay prefix; exact side = the
     // brute force over the HELD-OUT corpus (the route's actual target
     // universe — it can never return vec_id < 100).
     "embed_ann_recall_nsw" -> (NswRankedCte + auditTailSql("corpus")),
-    /** Full end-to-end PQ replay (see pqReplayCte) + per-probe 8×16 ADC
-      * LUT assembled as an ORDERED list-of-lists so the ADC score is the
-      * identical left fold (sum() would re-order the additions),
-      * top-R=50 by (adist, vec_id), exact-L2 re-rank, top-5. This
-      * retired embed_ann_pq's no-oracle status (r13): the codebook is
-      * NOT a literal — it derives deterministically from the raw table,
-      * so SQL can rebuild it the same way the IVF oracles rebuild their
-      * centroids. */
-    "embed_ann_pq" ->
-      (PqRankedCte +
-        " SELECT q_id, rnk, vec_id, dist FROM ranked WHERE rnk <= 5 " +
-        "ORDER BY q_id, rnk"),
+    "embed_ann_pq" -> (PqRankedCte + top5Sql("dist")),
     // PQ recall audit: identical route replay prefix; exact side = the
     // brute-force L2 scan (PQ approximates Euclidean distance, so its
     // reference is L2, not cosine).
     "embed_ann_recall_pq" ->
-      (PqRankedCte +
-        ", approx AS (SELECT q_id, vec_id FROM ranked WHERE rnk <= 5), " +
-        "xsims AS (SELECT p.q_id, c.vec_id, " +
-        s"round(${sqlL2sq("p.q", "c.v", 64)}, 6) AS dist " +
-        "FROM probes p CROSS JOIN e c WHERE c.vec_id <> p.q_id), " +
-        "xr AS (SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY dist, vec_id) AS rnk FROM xsims), " +
-        "exact AS (SELECT q_id, vec_id FROM xr WHERE rnk <= 5) " +
-        "SELECT x.q_id, count(*) AS n_exact, " +
-        "count(a.vec_id) AS n_hit, " +
-        "round(CAST(count(a.vec_id) AS DOUBLE) / " +
-        "CAST(count(*) AS DOUBLE), 4) AS recall_at_5 " +
-        "FROM exact x LEFT JOIN approx a " +
-        "ON a.q_id = x.q_id AND a.vec_id = x.vec_id " +
-        "GROUP BY x.q_id ORDER BY x.q_id"),
+      (PqRankedCte + auditTailSql("e",
+        s"round(${sqlL2sq("p.q", "c.v", 64)}, 6) AS dist", "dist")),
     /** IVFADC composition: the shared IVF index-replay prefix (cells +
       * refined cent) + the p-prefixed PQ replay (codebook → codes), then
       * per-probe LUT, nprobe=4 cell routing, cell-filtered ADC left-fold,
-      * top-R=50, exact-L2 re-rank — each piece verbatim from its proven
+      * top-R=50, exact-L2 re-rank — each piece shared with its proven
       * parent oracle. */
-    "embed_ann_ivfpq" -> {
-      val sub = sqlSub _
-      ivfCellsCte +
-        pqReplayCte("p") +
-        "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
-        "lutd AS (SELECT p.q_id, cw.j, cw.c, " +
-        s"round(${sqlL2sq(sub("p.q", "cw.j"), "cw.cw", 8)}, 6) AS d " +
-        "FROM probes p CROSS JOIN pcw cw), " +
-        "lutj AS (SELECT q_id, j, list(d ORDER BY c) AS lrow FROM lutd GROUP BY q_id, j), " +
-        "lut AS (SELECT q_id, list(lrow ORDER BY j) AS lut FROM lutj GROUP BY q_id), " +
+    "embed_ann_ivfpq" ->
+      (ivfCellsCte + pqReplayCte("p") + ProbesCte + pqLutCte("pcw cw") +
         // nprobe=4 nearest cells per probe against the REFINED centroids
         "qcells AS (SELECT q_id, cell FROM (SELECT q_id, c_id AS cell, " +
         "row_number() OVER (PARTITION BY q_id " +
         "ORDER BY round(list_cosine_similarity(q, cv), 6) DESC, c_id) AS pr " +
         "FROM probes CROSS JOIN cent) WHERE pr <= 4), " +
         // cell-filtered ADC scan: candidates = members of the probe's 4
-        // cells, scored by the identical left fold over 8 LUT lookups
-        "scored AS (SELECT qc.q_id, c.vec_id, round(list_reduce(" +
-        "list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9), " +
-        "jj -> l.lut[jj][cs.codes[jj] + 1])), (x, y) -> x + y), 6) AS adist " +
+        // cells
+        "scored AS (SELECT qc.q_id, c.vec_id, " + AdcSql +
         "FROM qcells qc JOIN cells c ON qc.cell = c.cell " +
         "JOIN pcodes cs ON c.vec_id = cs.vec_id " +
         "JOIN lut l ON l.q_id = qc.q_id WHERE c.vec_id <> qc.q_id), " +
-        "cand AS (SELECT q_id, vec_id FROM (SELECT q_id, vec_id, " +
-        "row_number() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rr " +
-        "FROM scored) WHERE rr <= 50), " +
-        "rer AS (SELECT c.q_id, c.vec_id, " +
-        s"round(${sqlL2sq("p.q", "e.v", 64)}, 6) AS dist " +
-        "FROM cand c JOIN e ON c.vec_id = e.vec_id " +
-        "JOIN probes p ON c.q_id = p.q_id), " +
-        "ranked AS (SELECT q_id, vec_id, dist, row_number() OVER " +
-        "(PARTITION BY q_id ORDER BY dist, vec_id) AS rnk FROM rer) " +
-        "SELECT q_id, rnk, vec_id, dist FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"
-    },
-    // Within-cell pairs over the replayed DERIVED-C cells; keeper = min
-    // lower id with rounded cosine >= 0.35 (row_number argmin, same
-    // total order as the Spark window).
-    "dedup_semantic" ->
-      (semCellsCte +
-        "pairs AS (SELECT a.vec_id AS keeper, b.vec_id AS vec_id, " +
-        "round(list_cosine_similarity(a.v, b.v), 6) AS sim " +
-        "FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id " +
-        "WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35), " +
-        "pick AS (SELECT vec_id, keeper, sim, row_number() OVER " +
-        "(PARTITION BY vec_id ORDER BY keeper) AS rn FROM pairs) " +
-        "SELECT vec_id, keeper, sim FROM pick WHERE rn = 1 ORDER BY vec_id"),
+        PqRerankCte + top5Sql("dist")),
+    // Within-cell pairs over the replayed DERIVED-C cells.
+    "dedup_semantic" -> (semCellsCte + semDedupTail("cells")),
     // Multi-probe variant: the SAME derived-C replay prefix, cells taken
-    // at rc <= 2 via the shared boundary-capped mpCellsCte. Duplicate
-    // rows from pairs sharing both cells carry identical values, so the
-    // min-keeper row_number needs no DISTINCT — mirroring the Spark side.
-    "dedup_semantic_mp" ->
-      (mpCellsCte +
-        "pairs AS (SELECT a.vec_id AS keeper, b.vec_id AS vec_id, " +
-        "round(list_cosine_similarity(a.v, b.v), 6) AS sim " +
-        "FROM cells2 a JOIN cells2 b ON a.cell = b.cell AND a.vec_id < b.vec_id " +
-        "WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35), " +
-        "pick AS (SELECT vec_id, keeper, sim, row_number() OVER " +
-        "(PARTITION BY vec_id ORDER BY keeper) AS rn FROM pairs) " +
-        "SELECT vec_id, keeper, sim FROM pick WHERE rn = 1 ORDER BY vec_id"),
+    // at rc <= 2 via the shared boundary-capped mpCellsCte.
+    "dedup_semantic_mp" -> (mpCellsCte + semDedupTail("cells2")),
     // Two-level replay: derived C and C1 = max(4, ⌈√C⌉), fine seeds
     // routed to coarse seeds once (frozen), vectors routed coarse-then-
     // fine (argmin = row_number over rounded cosine DESC, id — the
-    // assignCells/assignInBucket total order), one fixed-point fine
-    // Lloyd round, final two-hop assignment, then the dedup_semantic
-    // pair/min-keeper tail verbatim.
+    // assignCells total order), one fixed-point fine Lloyd round, final
+    // two-hop assignment, then the dedup_semantic pair/min-keeper tail.
     "dedup_semantic_2l" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+      (EmbCte +
         "nn0 AS (SELECT greatest(16, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS c FROM embeddings), " +
         "nn AS (SELECT c, greatest(4, CAST(ceil(sqrt(c)) AS BIGINT)) AS c1 FROM nn0), " +
         "s0 AS (SELECT vec_id AS f_id, v AS fv FROM e, nn WHERE vec_id < nn.c), " +
@@ -1533,41 +1579,23 @@ object Ann {
         "row_number() OVER (PARTITION BY vg.vec_id " +
         "ORDER BY round(list_cosine_similarity(vg.v, fr.fv), 6) DESC, fr.f_id) AS rc " +
         "FROM vg JOIN fr ON fr.g = vg.g) WHERE rc = 1), " +
-        "dx AS (SELECT cell, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
-        "ds AS (SELECT cell, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
-        "count(*) AS n FROM dx GROUP BY cell, d), " +
-        "centm AS (SELECT cell AS f_id, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
-        "FROM ds GROUP BY cell), " +
+        lloydMeanCte("cell", "cell AS f_id") +
         "cf AS (SELECT fr.f_id, coalesce(cm.cv, fr.fv) AS cv, fr.g " +
         "FROM fr LEFT JOIN centm cm ON cm.f_id = fr.f_id), " +
         "cells AS (SELECT vec_id, v, cell FROM (SELECT vg.vec_id, vg.v, cf.f_id AS cell, " +
         "row_number() OVER (PARTITION BY vg.vec_id " +
         "ORDER BY round(list_cosine_similarity(vg.v, cf.cv), 6) DESC, cf.f_id) AS rc " +
         "FROM vg JOIN cf ON cf.g = vg.g) WHERE rc = 1), " +
-        "pairs AS (SELECT a.vec_id AS keeper, b.vec_id AS vec_id, " +
-        "round(list_cosine_similarity(a.v, b.v), 6) AS sim " +
-        "FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id " +
-        "WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.35), " +
-        "pick AS (SELECT vec_id, keeper, sim, row_number() OVER " +
-        "(PARTITION BY vec_id ORDER BY keeper) AS rn FROM pairs) " +
-        "SELECT vec_id, keeper, sim FROM pick WHERE rn = 1 ORDER BY vec_id"),
+        semDedupTail("cells")),
     // Full quantizer replay: per-dim exact min/max, affine int8 encode,
     // reconstruction-error left-fold in dim order (list_reduce over the
     // 0.0-prepended error list ≡ Spark's aggregate fold) — identical
     // IEEE expression trees, so values match bit-for-bit.
     "embed_quantize_int8" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "dx AS (SELECT unnest(v) AS x, generate_subscripts(v, 1) AS d FROM e), " +
-        "mm AS (SELECT d, min(x) AS mn, max(x) AS mx FROM dx GROUP BY d), " +
-        "lims AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs FROM mm), " +
-        "enc AS (SELECT vec_id, v, list_transform(range(1, 65), i -> " +
-        "CASE WHEN mxs[i] > mns[i] " +
-        "THEN CAST(round((v[i] - mns[i]) / (mxs[i] - mns[i]) * 255) AS INTEGER) " +
-        "ELSE 0 END) AS codes FROM e, lims), " +
+      (EmbCte + sq8EncodeCte("", "vec_id, v") +
         "err AS (SELECT vec_id, codes, list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
         "list_transform(range(1, 65), i -> " +
-        "(v[i] - (mns[i] + CAST(codes[i] AS DOUBLE) / 255 * (mxs[i] - mns[i]))) * " +
-        "(v[i] - (mns[i] + CAST(codes[i] AS DOUBLE) / 255 * (mxs[i] - mns[i]))))), " +
+        s"(v[i] - ($Sq8ReconSql)) * (v[i] - ($Sq8ReconSql)))), " +
         "(a, b) -> a + b) AS sse FROM enc, lims) " +
         "SELECT vec_id, md5(array_to_string(codes, ',')) AS codes_md5, " +
         "round(sse / 64, 6) AS mse FROM err ORDER BY vec_id"),
@@ -1575,90 +1603,30 @@ object Ann {
     // encoder CTE as embed_quantize_int8, corpus decoded per dim, probes
     // exact, (rounded sim DESC, vec_id) total order.
     "embed_ann_sq8" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "dx AS (SELECT unnest(v) AS x, generate_subscripts(v, 1) AS d FROM e), " +
-        "mm AS (SELECT d, min(x) AS mn, max(x) AS mx FROM dx GROUP BY d), " +
-        "lims AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs FROM mm), " +
-        "enc AS (SELECT vec_id, list_transform(range(1, 65), i -> " +
-        "CASE WHEN mxs[i] > mns[i] " +
-        "THEN CAST(round((v[i] - mns[i]) / (mxs[i] - mns[i]) * 255) AS INTEGER) " +
-        "ELSE 0 END) AS codes FROM e, lims), " +
-        "dec AS (SELECT vec_id, list_transform(range(1, 65), i -> " +
-        "mns[i] + CAST(codes[i] AS DOUBLE) / 255 * (mxs[i] - mns[i])) AS rv FROM enc, lims), " +
-        "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
+      (EmbCte + sq8EncodeCte("", "vec_id") + sq8DecodeCte("") + ProbesCte +
         "ranked AS (SELECT q_id, dec.vec_id, round(list_cosine_similarity(q, rv), 6) AS sim, " +
         "row_number() OVER (PARTITION BY q_id " +
         "ORDER BY round(list_cosine_similarity(q, rv), 6) DESC, dec.vec_id) AS rnk " +
-        "FROM probes CROSS JOIN dec WHERE dec.vec_id <> probes.q_id) " +
-        "SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"),
+        "FROM probes CROSS JOIN dec WHERE dec.vec_id <> probes.q_id)" + top5Sql("sim")),
     // IVF-SQ8 composition: the shared IVF index-replay prefix (cells +
-    // refined cent) + the SQ8 quantizer replay (q-prefixed names — the
-    // prefix already owns dx/mm-style names), candidates = nprobe=4
-    // cells' members DECODED from their codes, probes exact.
+    // refined cent) + the SQ8 quantizer replay (q-prefixed names),
+    // candidates = nprobe=4 cells' members DECODED from their codes,
+    // probes exact.
     "embed_ann_sq8_ivf" ->
-      (ivfCellsCte +
-        "qdx AS (SELECT unnest(v) AS x, generate_subscripts(v, 1) AS d FROM e), " +
-        "qmm AS (SELECT d, min(x) AS mn, max(x) AS mx FROM qdx GROUP BY d), " +
-        "qlims AS (SELECT list(mn ORDER BY d) AS mns, list(mx ORDER BY d) AS mxs FROM qmm), " +
-        "qenc AS (SELECT vec_id, list_transform(range(1, 65), i -> " +
-        "CASE WHEN mxs[i] > mns[i] " +
-        "THEN CAST(round((v[i] - mns[i]) / (mxs[i] - mns[i]) * 255) AS INTEGER) " +
-        "ELSE 0 END) AS codes FROM e, qlims), " +
-        "qdec AS (SELECT vec_id, list_transform(range(1, 65), i -> " +
-        "mns[i] + CAST(codes[i] AS DOUBLE) / 255 * (mxs[i] - mns[i])) AS rv FROM qenc, qlims), " +
-        "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
-        "pcells AS (SELECT q_id, q, c_id AS cell, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, cv), 6) DESC, c_id) AS pr " +
-        "FROM probes CROSS JOIN cent), " +
-        "cand AS (SELECT p.q_id, p.q, c.vec_id, d.rv " +
-        "FROM (SELECT * FROM pcells WHERE pr <= 4) p JOIN cells c ON p.cell = c.cell " +
-        "JOIN qdec d ON c.vec_id = d.vec_id WHERE c.vec_id <> p.q_id), " +
-        "ranked AS (SELECT q_id, vec_id, round(list_cosine_similarity(q, rv), 6) AS sim, " +
-        "row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, rv), 6) DESC, vec_id) AS rnk FROM cand) " +
-        "SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"),
+      (ivfCellsCte + sq8EncodeCte("q", "vec_id") + sq8DecodeCte("q") + ProbesCte +
+        probeRouteCte(v = "d.rv",
+          tail = " JOIN qdec d ON c.vec_id = d.vec_id WHERE c.vec_id <> p.q_id") +
+        cosRankedCte("rv") + top5Sql("sim")),
     // Full-CTE replay of the incremental-ingest path, same style as
     // embed_ann_ivf's: rebuild cells + probe assignment from scratch and
     // apply the identical integral newest-10% boundary on both sides.
     "embed_ann_incremental" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "mx AS (SELECT max(vec_id) AS mx FROM embeddings), " +
-        "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16), " +
-        // one Lloyd refinement round, replayed exactly: assign to seed
-        // cells, per-dim FIXED-POINT mean (round(x*1e6) longs — the same
-        // exact arithmetic ivfCentroids runs, so refined values match
-        // Spark's bit-for-bit), empty cells keep their seed
-        "a0 AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent0), " +
-        "m0 AS (SELECT v, c_id FROM a0 WHERE rc = 1), " +
-        "dx AS (SELECT c_id, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
-        "ds AS (SELECT c_id, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
-        "count(*) AS n FROM dx GROUP BY c_id, d), " +
-        "centm AS (SELECT c_id, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
-        "FROM ds GROUP BY c_id), " +
-        "cent AS (SELECT c_id, cv FROM centm UNION ALL " +
-        "SELECT c_id, cv FROM cent0 WHERE c_id NOT IN (SELECT c_id FROM centm)), " +
-        "assign AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent), " +
-        "cells AS (SELECT vec_id, v, c_id AS cell FROM assign WHERE rc = 1), " +
+      (ivfReplayCte("mx AS (SELECT max(vec_id) AS mx FROM embeddings), " + Cent16Cte) +
         "probes AS (SELECT vec_id AS q_id, v AS q FROM e, mx " +
         "WHERE vec_id * 10 >= mx.mx * 9 AND vec_id > mx.mx - 1000), " +
-        "pcells AS (SELECT q_id, q, c_id AS cell, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, cv), 6) DESC, c_id) AS pr " +
-        "FROM probes CROSS JOIN cent), " +
-        "cand AS (SELECT p.q_id, p.q, c.vec_id, c.v " +
-        "FROM (SELECT * FROM pcells WHERE pr <= 4) p JOIN cells c ON p.cell = c.cell, mx " +
-        "WHERE c.vec_id * 10 < mx.mx * 9), " +
-        "ranked AS (SELECT q_id, vec_id, round(list_cosine_similarity(q, v), 6) AS sim, " +
-        "row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, v), 6) DESC, vec_id) AS rnk FROM cand) " +
-        "SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"),
-    "embed_ann_lsh" ->
-      (LshRankedCte +
-        " SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 " +
-        "ORDER BY q_id, rnk"),
+        probeRouteCte(tail = ", mx WHERE c.vec_id * 10 < mx.mx * 9") +
+        cosRankedCte("v") + top5Sql("sim")),
+    "embed_ann_lsh" -> (LshRankedCte + top5Sql("sim")),
     // LSH recall audit: identical route replay prefix; exact side = the
     // brute force over the full corpus (the route searches its bucket
     // of the whole corpus, so the whole corpus is the target universe).
@@ -1668,42 +1636,19 @@ object Ann {
     // Spark fold), zero appended probe-side for routing; final scores =
     // exact dot over the original dims (slack sliced off).
     "embed_mips_ivf" ->
-      ("WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "mx2 AS (SELECT max(list_inner_product(v, v)) AS m2 FROM e0), " +
-        "e AS (SELECT vec_id, list_append(v, " +
-        "sqrt(mx2.m2 - list_inner_product(v, v))) AS v FROM e0, mx2), " +
-        "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16), " +
-        "a0 AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent0), " +
-        "m0 AS (SELECT v, c_id FROM a0 WHERE rc = 1), " +
-        "dx AS (SELECT c_id, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
-        "ds AS (SELECT c_id, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
-        "count(*) AS n FROM dx GROUP BY c_id, d), " +
-        "centm AS (SELECT c_id, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
-        "FROM ds GROUP BY c_id), " +
-        "cent AS (SELECT c_id, cv FROM centm UNION ALL " +
-        "SELECT c_id, cv FROM cent0 WHERE c_id NOT IN (SELECT c_id FROM centm)), " +
-        "assign AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent), " +
-        "cells AS (SELECT vec_id, v, c_id AS cell FROM assign WHERE rc = 1), " +
+      (ivfReplayCte(Cent16Cte,
+        head = "WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+          "mx2 AS (SELECT max(list_inner_product(v, v)) AS m2 FROM e0), " +
+          "e AS (SELECT vec_id, list_append(v, " +
+          "sqrt(mx2.m2 - list_inner_product(v, v))) AS v FROM e0, mx2), ") +
         "probes AS (SELECT vec_id AS q_id, v AS q FROM e0 WHERE vec_id < 10), " +
-        "pcells AS (SELECT q_id, q, c_id AS cell, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(list_append(q, 0.0), cv), 6) DESC, c_id) AS pr " +
-        "FROM probes CROSS JOIN cent), " +
-        "cand AS (SELECT p.q_id, p.q, c.vec_id, c.v " +
-        "FROM (SELECT * FROM pcells WHERE pr <= 4) p JOIN cells c ON p.cell = c.cell " +
-        "WHERE c.vec_id <> p.q_id), " +
+        probeRouteCte(q = "list_append(q, 0.0)") +
         "ranked AS (SELECT q_id, vec_id, " +
         "round(list_inner_product(q, v[1:len(v)-1]), 6) AS score, " +
         "row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_inner_product(q, v[1:len(v)-1]), 6) DESC, vec_id) AS rnk FROM cand) " +
-        "SELECT q_id, rnk, vec_id, score FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk"),
-    "embed_ann_ivf" ->
-      (IvfRankedCte +
-        " SELECT q_id, rnk, vec_id, sim FROM ranked WHERE rnk <= 5 " +
-        "ORDER BY q_id, rnk"),
+        "ORDER BY round(list_inner_product(q, v[1:len(v)-1]), 6) DESC, vec_id) AS rnk FROM cand)" +
+        top5Sql("score")),
+    "embed_ann_ivf" -> (IvfRankedCte + top5Sql("sim")),
     // IDENTICAL ivf replay prefix (shared constant — the two replays can
     // never drift), exact side = the embed_cosine_topk brute force, one
     // left join + per-probe counting.
@@ -1713,49 +1658,24 @@ object Ann {
   /** The embed_ann_pq replay up to `ranked(q_id, vec_id, dist, rnk)` —
     * shared by the route key and its recall audit so the two replays
     * can never drift. Full end-to-end PQ replay (see pqReplayCte) +
-    * per-probe 8×16 ADC LUT assembled as an ORDERED list-of-lists so
-    * the ADC score is the identical left fold (sum() would re-order the
-    * additions), top-R=50 by (adist, vec_id), exact-L2 re-rank. This
-    * retired embed_ann_pq's no-oracle status (r13): the codebook is NOT
-    * a literal — it derives deterministically from the raw table, so
-    * SQL can rebuild it the same way the IVF oracles rebuild their
-    * centroids. Leaves `e` and `probes` in scope for the audit. */
-  private lazy val PqRankedCte: String = {
-    val sub = sqlSub _
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-      pqReplayCte("") +
-      // per-probe ADC lookup table, assembled ORDERED (c within j, j
-      // within the outer list) so positions mirror Spark's arrays
-      "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
-      "lutd AS (SELECT p.q_id, cw.j, cw.c, " +
-      s"round(${sqlL2sq(sub("p.q", "cw.j"), "cw.cw", 8)}, 6) AS d " +
-      "FROM probes p CROSS JOIN cw), " +
-      "lutj AS (SELECT q_id, j, list(d ORDER BY c) AS lrow FROM lutd GROUP BY q_id, j), " +
-      "lut AS (SELECT q_id, list(lrow ORDER BY j) AS lut FROM lutj GROUP BY q_id), " +
-      // ADC scan: left-fold the 8 table lookups in j order (≡ Spark's
-      // aggregate(zip_with(codes, lut, element_at)))
-      "scored AS (SELECT l.q_id, cs.vec_id, round(list_reduce(" +
-      "list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, 9), " +
-      "jj -> l.lut[jj][cs.codes[jj] + 1])), (x, y) -> x + y), 6) AS adist " +
+    * per-probe ADC LUT, top-R=50 by (adist, vec_id), exact-L2 re-rank.
+    * This retired embed_ann_pq's no-oracle status (r13): the codebook
+    * is NOT a literal — it derives deterministically from the raw
+    * table, so SQL can rebuild it the same way the IVF oracles rebuild
+    * their centroids. Leaves `e` and `probes` in scope for the audit. */
+  private lazy val PqRankedCte: String =
+    EmbCte + pqReplayCte("") + ProbesCte + pqLutCte("cw") +
+      // ADC scan over the whole corpus
+      "scored AS (SELECT l.q_id, cs.vec_id, " + AdcSql +
       "FROM lut l CROSS JOIN codes cs WHERE cs.vec_id <> l.q_id), " +
-      "cand AS (SELECT q_id, vec_id FROM (SELECT q_id, vec_id, " +
-      "row_number() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rr " +
-      "FROM scored) WHERE rr <= 50), " +
-      // exact-L2 re-rank of ONLY the R survivors
-      "rer AS (SELECT c.q_id, c.vec_id, " +
-      s"round(${sqlL2sq("p.q", "e.v", 64)}, 6) AS dist " +
-      "FROM cand c JOIN e ON c.vec_id = e.vec_id " +
-      "JOIN probes p ON c.q_id = p.q_id), " +
-      "ranked AS (SELECT q_id, vec_id, dist, row_number() OVER " +
-      "(PARTITION BY q_id ORDER BY dist, vec_id) AS rnk FROM rer)"
-  }
+      PqRerankCte
 
   /** The embed_ann_lsh replay up to `ranked(q_id, vec_id, sim, rnk)` —
     * shared by the route key and its recall audit so the two replays
     * can never drift. Leaves `e` and `probes` in scope for the audit's
     * exact side. */
   private lazy val LshRankedCte: String =
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+    EmbCte +
       "hp AS (SELECT CAST(vec_id AS INT) AS h_id, v AS hv FROM e WHERE vec_id < 6), " +
       "sig AS (SELECT e.vec_id, sum(CASE WHEN round(list_cosine_similarity(e.v, hp.hv), 6) >= 0 " +
       "THEN 1 << h_id ELSE 0 END) AS bucket FROM e CROSS JOIN hp GROUP BY e.vec_id), " +
@@ -1763,46 +1683,5 @@ object Ann {
       "probes AS (SELECT vec_id AS q_id, v AS q, bucket FROM sv WHERE vec_id < 10), " +
       "cand AS (SELECT p.q_id, p.q, s.vec_id, s.v FROM probes p JOIN sv s USING (bucket) " +
       "WHERE s.vec_id <> p.q_id), " +
-      "ranked AS (SELECT q_id, vec_id, round(list_cosine_similarity(q, v), 6) AS sim, " +
-      "row_number() OVER (PARTITION BY q_id " +
-      "ORDER BY round(list_cosine_similarity(q, v), 6) DESC, vec_id) AS rnk FROM cand)"
-
-  /** The embed_ann_ivf replay up to `ranked(q_id, vec_id, sim, rnk)` —
-    * one constant shared by the embed_ann_ivf and embed_ann_recall_audit
-    * oracles so the index replay can never drift between them. Also
-    * leaves `e` and `probes` in scope for the audit's exact side. */
-  // lazy: referenced by `oracles` above — a plain val would still be
-  // null (object vals initialize in declaration order).
-  private lazy val IvfRankedCte =
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 16), " +
-        // one Lloyd refinement round, replayed exactly: assign to seed
-        // cells, per-dim FIXED-POINT mean (round(x*1e6) longs — the same
-        // exact arithmetic ivfCentroids runs, so refined values match
-        // Spark's bit-for-bit), empty cells keep their seed
-        "a0 AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent0), " +
-        "m0 AS (SELECT v, c_id FROM a0 WHERE rc = 1), " +
-        "dx AS (SELECT c_id, unnest(v) AS x, generate_subscripts(v, 1) AS d FROM m0), " +
-        "ds AS (SELECT c_id, d, sum(CAST(round(x * 1e6) AS BIGINT)) AS sm, " +
-        "count(*) AS n FROM dx GROUP BY c_id, d), " +
-        "centm AS (SELECT c_id, list(CAST(sm AS DOUBLE) / n / 1e6 ORDER BY d) AS cv " +
-        "FROM ds GROUP BY c_id), " +
-        "cent AS (SELECT c_id, cv FROM centm UNION ALL " +
-        "SELECT c_id, cv FROM cent0 WHERE c_id NOT IN (SELECT c_id FROM centm)), " +
-        "assign AS (SELECT vec_id, v, c_id, row_number() OVER (PARTITION BY vec_id " +
-        "ORDER BY round(list_cosine_similarity(v, cv), 6) DESC, c_id) AS rc " +
-        "FROM e CROSS JOIN cent), " +
-        "cells AS (SELECT vec_id, v, c_id AS cell FROM assign WHERE rc = 1), " +
-        "probes AS (SELECT vec_id AS q_id, v AS q FROM e WHERE vec_id < 10), " +
-        "pcells AS (SELECT q_id, q, c_id AS cell, row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, cv), 6) DESC, c_id) AS pr " +
-        "FROM probes CROSS JOIN cent), " +
-        "cand AS (SELECT p.q_id, p.q, c.vec_id, c.v " +
-        "FROM (SELECT * FROM pcells WHERE pr <= 4) p JOIN cells c ON p.cell = c.cell " +
-        "WHERE c.vec_id <> p.q_id), " +
-        "ranked AS (SELECT q_id, vec_id, round(list_cosine_similarity(q, v), 6) AS sim, " +
-        "row_number() OVER (PARTITION BY q_id " +
-        "ORDER BY round(list_cosine_similarity(q, v), 6) DESC, vec_id) AS rnk FROM cand)")
+      cosRankedCte("v")
 }

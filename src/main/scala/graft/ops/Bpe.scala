@@ -232,11 +232,6 @@ object Bpe {
       (trainCte +
         "dt AS (SELECT source, doc_id, CAST(sum(ntok) AS BIGINT) AS toks " +
         "FROM enc GROUP BY source, doc_id), " +
-        "c AS (SELECT source, doc_id, toks, " +
-        "coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM dt) " +
-        "SELECT source, CAST(cum // 512 AS BIGINT) AS shard, " +
-        "count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS sum_toks " +
-        "FROM c GROUP BY 1, 2 ORDER BY 1, 2")
+        Pipeline.packTailSql("dt"))
   )
 }

@@ -723,27 +723,14 @@ object Dedup {
         "ORDER BY doc_a, doc_b"
     },
     "dedup_ngram_jaccard" ->
-      ("WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
-        "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
-        "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams), " +
+      ("WITH " + Pipeline.NearDupGramsCte + ", " +
         "pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter " +
         "FROM inv a JOIN inv b ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY 1, 2) " +
         "SELECT doc_a, doc_b, round(inter / (sa.sz + sb.sz - inter), 6) AS jac " +
         "FROM pairs JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
         "WHERE inter / (sa.sz + sb.sz - inter) >= 0.8 ORDER BY doc_a, doc_b"),
     "dedup_incremental" ->
-      ("WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
-        "mx AS (SELECT max(doc_id) AS mx FROM documents), " +
-        "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
-        "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams), " +
-        "pairs AS (SELECT a.doc_id AS doc_id, b.doc_id AS dup_id, count(*) AS inter " +
-        "FROM inv a JOIN inv b ON a.gram = b.gram, mx " +
-        "WHERE a.doc_id * 10 >= mx.mx * 9 AND b.doc_id * 10 < mx.mx * 9 " +
-        "GROUP BY 1, 2) " +
+      ("WITH " + Pipeline.IncrementalPairsCte + " " +
         "SELECT p.doc_id, p.dup_id, round(inter / (sa.sz + sb.sz - inter), 6) AS jac " +
         "FROM pairs p JOIN sizes sa ON sa.doc_id = p.doc_id " +
         "JOIN sizes sb ON sb.doc_id = p.dup_id " +

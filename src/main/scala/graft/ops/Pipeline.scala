@@ -802,9 +802,7 @@ object Pipeline {
     // emitted UNROUNDED. Per-dst state is bounded by in-degree (≤ the
     // near-dup cluster size, the same bound dedup_cluster's CC carries).
     "graph_pagerank" -> ((s, dir) => {
-      val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = nearDupGraph(s, dir)._2
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       // LAZY barrier (the graph_shortest_path pattern, r21): e2 is
       // referenced once per round — 5 plan references — and each
@@ -844,13 +842,10 @@ object Pipeline {
     // precedent — LPA-to-convergence is run-order-dependent and could
     // not be oracled).
     "graph_label_prop" -> ((s, dir) => {
-      val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
       // LAZY barrier (the graph_shortest_path pattern, r21): edges is
       // referenced once per round (4 rounds) plus the label init — each
       // reference re-derived the staged-pair scan + union.
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .localCheckpoint(false)
+      val edges = nearDupGraph(s, dir)._2.localCheckpoint(false)
       var lab = edges.select(col("src").as("doc")).distinct()
         .select(col("doc"), col("doc").as("lab"))
       for (_ <- 1 to 4) {
@@ -875,9 +870,7 @@ object Pipeline {
     // inclusion-exclusion over exact degree counts; top-20 by
     // (score DESC, a, c) is a sort-limit.
     "graph_link_predict" -> ((s, dir) => {
-      val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val (pairs, edges) = nearDupGraph(s, dir)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val cand = edges.as("e1").join(edges.as("e2"),
           col("e1.dst") === col("e2.src") &&
@@ -911,9 +904,7 @@ object Pipeline {
     // days in sink_time_travel); the oracle replays the identical K
     // relaxations as chained CTEs.
     "graph_shortest_path" -> ((s, dir) => {
-      val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = nearDupGraph(s, dir)._2
       // Weight-0 SELF-LOOPS carry each node's current distance through a
       // round, so the relaxation is ONE join + ONE aggregate with `dist`
       // referenced ONCE: the naive `dist ∪ (edges ⋈ dist)` form
@@ -944,6 +935,16 @@ object Pipeline {
       dist.select(col("doc").as("doc_id"), col("dist")).orderBy("doc_id")
     })
   )
+
+  /** The near-dup pair graph of the four `graph_*` keys: the staged
+    * trigram-Jaccard pairs `(doc_a, doc_b)` and the symmetric edge
+    * relation `(src, dst)` built from them (each pair in both
+    * directions). */
+  private def nearDupGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
+    (pairs, pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+  }
 
   /** Per-doc average unigram negative log-likelihood (doc_id, avg_nll) —
     * shared by `text_unigram_nll` (direct) and `text_ppl_buckets` (rank
@@ -1249,25 +1250,30 @@ object Pipeline {
     labels
   }
 
-  /** The trigram-Jaccard near-dup pair graph as a DuckDB CTE prefix
-    * (toks → grams → sizes → inv → prc → pairs → symmetric edges) —
-    * shared VERBATIM by the dedup_cluster / graph_pagerank /
-    * graph_shortest_path oracles, which all consume the same graph the
-    * Spark side derives from Dedup.ngramPairs. One constant so a
-    * threshold or tokenization change can never update two of the three
-    * replays and leave the third silently describing a different graph
-    * (r15 review finding). */
+  /** `toks(doc_id, t)`: each document's lower-cased words. */
+  private val LowerToksCte =
+    "toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents)"
+
   /** The tokenize → distinct-trigram → sizes → inverted-index prefix
     * alone (no pair predicate) — shared by [[NearDupEdgesCte]] and the
     * directional dedup_containment oracle, whose pair relation must NOT
     * carry the symmetric a<b constraint. */
   private[ops] val NearDupGramsCte =
-    "toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
+    LowerToksCte + ", " +
     "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
     "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
     "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
     "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams)"
 
+  /** The trigram-Jaccard near-dup pair graph as a DuckDB CTE prefix
+    * (toks → grams → sizes → inv → prc → pairs → symmetric edges) —
+    * shared VERBATIM by every oracle that consumes the graph the Spark
+    * side derives from Dedup.ngramPairs (dedup_cluster and its
+    * incremental twin, pipeline_clean_pack, pipeline_dataset_card,
+    * split_grouped and the four graph_* keys). One constant so a
+    * threshold or tokenization change can never update some replays and
+    * leave another silently describing a different graph (r15 review
+    * finding). */
   private val NearDupEdgesCte =
     NearDupGramsCte + ", " +
     "prc AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter " +
@@ -1277,6 +1283,98 @@ object Pipeline {
     "WHERE inter / (sa.sz + sb.sz - inter) >= 0.8), " +
     "edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs " +
     "UNION ALL SELECT doc_b, doc_a FROM pairs)"
+
+  /** [[NearDupGramsCte]] plus the batch-vs-index pair relation of the
+    * incremental keys: `pairs(doc_id, dup_id, inter)` between a newest-10%
+    * batch document and an index document sharing a trigram (no a<b
+    * constraint: the two sides are disjoint). Shared by the
+    * dedup_incremental and pipeline_incremental_clean_pack oracles. */
+  private[ops] val IncrementalPairsCte =
+    NearDupGramsCte + ", " +
+    "mx AS (SELECT max(doc_id) AS mx FROM documents), " +
+    "pairs AS (SELECT a.doc_id AS doc_id, b.doc_id AS dup_id, count(*) AS inter " +
+    "FROM inv a JOIN inv b ON a.gram = b.gram, mx " +
+    "WHERE a.doc_id * 10 >= mx.mx * 9 AND b.doc_id * 10 < mx.mx * 9 " +
+    "GROUP BY 1, 2)"
+
+  /** Exact reachability over `edges(s, d)`: `reach(doc, r)` holds every
+    * node r reachable from doc, so min(r) per doc is its connected
+    * component's min-label, what the Spark min-label propagation
+    * converges to (needs `WITH RECURSIVE`). */
+  private[ops] val ReachCte =
+    "reach(doc, r) AS (SELECT s, s FROM edges " +
+    "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r)"
+
+  /** [[ReachCte]] plus `lab(doc, cluster)`: each node's component
+    * min-label. */
+  private val ReachLabelCte =
+    ReachCte + ", lab AS (SELECT doc, CAST(min(r) AS BIGINT) AS cluster " +
+    "FROM reach GROUP BY doc)"
+
+  /** The unigram model of the NLL keys: `toks(doc_id, tok)`, per-token
+    * counts `cnt` and the corpus total `tot`. */
+  private val UnigramCountsCte =
+    "WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
+    "cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), " +
+    "tot AS (SELECT count(*) AS total FROM toks)"
+
+  /** Per-doc average unigram NLL `(doc_id, avg_nll)` over
+    * [[UnigramCountsCte]], the SQL twin of `unigramNll`. */
+  private val UnigramNllSql =
+    "SELECT doc_id, round(avg(-ln(CAST(cnt AS DOUBLE) / total)), 6) AS avg_nll " +
+    "FROM toks JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id"
+
+  /** The text_quality score of document `d` before rounding: four
+    * heuristic terms (length, mean word length, stopword share, symbol
+    * share). */
+  private val QualitySql =
+    "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
+    "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
+    "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
+    "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
+    "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END)"
+
+  /** Per-document token counts `t(source, doc_id, toks)`. */
+  private val DocToksCte =
+    "t AS (SELECT source, doc_id, " +
+    "CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM documents), "
+
+  /** Each document's shard: its exclusive running token sum within its
+    * source over `src(source, doc_id, toks)`, `c(…, cum)`, then
+    * shard = cum // 512. */
+  private def packCumCte(src: String): String =
+    "c AS (SELECT source, doc_id, toks, " +
+    "coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id " +
+    s"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM $src) "
+
+  /** The packing tail over `src(source, doc_id, toks)`: per (source,
+    * shard) document and token counts. Shared by pack_sequences,
+    * pack_sequences_bpe and the two clean_pack pipelines. */
+  private[ops] def packTailSql(src: String): String =
+    packCumCte(src) +
+    "SELECT source, CAST(cum // 512 AS BIGINT) AS shard, " +
+    "count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS sum_toks " +
+    "FROM c GROUP BY 1, 2 ORDER BY 1, 2"
+
+  /** The clean_pack tail after a dedup stage: quality score `q` over the
+    * surviving documents `from`, the quality filter and stratified draw
+    * (`filt`), then the packing tail. */
+  private def cleanPackTail(from: String): String =
+    "q AS (SELECT d.doc_id, d.source, d.lang, d.text, " +
+    s"round($QualitySql, 2) AS q $from), " +
+    "filt AS (SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM q " +
+    "WHERE q >= 0.5 AND ((doc_id * 48271) % 2147483647) % 100 < " +
+    "(CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 50 WHEN 'es' THEN 75 WHEN 'fr' THEN 90 ELSE 100 END)), " +
+    packTailSql("filt")
+
+  /** Distinct word 4-grams per document, `g(doc_id, gram)`: range(a, b)
+    * is end-EXCLUSIVE in DuckDB vs Spark's inclusive sequence, so
+    * range(1, len(t) - 2) == sequence(1, size - 3). */
+  private val FourGramsCte =
+    "WITH " + LowerToksCte + ", " +
+    "g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
+    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS gram " +
+    "FROM toks WHERE len(t) >= 4), "
 
   val oracles: Map[String, String] = Map(
     // list_slice is 1-based inclusive-both-ends, so [k*24+1 : k*24+32]
@@ -1371,11 +1469,7 @@ object Pipeline {
        "SELECT lang, doc_id, n_toks, score, cum_toks FROM c " +
        "WHERE cum_toks <= 1500 ORDER BY lang, cum_toks"),
     "pack_manifest" ->
-      ("WITH t AS (SELECT source, doc_id, " +
-        "CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM documents), " +
-        "c AS (SELECT source, doc_id, toks, " +
-        "coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM t) " +
+      ("WITH " + DocToksCte + packCumCte("t") +
         "SELECT source, doc_id, toks, CAST(cum // 512 AS BIGINT) AS shard " +
         "FROM c ORDER BY doc_id"),
     "text_bigram_nll" ->
@@ -1390,15 +1484,7 @@ object Pipeline {
         "SELECT doc_id, round(avg(-ln(CAST(bc AS DOUBLE) / uc)), 6) AS avg_nll " +
         "FROM bi JOIN bc USING (w1, w2) JOIN uc USING (w1) " +
         "GROUP BY doc_id ORDER BY doc_id"),
-    "pack_sequences" ->
-      ("WITH t AS (SELECT source, doc_id, " +
-        "CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM documents), " +
-        "c AS (SELECT source, doc_id, toks, " +
-        "coalesce(sum(toks) OVER (PARTITION BY source ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM t) " +
-        "SELECT source, CAST(cum // 512 AS BIGINT) AS shard, " +
-        "count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS sum_toks " +
-        "FROM c GROUP BY 1, 2 ORDER BY 1, 2"),
+    "pack_sequences" -> ("WITH " + DocToksCte + packTailSql("t")),
     "text_scrub_terms" ->
       ("WITH m AS (SELECT source, " +
         "CAST(len(regexp_extract_all(text, '\\b(key|hash|secret)\\b')) AS BIGINT) AS hits, " +
@@ -1409,20 +1495,11 @@ object Pipeline {
         "CAST(sum(red_len) AS BIGINT) AS sum_red_len " +
         "FROM m GROUP BY source ORDER BY source"),
     "text_unigram_nll" ->
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
-        "cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), " +
-        "tot AS (SELECT count(*) AS total FROM toks) " +
-        "SELECT doc_id, round(avg(-ln(CAST(cnt AS DOUBLE) / total)), 6) AS avg_nll " +
-        "FROM toks JOIN cnt USING (tok) CROSS JOIN tot " +
-        "GROUP BY doc_id ORDER BY doc_id"),
+      (UnigramCountsCte + " " + UnigramNllSql + " ORDER BY doc_id"),
     "text_ppl_buckets" ->
       // single-window row_number form — the Spark side's two-level
       // (value-start + tie-offset) rank must reproduce it identically
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
-       "cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), " +
-       "tot AS (SELECT count(*) AS total FROM toks), " +
-       "nll AS (SELECT doc_id, round(avg(-ln(CAST(cnt AS DOUBLE) / total)), 6) AS avg_nll " +
-       "FROM toks JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id), " +
+      (UnigramCountsCte + ", nll AS (" + UnigramNllSql + "), " +
        "d AS (SELECT lang, nll.doc_id, avg_nll FROM documents " +
        "JOIN nll ON documents.doc_id = nll.doc_id), " +
        "r AS (SELECT lang, doc_id, avg_nll, " +
@@ -1433,12 +1510,7 @@ object Pipeline {
        "WHEN 3*(rnk-1) < 2*n THEN 'middle' ELSE 'tail' END AS bucket " +
        "FROM r ORDER BY lang, doc_id"),
     "text_contamination" ->
-      // range(a, b) is end-EXCLUSIVE in DuckDB vs Spark's inclusive
-      // sequence: range(1, len(t) - 2) == sequence(1, size - 3).
-      ("WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS gram " +
-        "FROM toks WHERE len(t) >= 4), " +
+      (FourGramsCte +
         "bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0) " +
         "SELECT doc_id, CAST(count(DISTINCT gram) AS BIGINT) AS n_shared " +
         "FROM g JOIN bench USING (gram) WHERE doc_id % 97 <> 0 " +
@@ -1448,10 +1520,7 @@ object Pipeline {
     // the gram. sum(CASE) is HUGEINT in DuckDB → CAST BIGINT (the
     // text_tokens precedent); the ratio is exact-int division both sides.
     "text_dup_spans" ->
-      ("WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS gram " +
-        "FROM toks WHERE len(t) >= 4), " +
+      (FourGramsCte +
         "df AS (SELECT gram, count(*) AS df FROM g GROUP BY 1), " +
         "pd AS (SELECT doc_id, count(*) AS n_grams, " +
         "sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS n_dup " +
@@ -1492,72 +1561,20 @@ object Pipeline {
     // needed — cross-corpus dups are direct pairs) + clean_pack's
     // q/filt/pack text restricted to the batch side
     "pipeline_incremental_clean_pack" ->
-      ("WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
-        "mx AS (SELECT max(doc_id) AS mx FROM documents), " +
-        "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
-        "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams), " +
-        "pr AS (SELECT a.doc_id AS doc_id, b.doc_id AS dup_id, count(*) AS inter " +
-        "FROM inv a JOIN inv b ON a.gram = b.gram, mx " +
-        "WHERE a.doc_id * 10 >= mx.mx * 9 AND b.doc_id * 10 < mx.mx * 9 " +
-        "GROUP BY 1, 2), " +
-        "dups AS (SELECT DISTINCT p.doc_id FROM pr p " +
+      ("WITH " + IncrementalPairsCte + ", " +
+        "dups AS (SELECT DISTINCT p.doc_id FROM pairs p " +
         "JOIN sizes sa ON sa.doc_id = p.doc_id " +
         "JOIN sizes sb ON sb.doc_id = p.dup_id " +
         "WHERE inter / (sa.sz + sb.sz - inter) >= 0.8), " +
-        "q AS (SELECT d.doc_id, d.source, d.lang, d.text, round(" +
-        "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-        "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-        "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
-        "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
-        "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END), 2) AS q " +
-        "FROM documents d, mx WHERE d.doc_id * 10 >= mx.mx * 9 " +
-        "AND d.doc_id NOT IN (SELECT doc_id FROM dups)), " +
-        "filt AS (SELECT doc_id, source, text FROM q " +
-        "WHERE q >= 0.5 AND ((doc_id * 48271) % 2147483647) % 100 < " +
-        "(CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 50 WHEN 'es' THEN 75 WHEN 'fr' THEN 90 ELSE 100 END)), " +
-        "c AS (SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks, " +
-        "coalesce(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER (PARTITION BY source ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM filt) " +
-        "SELECT source, CAST(cum // 512 AS BIGINT) AS shard, count(*) AS n_docs, " +
-        "CAST(sum(toks) AS BIGINT) AS sum_toks FROM c GROUP BY 1, 2 ORDER BY 1, 2"),
+        cleanPackTail("FROM documents d, mx WHERE d.doc_id * 10 >= mx.mx * 9 " +
+          "AND d.doc_id NOT IN (SELECT doc_id FROM dups)")),
     "pipeline_clean_pack" ->
-      ("WITH RECURSIVE toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
-        "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
-        "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
-        "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams), " +
-        "pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter " +
-        "FROM inv a JOIN inv b ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
-        "pairs AS (SELECT doc_a, doc_b FROM pr " +
-        "JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
-        "WHERE inter / (sa.sz + sb.sz - inter) >= 0.8), " +
-        "edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs " +
-        "UNION ALL SELECT doc_b, doc_a FROM pairs), " +
-        "reach(doc, r) AS (SELECT s, s FROM edges " +
-        "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r), " +
+      (s"WITH RECURSIVE $NearDupEdgesCte, $ReachCte, " +
         "clus AS (SELECT doc, min(r) AS root FROM reach GROUP BY doc), " +
         "dups AS (SELECT doc FROM clus WHERE doc <> root), " +
-        "q AS (SELECT d.doc_id, d.source, d.lang, d.text, round(" +
-        "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-        "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-        "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
-        "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
-        "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END), 2) AS q " +
-        "FROM documents d WHERE d.doc_id NOT IN (SELECT doc FROM dups)), " +
-        "filt AS (SELECT doc_id, source, text FROM q " +
-        "WHERE q >= 0.5 AND ((doc_id * 48271) % 2147483647) % 100 < " +
-        "(CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 50 WHEN 'es' THEN 75 WHEN 'fr' THEN 90 ELSE 100 END)), " +
-        "c AS (SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks, " +
-        "coalesce(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER (PARTITION BY source ORDER BY doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum FROM filt) " +
-        "SELECT source, CAST(cum // 512 AS BIGINT) AS shard, count(*) AS n_docs, " +
-        "CAST(sum(toks) AS BIGINT) AS sum_toks FROM c GROUP BY 1, 2 ORDER BY 1, 2"),
+        cleanPackTail("FROM documents d WHERE d.doc_id NOT IN (SELECT doc FROM dups)")),
     "dedup_cluster" ->
-      (s"WITH RECURSIVE $NearDupEdgesCte, " +
-        "reach(doc, r) AS (SELECT s, s FROM edges " +
-        "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r) " +
+      (s"WITH RECURSIVE $NearDupEdgesCte, $ReachCte " +
         "SELECT doc AS doc_id, CAST(min(r) AS BIGINT) AS cluster " +
         "FROM reach GROUP BY doc ORDER BY doc"),
     // dedup_cluster's reachability CC for the dup share + text_quality's
@@ -1565,21 +1582,11 @@ object Pipeline {
     // (cnt DESC, lang) row_number, quantile_cont ≡ percentile (the
     // theil_sen exact-(a+b)/2 precedent).
     "pipeline_dataset_card" ->
-      (s"WITH RECURSIVE $NearDupEdgesCte, " +
-        "reach(doc, r) AS (SELECT s, s FROM edges " +
-        "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r), " +
-        "lab AS (SELECT doc, CAST(min(r) AS BIGINT) AS cluster " +
-        "FROM reach GROUP BY doc), " +
+      (s"WITH RECURSIVE $NearDupEdgesCte, $ReachLabelCte, " +
         "dups AS (SELECT doc AS doc_id FROM lab WHERE doc <> cluster), " +
         "m AS (SELECT d.source, d.lang, " +
         "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_toks, " +
-        "CAST(round((" +
-        "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-        "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-        "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
-        "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
-        "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END)" +
-        ") * 100) AS BIGINT) AS q2i, " +
+        s"CAST(round(($QualitySql) * 100) AS BIGINT) AS q2i, " +
         "(dup.doc_id IS NOT NULL) AS is_dup " +
         "FROM documents d LEFT JOIN dups dup ON d.doc_id = dup.doc_id), " +
         "base AS (SELECT source, count(*) AS n_docs, " +
@@ -1602,11 +1609,7 @@ object Pipeline {
     // The incremental key's oracle IS the batch recompute — the
     // incremental ≡ batch law as a hash gate — plus the boundary flag.
     "dedup_cluster_incremental" ->
-      (s"WITH RECURSIVE $NearDupEdgesCte, " +
-        "reach(doc, r) AS (SELECT s, s FROM edges " +
-        "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r), " +
-        "lab AS (SELECT doc, CAST(min(r) AS BIGINT) AS cluster " +
-        "FROM reach GROUP BY doc), " +
+      (s"WITH RECURSIVE $NearDupEdgesCte, $ReachLabelCte, " +
         "mx AS (SELECT max(doc_id) AS m FROM documents) " +
         "SELECT doc AS doc_id, cluster, doc * 10 >= mx.m * 9 AS is_new " +
         "FROM lab, mx ORDER BY doc"),
@@ -1615,9 +1618,7 @@ object Pipeline {
     // the whole component), and the pair-straddle audit re-counted from
     // the pair list itself
     "split_grouped" ->
-      (s"WITH RECURSIVE $NearDupEdgesCte, " +
-        "reach(doc, r) AS (SELECT s, s FROM edges " +
-        "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r), " +
+      (s"WITH RECURSIVE $NearDupEdgesCte, $ReachCte, " +
         "lab AS (SELECT doc AS doc_id, CAST(min(r) AS BIGINT) AS cluster " +
         "FROM reach GROUP BY doc), " +
         "base AS (SELECT doc_id, source, " +

@@ -539,20 +539,46 @@ object Vector {
       s: SparkSession, dir: String): DataFrame =
     graft.Staging.materialize(
       s, Tables.path(dir, "embeddings"), "knn3_edges_cell_v2") {
-      val cells = Ann.semCells(s, dir, Ann.embDouble(s, dir))
-      val a = cells.select(col("vec_id").as("q_id"), col("v").as("q"),
-        col("cell"))
-      val b = cells.select(col("vec_id"), col("v"), col("cell"))
-      rankPerProbe(
-        a.join(b, "cell")
-          .where(col("vec_id") =!= col("q_id"))
-          .withColumn("sim", round(cosine(col("q"), col("v")), 6))
-          .select(col("q_id"), col("vec_id"), col("sim")),
-        Seq(col("sim").desc, col("vec_id")), 3, "rnk")
-        .select(
-          least(col("q_id"), col("vec_id")).as("a"),
-          greatest(col("q_id"), col("vec_id")).as("b")).distinct()
+      knnUndirected(
+        cellPairSims(Ann.semCells(s, dir, Ann.embDouble(s, dir))), 3)
     }
+
+  /** The same-cell pairs `(q_id, vec_id, sim)` of an inverted file
+    * `cells(vec_id, v, cell)`: the cell self-join, self-pairs dropped,
+    * scored by rounded cosine. */
+  private[graft] def cellPairSims(cells: DataFrame): DataFrame = {
+    val a = cells.select(col("vec_id").as("q_id"), col("v").as("q"),
+      col("cell"))
+    val b = cells.select(col("vec_id"), col("v"), col("cell"))
+    a.join(b, "cell")
+      .where(col("vec_id") =!= col("q_id"))
+      .withColumn("sim", round(cosine(col("q"), col("v")), 6))
+      .select(col("q_id"), col("vec_id"), col("sim"))
+  }
+
+  /** Each vector's top-`k` neighbors of `sims` by (sim DESC, vec_id), as
+    * undirected edges `(a, b)` with a < b — the cell-bounded kNN graph
+    * of `graph_knn_triangles` / `graph_components` (k = 3) and of the
+    * NSW index (k = 12). */
+  private[graft] def knnUndirected(sims: DataFrame, k: Int): DataFrame =
+    rankPerProbe(sims, Seq(col("sim").desc, col("vec_id")), k, "rnk")
+      .select(
+        least(col("q_id"), col("vec_id")).as("a"),
+        greatest(col("q_id"), col("vec_id")).as("b")).distinct()
+
+  /** The oracle replay of [[knnEdges]] after `Ann.semCellsCte`: same-cell
+    * sims → per-vector (sim DESC, id) rank → top-3 undirected edges
+    * `ed(a, b)`. Shared by the graph_knn_triangles and graph_components
+    * oracles, so the two can never disagree on the graph. */
+  private val KnnEdgesCte =
+    "sims AS (SELECT p.vec_id AS q_id, c.vec_id AS nid, " +
+      "round(list_cosine_similarity(p.v, c.v), 6) AS sim " +
+      "FROM cells p JOIN cells c ON p.cell = c.cell " +
+      "AND p.vec_id <> c.vec_id), " +
+      "rk AS (SELECT q_id, nid, row_number() OVER (PARTITION BY q_id " +
+      "ORDER BY sim DESC, nid) AS rnk FROM sims), " +
+      "ed AS (SELECT DISTINCT least(q_id, nid) AS a, " +
+      "greatest(q_id, nid) AS b FROM rk WHERE rnk <= 3), "
 
   val oracles: Map[String, String] = Map(
     // Full 3-round Lloyd replay as chained CTEs (the embed_ann_ivf
@@ -581,8 +607,7 @@ object Vector {
         s"SELECT c_id, cv FROM $prev " +
         s"WHERE c_id NOT IN (SELECT c_id FROM cm$i)), "
       }
-      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
-      "FROM embeddings), " +
+      Ann.EmbCte +
       "cent0 AS (SELECT vec_id AS c_id, v AS cv FROM e WHERE vec_id < 8), " +
       (1 to 3).map(roundCte).mkString +
       "fa AS (SELECT vec_id, c_id, dd, row_number() OVER " +
@@ -618,8 +643,7 @@ object Vector {
        "SELECT c.vec_id, CAST(c.pos - 1 AS BIGINT) AS pos, c.cx / n.nrm AS nval " +
        "FROM c JOIN n ON c.vec_id = n.vec_id ORDER BY c.vec_id, pos"),
     "embed_cosine_topk" ->
-      ("WITH p AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q " +
-       "FROM embeddings WHERE vec_id < 10), " +
+      (probeHeadCte(10) +
        "sims AS (SELECT p.q_id, e.vec_id, " +
        "round(list_cosine_similarity(p.q, CAST(e.embedding AS DOUBLE[])), 6) AS sim " +
        "FROM p CROSS JOIN embeddings e WHERE e.vec_id <> p.q_id), " +
@@ -629,8 +653,7 @@ object Vector {
        "SELECT q_id, rnk, vec_id, sim FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"),
     // DuckDB's l[1:32] is 1-based inclusive-first-32 ≡ Spark slice(v,1,32)
     "embed_ann_matryoshka" ->
-      ("WITH p AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q " +
-       "FROM embeddings WHERE vec_id < 10), " +
+      (probeHeadCte(10) +
        "c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
        "FROM embeddings), " +
        "sims AS (SELECT p.q_id, c.vec_id, " +
@@ -646,8 +669,7 @@ object Vector {
        "row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) " +
        "AS rnk FROM rr) WHERE rnk <= 5 ORDER BY q_id, rnk"),
     "embed_knn_label" ->
-      ("WITH p AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q " +
-       "FROM embeddings WHERE vec_id < 100), " +
+      (probeHeadCte(100) +
        "c AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v " +
        "FROM embeddings WHERE vec_id >= 100), " +
        "sims AS (SELECT p.q_id, c.vec_id, c.label, " +
@@ -665,15 +687,7 @@ object Vector {
     // per vector over same-cell candidates only — the identical rule
     // the Spark side stages; the counting tail is unchanged.
     "graph_knn_triangles" ->
-      (Ann.semCellsCte +
-       "sims AS (SELECT p.vec_id AS q_id, c.vec_id AS nid, " +
-       "round(list_cosine_similarity(p.v, c.v), 6) AS sim " +
-       "FROM cells p JOIN cells c ON p.cell = c.cell " +
-       "AND p.vec_id <> c.vec_id), " +
-       "r AS (SELECT q_id, nid, row_number() OVER (PARTITION BY q_id " +
-       "ORDER BY sim DESC, nid) AS rnk FROM sims), " +
-       "ed AS (SELECT DISTINCT least(q_id, nid) AS a, " +
-       "greatest(q_id, nid) AS b FROM r WHERE rnk <= 3), " +
+      (Ann.semCellsCte + KnnEdgesCte +
        "dg AS (SELECT vv, count(*) AS d FROM " +
        "(SELECT a AS vv FROM ed UNION ALL SELECT b FROM ed) GROUP BY vv), " +
        "w AS (SELECT CAST(sum(d * (d - 1)) / 2 AS BIGINT) AS n_wedges " +
@@ -691,18 +705,10 @@ object Vector {
     // count-free by construction.
     "graph_components" ->
       (Ann.semCellsCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
-       "sims AS (SELECT p.vec_id AS q_id, c.vec_id AS nid, " +
-       "round(list_cosine_similarity(p.v, c.v), 6) AS sim " +
-       "FROM cells p JOIN cells c ON p.cell = c.cell " +
-       "AND p.vec_id <> c.vec_id), " +
-       "rk AS (SELECT q_id, nid, row_number() OVER (PARTITION BY q_id " +
-       "ORDER BY sim DESC, nid) AS rnk FROM sims), " +
-       "ed AS (SELECT DISTINCT least(q_id, nid) AS a, " +
-       "greatest(q_id, nid) AS b FROM rk WHERE rnk <= 3), " +
+       KnnEdgesCte +
        "edges AS (SELECT a AS s, b AS d FROM ed " +
        "UNION ALL SELECT b, a FROM ed), " +
-       "reach(doc, r) AS (SELECT s, s FROM edges " +
-       "UNION SELECT reach.doc, e.d FROM reach JOIN edges e ON e.s = reach.r) " +
+       Pipeline.ReachCte + " " +
        "SELECT doc AS vec_id, CAST(min(r) AS BIGINT) AS component " +
        "FROM reach GROUP BY doc ORDER BY doc"),
     "multimodal_join" ->
@@ -765,6 +771,11 @@ object Vector {
   // init, and a forward-referenced plain val would still be null there
   private def EigenFold0 = "CAST(0.0 AS DOUBLE)"
 
+  /** `p(q_id, q)`: the probe vectors vec_id < n as DOUBLE[]. */
+  private def probeHeadCte(n: Int): String =
+    "WITH p AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS q " +
+      s"FROM embeddings WHERE vec_id < $n), "
+
   /** One eigen power-iteration round as a CTE chunk (vv{tag}{r} →
     * vv{tag}{r+1}) over source relation `src(vec_id, v)`, verbatim from
     * the proven embed_top_eigen replay — shared with embed_abtt (same
@@ -791,8 +802,7 @@ object Vector {
     * (trailing space; ends ready for a SELECT, vv4 = the unit top
     * direction). */
   private lazy val EigenPrefixCte: String =
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v " +
-      "FROM embeddings), " +
+    Ann.EmbCte +
       "vv1 AS (SELECT list_transform(range(1, 65), i -> " +
       "CASE WHEN i = 1 THEN CAST(1.0 AS DOUBLE) " +
       "ELSE CAST(0.0 AS DOUBLE) END) AS vv), " +

@@ -283,6 +283,47 @@ object Streams {
     }
   }
 
+  /** 1-hour tumbling counts per event_type, the one aggregation of
+    * `stream_tumbling` and its drain twins, over batch `events` or the
+    * events stream. */
+  private def hourlyCounts(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour"), col("event_type")).count()
+
+  /** [[hourlyCounts]]' output rows `(ws, event_type, n)`. */
+  private def hourlyRows(counts: DataFrame): DataFrame =
+    counts.select(unix_timestamp(col("window.start")).as("ws"),
+      col("event_type"), col("count").as("n"))
+
+  /** 1-hour windows sliding every 15 min (each event lands in 4): the
+    * mean `value` and the row count. `value` carries 2 decimals and is
+    * non-negative, so the mean is taken over integer cents and rounded
+    * HALF_UP on integers ([[D.avgHalfUp]]): `round(avg(value), 6)` on a
+    * double can split from the oracle on an exact 7th-decimal tie. */
+  private def slidingAvgs(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour", "15 minutes"))
+      .agg(D.avgHalfUp(round(col("value") * 100).cast("long"), 2, 6)
+        .as("avg_value"), count(lit(1)).as("n"))
+
+  /** [[slidingAvgs]]' output rows `(ws, avg_value, n)`, in ws order. */
+  private def slidingRows(avgs: DataFrame): DataFrame =
+    avgs.select(unix_timestamp(col("window.start")).as("ws"),
+      col("avg_value"), col("n")).orderBy("ws")
+
+  /** Per-user session windows with a 30-min gap: event count and last
+    * event time per session. */
+  private def sessions(events: DataFrame): DataFrame =
+    events.groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"), max(col("ts")).as("mx"))
+
+  /** [[sessions]]' output rows `(user_id, start_us, n_events, dur_us)`. */
+  private def sessionRows(sess: DataFrame): DataFrame =
+    sess.select(col("user_id"),
+        unix_micros(col("session_window.start")).as("start_us"),
+        col("n_events"),
+        (unix_micros(col("mx")) -
+         unix_micros(col("session_window.start"))).as("dur_us"))
+      .orderBy("user_id", "start_us")
+
   val queries: Map[String, Q] = Map(
 
     // Stream-static join: the event stream enriched against the static
@@ -313,14 +354,9 @@ object Streams {
     // drain holds every window, so the results are identical by
     // construction, and StreamingSpec's multi-batch drain twin asserts
     // exactly that equality against the real streaming engine.
-    "stream_tumbling" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .count()
-        .select(unix_timestamp(col("window.start")).as("ws"),
-                col("event_type"), col("count").as("n"))
-        .orderBy("ws", "event_type")
-    }),
+    "stream_tumbling" -> ((s, dir) =>
+      hourlyRows(hourlyCounts(Tables.events(s, dir)))
+        .orderBy("ws", "event_type")),
 
     // The REAL-DRAIN twin of stream_tumbling, declared and oracled:
     // complete-mode AvailableNow drain of the same 1-hour windowed count
@@ -332,15 +368,10 @@ object Streams {
     // batch; this restores one oracled windowed key on the drain path —
     // stream_watermark_late covers append/watermark semantics but is
     // necessarily no-oracle).
-    "stream_tumbling_drain" -> ((s, dir) => {
-      val out = eventsStream(s, Tables.path(dir, "events"))
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .count()
-      drain(out, OutputMode.Complete())
-        .select(unix_timestamp(col("window.start")).as("ws"),
-                col("event_type"), col("count").as("n"))
-        .orderBy("ws", "event_type")
-    }),
+    "stream_tumbling_drain" -> ((s, dir) =>
+      hourlyRows(drain(hourlyCounts(eventsStream(s, Tables.path(dir, "events"))),
+        OutputMode.Complete()))
+        .orderBy("ws", "event_type")),
 
     // Streaming top-k (round 17) — the live leaderboard pattern: the
     // STREAMING job maintains per-(window, type) counts in the state
@@ -355,12 +386,9 @@ object Streams {
     // batch topping lowers to WindowGroupLimit over |windows|·|types|
     // rows — bounded by the calendar, never by event volume.
     "stream_topk_drain" -> ((s, dir) => {
-      val out = eventsStream(s, Tables.path(dir, "events"))
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .count()
-      val snap = drain(out, OutputMode.Complete())
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("event_type"), col("count").as("n"))
+      val snap = hourlyRows(drain(
+        hourlyCounts(eventsStream(s, Tables.path(dir, "events"))),
+        OutputMode.Complete()))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("ws").orderBy(col("n").desc, col("event_type"))
       snap.withColumn("rnk", row_number().over(w))
@@ -377,15 +405,9 @@ object Streams {
     // driver exercises sliding-window state finalization — r11 verdict:
     // the batch-form key never touches the state store and the
     // StreamingSpec twin is invisible to the driver.
-    "stream_sliding_drain" -> ((s, dir) => {
-      val out = eventsStream(s, Tables.path(dir, "events"))
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-        .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
-      drain(out, OutputMode.Complete())
-        .select(unix_timestamp(col("window.start")).as("ws"),
-                D.r6(col("avg_value")).as("avg_value"), col("n"))
-        .orderBy("ws")
-    }),
+    "stream_sliding_drain" -> ((s, dir) =>
+      slidingRows(drain(slidingAvgs(eventsStream(s, Tables.path(dir, "events"))),
+        OutputMode.Complete()))),
 
     // Streaming OHLC — real-time candlesticks, the agg_ohlc semantics
     // through the streaming engine: per 1-hour tumbling window,
@@ -416,30 +438,15 @@ object Streams {
     // 1-hour window sliding every 15 min: each event lands in 4 windows.
     // Batch evaluation of the shared operator, same rationale (and same
     // StreamingSpec drain twin) as stream_tumbling above.
-    "stream_sliding" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-        .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n"))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-                D.r6(col("avg_value")).as("avg_value"), col("n"))
-        .orderBy("ws")
-    }),
+    "stream_sliding" -> ((s, dir) =>
+      slidingRows(slidingAvgs(Tables.events(s, dir)))),
 
     // Per-user session windows, 30-min gap. session_window is the same
     // operator in batch and streaming; the declared query uses the batch
     // form (SURVEY §2.8) — StreamingSpec runs the streaming twin and
     // asserts equality on full drain.
-    "stream_session" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("mx"))
-        .select(col("user_id"),
-                unix_micros(col("session_window.start")).as("start_us"),
-                col("n_events"),
-                (unix_micros(col("mx")) -
-                 unix_micros(col("session_window.start"))).as("dur_us"))
-        .orderBy("user_id", "start_us")
-    }),
+    "stream_session" -> ((s, dir) =>
+      sessionRows(sessions(Tables.events(s, dir)))),
 
     // The REAL-DRAIN twin of stream_session, declared and oracled:
     // complete-mode AvailableNow drain of the same 30-min-gap session
@@ -451,18 +458,9 @@ object Streams {
     // state (no watermark required; eviction is disabled), so a full
     // drain merges every event into its final session and equals the
     // batch session_window form exactly — shared oracle.
-    "stream_session_drain" -> ((s, dir) => {
-      val out = eventsStream(s, Tables.path(dir, "events"))
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"), max(col("ts")).as("mx"))
-      drain(out, OutputMode.Complete())
-        .select(col("user_id"),
-                unix_micros(col("session_window.start")).as("start_us"),
-                col("n_events"),
-                (unix_micros(col("mx")) -
-                 unix_micros(col("session_window.start"))).as("dur_us"))
-        .orderBy("user_id", "start_us")
-    }),
+    "stream_session_drain" -> ((s, dir) =>
+      sessionRows(drain(sessions(eventsStream(s, Tables.path(dir, "events"))),
+        OutputMode.Complete()))),
 
     // Watermark semantics: append mode only emits a window once the 1-hour
     // watermark passes its end, so rows later than the watermark are
@@ -477,16 +475,10 @@ object Streams {
     // windows whose end ≤ max(ts) − 1 h (ms-truncated, Spark's event-time
     // stats granularity). StreamingSpec still asserts output ⊆ batch on
     // unordered multi-batch variants.
-    "stream_watermark_late" -> ((s, dir) => {
-      val out = eventsStream(s, Tables.path(dir, "events"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .count()
-      drain(out, OutputMode.Append())
-        .select(unix_timestamp(col("window.start")).as("ws"),
-                col("event_type"), col("count").as("n"))
-        .orderBy("ws", "event_type")
-    }),
+    "stream_watermark_late" -> ((s, dir) =>
+      hourlyRows(drain(hourlyCounts(eventsStream(s, Tables.path(dir, "events"))
+        .withWatermark("ts", "1 hour")), OutputMode.Append()))
+        .orderBy("ws", "event_type")),
 
     // Streaming dedup on (user_id, event_type) within a 1-hour watermark.
     // Full drain emits exactly the distinct pairs (first occurrence wins;
@@ -738,9 +730,7 @@ object Streams {
         "graft_recovery_")
       val marker = "graft: injected mid-drain kill (expected)"
       @volatile var latest: Option[DataFrame] = None
-      def windowed = eventsStreamDir(s, src, maxFiles = Some(1))
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .count()
+      def windowed = hourlyCounts(eventsStreamDir(s, src, maxFiles = Some(1)))
       // complete-mode agg: the trailing no-data batch can't change the
       // sink (same reasoning as drain()); skip its planning cycle ×2 runs
       val scoped = DrainScope :+
@@ -773,10 +763,8 @@ object Streams {
         ConfScope.exit(s, scoped.map(_._1))
         graft.Staging.deleteRecursively(ckptRoot)
       }
-      latest.getOrElse(sys.error(
-        "recovery session executed no batches — checkpoint replay contract broken"))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("event_type"), col("count").as("n"))
+      hourlyRows(latest.getOrElse(sys.error(
+        "recovery session executed no batches — checkpoint replay contract broken")))
         .orderBy("ws", "event_type")
     })
   )
@@ -1003,6 +991,62 @@ object Streams {
   val drainKeys: Set[String] =
     queries.keySet -- Set("stream_session", "stream_tumbling", "stream_sliding")
 
+  /** The oracle of `stream_tumbling` and its drain twins
+    * (`stream_tumbling_drain`, `stream_recovery_drain`). */
+  private val HourlyCountSql =
+    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws,
+      |       event_type, count(*) AS n
+      |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin
+
+  /** The oracle of `stream_sliding` and `stream_sliding_drain`: the mean
+    * over integer cents, rounded HALF_UP on integers like
+    * [[slidingAvgs]]. */
+  private val SlidingAvgSql =
+    """WITH slid AS (
+      |  SELECT CAST(floor(epoch(ts)/900)*900 - k.k*900 AS BIGINT) AS ws,
+      |         CAST(round(value * 100) AS BIGINT) AS cents
+      |  FROM events CROSS JOIN (VALUES (0),(1),(2),(3)) k(k))
+      |SELECT ws,
+      |       (20000 * sum(cents) + count(cents)) // (2 * count(cents))
+      |         / 1000000.0 AS avg_value,
+      |       count(*) AS n
+      |FROM slid GROUP BY ws ORDER BY ws""".stripMargin
+
+  /** The oracle of `stream_session` and `stream_session_drain`. */
+  private val SessionSql =
+    """WITH marked AS (
+      |  SELECT user_id, ts,
+      |         CASE WHEN lag(ts) OVER w IS NULL
+      |              OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+      |              THEN 1 ELSE 0 END AS new_s
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      |sess AS (
+      |  SELECT user_id, ts,
+      |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+      |                          ROWS UNBOUNDED PRECEDING) AS sid
+      |  FROM marked)
+      |SELECT user_id, CAST(epoch_us(min(ts)) AS BIGINT) AS start_us,
+      |       count(*) AS n_events,
+      |       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS dur_us
+      |FROM sess GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin
+
+  /** The oracle of the two stateful per-user counters
+    * (`stream_stateful_count`, `stream_transform_state`). */
+  private val UserCountSql =
+    """SELECT user_id, count(*) AS n_events FROM events
+      |GROUP BY user_id ORDER BY user_id""".stripMargin
+
+  /** The view and click sides `v(v_id, user_id, v_ts)`,
+    * `c(c_id, user_id, c_ts)` of the two interval-join oracles. */
+  private val ViewClickCte =
+    """WITH v AS (SELECT event_id AS v_id, user_id,
+      |            date_trunc('second', ts) AS v_ts
+      |     FROM events WHERE event_type = 'view'),
+      |c AS (SELECT event_id AS c_id, user_id,
+      |            date_trunc('second', ts) AS c_ts
+      |     FROM events WHERE event_type = 'click')""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "stream_watermark_late" ->
       // the final-watermark closed form: a window is in the drained
@@ -1022,10 +1066,7 @@ object Streams {
        "FROM events JOIN customer ON user_id = c_custkey " +
        "GROUP BY c_mktsegment, event_type " +
        "ORDER BY c_mktsegment, event_type"),
-    "stream_tumbling" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
+    "stream_tumbling" -> HourlyCountSql,
     // complete drain ≡ batch rollup, then the same (n DESC, event_type)
     // rank-3 topping
     "stream_topk_drain" ->
@@ -1041,71 +1082,19 @@ object Streams {
        "last(value ORDER BY date_trunc('second', ts), event_id) AS close, " +
        "max(value) AS high, min(value) AS low, count(*) AS n " +
        "FROM events GROUP BY date_trunc('hour', ts) ORDER BY ws"),
-    "stream_tumbling_drain" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
+    "stream_tumbling_drain" -> HourlyCountSql,
     // recover ≡ rerun: the two-session checkpointed drain must land on
     // exactly the single-session batch result
-    "stream_recovery_drain" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS ws,
-        |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
-    "stream_sliding_drain" ->
-      """WITH slid AS (
-        |  SELECT CAST(floor(epoch(ts)/900)*900 - k.k*900 AS BIGINT) AS ws, value
-        |  FROM events CROSS JOIN (VALUES (0),(1),(2),(3)) k(k))
-        |SELECT ws, round(avg(value), 6) AS avg_value, count(*) AS n
-        |FROM slid GROUP BY ws ORDER BY ws""".stripMargin,
-    "stream_sliding" ->
-      """WITH slid AS (
-        |  SELECT CAST(floor(epoch(ts)/900)*900 - k.k*900 AS BIGINT) AS ws, value
-        |  FROM events CROSS JOIN (VALUES (0),(1),(2),(3)) k(k))
-        |SELECT ws, round(avg(value), 6) AS avg_value, count(*) AS n
-        |FROM slid GROUP BY ws ORDER BY ws""".stripMargin,
-    "stream_session" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM marked)
-        |SELECT user_id, CAST(epoch_us(min(ts)) AS BIGINT) AS start_us,
-        |       count(*) AS n_events,
-        |       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS dur_us
-        |FROM sess GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin,
-    "stream_session_drain" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |              OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |sess AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM marked)
-        |SELECT user_id, CAST(epoch_us(min(ts)) AS BIGINT) AS start_us,
-        |       count(*) AS n_events,
-        |       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS dur_us
-        |FROM sess GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin,
+    "stream_recovery_drain" -> HourlyCountSql,
+    "stream_sliding_drain" -> SlidingAvgSql,
+    "stream_sliding" -> SlidingAvgSql,
+    "stream_session" -> SessionSql,
+    "stream_session_drain" -> SessionSql,
     "stream_dedup" ->
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""".stripMargin,
-    "stream_stateful_count" ->
-      """SELECT user_id, count(*) AS n_events FROM events
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "stream_transform_state" ->
-      """SELECT user_id, count(*) AS n_events FROM events
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
+    "stream_stateful_count" -> UserCountSql,
+    "stream_transform_state" -> UserCountSql,
     // the ordering key is microsecond-truncated on the ORACLE side too:
     // the engine compares the µs-converted ts (nanos div 1000), and the
     // raw parquet is TIMESTAMP(NANOS) — today's data is exactly
@@ -1121,15 +1110,10 @@ object Streams {
         |      FROM events)
         |WHERE rn = 1 ORDER BY user_id""".stripMargin,
     "stream_stream_join" ->
-      """WITH v AS (SELECT event_id AS v_id, user_id,
-        |            date_trunc('second', ts) AS v_ts
-        |     FROM events WHERE event_type = 'view'),
-        |c AS (SELECT event_id AS c_id, user_id,
-        |            date_trunc('second', ts) AS c_ts
-        |     FROM events WHERE event_type = 'click')
+      (ViewClickCte + """
         |SELECT v_id, c_id FROM v JOIN c USING (user_id)
         |WHERE c_ts >= v_ts AND c_ts <= v_ts + INTERVAL 30 MINUTE
-        |ORDER BY v_id, c_id""".stripMargin,
+        |ORDER BY v_id, c_id""".stripMargin),
     // Full-drain closed form of the left-outer interval join: matches =
     // the batch join; null rows = matchless views evicted by the
     // TERMINAL watermark, min(max v_ts, max c_ts) − 1 h at ms
@@ -1137,12 +1121,7 @@ object Streams {
     // state-eviction comparison). Views still live at end-of-drain are
     // absent — mirroring the streaming engine exactly.
     "stream_stream_join_outer" ->
-      """WITH v AS (SELECT event_id AS v_id, user_id,
-        |            date_trunc('second', ts) AS v_ts
-        |     FROM events WHERE event_type = 'view'),
-        |c AS (SELECT event_id AS c_id, user_id,
-        |            date_trunc('second', ts) AS c_ts
-        |     FROM events WHERE event_type = 'click'),
+      (ViewClickCte + """,
         |wm AS (SELECT least((SELECT max(v_ts) FROM v),
         |                    (SELECT max(c_ts) FROM c)) AS w),
         |m AS (SELECT v_id, c_id FROM v JOIN c USING (user_id)
@@ -1154,6 +1133,6 @@ object Streams {
         |                < epoch_ms(wm.w) - 3600000)
         |SELECT v_id, c_id FROM m
         |UNION ALL SELECT v_id, c_id FROM nulls
-        |ORDER BY v_id, c_id NULLS FIRST""".stripMargin
+        |ORDER BY v_id, c_id NULLS FIRST""".stripMargin)
   )
 }

@@ -95,6 +95,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.count() > 0)
   }
 
+  test("sliding mean rounds an exact 7th-decimal tie HALF_UP, batch and drain") {
+    import spark.implicits._
+    // 31 events of 10.00 and one of 34.41 inside one 15-minute slot, so
+    // each of its 4 sliding windows holds all 32: the exact mean
+    // 10.7628125 lies on a tie, and the double avg (34.41 has no exact
+    // binary form) lands just below it and rounds to 10.762812
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:01:00").getTime
+    val rows = (0L until 32L).map { i =>
+      (i, new java.sql.Timestamp(t0 + i * 1000L), i % 3, "view",
+        if (i == 31) 34.41 else 10.0, "{}")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_sliding_tie_")
+    try {
+      // one parquet FILE, like the source: the drain stages it by copy
+      val tmp = dir.resolve("tmp")
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(part.length == 1)
+      java.nio.file.Files.move(part.head.toPath, dir.resolve("events.parquet"))
+      for (key <- Seq("stream_sliding", "stream_sliding_drain")) {
+        val got = SparkEntry.queries(key)(spark, dir.toString).collect()
+          .map(r => (r.getAs[Double]("avg_value"), r.getAs[Long]("n"))).toSeq
+        assert(got === Seq.fill(4)((10.762813, 32L)), key)
+      }
+    } finally {
+      Staging.retire(Tables.sourceFingerprint(Tables.path(dir.toString, "events")))
+      Staging.deleteRecursively(dir)
+    }
+  }
+
   private def statefulCounts(maxFiles: Int): Map[Long, Long] = {
     import spark.implicits._
     Streams.drain(
