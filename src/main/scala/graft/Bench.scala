@@ -9,8 +9,8 @@ object Bench {
   // That IS the production read path (indexes are built once, read per
   // query), but cross-round bench diffs for these keys compare reads,
   // not builds — annotated so a diff is never misread as a compute
-  // speedup. Build costs are measured cold in tools/ScaleProbe +
-  // tools/AnnScaleProbe instead.
+  // speedup. Build costs are measured cold in tools/ScaleProbe
+  // instead.
   //
   // Warm-up contract + cold-start simulation (r11): the untimed warm-up
   // below force-builds every stagedReadKeys artifact plus the split

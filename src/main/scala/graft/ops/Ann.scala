@@ -426,11 +426,11 @@ object Ann {
       * Pairs are generated ONLY within cells of a Lloyd-refined inverted
       * file whose cell count is DERIVED FROM THE CORPUS:
       * C = max(16, ⌈√N⌉) (see [[semCells]] — r12 verdict item 2: the
-      * shared 16-cell toy artifact pinned Σ|cell|² ≈ N²/16 and KneeProbe
-      * measured the super-linear decade; with C ~ √N the within-cell
-      * pair mass is ~N^1.5/√N·balance ≈ N·√N/C — sub-quadratic by
-      * construction, and the candidate bound now GROWS with the corpus
-      * instead of degrading). Cross-cell near-dups are forfeit BY
+      * shared 16-cell toy artifact pinned Σ|cell|² ≈ N²/16 and the sf0.1
+      * replica tier measured the super-linear decade; with C ~ √N the
+      * within-cell pair mass is ~N^1.5/√N·balance ≈ N·√N/C —
+      * sub-quadratic by construction, and the candidate bound now GROWS
+      * with the corpus instead of degrading). Cross-cell near-dups are forfeit BY
       * CONTRACT (the standard SemDeDup trade; raise nprobe-style
       * multi-cell assignment if that loss matters). The self-join
       * shuffles on `cell` only, and vectors leave the plan before the
@@ -447,10 +447,10 @@ object Ann {
       * pairs form whenever the probe sets overlap, so near-dups that
       * straddle a cell split are found where the straddling actually
       * happens. The cap is the r14 perf fix: unconditional rank-2
-      * assignment measured 3.7×/warm-decade in KneeProbe (~4× candidate
-      * mass); boundary-capped mass is ~2× single-probe (measured at the
-      * gate corpora: recovers 47→86 flagged at sf0.001, vs 113 for the
-      * uncapped form at twice the cost) with the same Σ|cell|²
+      * assignment measured 3.7×/warm-decade on the sf0.1 replica tier
+      * (~4× candidate mass); boundary-capped mass is ~2× single-probe
+      * (measured at the gate corpora: recovers 47→86 flagged at sf0.001,
+      * vs 113 for the uncapped form at twice the cost) with the same Σ|cell|²
       * sub-quadratic bound at C = √N. A pair sharing BOTH probe cells
       * yields duplicate identical (vec_id, keeper, sim) rows; the
       * per-vector min-keeper window is insensitive to them (any survivor
@@ -463,9 +463,10 @@ object Ann {
     /** Two-level (hierarchically routed) semantic dedup — the sub-N^1.5
       * BUILD the single-level key's Scaladoc points at: `dedup_semantic`
       * scores every vector against all C = √N fine centroids (N·√N
-      * assignment — the measured 3.3×/decade build in KneeProbe), while
-      * this key routes in two hops: nearest of C1 = ⌈√C⌉ ≈ N^¼ coarse
-      * seeds first, then an exact argmin over only that bucket's fine
+      * assignment — the measured 3.3×/decade build on the sf0.1 replica
+      * tier), while this key routes in two hops: nearest of
+      * C1 = ⌈√C⌉ ≈ N^¼ coarse seeds first, then an exact argmin over
+      * only that bucket's fine
       * centroids — N·(C1 + C/C1) ≈ N^1.25 scored pairs for balanced
       * buckets. The trade is APPROXIMATE routing (a vector's true
       * nearest fine centroid may live in another coarse bucket), so the
@@ -1051,8 +1052,8 @@ object Ann {
     * actually lives). Measured on the gate corpora: ε = 0.1 keeps ~55%
     * of full-rank-2 multi-probe's cross-cell recoveries at HALF its
     * candidate mass (2.0× single-probe Σ|cell|² vs 4×) — full rank-2
-    * assignment measured 3.7×/warm-decade in KneeProbe (vs single's
-    * 2.4×), the r13 verdict's perf flag on this key. */
+    * assignment measured 3.7×/warm-decade on the sf0.1 replica tier
+    * (vs single's 2.4×), the r13 verdict's perf flag on this key. */
   private[graft] val MpBoundaryEps = 0.1
 
   /** Multi-probe inverted file: every BOUNDARY vector assigned to its two

@@ -107,21 +107,9 @@ object Multimodal {
     * a class while the pixels are identical: exactly the situation
     * byte-md5 dedup misses and perceptual dedup exists for. Geometry is
     * a function of the content key (≥8×8 for the aHash grid). */
-  def imageDupTable(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[MediaRec] = {
-    import s.implicits._
-    Tables.table(s, dir, "documents")
-      .select(col("doc_id"),
-        when(col("doc_id") % 2 === 0, lit("png")).otherwise(lit("bmp"))
-          .as("fmt"),
-        (col("doc_id") % 49).as("ck"),
-        ((col("doc_id") % 49) % 17 + 8).cast("int").as("width"),
-        ((col("doc_id") % 49) % 13 + 8).cast("int").as("height"))
-      .as[ImageDupMeta]
-      .mapPartitions(_.map { m =>
-        MediaRec(m.doc_id, m.fmt, m.width, m.height,
-          MediaCodec.encodeImage(m.fmt, m.ck, m.width, m.height))
-      })
-  }
+  def imageDupTable(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[MediaRec] =
+    imageClassTable(s, dir)(m =>
+      MediaCodec.encodeImage(m.fmt, m.ck, m.width, m.height))
 
   /** Near-dup image fixture: same content classes as [[imageDupTable]]
     * (ck = doc_id % 49), but ODD docs carry the NEAR variant — the
@@ -131,7 +119,17 @@ object Multimodal {
     * grouping misses and Hamming banding exists for. Containers still
     * alternate by parity (base = png, near = bmp), so every near-pair
     * is ALSO cross-format. */
-  def imageNearDupTable(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[MediaRec] = {
+  def imageNearDupTable(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[MediaRec] =
+    imageClassTable(s, dir)(m =>
+      MediaCodec.encodeImageNear(m.fmt, m.ck, m.width, m.height,
+        if (m.doc_id % 2 == 1) 96 else 0))
+
+  /** The image-dedup fixtures' metadata, one row per document: container
+    * by doc_id parity (png even, bmp odd), content key `ck` = doc_id % 49
+    * and a geometry that is a function of `ck`; `encode` renders each
+    * row's payload. */
+  private def imageClassTable(s: SparkSession, dir: String)(
+      encode: ImageDupMeta => Array[Byte]): org.apache.spark.sql.Dataset[MediaRec] = {
     import s.implicits._
     Tables.table(s, dir, "documents")
       .select(col("doc_id"),
@@ -141,11 +139,8 @@ object Multimodal {
         ((col("doc_id") % 49) % 17 + 8).cast("int").as("width"),
         ((col("doc_id") % 49) % 13 + 8).cast("int").as("height"))
       .as[ImageDupMeta]
-      .mapPartitions(_.map { m =>
-        MediaRec(m.doc_id, m.fmt, m.width, m.height,
-          MediaCodec.encodeImageNear(m.fmt, m.ck, m.width, m.height,
-            if (m.doc_id % 2 == 1) 96 else 0))
-      })
+      .mapPartitions(_.map(m =>
+        MediaRec(m.doc_id, m.fmt, m.width, m.height, encode(m))))
   }
 
   val queries: Map[String, Q] = Map(

@@ -310,6 +310,22 @@ object Sinks {
       .where(cellKey.isin(touched.map(t => s"${t._1}#${t._2}").toSeq: _*))
   }
 
+  /** The rows of the cells two published versions of a store disagree
+    * on, read from each version: the changed cells are the manifest diff
+    * ([[cellManifest]]; carried-over cells match file for file), and both
+    * reads are partition-pruned to them ([[prunedCellRows]]), so a change
+    * feed's work is proportional to the rewritten data, never the table. */
+  private def changedCellRows(s: SparkSession, aRoot: String, bRoot: String,
+                              cols: String*): (DataFrame, DataFrame) = {
+    val ma = cellManifest(java.nio.file.Paths.get(aRoot))
+    val mb = cellManifest(java.nio.file.Paths.get(bRoot))
+    val changed = (ma.keySet ++ mb.keySet).filter(c => ma.get(c) != mb.get(c))
+    def rows(root: String) =
+      prunedCellRows(graft.Tables.memoizedDirRead(s, root), changed)
+        .select(cols.map(col): _*)
+    (rows(aRoot), rows(bRoot))
+  }
+
   /** One-file-per-cell rewrite of a commit's surviving rows. */
   private def writeCells(df: DataFrame, tmp: java.nio.file.Path): Unit =
     df.repartition(col("day"), col("bkt"))
@@ -318,7 +334,7 @@ object Sinks {
       .parquet(tmp.toString)
 
   /** Carry untouched cells over byte-identical. Streams are closed
-    * (fd leak otherwise — Bench/KneeProbe rebuild this in long-lived
+    * (fd leak otherwise — Bench/ScaleProbe rebuild this in long-lived
     * JVMs), and the bkt= parse runs only AFTER the prefix guard so a
     * stray marker file under a day directory can't abort the publish
     * with a NumberFormatException (r14 review findings). */
@@ -897,29 +913,15 @@ object Sinks {
     // the oracle pins that emptiness). Row-level output, totally ordered
     // by the key.
     "sink_change_feed" -> ((s, dir) => {
-      import java.nio.file.Paths
-      val v0Root = ensureRetentionStore(s, dir)
-      val v1Root = ensureDeletedStore(s, dir)
-      val m0 = cellManifest(Paths.get(v0Root))
-      val m1 = cellManifest(Paths.get(v1Root))
-      val changed = (m0.keySet ++ m1.keySet)
-        .filter(c => m0.get(c) != m1.get(c)).toSeq.sorted
-      val days = changed.map(_._1).distinct
-      val bkts = changed.map(_._2).distinct
-      val cellKey = concat_ws("#", col("day").cast("string"),
-        col("bkt").cast("string"))
-      def cellRows(root: String) = graft.Tables.memoizedDirRead(s, root)
-        .where(col("day").isin(days.map(java.sql.Date.valueOf): _*) &&
-          col("bkt").isin(bkts: _*))
-        .where(cellKey.isin(changed.map(c => s"${c._1}#${c._2}"): _*))
-        .select(col("event_id"), col("user_id"), col("day"))
+      val (v0, v1Rows) = changedCellRows(s, ensureRetentionStore(s, dir),
+        ensureDeletedStore(s, dir), "event_id", "user_id", "day")
       // ONE full-outer join computes both diff directions (null right =
       // delete, null left = insert): the two-anti-join form scanned each
       // version's changed cells TWICE — doubling exactly the touched-cell
       // I/O this key's contract bounds (r15 review finding).
-      val v1 = cellRows(v1Root).select(col("event_id").as("b_id"),
+      val v1 = v1Rows.select(col("event_id").as("b_id"),
         col("user_id").as("b_user"), col("day").as("b_day"))
-      cellRows(v0Root)
+      v0
         .join(v1, col("event_id") === col("b_id"), "full_outer")
         .where(col("event_id").isNull || col("b_id").isNull)
         .select(
@@ -942,23 +944,9 @@ object Sinks {
     // proportional to the touched cells: both reads partition-prune to
     // the manifest-diffed day×bkt cells exactly like the delete-leg key.
     "sink_change_feed_upsert" -> ((s, dir) => {
-      import java.nio.file.Paths
-      val v1Root = ensureDeletedStore(s, dir)
-      val v2Root = ensureUpsertedStore(s, dir)
-      val m1 = cellManifest(Paths.get(v1Root))
-      val m2 = cellManifest(Paths.get(v2Root))
-      val changed = (m1.keySet ++ m2.keySet)
-        .filter(c => m1.get(c) != m2.get(c)).toSeq.sorted
-      val days = changed.map(_._1).distinct
-      val bkts = changed.map(_._2).distinct
-      val cellKey = concat_ws("#", col("day").cast("string"),
-        col("bkt").cast("string"))
-      def cellRows(root: String) = graft.Tables.memoizedDirRead(s, root)
-        .where(col("day").isin(days.map(java.sql.Date.valueOf): _*) &&
-          col("bkt").isin(bkts: _*))
-        .where(cellKey.isin(changed.map(c => s"${c._1}#${c._2}"): _*))
-        .select(col("event_id"), col("user_id"), col("day"), col("value"))
-      val v2 = cellRows(v2Root).select(col("event_id").as("b_id"),
+      val (v1, v2Rows) = changedCellRows(s, ensureDeletedStore(s, dir),
+        ensureUpsertedStore(s, dir), "event_id", "user_id", "day", "value")
+      val v2 = v2Rows.select(col("event_id").as("b_id"),
         col("user_id").as("b_user"), col("day").as("b_day"),
         col("value").as("b_value"))
       val cents = (c: org.apache.spark.sql.Column) =>
@@ -970,7 +958,7 @@ object Sinks {
         struct(id.as("event_id"), user.as("user_id"),
           day.cast("timestamp").as("day"), lit(tpe).as("change_type"),
           cents(v).as("cents"))
-      cellRows(v1Root)
+      v1
         .join(v2, col("event_id") === col("b_id"), "full_outer")
         .select(explode(
           when(col("b_id").isNull, array(change("delete", col("event_id"),

@@ -170,6 +170,23 @@ object Windows {
       .orderBy("event_type")
   }
 
+  /** `win_time_range`: per-event trailing 1 h RANGE window per user
+    * (count and integer-cents sum), run by Spark and by the DuckDB oracle
+    * as the same text. The outer CAST(... AS BIGINT) on the windowed sum
+    * is load-bearing on the ORACLE side: DuckDB widens integer sum() to
+    * INT128 (HUGEINT), which the driver's hasher materializes as float64,
+    * breaking the hash against Spark's BIGINT even when every value
+    * matches (r9 verdict). */
+  private val TimeRangeSql =
+    """SELECT user_id, event_id, date_trunc('second', ts) AS ts_s,
+      |  count(*) OVER w AS n_1h,
+      |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS cents_1h
+      |FROM events
+      |WINDOW w AS (PARTITION BY user_id
+      |  ORDER BY date_trunc('second', ts)
+      |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+      |ORDER BY user_id, event_id""".stripMargin
+
   val queries: Map[String, Q] = Map(
     // Sequential changepoint DETECTION over the dense hourly spine
     // (round 19) — the decision readout win_cusum's statistic feeds:
@@ -803,15 +820,7 @@ object Windows {
 
     "win_time_range" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT user_id, event_id, date_trunc('second', ts) AS ts_s,
-          |  count(*) OVER w AS n_1h,
-          |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS cents_1h
-          |FROM events
-          |WINDOW w AS (PARTITION BY user_id
-          |  ORDER BY date_trunc('second', ts)
-          |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-          |ORDER BY user_id, event_id""".stripMargin)
+      s.sql(TimeRangeSql)
     }),
 
     // Gap imputation — forward-fill + backward-fill of a sparse
@@ -1269,19 +1278,7 @@ object Windows {
        "round(CAST(n AS DOUBLE) - " +
        "CAST(s1 AS DOUBLE) / CAST(cnt AS DOUBLE), 6) AS residual " +
        "FROM k ORDER BY event_type, hw"),
-    // The outer CAST(... AS BIGINT) on the windowed sum is load-bearing on
-    // the ORACLE side: DuckDB widens integer sum() to INT128 (HUGEINT),
-    // which the driver's hasher materializes as float64, breaking the hash
-    // against Spark's BIGINT even when every value matches (r9 verdict).
-    "win_time_range" ->
-      """SELECT user_id, event_id, date_trunc('second', ts) AS ts_s,
-        |  count(*) OVER w AS n_1h,
-        |  CAST(sum(CAST(round(value*100) AS BIGINT)) OVER w AS BIGINT) AS cents_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |  ORDER BY date_trunc('second', ts)
-        |  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
+    "win_time_range" -> TimeRangeSql,
     "win_distribution" ->
       ("SELECT o_orderpriority AS prio, o_orderkey, " +
        "round(percent_rank() OVER (PARTITION BY o_orderpriority " +

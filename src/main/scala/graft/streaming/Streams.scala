@@ -324,6 +324,28 @@ object Streams {
          unix_micros(col("session_window.start"))).as("dur_us"))
       .orderBy("user_id", "start_us")
 
+  /** The view → click attribution join of `stream_stream_join` and its
+    * outer twin: both sides read the staged events stream, keep one
+    * event type, rename to `{p}_uid` / `{p}_ts` (second-truncated) /
+    * `{p}_id` and watermark 1 h; a click matches a view of the same user
+    * within the following 30 min. Output `(v_id, c_id)`. */
+  private def viewClickJoin(s: SparkSession, dir: String,
+                            joinType: String): DataFrame = {
+    val src = stageDir(Tables.path(dir, "events"))
+    def side(t: String, p: String) = eventsStreamDir(s, src)
+      .where(col("event_type") === t)
+      .select(col("user_id").as(s"${p}_uid"),
+        date_trunc("second", col("ts")).as(s"${p}_ts"),
+        col("event_id").as(s"${p}_id"))
+      .withWatermark(s"${p}_ts", "1 hour")
+    side("view", "v").join(side("click", "c"),
+      col("v_uid") === col("c_uid") &&
+        col("c_ts") >= col("v_ts") &&
+        col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
+      joinType)
+      .select(col("v_id"), col("c_id"))
+  }
+
   val queries: Map[String, Q] = Map(
 
     // Stream-static join: the event stream enriched against the static
@@ -510,22 +532,11 @@ object Streams {
     // StreamingSpec additionally runs the unordered multi-batch variant
     // (output ⊆ batch, never invented pairs).
     "stream_stream_join" -> ((s, dir) => {
-      val src = stageDir(Tables.path(dir, "events"))
-      def side(t: String, p: String) = eventsStreamDir(s, src)
-        .where(col("event_type") === t)
-        .select(col("user_id").as(s"${p}_uid"),
-          date_trunc("second", col("ts")).as(s"${p}_ts"),
-          col("event_id").as(s"${p}_id"))
-        .withWatermark(s"${p}_ts", "1 hour")
-      val joined = side("view", "v").join(side("click", "c"),
-        col("v_uid") === col("c_uid") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"))
-        .select(col("v_id"), col("c_id"))
       // Inner-join matches emit IN the data batch; the no-data batch only
       // evicts state — skip it (StreamingSpec + the DuckDB oracle pin the
       // output either way).
-      drain(joined, OutputMode.Append(), noDataBatch = Some(false))
+      drain(viewClickJoin(s, dir, "inner"), OutputMode.Append(),
+        noDataBatch = Some(false))
         .orderBy("v_id", "c_id")
     }),
 
@@ -549,20 +560,7 @@ object Streams {
     // key keeps drain()'s Append default instead of the inner key's
     // noDataBatch=false.
     "stream_stream_join_outer" -> ((s, dir) => {
-      val src = stageDir(Tables.path(dir, "events"))
-      def side(t: String, p: String) = eventsStreamDir(s, src)
-        .where(col("event_type") === t)
-        .select(col("user_id").as(s"${p}_uid"),
-          date_trunc("second", col("ts")).as(s"${p}_ts"),
-          col("event_id").as(s"${p}_id"))
-        .withWatermark(s"${p}_ts", "1 hour")
-      val joined = side("view", "v").join(side("click", "c"),
-        col("v_uid") === col("c_uid") &&
-          col("c_ts") >= col("v_ts") &&
-          col("c_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-        .select(col("v_id"), col("c_id"))
-      drain(joined, OutputMode.Append())
+      drain(viewClickJoin(s, dir, "left_outer"), OutputMode.Append())
         .orderBy(col("v_id"), col("c_id").asc_nulls_first)
     }),
 

@@ -1,37 +1,55 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, Staging, Tables}
 import graft.ops.{Dedup, Pipeline}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Scale smoke probe for the two heaviest pipelines (`dedup_cluster`,
-  * `pipeline_clean_pack`): synthesizes corpora at 1×, 10× and 100× the
-  * bench document count in the spec-fixture style (seeded vocab draws
-  * with planted single-token-mutation near-dups at a fixed 5% rate, so
-  * the near-dup pair density stays per-doc-constant as N grows), runs
-  * both queries end-to-end COLD (staging artifact builds included —
-  * that is the honest full cost), and checks the two properties the
-  * 100 TB claim rests on, per decade:
+/** The scale harness: re-measures the "linear in N" claims the heavy
+  * keys rest on. A corpus SHAPE writes one leg per multiplier into a
+  * fresh temp dir; on each leg every key runs cold (staged-artifact
+  * builds included, the honest full cost), then warm (reading what the
+  * cold run staged, the per-query price once the artifacts exist), and
+  * each of those walls must stay within 20× of the previous leg's
+  * (linear is 10× a decade; quadratic's 100× must be unambiguously out).
+  * The leg's tables and every artifact keyed by them are retired before
+  * the next leg is written. Before the first leg every key runs once on
+  * the sf0.001 testdata with staging bypassed, so leg 1 does not absorb
+  * the JVM's one-time JIT and codegen cost.
   *
-  *   1. wall time grows ~linearly in N (each 10× step's ratio well
-  *      under quadratic);
-  *   2. the CC fixpoint's round count stays near-flat (pointer jumping
-  *      makes it O(log diameter), and planted dup-chains grow diameter
-  *      only logarithmically in N).
+  * Shapes: `docs`, `dupheavy`, `chain`, `events` and `vectors` are
+  * seeded synthetic corpora of n = base × mult rows (default base 5000);
+  * `replica` is the sf tables at mult× ([[writeReplica]]; default sfDir
+  * the sf0.1 testdata). `dupheavy` arms the two documented
+  * duplicate-heavy postures, and every synthetic shape arms the
+  * df-ordered PPJoin prefix (lossless; the synthetic corpora are
+  * Zipf-ish, and at 500k docs the lexicographic prefix's hot-gram
+  * fan-out overruns the spill volume), while `replica` runs the default
+  * plans; `GRAFT_HOTGRAM_CAP` sets `graft.ngram.hotGramCap`.
   *
-  * Not part of the driver contract; run manually, numbers recorded in
-  * ROUND4_NOTES.md / ROUND6_NOTES.md. Exit code 1 on a violated bound.
+  * Checks beyond the wall gate: `dedup_cluster`'s CC round count may
+  * grow by at most 3 over the probed range (O(log diameter); reported
+  * but not gated on `chain`, whose planted component's diameter grows
+  * linearly), and `stream_upsert_snapshot` must return one row per
+  * distinct user of the leg's events.
+  *
+  * Keys are declared keys plus probe-local ones: `ngram_pairs` (the
+  * staged PPJoin pair list, so a `dedup_cluster` listed after it times
+  * the CC fixpoint alone) and `prefix_lex`, `prefix_df`, `prefix_cap256`
+  * (the three PPJoin prefix postures over one checkpointed gram relation
+  * of the leg's documents; `prefix` names all three, and their warm walls
+  * compare the postures, since the first cold wall also builds the gram
+  * relation).
+  *
+  * Not part of the driver contract; run by hand. Exit code 1 on a
+  * violated bound.
+  * Usage: runMain graft.tools.ScaleProbe <shape> <key,...|prefix> [base|sfDir] [mult...]
   */
 object ScaleProbe {
 
-  /** Retire a probe leg: delete the temp corpus and every staged
-    * artifact keyed by its fingerprint (shared by all probe modes and
-    * AnnScaleProbe — a forgotten retire leaks per-run gigabytes in tmp,
-    * since a deleted corpus's fingerprint can never be re-hit). */
-  private[tools] def retireLeg(dir: String, sourceFile: String): Unit = {
-    val fp = graft.Tables.sourceFingerprint(s"$dir/$sourceFile")
-    graft.Staging.deleteRecursively(java.nio.file.Paths.get(dir))
-    graft.Staging.retire(fp)
-  }
+  private val Shapes = Seq("docs", "dupheavy", "chain", "events", "vectors", "replica")
+  private val PrefixKeys = Seq("prefix_lex", "prefix_df", "prefix_cap256")
 
   /** Deterministic corpus in the documents schema. ~5% of docs are a
     * one-token mutation of a random EARLIER doc (trigram Jaccard ≈
@@ -63,13 +81,17 @@ object ScaleProbe {
     }
   }
 
-  /** Duplicate-heavy variant (`dupheavy` mode): ~20% of docs are EXACT
+  /** Duplicate-heavy variant (`dupheavy`): ~20% of docs are EXACT
     * copies of one of 10 fixed hub docs, so copies-per-hub grows linearly
     * with n and the full near-dup pair graph grows QUADRATICALLY per
     * decade (10 hubs × (0.02·n)² edges — ~5·10⁸ at the 500k leg, which no
     * pair-materializing plan survives). This is the corpus shape
     * `graft.dedup.groupExact` exists for: star edges to the per-text rep
-    * + a near-dup join over distinct texts keep the CC edge set linear. */
+    * + a near-dup join over distinct texts keep the CC edge set linear;
+    * the pair reports' plain output is quadratic here by the same
+    * argument, so the shape runs their grouped variant
+    * (`graft.dedup.groupedReport`, GroupedReportSpec proves it expands
+    * losslessly). */
   def corpusDupHeavy(n: Int, seed: Long): Seq[(Long, String, String, String, Int)] = {
     val baseDocs = corpus(n, seed)
     val rnd = new scala.util.Random(seed * 31 + 7)
@@ -81,7 +103,7 @@ object ScaleProbe {
     }
   }
 
-  /** Pathological-component variant (`chain` mode): every 50th doc is a
+  /** Pathological-component variant (`chain`): every 50th doc is a
     * single-token mutation of the PREVIOUS chain member, so the pair
     * graph contains ONE component whose diameter grows LINEARLY in n
     * (n/50 members — ~10⁴ at the 500k leg). Chain docs are a fixed 50
@@ -110,15 +132,7 @@ object ScaleProbe {
     base.toSeq
   }
 
-  /** Text-analysis keys for `text` mode — the heaviest of the family
-    * (corpus-wide joins / token self-joins). The NLL keys stage their
-    * token relations per corpus version, so each leg's first run — the
-    * one timed here — is cold and includes the artifact build; leg
-    * cleanup must retire those artifacts like the dedup/ANN modes do. */
-  private val TextKeys = Seq("text_tfidf", "text_unigram_nll",
-    "text_bigram_nll", "text_heavy_hitters")
-
-  /** Synthetic events corpus for `upsert` mode (raw-parquet schema: long
+  /** Synthetic events corpus (`events`; raw-parquet schema: long
     * nanosecond ts, µs-granular like the driver's data). user_id is drawn
     * from n/10 keys, so the upsert snapshot grows linearly with the
     * stream and each event has ~10 same-key rivals — the honest CDC
@@ -137,239 +151,180 @@ object ScaleProbe {
     }
   }
 
+  /** Embeddings corpus (`vectors`): dim-64 float vectors whose element i
+    * of vector `id` is a seeded xxhash64 draw of (id, i), so the corpus
+    * is identical under any partitioning. */
+  def vectorsCorpus(spark: SparkSession, n: Int): DataFrame =
+    spark.range(n).select(
+      col("id").as("vec_id"),
+      transform(sequence(lit(1), lit(64)), i =>
+        ((pmod(xxhash64(col("id"), i), lit(2000001)) - lit(1000000)) / 1e6)
+          .cast("float")).as("embedding"),
+      pmod(col("id"), lit(10)).cast("int").as("label"))
+
+  /** The sf tables at m×: the drift-safe scale-up (identical value
+    * distributions, m× rows, unique ids; fresh random data would change
+    * the very densities the scale postures react to). Replica k offsets
+    * each table's ids by k × the table's offset:
+    *  - events: `event_id`, `user_id` (+k·10⁸);
+    *  - customer: `c_custkey` (+k·10⁷), `c_name` regenerated from the
+    *    key (the name carries the entity id the ER keys block on; copied
+    *    names would fabricate cross-replica matches);
+    *  - orders: `o_orderkey` (+k·10⁸) and `o_custkey` (+k·10⁷), so every
+    *    order references its own replica's customer;
+    *  - documents: `doc_id` (+k·10⁷), text + 14 salt tokens shared by
+    *    every doc of replica k: within a replica the shared salt grams
+    *    only raise a pair's Jaccard, so every near-dup pair survives,
+    *    while a doc's copies in two replicas cap at ~98/(98+32) ≈ 0.75
+    *    (a 100-token doc), below the 0.8 threshold — the pair graph is m
+    *    disjoint copies;
+    *  - embeddings: `vec_id` (+k·10⁶);
+    *  - every other table is copied once. */
+  private[graft] def writeReplica(spark: SparkSession, sfDir: String,
+                                  dir: String, m: Int): Unit = {
+    def rep(t: String, off: Long, ids: String*): DataFrame =
+      ids.foldLeft(Tables.table(spark, sfDir, t)
+          .withColumn("k", explode(sequence(lit(0), lit(m - 1)))))(
+        (d, c) => d.withColumn(c, col(c) + col("k") * off))
+    val salt = concat_ws(" ", (0 until 14).map(j =>
+      concat(lit("z"), col("k"), lit("w" + j))): _*)
+    val replicas = Map(
+      "events" -> rep("events", 100000000L, "event_id", "user_id"),
+      "customer" -> rep("customer", 10000000L, "c_custkey").withColumn("c_name",
+        concat(lit("Customer#"), lpad(col("c_custkey").cast("string"), 9, "0"))),
+      "orders" -> rep("orders", 100000000L, "o_orderkey")
+        .withColumn("o_custkey", col("o_custkey") + col("k") * 10000000L),
+      "documents" -> rep("documents", 10000000L, "doc_id")
+        .withColumn("text", concat(col("text"), lit(" "), salt)),
+      "embeddings" -> rep("embeddings", 1000000L, "vec_id"))
+    new java.io.File(sfDir).list().filter(_.endsWith(".parquet")).sorted
+      .map(_.stripSuffix(".parquet")).foreach { t =>
+        replicas.get(t).fold(Tables.table(spark, sfDir, t))(_.drop("k"))
+          .repartition(4).write.parquet(Tables.path(dir, t))
+      }
+  }
+
+  /** The key runner of a leg's corpus in `dir`: declared keys plus the
+    * probe-local ones (see the object doc). */
+  private def runner(spark: SparkSession, dir: String): String => DataFrame = {
+    lazy val grams = Dedup.ngramGrams(
+      Tables.table(spark, dir, "documents").select("doc_id", "text"))
+      .localCheckpoint(true)
+    (key: String) => key match {
+      case "ngram_pairs" => Dedup.ngramPairs(spark, dir)
+      case "prefix_lex" => Dedup.ngramJaccardFromGrams(grams)
+      case "prefix_df" => Dedup.ngramJaccardFromGrams(grams, dfOrderedPrefix = true)
+      case "prefix_cap256" => Dedup.ngramJaccardFromGrams(grams,
+        dfOrderedPrefix = true, hotGramCap = Some(256L))
+      case k => SparkEntry.queries(k)(spark, dir)
+    }
+  }
+
+  /** Delete a leg's corpus and every staged artifact keyed by its tables'
+    * fingerprints (taken before the delete): a deleted corpus's
+    * fingerprint can never be re-hit, so a forgotten retire leaks its
+    * artifacts (a 500k-doc leg's trigram relation is ~1 GB). */
+  private def retireLeg(dir: String): Unit = {
+    val fps = new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet"))
+      .map(t => Tables.sourceFingerprint(s"$dir/$t"))
+    Staging.deleteRecursively(Paths.get(dir))
+    fps.foreach(Staging.retire)
+  }
+
+  private def timed(f: => Long): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val r = f
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.filter(Set("dupheavy", "text", "chain", "upsert"))
-      .getOrElse("")
-    val dupHeavy = mode == "dupheavy"
-    val textMode = mode == "text"
-    val chainMode = mode == "chain"
-    val upsertMode = mode == "upsert"
-    val rest = if (mode.nonEmpty) args.drop(1) else args
-    val base = rest.headOption.map(_.toInt).getOrElse(5000)
+    require(args.length >= 2 && Shapes.contains(args(0)),
+      s"usage: ScaleProbe <${Shapes.mkString("|")}> <key,...|prefix> " +
+        "[base|sfDir] [mult...]")
+    val shape = args(0)
+    val keys = if (args(1) == "prefix") PrefixKeys else args(1).split(",").toSeq
+    val unknown = keys.filterNot(k => SparkEntry.queries.contains(k) ||
+      k == "ngram_pairs" || PrefixKeys.contains(k))
+    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(",")}")
+    val mults = if (args.length > 3) args.drop(3).map(_.toInt).toSeq
+                else Seq(1, 10, 100)
     val spark = GraftSession.local(GraftSession.cpus)
-    // The documented Zipfian-corpus posture (LOSSLESS — identical pair
-    // set, see Dedup.ngramPairs): rarest-grams-first prefix indexing.
-    // The probe corpus is deliberately Zipf-ish, and at the 500k leg the
-    // default lexicographic prefix's hot-gram fan-out (quadratic in gram
-    // df) overruns the box's spill volume — this flag IS the scale path
-    // under test.
-    spark.conf.set("graft.ngram.dfOrderedPrefix", "true")
-    // dupheavy mode arms the documented duplicate-heavy posture
-    // (LOSSLESS — PipelineSpec asserts label equality): without it the
-    // 500k leg's pair graph alone is ~5·10⁸ edges.
-    if (dupHeavy) spark.conf.set("graft.dedup.groupExact", "true")
-    // Env passthrough for conf-gated postures, so extended decades can be
-    // probed under the documented scale defenses without a code edit.
-    // The 5M leg measurably NEEDS these: the fixed-2000-word probe vocab
-    // makes every gram's df grow linearly with n, so the (lossless) prefix
-    // candidate volume grows quadratically — the regime
-    // graft.ngram.hotGramCap exists for.
+    if (shape != "replica") spark.conf.set("graft.ngram.dfOrderedPrefix", "true")
     sys.env.get("GRAFT_HOTGRAM_CAP")
       .foreach(spark.conf.set("graft.ngram.hotGramCap", _))
+    if (shape == "dupheavy") {
+      spark.conf.set("graft.dedup.groupExact", "true")
+      spark.conf.set("graft.dedup.groupedReport", "true")
+    }
     import spark.implicits._
+    val write: (String, Int) => Unit = if (shape == "replica") {
+      val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
+      (dir, m) => writeReplica(spark, sfDir, dir, m)
+    } else {
+      val base = args.lift(2).map(_.toInt).getOrElse(5000)
+      def docs(rows: Seq[(Long, String, String, String, Int)]) =
+        rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+      (dir, mult) => {
+        val n = base * mult
+        val (table, df) = shape match {
+          case "docs" => ("documents", docs(corpus(n, seed = 7)))
+          case "dupheavy" => ("documents", docs(corpusDupHeavy(n, seed = 7)))
+          case "chain" => ("documents", docs(corpusChain(n, seed = 7)))
+          case "events" => ("events", eventsCorpus(n, seed = 7)
+            .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
+          case "vectors" => ("embeddings", vectorsCorpus(spark, n))
+        }
+        df.coalesce(math.max(4, n / 50000)).write.parquet(Tables.path(dir, table))
+      }
+    }
 
-    // JVM warm-up on the real sf0.001 corpus so scale-1 doesn't absorb
-    // one-time JIT/codegen cost that scale-10 then skips. Staging is
-    // bypassed so the FULL compute path (including the df-ordered prefix
-    // plan the legs will run) executes — a staged-artifact read would warm
-    // only the parquet scan and leave leg 1 paying all the codegen.
-    val warmKeys =
-      if (textMode) TextKeys
-      else if (chainMode) Seq("dedup_cluster")
-      else if (upsertMode) Seq("stream_upsert_snapshot")
-      else Seq("dedup_cluster", "pipeline_clean_pack",
-               "dedup_minhash", "dedup_simhash", "dedup_incremental")
     val stagingWas = sys.props.get("graft.staging")
     sys.props("graft.staging") = "false"
-    try warmKeys.foreach { k =>
-      SparkEntry.queries(k)(spark, "/root/testdata/sf0.001").count()
+    try {
+      val warm = runner(spark, "/root/testdata/sf0.001")
+      keys.foreach(k => warm(k).count())
     } finally stagingWas match {
       case Some(v) => sys.props("graft.staging") = v
       case None => sys.props -= "graft.staging"
     }
 
-    case class Leg(n: Int, wallCluster: Double, wallPack: Double,
-                   wallMinhash: Double, wallSimhash: Double,
-                   wallIncr: Double, rounds: Int)
-    val mults = if (rest.length > 1) rest.drop(1).map(_.toInt).toSeq
-                else Seq(1, 10, 100)
-
-    if (textMode) {
-      // Text family: per-leg cold walls for each key, same per-decade gate.
-      val legs = mults.map { mult =>
-        val n = base * mult
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-textscale-$n").toString
-        corpus(n, seed = 7)
-          .toDF("doc_id", "text", "lang", "source", "n_chars")
-          .coalesce(math.max(4, n / 50000)).write.mode("overwrite")
-          .parquet(s"$dir/documents.parquet")
-        val walls = TextKeys.map { k =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(k)(spark, dir).count()
-          k -> (System.nanoTime() - t0) / 1e9
-        }.toMap
-        println(f"[scale] n=$n%6d " + TextKeys.map(k =>
-          f"$k=${walls(k)}%6.1f s").mkString(" "))
-        retireLeg(dir, "documents.parquet")
-        (n, walls)
-      }
-      val ok = legs.sliding(2).collect { case Seq((na, a), (nb, b)) =>
-        TextKeys.map { k =>
-          val r = b(k) / a(k)
-          println(f"[scale] $na%d -> $nb%d $k ${r}%.1fx")
-          r <= 20
-        }.forall(identity)
-      }.forall(identity)
-      println(s"[scale] ${if (ok) "PASS" else "FAIL"}")
-      spark.stop()
-      if (!ok) sys.exit(1)
-      return
-    }
-    if (upsertMode) {
-      // CDC upsert sink: per-leg cold wall for stream_upsert_snapshot —
-      // the 4-file split staging, 4 micro-batch merge rounds, and the
-      // final snapshot read are ALL in the timed path (each leg uses a
-      // fresh corpus fingerprint, so nothing is cached across legs).
-      // Work per leg is O(n) split staging + 4 merges each O(snapshot +
-      // batch) = O(n), so the per-decade gate is the usual ≤20×.
-      // Self-check: snapshot rows == distinct user_ids.
-      val legs = mults.map { mult =>
-        val n = base * mult
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-upsertscale-$n").toString
-        eventsCorpus(n, seed = 7)
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(math.max(4, n / 250000)).write.mode("overwrite")
-          .parquet(s"$dir/events.parquet")
-        val t0 = System.nanoTime()
-        val snapRows =
-          SparkEntry.queries("stream_upsert_snapshot")(spark, dir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val users = spark.read.parquet(s"$dir/events.parquet")
-          .select("user_id").distinct().count()
-        require(snapRows == users,
-          s"upsert snapshot rows $snapRows != distinct users $users")
-        println(f"[scale] n=$n%7d stream_upsert_snapshot=$wall%6.1f s " +
-          f"(snapshot=$snapRows rows)")
-        // retires the split stream copy with every other artifact
-        // keyed by the corpus fingerprint
-        retireLeg(dir, "events.parquet")
-        (n, wall)
-      }
-      val ok = legs.sliding(2).collect { case Seq((na, a), (nb, b)) =>
-        val r = b / a
-        println(f"[scale] $na%d -> $nb%d stream_upsert_snapshot ${r}%.1fx")
-        r <= 20
-      }.forall(identity)
-      println(s"[scale] ${if (ok) "PASS" else "FAIL"}")
-      spark.stop()
-      if (!ok) sys.exit(1)
-      return
-    }
-    if (chainMode) {
-      // Planted pathological chain component: per leg, the staged pair
-      // list is built first and timed on its own, so the dedup_cluster
-      // wall that follows is the CC FIXPOINT (plus the label staging),
-      // not the PPJoin. The per-decade gate applies to the fixpoint wall.
-      case class CLeg(n: Int, wPairs: Double, wCc: Double, rounds: Int)
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      val legs = mults.map { mult =>
-        val n = base * mult
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-chainscale-$n").toString
-        corpusChain(n, seed = 7)
-          .toDF("doc_id", "text", "lang", "source", "n_chars")
-          .coalesce(math.max(4, n / 50000)).write.mode("overwrite")
-          .parquet(s"$dir/documents.parquet")
-        val (wPairs, pairs) = time(Dedup.ngramPairs(spark, dir).count())
-        val (wCc, labels) =
-          time(SparkEntry.queries("dedup_cluster")(spark, dir).count())
-        val rounds = Pipeline.lastCcRounds.get()
-        println(f"[scale] n=$n%7d pairs=$wPairs%6.1f s ($pairs pairs) " +
-          f"cc=$wCc%6.1f s ($rounds rounds) labels=$labels")
-        retireLeg(dir, "documents.parquet")
-        CLeg(n, wPairs, wCc, rounds)
-      }
-      val ok = legs.sliding(2).collect { case Seq(a, b) =>
-        val r = b.wCc / a.wCc
-        println(f"[scale] ${a.n}%d -> ${b.n}%d: pairs ${b.wPairs / a.wPairs}%.1fx " +
-          f"cc ${r}%.1fx cc_rounds ${a.rounds} -> ${b.rounds}")
-        r <= 20
-      }.forall(identity)
-      println(s"[scale] ${if (ok) "PASS" else "FAIL"}")
-      spark.stop()
-      if (!ok) sys.exit(1)
-      return
-    }
+    case class Leg(mult: Int, walls: Seq[(String, Double)], rounds: Option[Int])
     val legs = mults.map { mult =>
-      val n = base * mult
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-scale-$n").toString
-      (if (dupHeavy) corpusDupHeavy(n, seed = 7) else corpus(n, seed = 7))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(math.max(4, n / 50000)).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-      def time(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val wc = time(SparkEntry.queries("dedup_cluster")(spark, dir).count())
-      val rounds = Pipeline.lastCcRounds.get()
-      val wp = time(SparkEntry.queries("pipeline_clean_pack")(spark, dir).count())
-      // The other near-dup families — band-LSH self-joins with their own
-      // hot-bucket exposure — measured on the same corpus and gated by
-      // the same per-decade ratio. In dupheavy mode their declared plain
-      // OUTPUT is inherently quadratic (every copy pairs with every
-      // copy), so the mode measures the GROUPED report variant
-      // (graft.dedup.groupedReport — pairs over distinct texts +
-      // multiplicities, the production report shape for a crawl corpus;
-      // GroupedReportSpec proves it expands losslessly).
-      if (dupHeavy) spark.conf.set("graft.dedup.groupedReport", "true")
-      val wm = time(SparkEntry.queries("dedup_minhash")(spark, dir).count())
-      val ws = time(SparkEntry.queries("dedup_simhash")(spark, dir).count())
-      // dupheavy: grouped ngram_jaccard rides the wi slot (the plain
-      // incremental key's declared output is batch × copies — quadratic
-      // on this corpus by the same argument as the pair reports).
-      // Default mode: incremental ingest (newest 10% vs older corpus,
-      // asymmetric PPJoin over the already-staged gram relation) — the
-      // ingest-cost scaling claim, measured like the rest.
-      val wi = time(SparkEntry.queries(
-        if (dupHeavy) "dedup_ngram_jaccard" else "dedup_incremental")(
-        spark, dir).count())
-      if (dupHeavy) spark.conf.unset("graft.dedup.groupedReport")
-      val labels =
-        if (dupHeavy) Seq("dedup_minhash(grp)", "dedup_simhash(grp)",
-          "dedup_ngram_jaccard(grp)")
-        else Seq("dedup_minhash", "dedup_simhash", "dedup_incremental")
-      println(f"[scale] n=$n%6d dedup_cluster=$wc%6.1f s (cc_rounds=$rounds) " +
-        f"pipeline_clean_pack=$wp%6.1f s ${labels(0)}=$wm%6.1f s " +
-        f"${labels(1)}=$ws%6.1f s ${labels(2)}=$wi%6.1f s")
-      retireLeg(dir, "documents.parquet")
-      Leg(n, wc, wp, wm, ws, wi, rounds)
+      val dir = Files.createTempDirectory(s"graft-scale-$shape-${mult}x").toString
+      try {
+        write(dir, mult)
+        val run = runner(spark, dir)
+        var rounds = Option.empty[Int]
+        val walls = keys.flatMap { k =>
+          val (cold, rows) = timed(run(k).count())
+          if (k == "dedup_cluster") rounds = Some(Pipeline.lastCcRounds.get())
+          if (k == "stream_upsert_snapshot") {
+            val users = spark.read.parquet(Tables.path(dir, "events"))
+              .select("user_id").distinct().count()
+            require(rows == users,
+              s"upsert snapshot rows $rows != distinct users $users")
+          }
+          val (warm, _) = timed(run(k).count())
+          println(f"[scale] $shape ${mult}x $k cold=$cold%6.1f s " +
+            f"warm=$warm%6.1f s rows=$rows" +
+            (if (k == "dedup_cluster") s" cc_rounds=${rounds.get}" else ""))
+          Seq(s"$k cold" -> cold, s"$k warm" -> warm)
+        }
+        Leg(mult, walls, rounds)
+      } finally retireLeg(dir)
     }
 
-    // Per-decade check: linear would be 10x each step; allow 2x slack
-    // for constant-overhead shifts and log-factor round growth.
-    // Quadratic (100x per decade) must be unambiguously out. Rounds may
-    // grow by at most +3 across the whole probed range (O(log diameter)).
-    val decades = legs.sliding(2).collect { case Seq(a, b) =>
-      val rc = b.wallCluster / a.wallCluster
-      val rp = b.wallPack / a.wallPack
-      val rm = b.wallMinhash / a.wallMinhash
-      val rs = b.wallSimhash / a.wallSimhash
-      val ri = b.wallIncr / a.wallIncr
-      println(f"[scale] ${a.n}%d -> ${b.n}%d: dedup_cluster ${rc}%.1fx  " +
-        f"pipeline_clean_pack ${rp}%.1fx  dedup_minhash ${rm}%.1fx  " +
-        f"dedup_simhash ${rs}%.1fx  dedup_incremental ${ri}%.1fx  " +
-        f"cc_rounds ${a.rounds} -> ${b.rounds}")
-      rc <= 20 && rp <= 20 && rm <= 20 && rs <= 20 && ri <= 20
-    }.toSeq
-    val roundsOk = legs.last.rounds <= legs.head.rounds + 3
-    val ok = decades.forall(identity) && roundsOk
+    val wallsOk = legs.zip(legs.drop(1)).flatMap { case (a, b) =>
+      a.walls.zip(b.walls).map { case ((k, wa), (_, wb)) =>
+        println(f"[scale] ${a.mult}x -> ${b.mult}x $k ${wb / wa}%.1fx")
+        wb / wa <= 20
+      }
+    }.forall(identity)
+    val rounds = legs.flatMap(_.rounds)
+    if (rounds.nonEmpty)
+      println(s"[scale] cc_rounds ${rounds.mkString(" -> ")}")
+    val roundsOk = shape == "chain" || rounds.isEmpty || rounds.last <= rounds.head + 3
+    val ok = wallsOk && roundsOk
     println(s"[scale] ${if (ok) "PASS" else "FAIL"}")
     spark.stop()
     if (!ok) sys.exit(1)
