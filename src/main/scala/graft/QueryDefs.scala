@@ -5,18 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object QueryDefs {
   /** The driver contract's query-function shape: (session, sfDir) => result. */
   type Q = (SparkSession, String) => DataFrame
-
-  /** Parse an optional integer tuning conf, naming the conf in the error —
-    * a bare `.toLong` on a mis-set knob (`hotGramCap=50k`) throws an
-    * anonymous NumberFormatException at plan time with no hint of WHICH
-    * conf is malformed. */
-  def longConf(s: SparkSession, key: String): Option[Long] =
-    s.conf.getOption(key).map { v =>
-      try v.toLong catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be an integer, got '$v'")
-      }
-    }
 }
 
 /** Memoized child sessions for keys whose semantics REQUIRE non-default

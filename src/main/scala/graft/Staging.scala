@@ -237,7 +237,8 @@ object Staging {
     * live fingerprint: no other rule can see it is dead). Append here
     * whenever a published name is renamed without a format bump. (The v3
     * bump retired the two names listed under v2.) */
-  private[graft] val retiredArtifactNames: Seq[String] = Seq.empty
+  private[graft] val retiredArtifactNames: Seq[String] =
+    Seq("ngram_pairs08_cap2_v1", "cc_labels08_cap2_v1")
 
   /** Fingerprints of every table file/dir the CURRENTLY-LIVE corpus
     * generations carry: `src`'s corpus root (its grandparent — corpora

@@ -15,11 +15,10 @@ import org.apache.spark.sql.functions._
   *    (pigeonhole: hamming ≤ 3 ⇒ ≥ 1 of 4 bands identical), never an
   *    all-pairs join, so cost tracks the number of genuine collisions.
   *  - `dedup_ngram_jaccard`: inverted-index join on shared trigrams —
-  *    pairs are generated per shared gram and hash-aggregated. For 100 TB
-  *    Zipfian corpora, `ngramJaccardFromGrams` offers a LOSSLESS
-  *    df-ordered prefix (rarest grams first) and an explicitly-lossy
-  *    hot-gram df-cap, both flag-gated; the LSH path (`dedup_minhash`)
-  *    is the constant-cost alternative.
+  *    pairs are generated per shared gram and hash-aggregated. Every
+  *    PPJoin prefix here takes the rarest grams first (the df order), so
+  *    a Zipfian corpus's hot grams stay out of the index; the LSH path
+  *    (`dedup_minhash`) is the constant-cost alternative.
   *  - `embed_neardup`: incoming-batch-vs-corpus shape — the small probe
   *    batch broadcasts and the corpus streams partition-local, O(B×N)
   *    with no corpus self-join.
@@ -61,9 +60,9 @@ object Dedup {
       .select(col("doc_id"), simhash(col("th")).as("fp"))
 
   /** Banded-LSH hamming ≤ 3 pairs from a (doc_id, fp) relation — the pure
-    * pair pipeline behind `dedup_simhash`, shared with its grouped-report
-    * variant. Candidates come ONLY from 15-bit band buckets (pigeonhole:
-    * hamming ≤ 3 ⇒ ≥ 1 of 4 bands identical), never an all-pairs join. */
+    * pair pipeline behind `dedup_simhash`. Candidates come ONLY from
+    * 15-bit band buckets (pigeonhole: hamming ≤ 3 ⇒ ≥ 1 of 4 bands
+    * identical), never an all-pairs join. */
   def simhashPairsFromFp(fps: DataFrame): DataFrame = {
     val banded = fps.select(col("doc_id"), col("fp"),
       explode(array((0 until SimBands).map { b =>
@@ -101,64 +100,28 @@ object Dedup {
       * LSH. ORACLED since round 16: the md5-keyed 60-bit fingerprints
       * replay in DuckDB (see simhashFp), so the fingerprint → band →
       * pair → hamming pipeline is hash-gated; SimhashSpec still pins the
-      * properties (identical docs → distance 0; near-dup agreement).
-      * `graft.dedup.groupedReport=true` switches to the duplicate-heavy
-      * grouped shape (see [[groupedReport]]). */
+      * properties (identical docs → distance 0; near-dup agreement). */
     "dedup_simhash" -> ((s, dir) =>
-      if (groupedReportOn(s))
-        // Staged per corpus version like the plain pair artifact: the
-        // grouped report is a pure function of the corpus text. THUNKED
-        // overload: building the report runs an eager localCheckpoint
-        // job, which must only happen on a cache miss.
-        graft.Staging.materialize(
-          s, Tables.path(dir, "documents"), "simhash_grouped_h3_md5_v1") {
-          groupedReport(Tables.table(s, dir, "documents")
-              .select(col("doc_id"), col("text")),
-            "hamming", lit(0), lit(true))(reps =>
-            simhashPairsFromFp(simhashFp(reps).localCheckpoint(true)))
-        }.orderBy("doc_a", "doc_b")
-      else {
-        // Stage the pair ARTIFACT per corpus version, like the trigram and
-        // minhash pair lists — order re-applied after the staged read.
-        graft.Staging.materialize(simhashPairsFromFp(simhashed(s, dir)),
-          Tables.path(dir, "documents"), "simhash_pairs_h3_md5_v1")
-          .orderBy("doc_a", "doc_b")
-      }),
+      // Stage the pair ARTIFACT per corpus version, like the trigram and
+      // minhash pair lists — order re-applied after the staged read.
+      graft.Staging.materialize(simhashPairsFromFp(simhashed(s, dir)),
+        Tables.path(dir, "documents"), "simhash_pairs_h3_md5_v1")
+        .orderBy("doc_a", "doc_b")),
 
     // Exact word-trigram Jaccard ≥ 0.8 with PPJoin-style prefix filtering:
     // index only the first |g| − ⌈0.8·|g|⌉ + 1 grams of each doc's gram
     // set under a shared global order (lossless for J ≥ 0.8: a qualifying
     // pair MUST share a prefix gram under ANY consistent total order).
-    // The order used is lexicographic (computed map-side for free). On a
-    // Zipfian production corpus, pass dfOrderedPrefix=true (rarest grams
-    // first — one extra df aggregation + join, still lossless) and
-    // optionally hotGramCap; measured HERE the df variant costs more than
-    // it saves because this corpus's trigram df is near-uniform.
+    // The order is rarest grams first ([[dfOrderedPrefixInv]]): one df
+    // aggregation + join buys prefixes free of a Zipfian corpus's hot
+    // grams, whose fan-out is quadratic in their df.
     // The exact |A∩B| / |A∪B| is then computed per candidate from the full
     // gram sets. ⌈0.8·s⌉ uses exact arithmetic (floor((4s+4)/5)) — a float
     // ceil can overshoot and silently shorten the prefix (= missed pairs).
     "dedup_ngram_jaccard" -> ((s, dir) =>
       // Staged pair list (see ngramPairs); re-apply the declared total
       // order after the staged read (a parquet round-trip keeps no order).
-      // `graft.dedup.groupedReport=true` switches to the duplicate-heavy
-      // grouped shape; the df-ordered/cap posture confs couple exactly as
-      // in ngramPairs so the rep-level PPJoin runs the same plan.
-      if (!groupedReportOn(s)) ngramPairs(s, dir).orderBy("doc_a", "doc_b")
-      else {
-        val posture = ngramPosture(s)
-        // Staged like the plain pair list; the cap posture is lossy and
-        // gets its own artifact name (dfOrdered alone is lossless — same
-        // pair set, same name), mirroring ngramPairs exactly. THUNKED:
-        // the build runs an eager localCheckpoint job — cache-miss only.
-        graft.Staging.materialize(s, Tables.path(dir, "documents"),
-          posture.artifact("ngram_grouped08")) {
-          groupedReport(Tables.table(s, dir, "documents")
-              .select(col("doc_id"), col("text")),
-            "jac", lit(1.0), size(split(lower(col("text")), " ")) >= 3)(reps =>
-            ngramJaccardFromGrams(ngramGrams(reps).localCheckpoint(true),
-              posture.dfOrdered, posture.cap))
-        }.orderBy("doc_a", "doc_b")
-      }),
+      ngramPairs(s, dir).orderBy("doc_a", "doc_b")),
 
     /** Incremental ingest dedup: the newest ~10% of docs (doc_id·10 ≥
       * 9·max_id — an integral boundary both engines compute identically)
@@ -179,24 +142,19 @@ object Dedup {
       val mx = Tables.table(s, dir, "documents").agg(max("doc_id").as("mx"))
         .localCheckpoint(false)
       val g2 = grams.crossJoin(broadcast(mx))
-      // Same posture as ngramPairs, minus the cap: it stays with the
-      // full-corpus path — running uncapped here only ever returns MORE
-      // pairs, which the cap's explicitly-lossy contract allows.
-      val dfOrdered = ngramPosture(s).dfOrdered
       val indexG =
         g2.where(col("doc_id") * 10 < col("mx") * 9).select("doc_id", "g")
-      // The index side's gram-df order is a pure function of the corpus
-      // version — staged like the gram relation, so each ingest batch
-      // pays batch-proportional work, not a corpus re-aggregation.
-      val stagedDf = if (!dfOrdered) None else Some(graft.Staging.materialize(
-        gramDfOf(indexG), Tables.path(dir, "documents"), "ngram_df_idx90_v1"))
       // LAZY barrier: the batch probe side feeds the prefix build AND the
       // verification-array attach — batch-sized (~10% of grams), so the
       // barrier is cheap and saves one staged-artifact scan + filter.
+      // The index side's gram df is a pure function of the corpus
+      // version — staged like the gram relation, so each ingest batch
+      // pays batch-proportional work, not a corpus re-aggregation.
       ngramJaccardAcross(
         g2.where(col("doc_id") * 10 >= col("mx") * 9).select("doc_id", "g")
           .localCheckpoint(false),
-        indexG, dfOrderedPrefix = dfOrdered, indexGramDf = stagedDf)
+        indexG, graft.Staging.materialize(gramDfOf(indexG),
+          Tables.path(dir, "documents"), "ngram_df_idx90_v1"))
         .orderBy("doc_id", "dup_id")
     }),
 
@@ -237,9 +195,9 @@ object Dedup {
     // container is much bigger (jac = inter/union shrinks with |B|).
     // Scale shape — never all-pairs: the threshold bounds only the
     // CONTAINED side, so the prefix filter is one-sided: A is probed by
-    // its first |A| − ⌈0.9|A|⌉ + 1 grams under the shared lexicographic
-    // order (the PPJoin losslessness proof needs nothing from B), the
-    // container side is the full inverted index, candidate mass =
+    // its first |A| − ⌈0.9|A|⌉ + 1 grams, rarest first (the PPJoin
+    // losslessness proof needs nothing from B), the container side is
+    // the full inverted index, candidate mass =
     // Σ_{A-prefix grams} df(gram) ≈ 10% of the naive inverted join.
     // Verification attaches both gram arrays candidate-bounded (the
     // verifyCandidates posture); the ≥ 0.9 test is EXACT integer
@@ -250,7 +208,7 @@ object Dedup {
       // pair lists live next to the corpus and update incrementally;
       // reports read them) — staged per corpus version, total order
       // re-applied after the staged read.
-      containmentPairs(s, dir),
+      containmentFromGrams(stagedGrams(s, dir)),
       Tables.path(dir, "documents"), "containment_pairs09_v1")
       .orderBy("doc_id", "container_id")),
 
@@ -270,10 +228,11 @@ object Dedup {
         .orderBy("doc_id"))
   )
 
-  /** The directional containment ≥ 0.9 pair computation (see the
-    * declared key's staging wrapper above). */
-  private def containmentPairs(s: SparkSession, dir: String): DataFrame = {
-      val grams = stagedGrams(s, dir)
+  /** The directional containment ≥ 0.9 pairs over a (doc_id, g: sorted
+    * trigram array) relation (see the declared key's staging wrapper
+    * above), factored out like [[ngramJaccardFromGrams]] so the property
+    * suite runs the same pipeline against a brute-force reference. */
+  private[graft] def containmentFromGrams(grams: DataFrame): DataFrame = {
       // Verification intersects 60-bit md5 gram hashes, not the gram
       // STRINGS: the candidate-pair joins would otherwise move ~1 KB of
       // text per row where 8 B/gram carries the same decision (measured
@@ -292,29 +251,15 @@ object Dedup {
       // SIZE bound sb ≥ ⌈0.9·sa⌉ (containment needs inter ≤ sb) prunes
       // candidates before the distinct (measured ~40% off at sf0.1).
       //
-      // r21 (VERDICT item 6): the probe prefix is DF-ORDERED (rarest
-      // corpus grams first) instead of lexicographic. Losslessness here
-      // is even simpler than PPJoin's: containment ≥ 0.9 means at most
-      // ⌊0.1·sa⌋ grams of A miss B, so ANY sa−⌈0.9·sa⌉+1 grams of A
+      // The probe prefix is DF-ORDERED (rarest corpus grams first), the
+      // jaccard family's builder at the 0.9 prefix length. Losslessness
+      // here is even simpler than PPJoin's: containment ≥ 0.9 means at
+      // most ⌊0.1·sa⌋ grams of A miss B, so ANY sa−⌈0.9·sa⌉+1 grams of A
       // must hit a true container — the prefix length is what matters,
       // not which grams fill it. Choosing the rarest minimizes candidate
-      // mass Σ_prefix df(gram), exactly the Zipf defense the jaccard
-      // family's dfOrderedPrefix flag bought (64×→2.8× per decade).
-      // Unstaged KeyTime at sf0.1: 5.95 → see OPTIMIZATION_r21.md.
-      val gramDf = grams.select(explode(col("g")).as("gram"))
-        .groupBy("gram").agg(count(lit(1)).as("df"))
-      val prefA = grams
-        .select(col("doc_id").as("a_id"), size(col("g")).as("sa"),
-          explode(col("g")).as("gram"))
-        .join(gramDf, Seq("gram"))
-        .groupBy("a_id", "sa")
-        .agg(array_sort(collect_list(struct(col("df"), col("gram"))))
-          .as("gs"))
-        .select(col("a_id"), col("sa"),
-          explode(slice(col("gs"), lit(1),
-            col("sa") - ((col("sa") * 9 + 9) / 10).cast("int") + 1))
-            .as("st"))
-        .select(col("a_id"), col("sa"), col("st.gram").as("gram"))
+      // mass Σ_prefix df(gram). See OPTIMIZATION_r21.md.
+      val prefA = dfOrderedPrefixInv(grams, gramDfOf(grams), 9, 10)
+        .select(col("doc_id").as("a_id"), col("sz").as("sa"), col("gram"))
       val invB = grams.select(col("doc_id").as("b_id"),
         size(col("g")).as("sb"), explode(col("g")).as("gram"))
       val cand = prefA.join(invB, "gram")
@@ -374,53 +319,6 @@ object Dedup {
         .orderBy("doc_id")
   }
 
-  private[ops] def groupedReportOn(s: SparkSession): Boolean =
-    s.conf.getOption("graft.dedup.groupedReport").exists(_.toBoolean)
-
-  /** Duplicate-heavy GROUPED near-dup report
-    * (`graft.dedup.groupedReport=true`). Every pair relation here is a
-    * pure function of TEXT, so on a crawl corpus with B exact copies per
-    * hub the plain pair report is inherently quadratic — B² rows per hub
-    * pair, ~5·10⁸ implied rows at ScaleProbe's dupheavy 500k leg, which
-    * no pair-materializing output survives. The grouped shape keeps the
-    * report linear: docs group by exact text (one shuffle — the window
-    * min/count), the family's pair pipeline runs over the DISTINCT-text
-    * representatives only, and each row carries the two groups'
-    * multiplicities:
-    *
-    *   (doc_a, doc_b, score, n_a, n_b)   — cross-group rep pairs
-    *   (rep,  rep,  perfect, n,  n)      — one row per group with n ≥ 2
-    *                                       (its n·(n−1)/2 intra pairs)
-    *
-    * LOSSLESS by construction: the pair relation depends only on text, so
-    * expanding each cross row to group(a) × group(b) and each self row to
-    * its within-group combinations reproduces the plain pair set exactly,
-    * scores included (GroupedReportSpec property). `eligible` is the
-    * family's text-eligibility predicate for the SELF rows — identical
-    * docs the family's plain pipeline never pairs (ngram's < 3 tokens)
-    * must not invent intra-group pairs the expansion can't match. */
-  def groupedReport(docs: DataFrame, scoreName: String, perfect: Column,
-                    eligible: Column)(
-                    pairsOfReps: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("text")
-    val withRep = docs
-      .withColumn("rep", min("doc_id").over(w))
-      .withColumn("n", count(lit(1)).over(w))
-    val reps = withRep.where(col("doc_id") === col("rep"))
-    val groups = reps.select(col("rep"), col("n"), eligible.as("elig"))
-    val cross = pairsOfReps(
-        reps.select(col("doc_id"), col("text")).repartition(col("doc_id")))
-      .join(groups.select(col("rep").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(groups.select(col("rep").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col(scoreName),
-        col("n_a"), col("n_b"))
-    val intra = groups.where(col("n") >= 2 && col("elig"))
-      .select(col("rep").as("doc_a"), col("rep").as("doc_b"),
-        perfect.as(scoreName), col("n").as("n_a"), col("n").as("n_b"))
-    cross.union(intra)
-  }
-
   /** The corpus's exact trigram-Jaccard ≥ 0.8 near-dup pair list,
     * materialized once per corpus version and shared by
     * `dedup_ngram_jaccard` (ordered report) and `dedup_cluster` (CC edge
@@ -431,46 +329,10 @@ object Dedup {
     * incrementally; downstream clustering/reporting reads it, it is not
     * recomputed per query. The inner scan repartitions first so the
     * cold-path prefix join's parallelism never pins to the source's
-    * (few, at test SF) parquet splits.
-    *
-    * Scale posture is conf-gated so the SAME declared keys run on Zipfian
-    * corpora without a code change (ScaleProbe's 500k-doc leg measurably
-    * NEEDS it — the lexicographic prefix's hot-gram fan-out is quadratic
-    * in gram df and overran a 78 GB spill volume there):
-    *  - `graft.ngram.dfOrderedPrefix=true` → rarest-grams-first prefix
-    *    (LOSSLESS, identical pair set, so it shares the artifact name);
-    *  - `graft.ngram.hotGramCap=N` → additionally drop grams with df > N
-    *    from the prefix index (EXPLICITLY LOSSY → its own artifact name,
-    *    never served to an uncapped read). Implies dfOrderedPrefix.
-    * Both are read by [[ngramPosture]] alone. */
-  def ngramPairs(s: SparkSession, dir: String): DataFrame = {
-    val posture = ngramPosture(s)
-    graft.Staging.materialize(
-      ngramJaccardFromGrams(stagedGrams(s, dir),
-        dfOrderedPrefix = posture.dfOrdered, hotGramCap = posture.cap),
-      Tables.path(dir, "documents"), posture.artifact("ngram_pairs08"))
-  }
-
-  /** The n-gram PPJoin scale posture of a session: `dfOrdered` (rarest
-    * grams first) and the optional hot-gram `cap`. A set cap implies
-    * `dfOrdered`. */
-  private[ops] final case class NgramPosture(dfOrdered: Boolean,
-                                             cap: Option[Long]) {
-    /** Staged name of an artifact derived from the pair graph:
-      * `<base>_v1` uncapped, `<base>_cap<N><capTag>_v1` capped. A capped
-      * graph is lossy, so it never shares an uncapped artifact's name;
-      * `dfOrdered` alone is lossless and does. */
-    def artifact(base: String, capTag: String = ""): String =
-      cap.fold(s"${base}_v1")(c => s"${base}_cap$c${capTag}_v1")
-  }
-
-  /** The one reader of `graft.ngram.hotGramCap` and
-    * `graft.ngram.dfOrderedPrefix`. */
-  private[ops] def ngramPosture(s: SparkSession): NgramPosture = {
-    val cap = graft.QueryDefs.longConf(s, "graft.ngram.hotGramCap")
-    NgramPosture(cap.isDefined ||
-      s.conf.getOption("graft.ngram.dfOrderedPrefix").exists(_.toBoolean), cap)
-  }
+    * (few, at test SF) parquet splits. */
+  def ngramPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Staging.materialize(ngramJaccardFromGrams(stagedGrams(s, dir)),
+      Tables.path(dir, "documents"), "ngram_pairs08_v1")
 
   /** The corpus's sorted-distinct-trigram relation, staged per corpus
     * version — the one artifact the jaccard PPJoin (4 plan references)
@@ -485,20 +347,22 @@ object Dedup {
     * relation — the body of `dedup_ngram_jaccard`, factored out so the
     * ScalaCheck property suite can run the SAME pipeline against
     * generated corpora and a brute-force all-pairs reference. */
-  def ngramJaccardPairs(docs: DataFrame,
-                        dfOrderedPrefix: Boolean = false,
-                        hotGramCap: Option[Long] = None): DataFrame =
-    ngramJaccardFromGrams(ngramGrams(docs), dfOrderedPrefix, hotGramCap)
+  def ngramJaccardPairs(docs: DataFrame): DataFrame =
+    ngramJaccardFromGrams(ngramGrams(docs))
 
-  /** (doc_id, sorted distinct trigram array) per doc with ≥ 3 tokens. */
+  /** (doc_id, sorted distinct trigram array) per doc with ≥ 3 tokens.
+    * The gram expression guards its own length as well: the optimizer
+    * may evaluate a filter on `g` (the non-empty filter it infers for a
+    * downstream explode) before `size(t) >= 3`, and `element_at` past a
+    * short doc's last token throws. */
   def ngramGrams(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
       .where(size(col("t")) >= 3)
-      .select(col("doc_id"),
+      .select(col("doc_id"), when(size(col("t")) >= 3,
         array_sort(array_distinct(transform(sequence(lit(1), size(col("t")) - 2),
           i => concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
+            element_at(col("t"), i + 1), element_at(col("t"), i + 2))))))
           .as("g"))
 
   /** Exact trigram-Jaccard ≥ 0.8 pairs ACROSS two gram relations — the
@@ -507,57 +371,39 @@ object Dedup {
     * variant below: the prefix-filter proof concerns any TWO sets under
     * one consistent total order, not both sets coming from one
     * collection. Output: (doc_id [probe], dup_id [index], jac).
-    * `dfOrderedPrefix` matters here exactly as much as in the self-join:
-    * with the default lexicographic order a Zipfian corpus puts hot
-    * grams into batch prefixes and candidate fan-out is
-    * Σ_batch-prefix-grams df(gram) — ScaleProbe's 500k leg measured
-    * 64× per decade before the flag, 2.8× after. */
+    * Both prefixes take the rarest grams first under the INDEX side's
+    * gram df `indexGramDf` (batch grams the corpus has never seen get
+    * df 0 — rarest, and harmless: a gram with corpus df 0 can't produce
+    * a candidate anyway), so a batch prefix carries no hot corpus gram
+    * and candidate fan-out Σ_batch-prefix-grams df(gram) stays small.
+    * The caller passes a per-corpus-version STAGED df relation, so each
+    * ingest batch pays only batch-proportional work. */
   def ngramJaccardAcross(probe: DataFrame, index: DataFrame,
-                         dfOrderedPrefix: Boolean = false,
-                         indexGramDf: Option[DataFrame] = None): DataFrame = {
-    // df-ordered prefixes under the INDEX side's gram df (batch grams the
-    // corpus has never seen get df 0 — rarest, and harmless: a gram with
-    // corpus df 0 can't produce a candidate anyway). (df, gram) is one
-    // consistent total order applied to BOTH sets, which is all the
-    // prefix-filter losslessness proof requires. `indexGramDf` lets the
-    // caller pass a per-corpus-version STAGED df relation so each ingest
-    // batch pays only batch-proportional work, not a corpus re-aggregation.
-    val (invP, invI) =
-      if (!dfOrderedPrefix) (lexPrefixInv(probe), lexPrefixInv(index))
-      else {
-        val gramDf = indexGramDf.getOrElse(gramDfOf(index))
-        (dfOrderedPrefixInv(probe, gramDf, None),
-         dfOrderedPrefixInv(index, gramDf, None))
-      }
-    verifyCandidates(ppjoinCandidates(invP, invI, crossOnly = true),
+                         indexGramDf: DataFrame): DataFrame =
+    verifyCandidates(ppjoinCandidates(
+        dfOrderedPrefixInv(probe, indexGramDf, 4, 5),
+        dfOrderedPrefixInv(index, indexGramDf, 4, 5), crossOnly = true),
       probe, index)
       .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_id"),
         col("jac"))
-  }
 
   /** Per-gram document frequency of a (doc_id, g) relation. */
-  private def gramDfOf(grams: DataFrame): DataFrame =
+  private[graft] def gramDfOf(grams: DataFrame): DataFrame =
     grams.select(explode(col("g")).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("df"))
 
-  /** Prefix inverted-index rows (doc_id, sz, pos, gram) under the default
-    * LEXICOGRAPHIC gram order (`ngramGrams` array_sorts every doc). */
-  private def lexPrefixInv(grams: DataFrame): DataFrame =
-    grams
-      .select(col("doc_id"), size(col("g")).as("sz"),
-        posexplode(slice(col("g"), lit(1), size(col("g")) -
-          floor((size(col("g")) * 4 + 4) / 5).cast("int") + 1)))
-      .withColumnRenamed("col", "gram")
-
-  /** Prefix inverted-index rows under the (df, gram) total order given by
-    * `gramDf` — rarest grams first; grams absent from `gramDf` rank
-    * rarest (df 0). array_sort on struct(df, gram) is a single consistent
-    * total order shared by every doc, which is all the prefix-filter
-    * losslessness proof requires. `cap` additionally drops grams with
-    * df > cap from the prefix index (EXPLICITLY LOSSY, caller-gated). */
+  /** Prefix inverted-index rows (doc_id, sz, pos, gram): each doc's first
+    * sz − ⌈(num/den)·sz⌉ + 1 grams — the PPJoin prefix length for a
+    * similarity threshold num/den — under the (df, gram) total order
+    * given by `gramDf`, rarest grams first; grams absent from `gramDf`
+    * rank rarest (df 0). array_sort on struct(df, gram) is a single
+    * consistent total order shared by every doc, which is all the
+    * prefix-filter losslessness proof requires. The ceiling is exact
+    * integer arithmetic (floor((num·sz + den − 1)/den)): a float ceil can
+    * overshoot and silently shorten the prefix (= missed pairs). */
   private def dfOrderedPrefixInv(grams: DataFrame, gramDf: DataFrame,
-                                 cap: Option[Long]): DataFrame = {
-    val pre = grams
+                                 num: Int, den: Int): DataFrame =
+    grams
       .select(col("doc_id"), size(col("g")).as("sz"),
         explode(col("g")).as("gram"))
       .join(gramDf, Seq("gram"), "left")
@@ -566,17 +412,15 @@ object Dedup {
       .agg(array_sort(collect_list(struct(col("df"), col("gram"))))
         .as("gs"))
       .select(col("doc_id"), col("sz"),
-        posexplode(slice(col("gs"), lit(1), size(col("gs")) -
-          floor((size(col("gs")) * 4 + 4) / 5).cast("int") + 1)))
+        posexplode(slice(col("gs"), lit(1), col("sz") -
+          floor((col("sz") * num + (den - 1)) / den).cast("int") + 1)))
       .select(col("doc_id"), col("sz"), col("pos"),
-        col("col.gram").as("gram"), col("col.df").as("df"))
-    cap.fold(pre)(c => pre.where(col("df") <= c)).drop("df")
-  }
+        col("col.gram").as("gram"))
 
   /** PPJoin candidate pairs from two prefix inverted indexes. The three
     * LOSSLESS filters, applied as integer join conditions before any
     * candidate materializes:
-    *  - shared prefix gram (the prefix filter — see the order builders);
+    *  - shared prefix gram (the prefix filter — see [[dfOrderedPrefixInv]]);
     *  - length filter: J ≤ min(sz)/max(sz), so J ≥ 0.8 needs 5·min ≥ 4·max;
     *  - positional filter: shared grams all sort ≥ the current one, so
     *    inter ≤ min(sz−pos), which must reach (4/9)(sz_a+sz_b), the
@@ -622,36 +466,16 @@ object Dedup {
   }
 
   /** PPJoin candidate generation + exact verification over a
-    * (doc_id, g: sorted trigram array) relation.
-    *
-    * @param dfOrderedPrefix order each doc's grams by ASCENDING document
-    *   frequency (ties broken by gram) before taking the prefix, instead of
-    *   the default lexicographic order. LOSSLESS — the prefix-filter proof
-    *   only needs SOME consistent total order over all grams — but prefixes
-    *   then carry the rarest grams, collapsing candidate fan-out on Zipfian
-    *   corpora where a few hot grams dominate. Costs one extra df
-    *   aggregation + join + per-doc re-sort; measured cost-neutral on this
-    *   near-uniform synthetic corpus (why the declared query leaves it off),
-    *   pays for itself when gram df is skewed.
-    * @param hotGramCap drop grams whose document frequency exceeds the cap
-    *   from the PREFIX INDEX (full sets still verify exactly). EXPLICITLY
-    *   LOSSY: a pair whose only shared prefix grams are hot is missed —
-    *   the production stop-gram guard for 100 TB Zipfian corpora, bounding
-    *   the worst bucket's fan-out at df_cap². Requires dfOrderedPrefix
-    *   (the df pass is already paid for, and capping a lexicographic
-    *   prefix would skew which docs lose coverage).
-    */
-  def ngramJaccardFromGrams(grams: DataFrame,
-                            dfOrderedPrefix: Boolean = false,
-                            hotGramCap: Option[Long] = None): DataFrame = {
-    require(hotGramCap.isEmpty || dfOrderedPrefix,
-      "hotGramCap requires dfOrderedPrefix")
+    * (doc_id, g: sorted trigram array) relation. Prefixes take each doc's
+    * rarest grams first ([[dfOrderedPrefixInv]]): one df aggregation +
+    * join + per-doc re-sort, lossless, and a Zipfian corpus's hot grams
+    * never reach the prefix index, where their fan-out is quadratic in
+    * their df. */
+  def ngramJaccardFromGrams(grams: DataFrame): DataFrame = {
     // The df relation shuffles once on gram (same key the inverted-index
     // join uses anyway); at scale it's corpus-linear and reusable across
     // runs like the gram relation itself.
-    val inv =
-      if (!dfOrderedPrefix) lexPrefixInv(grams)
-      else dfOrderedPrefixInv(grams, gramDfOf(grams), hotGramCap)
+    val inv = dfOrderedPrefixInv(grams, gramDfOf(grams), 4, 5)
     verifyCandidates(ppjoinCandidates(inv, inv, crossOnly = false),
       grams, grams)
     // NO trailing sort here: ngramPairs stages this result to parquet

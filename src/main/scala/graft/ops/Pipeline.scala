@@ -606,12 +606,8 @@ object Pipeline {
       val pairs = Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
       val mxdf = Tables.table(s, dir, "documents")
         .agg(max("doc_id").as("mx"))
-      // The old-labels artifact name mirrors ccLabels' cap-awareness
-      // (r19 review): the pair graph depends on the LOSSY hot-gram cap,
-      // and a fixed name would serve a capped session's labels to an
-      // uncapped one (the aliasing bug ccLabels' naming exists to prevent).
       val oldLabels = stagedComponents(s, Tables.path(dir, "documents"),
-        Dedup.ngramPosture(s).artifact("cc_labels08_old90")) {
+        "cc_labels08_old90_v1") {
         pairs.crossJoin(broadcast(mxdf))
           .where(col("doc_a") * 10 < col("mx") * 9 &&
                  col("doc_b") * 10 < col("mx") * 9)
@@ -1005,54 +1001,11 @@ object Pipeline {
     * to the corpus and update incrementally; queries read them. The
     * compute-or-load overload means the fixpoint loop only runs on a
     * cache miss (`lastCcRounds` is only meaningful after one — ScaleProbe
-    * always measures fresh corpora, so always cold). The artifact name
-    * mirrors `Dedup.ngramPairs`' cap suffix: a capped (explicitly lossy)
-    * pair graph yields its own label artifact and can never poison the
-    * uncapped one. */
-  private def ccLabels(s: SparkSession, dir: String): DataFrame = {
-    val posture = Dedup.ngramPosture(s)
-    val groupExact =
-      s.conf.getOption("graft.dedup.groupExact").exists(_.toBoolean)
-    // Lossless posture shares the artifact name; the capped variant is
-    // lossy AND df-dependent (rep-level gram df ≠ full-corpus df), so
-    // capped+grouped gets its own name and can never alias either.
-    val name = posture.artifact("cc_labels08", if (groupExact) "_ge" else "")
-    stagedComponents(s, Tables.path(dir, "documents"), name) {
-      if (!groupExact)
-        Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
-      else {
-        // Duplicate-heavy-corpus posture (`graft.dedup.groupExact=true`,
-        // LOSSLESS): B exact copies of one text share every trigram, so
-        // the full pair graph carries B² edges and the PPJoin B²
-        // candidates per copy group. Labels don't need those edges —
-        // group by exact text, elect the min-doc_id representative,
-        // connect members to their rep by a STAR (B−1 edges, each a
-        // genuine jaccard-1 pair), and run the near-dup join over
-        // DISTINCT texts only. Label equality is exact: the pair
-        // relation depends only on text, so members are interchangeable
-        // with their rep for connectivity, and min-label = min doc_id of
-        // the component is preserved because the rep is its group's min.
-        // Docs under 3 tokens never enter the default pair graph, so
-        // they are excluded from the star too (identical short docs must
-        // NOT invent a cluster the default path doesn't have).
-        val docs = Tables.table(s, dir, "documents")
-          .where(size(split(lower(col("text")), " ")) >= 3)
-          .select(col("doc_id"), col("text"))
-        // One shuffle on text (window min), not two (groupBy + join) —
-        // the text column would ride the exchange either way.
-        val withRep = docs.withColumn("rep",
-          min("doc_id").over(Window.partitionBy("text")))
-        val star = withRep.where(col("doc_id") =!= col("rep"))
-          .select(col("doc_id").as("doc_a"), col("rep").as("doc_b"))
-        val repPairs = Dedup.ngramJaccardPairs(
-          withRep.where(col("doc_id") === col("rep"))
-            .select(col("doc_id"), col("text"))
-            .repartition(col("doc_id")),
-          dfOrderedPrefix = posture.dfOrdered, hotGramCap = posture.cap)
-        star.union(repPairs.select("doc_a", "doc_b"))
-      }
+    * always measures fresh corpora, so always cold). */
+  private def ccLabels(s: SparkSession, dir: String): DataFrame =
+    stagedComponents(s, Tables.path(dir, "documents"), "cc_labels08_v1") {
+      Dedup.ngramPairs(s, dir).select("doc_a", "doc_b")
     }
-  }
 
   /** Keys whose invocation RUNS Spark jobs (the CC fixpoint loop executes
     * joins/counts eagerly) — plan-only tools must skip these, same as
@@ -1324,16 +1277,6 @@ object Pipeline {
     "SELECT doc_id, round(avg(-ln(CAST(cnt AS DOUBLE) / total)), 6) AS avg_nll " +
     "FROM toks JOIN cnt USING (tok) CROSS JOIN tot GROUP BY doc_id"
 
-  /** The text_quality score of document `d` before rounding: four
-    * heuristic terms (length, mean word length, stopword share, symbol
-    * share). */
-  private val QualitySql =
-    "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-    "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-    "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
-    "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
-    "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END)"
-
   /** Per-document token counts `t(source, doc_id, toks)`. */
   private val DocToksCte =
     "t AS (SELECT source, doc_id, " +
@@ -1361,7 +1304,7 @@ object Pipeline {
     * (`filt`), then the packing tail. */
   private def cleanPackTail(from: String): String =
     "q AS (SELECT d.doc_id, d.source, d.lang, d.text, " +
-    s"round($QualitySql, 2) AS q $from), " +
+    s"round(${TextQuality.QualitySql}, 2) AS q $from), " +
     "filt AS (SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM q " +
     "WHERE q >= 0.5 AND ((doc_id * 48271) % 2147483647) % 100 < " +
     "(CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 50 WHEN 'es' THEN 75 WHEN 'fr' THEN 90 ELSE 100 END)), " +
@@ -1586,7 +1529,7 @@ object Pipeline {
         "dups AS (SELECT doc AS doc_id FROM lab WHERE doc <> cluster), " +
         "m AS (SELECT d.source, d.lang, " +
         "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_toks, " +
-        s"CAST(round(($QualitySql) * 100) AS BIGINT) AS q2i, " +
+        s"CAST(round((${TextQuality.QualitySql}) * 100) AS BIGINT) AS q2i, " +
         "(dup.doc_id IS NOT NULL) AS is_dup " +
         "FROM documents d LEFT JOIN dups dup ON d.doc_id = dup.doc_id), " +
         "base AS (SELECT source, count(*) AS n_docs, " +

@@ -88,11 +88,12 @@ object Sinks {
         .write.parquet(s"$tmp/gen2")
     }
 
-  /** Columns `orders` round-trips through the ORC source (everything but
-    * the CSV key's synthetic quoted column — ORC is a typed columnar
-    * format, so the surface worth declaring is plain typed columns
-    * including a timestamp, which text sources degrade to strings). */
-  private val orcOrderCols =
+  /** Columns `orders` round-trips through the ORC and Derby JDBC sources
+    * (everything but the CSV key's synthetic quoted column): plain typed
+    * columns — ints, doubles, strings and a timestamp, the shapes a
+    * warehouse table actually carries and text sources degrade to
+    * strings. */
+  private val typedOrderCols =
     Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
       "o_orderdate", "o_orderpriority")
 
@@ -102,7 +103,7 @@ object Sinks {
   def ensureOrcOrders(s: SparkSession, dir: String): String =
     publishSink(dir, "orders", "orders_orc_v1") { tmp =>
       Tables.table(s, dir, "orders")
-        .select(orcOrderCols.map(col): _*)
+        .select(typedOrderCols.map(col): _*)
         .write.mode("overwrite").orc(tmp.toString)
     }
 
@@ -153,13 +154,6 @@ object Sinks {
         }
     }
 
-  /** Columns `orders` round-trips through the Derby JDBC source — same
-    * typed surface as ORC (ints, doubles, strings, a timestamp), the
-    * shapes a warehouse table actually carries. */
-  private val jdbcOrderCols =
-    Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-      "o_orderdate", "o_orderpriority")
-
   /** `orders` staged into an EMBEDDED DERBY database once per corpus
     * version — the JDBC ingest surface (`/opt/spark/jars` ships the
     * derby embedded engine; every other RDBMS driver is absent under
@@ -180,7 +174,7 @@ object Sinks {
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       Tables.table(s, dir, "orders")
-        .select(jdbcOrderCols.map(col): _*)
+        .select(typedOrderCols.map(col): _*)
         .coalesce(1)
         .write.mode("overwrite")
         .jdbc(s"jdbc:derby:$db;create=true", "orders", props)
@@ -724,7 +718,7 @@ object Sinks {
     "source_orc" -> ((s, dir) =>
       graft.Tables.memoizedSourceRead(s, ensureOrcOrders(s, dir), "orc") { p =>
         val sch = Tables.table(s, dir, "orders")
-          .select(orcOrderCols.map(col): _*).schema
+          .select(typedOrderCols.map(col): _*).schema
         s.read.schema(sch).orc(p)
       }.orderBy("o_orderkey")),
 
@@ -764,7 +758,7 @@ object Sinks {
         .option("upperBound", b.getLong(1))
         .option("numPartitions", 8)
         .load()
-      }.select(jdbcOrderCols.map(col): _*)
+      }.select(typedOrderCols.map(col): _*)
         .orderBy("o_orderkey")
     }),
 

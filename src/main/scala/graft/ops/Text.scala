@@ -200,8 +200,6 @@ object Text {
       * (see minhashSign), so the full signature → band-bucket → pair →
       * estimate pipeline is hash-gated; MinhashSpec still pins the
       * statistical property (estimate tracks exact Jaccard).
-      * `graft.dedup.groupedReport=true` switches to the duplicate-heavy
-      * grouped shape (see Dedup.groupedReport).
       *
       * The pair list — the dedup ARTIFACT — is staged per corpus version
       * (this near-dup-saturated corpus yields ~1.3M pairs at sf0.1, and
@@ -210,24 +208,10 @@ object Text {
       * the corpus and update incrementally; reports read them. The total
       * order is re-applied after the staged read. */
     "dedup_minhash" -> ((s, dir) =>
-      if (Dedup.groupedReportOn(s))
-        // The grouped report is a pure function of the corpus text, so it
-        // stages per corpus version exactly like the plain pair list —
-        // built once at ingest, read by every downstream consumer.
-        // THUNKED overload: the build runs an eager localCheckpoint job,
-        // which must only happen on a cache miss.
-        graft.Staging.materialize(
-          s, Tables.path(dir, "documents"), "minhash_grouped09_md5_v1") {
-          Dedup.groupedReport(Tables.table(s, dir, "documents")
-              .select(col("doc_id"), col("text")),
-            "est_jac", lit(1.0), lit(true))(reps =>
-            minhashPairsFromSig(minhashSign(reps).localCheckpoint(true)))
-        }.orderBy("doc_a", "doc_b")
-      else
-        graft.Staging.materialize(
-          minhashPairsFromSig(minhashSigned(s, dir)),
-          Tables.path(dir, "documents"), "minhash_pairs09_md5_v1")
-          .orderBy("doc_a", "doc_b"))
+      graft.Staging.materialize(
+        minhashPairsFromSig(minhashSigned(s, dir)),
+        Tables.path(dir, "documents"), "minhash_pairs09_md5_v1")
+        .orderBy("doc_a", "doc_b"))
   )
 
   /** BM25 ranking (term, rnk, doc_id, score): the full scoring pipeline
@@ -343,9 +327,9 @@ object Text {
       Tables.path(dir, "documents"), "minhash_sig32_md5_v1")
 
   /** Banded-LSH est-Jaccard ≥ 0.9 pairs from a (doc_id, sig) relation —
-    * the pure pair pipeline, shared by the declared key and its grouped
-    * variant. LSH banding: one hash per 8-component band; docs sharing
-    * any band hash become candidates. The bucket join carries ONLY doc
+    * the pure pair pipeline behind `dedup_minhash`. LSH banding: one
+    * hash per 8-component band; docs sharing any band hash become
+    * candidates. The bucket join carries ONLY doc
     * ids — dragging the 32-long signature arrays through the join and
     * then distinct-ing on them forces a sort-based aggregate over wide
     * rows (arrays aren't hash-aggregatable) and was 27× slower at sf0.1.

@@ -115,6 +115,15 @@ object TextQuality {
         when(symRatio < 0.1, lit(0.1)).otherwise(lit(0.0)), 2)
   }
 
+  /** [[qualityScore]]'s DuckDB twin for document `d`, before rounding:
+    * the oracles of `text_quality` and of the clean_pack pipelines. */
+  private[ops] val QualitySql =
+    "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
+    "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
+    "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
+    "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
+    "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END)"
+
   /** RAKE stopword set — the fixed filler vocabulary across the corpus's
     * langs (the langWords posture: grades the MECHANICS — segmentation,
     * degree/frequency scoring, ordered fold — not real-world accuracy;
@@ -673,16 +682,8 @@ object TextQuality {
         "SELECT lang, predicted, count(*) AS n FROM arg GROUP BY lang, predicted " +
         "ORDER BY lang, predicted"),
     "text_quality" ->
-      ("WITH m AS (SELECT source, n_chars, " +
-        "len(string_split(lower(text), ' ')) AS n_toks, " +
-        "len(list_intersect(list_distinct(string_split(lower(text), ' ')), " +
-        "['the','a','and','of','to'])) AS n_stop, " +
-        "len(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS n_sym FROM documents), " +
-        "q AS (SELECT source, round(" +
-        "(CASE WHEN n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-        "(CASE WHEN n_chars * 1.0 / n_toks BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-        "(CASE WHEN n_stop * 1.0 / n_toks > 0.01 THEN 0.2 ELSE 0.0 END) + " +
-        "(CASE WHEN n_sym * 1.0 / n_chars < 0.1 THEN 0.1 ELSE 0.0 END), 2) AS q FROM m) " +
+      (s"WITH q AS (SELECT d.source, round($QualitySql, 2) AS q " +
+        "FROM documents d) " +
         "SELECT source, CASE WHEN q >= 0.8 THEN 'high' WHEN q >= 0.5 THEN 'medium' " +
         "ELSE 'low' END AS bucket, count(*) AS n, round(avg(q), 2) AS avg_q " +
         "FROM q GROUP BY 1, 2 ORDER BY 1, 2"),

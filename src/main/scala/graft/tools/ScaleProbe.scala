@@ -18,15 +18,10 @@ import org.apache.spark.sql.functions._
   * the sf0.001 testdata with staging bypassed, so leg 1 does not absorb
   * the JVM's one-time JIT and codegen cost.
   *
-  * Shapes: `docs`, `dupheavy`, `chain`, `events` and `vectors` are
-  * seeded synthetic corpora of n = base × mult rows (default base 5000);
-  * `replica` is the sf tables at mult× ([[writeReplica]]; default sfDir
-  * the sf0.1 testdata). `dupheavy` arms the two documented
-  * duplicate-heavy postures, and every synthetic shape arms the
-  * df-ordered PPJoin prefix (lossless; the synthetic corpora are
-  * Zipf-ish, and at 500k docs the lexicographic prefix's hot-gram
-  * fan-out overruns the spill volume), while `replica` runs the default
-  * plans; `GRAFT_HOTGRAM_CAP` sets `graft.ngram.hotGramCap`.
+  * Shapes: `docs`, `chain`, `events` and `vectors` are seeded synthetic
+  * corpora of n = base × mult rows (default base 5000); `replica` is the
+  * sf tables at mult× ([[writeReplica]]; default sfDir the sf0.1
+  * testdata). Every shape runs the declared plans.
   *
   * Checks beyond the wall gate: `dedup_cluster`'s CC round count may
   * grow by at most 3 over the probed range (O(log diameter); reported
@@ -34,22 +29,17 @@ import org.apache.spark.sql.functions._
   * linearly), and `stream_upsert_snapshot` must return one row per
   * distinct user of the leg's events.
   *
-  * Keys are declared keys plus probe-local ones: `ngram_pairs` (the
+  * Keys are declared keys plus one probe-local key, `ngram_pairs` (the
   * staged PPJoin pair list, so a `dedup_cluster` listed after it times
-  * the CC fixpoint alone) and `prefix_lex`, `prefix_df`, `prefix_cap256`
-  * (the three PPJoin prefix postures over one checkpointed gram relation
-  * of the leg's documents; `prefix` names all three, and their warm walls
-  * compare the postures, since the first cold wall also builds the gram
-  * relation).
+  * the CC fixpoint alone).
   *
   * Not part of the driver contract; run by hand. Exit code 1 on a
   * violated bound.
-  * Usage: runMain graft.tools.ScaleProbe <shape> <key,...|prefix> [base|sfDir] [mult...]
+  * Usage: runMain graft.tools.ScaleProbe <shape> <key,...> [base|sfDir] [mult...]
   */
 object ScaleProbe {
 
-  private val Shapes = Seq("docs", "dupheavy", "chain", "events", "vectors", "replica")
-  private val PrefixKeys = Seq("prefix_lex", "prefix_df", "prefix_cap256")
+  private val Shapes = Seq("docs", "chain", "events", "vectors", "replica")
 
   /** Deterministic corpus in the documents schema. ~5% of docs are a
     * one-token mutation of a random EARLIER doc (trigram Jaccard ≈
@@ -78,28 +68,6 @@ object ScaleProbe {
       texts += text
       (i.toLong, text, langs(rnd.nextInt(5)),
         f"src_${rnd.nextInt(20)}%02d", text.length)
-    }
-  }
-
-  /** Duplicate-heavy variant (`dupheavy`): ~20% of docs are EXACT
-    * copies of one of 10 fixed hub docs, so copies-per-hub grows linearly
-    * with n and the full near-dup pair graph grows QUADRATICALLY per
-    * decade (10 hubs × (0.02·n)² edges — ~5·10⁸ at the 500k leg, which no
-    * pair-materializing plan survives). This is the corpus shape
-    * `graft.dedup.groupExact` exists for: star edges to the per-text rep
-    * + a near-dup join over distinct texts keep the CC edge set linear;
-    * the pair reports' plain output is quadratic here by the same
-    * argument, so the shape runs their grouped variant
-    * (`graft.dedup.groupedReport`, GroupedReportSpec proves it expands
-    * losslessly). */
-  def corpusDupHeavy(n: Int, seed: Long): Seq[(Long, String, String, String, Int)] = {
-    val baseDocs = corpus(n, seed)
-    val rnd = new scala.util.Random(seed * 31 + 7)
-    baseDocs.map { case row @ (id, _, lang, src, _) =>
-      if (id >= 10 && rnd.nextInt(5) == 0) {
-        val hubText = baseDocs(rnd.nextInt(10))._2
-        (id, hubText, lang, src, hubText.length)
-      } else row
     }
   }
 
@@ -205,19 +173,10 @@ object ScaleProbe {
   }
 
   /** The key runner of a leg's corpus in `dir`: declared keys plus the
-    * probe-local ones (see the object doc). */
+    * probe-local `ngram_pairs` (see the object doc). */
   private def runner(spark: SparkSession, dir: String): String => DataFrame = {
-    lazy val grams = Dedup.ngramGrams(
-      Tables.table(spark, dir, "documents").select("doc_id", "text"))
-      .localCheckpoint(true)
-    (key: String) => key match {
-      case "ngram_pairs" => Dedup.ngramPairs(spark, dir)
-      case "prefix_lex" => Dedup.ngramJaccardFromGrams(grams)
-      case "prefix_df" => Dedup.ngramJaccardFromGrams(grams, dfOrderedPrefix = true)
-      case "prefix_cap256" => Dedup.ngramJaccardFromGrams(grams,
-        dfOrderedPrefix = true, hotGramCap = Some(256L))
-      case k => SparkEntry.queries(k)(spark, dir)
-    }
+    case "ngram_pairs" => Dedup.ngramPairs(spark, dir)
+    case k => SparkEntry.queries(k)(spark, dir)
   }
 
   /** Delete a leg's corpus and every staged artifact keyed by its tables'
@@ -239,23 +198,16 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2 && Shapes.contains(args(0)),
-      s"usage: ScaleProbe <${Shapes.mkString("|")}> <key,...|prefix> " +
+      s"usage: ScaleProbe <${Shapes.mkString("|")}> <key,...> " +
         "[base|sfDir] [mult...]")
     val shape = args(0)
-    val keys = if (args(1) == "prefix") PrefixKeys else args(1).split(",").toSeq
-    val unknown = keys.filterNot(k => SparkEntry.queries.contains(k) ||
-      k == "ngram_pairs" || PrefixKeys.contains(k))
+    val keys = args(1).split(",").toSeq
+    val unknown = keys.filterNot(k =>
+      SparkEntry.queries.contains(k) || k == "ngram_pairs")
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(",")}")
     val mults = if (args.length > 3) args.drop(3).map(_.toInt).toSeq
                 else Seq(1, 10, 100)
     val spark = GraftSession.local(GraftSession.cpus)
-    if (shape != "replica") spark.conf.set("graft.ngram.dfOrderedPrefix", "true")
-    sys.env.get("GRAFT_HOTGRAM_CAP")
-      .foreach(spark.conf.set("graft.ngram.hotGramCap", _))
-    if (shape == "dupheavy") {
-      spark.conf.set("graft.dedup.groupExact", "true")
-      spark.conf.set("graft.dedup.groupedReport", "true")
-    }
     import spark.implicits._
     val write: (String, Int) => Unit = if (shape == "replica") {
       val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
@@ -268,7 +220,6 @@ object ScaleProbe {
         val n = base * mult
         val (table, df) = shape match {
           case "docs" => ("documents", docs(corpus(n, seed = 7)))
-          case "dupheavy" => ("documents", docs(corpusDupHeavy(n, seed = 7)))
           case "chain" => ("documents", docs(corpusChain(n, seed = 7)))
           case "events" => ("events", eventsCorpus(n, seed = 7)
             .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))

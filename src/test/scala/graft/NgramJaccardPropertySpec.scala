@@ -5,10 +5,13 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ScalaCheck property for the PPJoin pipeline (ops/Dedup.ngramJaccardPairs):
-  * on GENERATED corpora — tiny docs, duplicated docs, shared-prefix docs —
-  * the prefix + length + positional filters must be LOSSLESS, i.e. the
-  * pipeline's output equals a brute-force all-pairs exact Jaccard ≥ 0.8.
+/** ScalaCheck property for the PPJoin pipelines (ops/Dedup
+  * ngramJaccardFromGrams and containmentFromGrams, which share the
+  * df-ordered prefix builder): on GENERATED corpora — tiny docs,
+  * duplicated docs, shared-prefix docs, Zipfian docs whose hot grams the
+  * df-ordered prefix keeps out of the index — the prefix + length +
+  * positional filters must be LOSSLESS, i.e. the pipeline's output equals
+  * a brute-force all-pairs exact Jaccard ≥ 0.8 (containment ≥ 0.9).
   * Seeds are pinned; corpora are built to contain near-dups by
   * construction (mutated copies) so the property isn't vacuous.
   */
@@ -49,15 +52,30 @@ class NgramJaccardPropertySpec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
   }
 
-  private def viaPipeline(docs: Seq[(Long, List[String])],
-                          dfOrdered: Boolean = false,
-                          cap: Option[Long] = None): Set[(Long, Long, Double)] = {
-    import spark.implicits._
-    val df = docs.map { case (id, d) => (id, d.mkString(" ")) }
-      .toDF("doc_id", "text")
-    ops.Dedup.ngramJaccardPairs(df, dfOrdered, cap).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  /** Brute-force directional containment ≥ 0.9: (doc, container,
+    * inter, |doc|, containment rounded 6dp) for every ordered pair. */
+  private def bruteContainment(docs: Seq[(Long, List[String])])
+      : Set[(Long, Long, Long, Long, Double)] = {
+    val grams = docs.map { case (id, d) => id -> trigrams(d) }
+      .filter(_._2.nonEmpty)
+    (for {
+      (a, ga) <- grams; (b, gb) <- grams if a != b
+      inter = (ga & gb).size
+      if inter * 10 >= ga.size * 9
+    } yield (a, b, inter.toLong, ga.size.toLong,
+      BigDecimal(inter.toDouble / ga.size)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
   }
+
+  private def toGrams(docs: Seq[(Long, List[String])]) = {
+    import spark.implicits._
+    ops.Dedup.ngramGrams(docs.map { case (id, d) => (id, d.mkString(" ")) }
+      .toDF("doc_id", "text"))
+  }
+
+  private def viaPipeline(docs: Seq[(Long, List[String])]): Set[(Long, Long, Double)] =
+    ops.Dedup.ngramJaccardFromGrams(toGrams(docs)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   /** Zipfian corpus: rank-weighted word choice (P(rank r) ∝ 1/r over 20
     * words) makes a few grams appear in most docs — the hot-gram shape the
@@ -79,81 +97,45 @@ class NgramJaccardPropertySpec extends AnyFunSuite {
     bases ++ bases.map { case (id, d) => (100L + id) -> mutate(d, id.toInt) }
   }
 
+  /** Round `round`'s corpus: 12 generated originals + a mutated copy of
+    * each (guaranteed high-J pairs), plus a Zipfian corpus at ids 1000+. */
+  private def corpus(round: Int): Seq[(Long, List[String])] = {
+    val bases = sample(docGen, 12, seed = 1000L * round + 7)
+    bases.zipWithIndex.flatMap { case (d, i) =>
+      Seq((i.toLong, d), (100L + i, mutate(d, i + round)))
+    } ++ zipfCorpus(seed = 31L * round + 5).map { case (id, d) => (1000L + id, d) }
+  }
+
   test("pipeline == brute force on 5 generated corpora with planted near-dups") {
     for (round <- 0 until 5) {
-      val bases = sample(docGen, 12, seed = 1000L * round + 7)
-      // 12 originals + a mutated copy of each => guaranteed high-J pairs.
-      val docs = bases.zipWithIndex.flatMap { case (d, i) =>
-        Seq((i.toLong, d), (100L + i, mutate(d, i + round)))
-      }
+      val docs = corpus(round)
       val want = bruteForce(docs)
       val got = viaPipeline(docs)
       assert(got === want, s"round $round: pipeline diverged from brute force")
-      assert(want.nonEmpty, s"round $round: vacuous corpus (no true pairs)")
+      assert(want.exists(_._1 < 1000) && want.exists(_._1 >= 1000),
+        s"round $round: vacuous corpus (no true pairs in one of its halves)")
     }
   }
 
-  test("df-ordered prefix is lossless on Zipfian corpora (flag off == flag on == brute force)") {
-    for (round <- 0 until 3) {
-      val docs = zipfCorpus(seed = 31L * round + 5)
-      val want = bruteForce(docs)
-      assert(want.nonEmpty, s"round $round: vacuous Zipfian corpus")
-      assert(viaPipeline(docs) === want,
-        s"round $round: lexicographic prefix diverged from brute force")
-      assert(viaPipeline(docs, dfOrdered = true) === want,
-        s"round $round: df-ordered prefix diverged — NOT lossless")
+  test("containment pipeline == brute force on 5 generated corpora") {
+    for (round <- 0 until 5) {
+      val docs = corpus(round)
+      val want = bruteContainment(docs)
+      val got = ops.Dedup.containmentFromGrams(toGrams(docs)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getDouble(4))).toSet
+      assert(got === want, s"round $round: containment diverged from brute force")
+      // a pair whose reverse fails keeps the directional test non-vacuous
+      assert(want.exists { case (a, b, _, _, _) =>
+        !want.exists(q => q._1 == b && q._2 == a) },
+        s"round $round: vacuous corpus (no one-way containment)")
     }
-  }
-
-  test("hot-gram cap is a sound subset: only drops pairs, and a huge cap drops none") {
-    val docs = zipfCorpus(seed = 99L)
-    val want = bruteForce(docs)
-    val capped = viaPipeline(docs, dfOrdered = true, cap = Some(3L))
-    assert(capped.subsetOf(want),
-      "capped output invented a pair — must only ever MISS pairs")
-    assert(viaPipeline(docs, dfOrdered = true, cap = Some(1000000L)) === want,
-      "cap above every df must be a no-op")
-  }
-
-  test("declared key honors the scale-posture confs (lossless flag; lossy cap subset + own artifact)") {
-    val q = SparkEntry.queries("dedup_ngram_jaccard")
-    val stagingWas = sys.props.get("graft.staging")
-    // Staging off: the lossless flag shares the staged artifact name (same
-    // content), so only an unstaged run actually executes the df-ordered
-    // plan through the declared key.
-    sys.props("graft.staging") = "false"
-    try {
-      val base = rowSet(q(spark, sf))
-      assert(base.nonEmpty, "vacuous corpus: no near-dup pairs at sf0.001")
-      spark.conf.set("graft.ngram.dfOrderedPrefix", "true")
-      try assert(rowSet(q(spark, sf)) === base,
-        "conf-gated df-ordered prefix diverged from the default plan")
-      finally spark.conf.unset("graft.ngram.dfOrderedPrefix")
-      spark.conf.set("graft.ngram.hotGramCap", "2")
-      try assert(rowSet(q(spark, sf)).subsetOf(base),
-        "capped run invented a pair — must only ever MISS pairs")
-      finally spark.conf.unset("graft.ngram.hotGramCap")
-    } finally stagingWas match {
-      case Some(v) => sys.props("graft.staging") = v
-      case None => sys.props -= "graft.staging"
-    }
-    // Staging ON, capped: the lossy result must land under its OWN
-    // artifact name, never poisoning the uncapped pair list.
-    spark.conf.set("graft.ngram.hotGramCap", "2")
-    try {
-      q(spark, sf).count()
-      val capped =
-        Staging.derivedDir(Tables.path(sf, "documents"), "ngram_pairs08_cap2_v1")
-      assert(java.nio.file.Files.exists(capped.resolve("_SUCCESS")),
-        s"capped artifact not staged under its own name: $capped")
-    } finally spark.conf.unset("graft.ngram.hotGramCap")
   }
 
   test("incremental dedup: asymmetric PPJoin equals brute force across the split") {
     // Generated corpus with planted mutations; the batch-vs-corpus
     // variant must equal the brute-force cross pairs exactly (losslessness
     // of the asymmetric prefix filter), on several split points.
-    import spark.implicits._
     val bases = sample(docGen, 30, seed = 101)
     val docs: Seq[(Long, List[String])] = bases.zipWithIndex.flatMap {
       case (d, i) => Seq((i.toLong * 2, d), (i.toLong * 2 + 1, mutate(d, i)))
@@ -163,15 +145,11 @@ class NgramJaccardPropertySpec extends AnyFunSuite {
       val expected = bruteForce(docs).collect {
         case (a, b, j) if b >= bound && a < bound => (b, a, j)
       } // brute force orders a<b; incremental reports (new, old)
-      val toGrams = (xs: Seq[(Long, List[String])]) => ops.Dedup.ngramGrams(
-        xs.map { case (id, d) => (id, d.mkString(" ")) }.toDF("doc_id", "text"))
-      for (dfOrdered <- Seq(false, true)) {
-        val got = ops.Dedup
-          .ngramJaccardAcross(toGrams(newer), toGrams(older), dfOrdered)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(got === expected,
-          s"asymmetric PPJoin diverged at split $bound (dfOrdered=$dfOrdered)")
-      }
+      val index = toGrams(older)
+      val got = ops.Dedup
+        .ngramJaccardAcross(toGrams(newer), index, ops.Dedup.gramDfOf(index))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got === expected, s"asymmetric PPJoin diverged at split $bound")
     }
   }
 

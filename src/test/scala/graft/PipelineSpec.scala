@@ -131,35 +131,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(viaSpark(Seq((7L, 3L))) === Map(7L -> 3L, 3L -> 3L))
   }
 
-  test("capped CC labels stage under their own artifact name") {
-    // The labels artifact must carry the hot-gram-cap suffix, mirroring
-    // the pair list: a lossy pair graph's clusters can never be served to
-    // an uncapped dedup_cluster / pipeline_clean_pack read.
-    def docIds(rows: Set[Seq[String]]): Set[String] = rows.map(_.head)
-    spark.conf.set("graft.ngram.hotGramCap", "2")
-    val capped = try {
-      val rows = rowSet(SparkEntry.queries("dedup_cluster")(spark, sf))
-      val dir =
-        Staging.derivedDir(Tables.path(sf, "documents"), "cc_labels08_cap2_v1")
-      assert(java.nio.file.Files.exists(dir.resolve("_SUCCESS")),
-        s"capped label artifact not staged under its own name: $dir")
-      rows
-    } finally spark.conf.unset("graft.ngram.hotGramCap")
-    val uncapped = rowSet(SparkEntry.queries("dedup_cluster")(spark, sf))
-    assert(uncapped.nonEmpty, "vacuous corpus: no near-dup clusters at sf0.001")
-    // the capped graph has a SUBSET of the pairs, so every doc it
-    // clusters must also cluster in the uncapped labels
-    assert(docIds(capped).subsetOf(docIds(uncapped)),
-      "capped clustering invented a participating doc")
-  }
-
-  test("group-exact CC labels equal the full-pair-graph labels") {
+  test("dedup_cluster: exact copies cluster, identical docs under 3 tokens do not") {
     import spark.implicits._
-    // Exact-copy groups + a near-dup + identical SHORT docs: the
-    // duplicate-heavy posture (star edges to the min-doc_id rep, near-dup
-    // join over distinct texts) must reproduce the default labels exactly,
-    // including NOT clustering identical docs under 3 tokens (they never
-    // enter the default pair graph).
+    // Exact-copy groups + a near-dup + identical SHORT docs: every copy
+    // and the near-dup take the group's min doc_id, while identical docs
+    // under 3 tokens never enter the trigram pair graph, so they must NOT
+    // cluster.
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val mut = ((1 to 19).map(i => s"w$i") :+ "zz").mkString(" ") // J=17/19
     val other = (1 to 20).map(i => s"x$i").mkString(" ")
@@ -170,20 +147,15 @@ class PipelineSpec extends AnyFunSuite {
       (7L, (1 to 20).map(i => s"y$i").mkString(" ")), // unique, no pairs
       (8L, "a b"), (9L, "a b")            // identical SHORT docs
     ).map { case (id, t) => (id, t, "en", "srcA", t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ge").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val stagingWas = sys.props.get("graft.staging")
-    sys.props("graft.staging") = "false" // same artifact name would alias
+    sys.props("graft.staging") = "false" // stage nothing for a temp corpus
     try {
-      val q = SparkEntry.queries("dedup_cluster")
-      val off = rowSet(q(spark, dir))
-      spark.conf.set("graft.dedup.groupExact", "true")
-      val on = try rowSet(q(spark, dir))
-        finally spark.conf.unset("graft.dedup.groupExact")
-      assert(off.map(_.take(2)) === Set(Seq("1", "1"), Seq("2", "1"),
+      val labels = rowSet(SparkEntry.queries("dedup_cluster")(spark, dir))
+      assert(labels.map(_.take(2)) === Set(Seq("1", "1"), Seq("2", "1"),
         Seq("3", "1"), Seq("4", "1"), Seq("5", "5"), Seq("6", "5")))
-      assert(on === off, "group-exact labels diverged from the pair graph")
     } finally {
       stagingWas match {
         case Some(v) => sys.props("graft.staging") = v
