@@ -132,6 +132,31 @@ class NgramJaccardPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("df-ordered prefix is lossless on Zipfian corpora (flag off == flag on == brute force)") {
+    // The prefix order is no longer a flag: both settings are the one
+    // df-ordered plan. Both PPJoin shapes that build that prefix — the
+    // self-join and the batch-vs-index join (index df only) — must equal
+    // brute force on the hot-gram corpora alone.
+    for (round <- 0 until 3) {
+      val docs = zipfCorpus(seed = 31L * round + 5)
+      val want = bruteForce(docs)
+      assert(want.nonEmpty, s"round $round: vacuous Zipfian corpus")
+      assert(viaPipeline(docs) === want,
+        s"round $round: df-ordered self-join diverged from brute force")
+      val (newer, older) = docs.partition(_._1 >= 100L)
+      val index = toGrams(older)
+      val across = ops.Dedup
+        .ngramJaccardAcross(toGrams(newer), index, ops.Dedup.gramDfOf(index))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val wantAcross = want.collect {
+        case (a, b, j) if a < 100L && b >= 100L => (b, a, j)
+      }
+      assert(wantAcross.nonEmpty, s"round $round: no pair crosses the split")
+      assert(across === wantAcross,
+        s"round $round: df-ordered cross join diverged from brute force")
+    }
+  }
+
   test("incremental dedup: asymmetric PPJoin equals brute force across the split") {
     // Generated corpus with planted mutations; the batch-vs-corpus
     // variant must equal the brute-force cross pairs exactly (losslessness
