@@ -66,7 +66,7 @@ object Bpe {
     * exactly). */
   private def vocab0(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "documents")
-      .select(explode(split(lower(col("text")), " ")).as("word"))
+      .select(explode(Words.lowered).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wc"))
       .withColumn("toks",
         when(length(col("word")) === 0,
@@ -132,7 +132,7 @@ object Bpe {
   private def encoded(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("source"),
-        posexplode(split(lower(col("text")), " ")).as(Seq("wpos", "word")))
+        posexplode(Words.lowered).as(Seq("wpos", "word")))
       .join(trainedVocab(s, dir), "word")
       .select(col("doc_id"), col("source"), col("wpos"),
         size(col("toks")).as("ntok"),
@@ -210,13 +210,11 @@ object Bpe {
     "WITH v0 AS MATERIALIZED (SELECT word, count(*) AS wc, " +
       "list_transform(range(1, len(word) + 1), " +
       "i -> substr(word, CAST(i AS INT), 1)) AS toks " +
-      "FROM (SELECT unnest(string_split(lower(text), ' ')) AS word " +
+      s"FROM (SELECT unnest(${Words.LoweredSql}) AS word " +
       "FROM documents) GROUP BY word), " +
       (1 to BpeMerges).map(roundCte).mkString(", ") + ", " +
       "wp AS (SELECT doc_id, source, " +
-      "unnest(string_split(lower(text), ' ')) AS word, " +
-      "generate_subscripts(string_split(lower(text), ' '), 1) AS wpos " +
-      "FROM documents), " +
+      Words.positionedSql("word", "wpos") + " FROM documents), " +
       s"enc AS (SELECT wp.doc_id, wp.source, wp.wpos, len(v.toks) AS ntok, " +
       s"array_to_string(v.toks, ' ') AS wtoks " +
       s"FROM wp JOIN v$BpeMerges v USING (word)), "

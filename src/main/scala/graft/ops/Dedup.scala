@@ -54,7 +54,7 @@ object Dedup {
     * 60 bit-sums then fold over the cached hash array. */
   def simhashFp(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        transform(array_distinct(split(lower(col("text")), " ")),
+        transform(array_distinct(Words.lowered),
           t => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10)
             .cast("long")).as("th"))
       .select(col("doc_id"), simhash(col("th")).as("fp"))
@@ -351,19 +351,15 @@ object Dedup {
     ngramJaccardFromGrams(ngramGrams(docs))
 
   /** (doc_id, sorted distinct trigram array) per doc with ≥ 3 tokens.
-    * The gram expression guards its own length as well: the optimizer
-    * may evaluate a filter on `g` (the non-empty filter it infers for a
-    * downstream explode) before `size(t) >= 3`, and `element_at` past a
-    * short doc's last token throws. */
+    * The shared window ([[Words.grams]]) guards its own length, so the
+    * optimizer may evaluate a filter on `g` (the non-empty filter it
+    * infers for a downstream explode) before `size(t) >= 3` safely. */
   def ngramGrams(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+      .select(col("doc_id"), Words.lowered.as("t"))
       .where(size(col("t")) >= 3)
-      .select(col("doc_id"), when(size(col("t")) >= 3,
-        array_sort(array_distinct(transform(sequence(lit(1), size(col("t")) - 2),
-          i => concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2))))))
-          .as("g"))
+      .select(col("doc_id"),
+        array_sort(array_distinct(Words.grams(col("t"), 3))).as("g"))
 
   /** Exact trigram-Jaccard ≥ 0.8 pairs ACROSS two gram relations — the
     * incremental-ingest shape: `probe` is a small new batch, `index` the
@@ -531,7 +527,7 @@ object Dedup {
           "FROM fps"
       }.mkString(" UNION ALL ")
       "WITH tok AS (SELECT DISTINCT doc_id, " +
-        "unnest(list_distinct(string_split(lower(text), ' '))) AS t " +
+        s"unnest(list_distinct(${Words.LoweredSql})) AS t " +
         "FROM documents), " +
         "tokh AS (SELECT doc_id, " +
         "CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT) AS h FROM tok), " +

@@ -305,7 +305,7 @@ object Pipeline {
     // of rows + 1 sentinel) — bounded no matter the corpus size — instead
     // of the whole stratum on one of a handful of lang partitions.
     "sample_budget_topk" -> ((s, dir) => {
-      val toks = split(col("text"), " ")
+      val toks = Words.raw
       val ord = Seq(col("score").desc, col("doc_id"))
       val pre = Window.partitionBy(col("lang"), col("source"))
         .orderBy(ord: _*)
@@ -339,7 +339,7 @@ object Pipeline {
       packRollup(
         Tables.table(s, dir, "documents")
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")))),
+            size(Words.raw).cast("long").as("toks")))),
 
     // The doc-level packing manifest — the artifact a training run
     // actually consumes (doc → shard assignment), sharing packShards with
@@ -348,7 +348,7 @@ object Pipeline {
       packShards(
         Tables.table(s, dir, "documents")
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")),
+            size(Words.raw).cast("long").as("toks")),
         SeqBudget)
         .select("source", "doc_id", "toks", "shard")
         .orderBy("doc_id")),
@@ -364,12 +364,8 @@ object Pipeline {
     "text_bigram_nll" -> ((s, dir) => {
       val bi = graft.Staging.materialize(
         Tables.table(s, dir, "documents")
-          .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-          .where(size(col("t")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(1), size(col("t")) - 1),
-              i => struct(element_at(col("t"), i).as("w1"),
-                element_at(col("t"), i + 1).as("w2")))).as("b"))
+          .select(col("doc_id"), Words.lowered.as("t"))
+          .select(col("doc_id"), explode(Words.pairs(col("t"))).as("b"))
           .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")),
         Tables.path(dir, "documents"), "bigram_toks_v1")
       val bc = bi.groupBy("w1", "w2").agg(count(lit(1)).as("bc"))
@@ -515,14 +511,11 @@ object Pipeline {
       graft.Staging.materialize(s, Tables.path(dir, "documents"),
         "scrub_spans4_df3_v1") {
         val docs = Tables.table(s, dir, "documents")
-          .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
+          .select(col("doc_id"), Words.lowered.as("t"))
         val pg = docs
           .select(col("doc_id"),
-            explode(transform(sequence(lit(1), size(col("t")) - 3),
-              i => struct(i.as("i"), concat_ws(" ",
-                element_at(col("t"), i), element_at(col("t"), i + 1),
-                element_at(col("t"), i + 2), element_at(col("t"), i + 3))
-                .as("gram")))).as("pg"))
+            explode(Words.window(col("t"), 4)((i, ws) =>
+              struct(i.as("i"), concat_ws(" ", ws: _*).as("gram")))).as("pg"))
           .select(col("doc_id"), col("pg.i").as("i"),
             col("pg.gram").as("gram"))
         val boiler = pg.select("doc_id", "gram").distinct()
@@ -586,7 +579,7 @@ object Pipeline {
           .where(TextQuality.qualityScore >= 0.5)
           .where(draw < rate)
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")))
+            size(Words.raw).cast("long").as("toks")))
     }),
 
     // INCREMENTAL connected components (round 19) — the update step the
@@ -640,7 +633,7 @@ object Pipeline {
       val dups = ccLabels(s, dir).where(col("doc") =!= col("lbl"))
         .select(col("doc").as("doc_id"), lit(true).as("is_dup"))
       val d = Tables.table(s, dir, "documents")
-        .withColumn("n_toks", size(split(col("text"), " ")).cast("long"))
+        .withColumn("n_toks", size(Words.raw).cast("long"))
         .withColumn("q2i",
           round(TextQuality.qualityScore * 100, 0).cast("long"))
         .join(dups, Seq("doc_id"), "left")
@@ -684,7 +677,7 @@ object Pipeline {
           .where(TextQuality.qualityScore >= 0.5)
           .where(draw < rate)
           .select(col("source"), col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("toks")))
+            size(Words.raw).cast("long").as("toks")))
     }),
 
     // Context-window CHUNKING with overlap — the RAG/pretraining prep
@@ -699,9 +692,8 @@ object Pipeline {
     // sort; at 100 TB chunking is embarrassingly parallel and the output
     // is written straight back to the lake partitioned like its input.
     "text_chunk" -> ((s, dir) => {
-      val toks = split(col("text"), " ")
       Tables.table(s, dir, "documents")
-        .select(col("doc_id"), toks.as("toks"), size(toks).as("n"))
+        .select(col("doc_id"), Words.raw.as("toks"), size(Words.raw).as("n"))
         .select(col("doc_id"), col("toks"), col("n"),
           posexplode(sequence(lit(0), floor((col("n") - 1) / 24).cast("int"))))
         .select(col("doc_id"), col("pos").cast("long").as("chunk_id"),
@@ -953,7 +945,7 @@ object Pipeline {
     val toks = graft.Staging.materialize(
       Tables.table(s, dir, "documents")
         .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("tok")),
+          explode(Words.lowered).as("tok")),
       Tables.path(dir, "documents"), "unigram_toks_v1")
     // LAZY localCheckpoint barrier: cnt feeds the token join AND the
     // corpus total below; the two references re-aggregated the staged
@@ -983,15 +975,11 @@ object Pipeline {
     * corpus and every consumer reads the columnar artifact instead of
     * re-exploding the text. */
   private def grams4(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.table(s, dir, "documents")
-      .select(col("doc_id"), split(lower(col("text")), " ").as("t"))
-      .where(size(col("t")) >= 4)
     graft.Staging.materialize(
-      docs.select(col("doc_id"),
-        explode(array_distinct(transform(sequence(lit(1), size(col("t")) - 3),
-          i => concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2),
-            element_at(col("t"), i + 3))))).as("gram")),
+      Tables.table(s, dir, "documents")
+        .select(col("doc_id"), Words.lowered.as("t"))
+        .select(col("doc_id"),
+          explode(array_distinct(Words.grams(col("t"), 4))).as("gram")),
       Tables.path(dir, "documents"), "contam_grams4_v1")
   }
 
@@ -1205,7 +1193,7 @@ object Pipeline {
 
   /** `toks(doc_id, t)`: each document's lower-cased words. */
   private val LowerToksCte =
-    "toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents)"
+    s"toks AS (SELECT doc_id, ${Words.LoweredSql} AS t FROM documents)"
 
   /** The tokenize → distinct-trigram → sizes → inverted-index prefix
     * alone (no pair predicate) — shared by [[NearDupEdgesCte]] and the
@@ -1213,8 +1201,8 @@ object Pipeline {
     * carry the symmetric a<b constraint. */
   private[ops] val NearDupGramsCte =
     LowerToksCte + ", " +
-    "grams AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1), " +
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS g FROM toks WHERE len(t) >= 3), " +
+    s"grams AS (SELECT doc_id, list_distinct(${Words.gramsSql("t", 3)}) AS g " +
+    "FROM toks WHERE len(t) >= 3), " +
     "sizes AS (SELECT doc_id, len(g) AS sz FROM grams), " +
     "inv AS (SELECT doc_id, unnest(g) AS gram FROM grams)"
 
@@ -1267,7 +1255,7 @@ object Pipeline {
   /** The unigram model of the NLL keys: `toks(doc_id, tok)`, per-token
     * counts `cnt` and the corpus total `tot`. */
   private val UnigramCountsCte =
-    "WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
+    s"WITH toks AS (SELECT doc_id, unnest(${Words.LoweredSql}) AS tok FROM documents), " +
     "cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok), " +
     "tot AS (SELECT count(*) AS total FROM toks)"
 
@@ -1280,7 +1268,7 @@ object Pipeline {
   /** Per-document token counts `t(source, doc_id, toks)`. */
   private val DocToksCte =
     "t AS (SELECT source, doc_id, " +
-    "CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM documents), "
+    s"CAST(len(${Words.RawSql}) AS BIGINT) AS toks FROM documents), "
 
   /** Each document's shard: its exclusive running token sum within its
     * source over `src(source, doc_id, toks)`, `c(…, cum)`, then
@@ -1305,18 +1293,15 @@ object Pipeline {
   private def cleanPackTail(from: String): String =
     "q AS (SELECT d.doc_id, d.source, d.lang, d.text, " +
     s"round(${TextQuality.QualitySql}, 2) AS q $from), " +
-    "filt AS (SELECT source, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks FROM q " +
+    s"filt AS (SELECT source, doc_id, CAST(len(${Words.RawSql}) AS BIGINT) AS toks FROM q " +
     "WHERE q >= 0.5 AND ((doc_id * 48271) % 2147483647) % 100 < " +
     "(CASE lang WHEN 'en' THEN 25 WHEN 'de' THEN 50 WHEN 'es' THEN 75 WHEN 'fr' THEN 90 ELSE 100 END)), " +
     packTailSql("filt")
 
-  /** Distinct word 4-grams per document, `g(doc_id, gram)`: range(a, b)
-    * is end-EXCLUSIVE in DuckDB vs Spark's inclusive sequence, so
-    * range(1, len(t) - 2) == sequence(1, size - 3). */
+  /** Distinct word 4-grams per document, `g(doc_id, gram)`. */
   private val FourGramsCte =
     "WITH " + LowerToksCte + ", " +
-    "g AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 2), " +
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS gram " +
+    s"g AS (SELECT doc_id, unnest(list_distinct(${Words.gramsSql("t", 4)})) AS gram " +
     "FROM toks WHERE len(t) >= 4), "
 
   val oracles: Map[String, String] = Map(
@@ -1324,8 +1309,8 @@ object Pipeline {
     // is Spark's slice(toks, k*24+1, 32); generate_series is inclusive,
     // matching Spark's sequence.
     "text_chunk" ->
-      ("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks, " +
-        "len(string_split(text, ' ')) AS n FROM documents), " +
+      (s"WITH t AS (SELECT doc_id, ${Words.RawSql} AS toks, " +
+        s"len(${Words.RawSql}) AS n FROM documents), " +
         "g AS (SELECT doc_id, toks, n, " +
         "unnest(generate_series(0, CAST(floor((n - 1) / 24) AS BIGINT))) AS k " +
         "FROM t) " +
@@ -1402,9 +1387,9 @@ object Pipeline {
       // (proof at the query site), so the oracle needs no replay of the
       // pruning machinery
       ("WITH t AS (SELECT lang, doc_id, " +
-       "CAST(len(string_split(text,' ')) AS BIGINT) AS n_toks, " +
-       "CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / " +
-       "len(string_split(text,' ')) AS score FROM documents), " +
+       s"CAST(len(${Words.RawSql}) AS BIGINT) AS n_toks, " +
+       s"CAST(len(list_distinct(${Words.RawSql})) AS DOUBLE) / " +
+       s"len(${Words.RawSql}) AS score FROM documents), " +
        "c AS (SELECT lang, doc_id, n_toks, score, " +
        "CAST(sum(n_toks) OVER (PARTITION BY lang ORDER BY score DESC, doc_id " +
        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) " +
@@ -1416,12 +1401,11 @@ object Pipeline {
         "SELECT source, doc_id, toks, CAST(cum // 512 AS BIGINT) AS shard " +
         "FROM c ORDER BY doc_id"),
     "text_bigram_nll" ->
-      // range(1, len(t)) is end-exclusive = Spark's inclusive
-      // sequence(1, size - 1); bigram-head counts come from the SAME
-      // bigram relation on both sides so the conditionals agree exactly.
-      ("WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), " +
+      // the shared window's starts; bigram-head counts come from the
+      // SAME bigram relation on both sides so the conditionals agree exactly.
+      (s"WITH t AS (SELECT doc_id, ${Words.LoweredSql} AS t FROM documents), " +
         "bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2 FROM t, " +
-        "LATERAL (SELECT unnest(range(1, len(t))) AS i) WHERE len(t) >= 2), " +
+        s"LATERAL (SELECT unnest(${Words.startsSql("t", 2)}) AS i) WHERE len(t) >= 2), " +
         "bc AS (SELECT w1, w2, count(*) AS bc FROM bi GROUP BY 1, 2), " +
         "uc AS (SELECT w1, count(*) AS uc FROM bi GROUP BY 1) " +
         "SELECT doc_id, round(avg(-ln(CAST(bc AS DOUBLE) / uc)), 6) AS avg_nll " +
@@ -1477,11 +1461,10 @@ object Pipeline {
     // on a NULL list is NULL → coalesce(false) keeps whole untouched
     // docs, the Spark side's empty-array coalesce.
     "text_scrub_dup_spans" ->
-      ("WITH d0 AS (SELECT doc_id, string_split(lower(text), ' ') AS t " +
+      (s"WITH d0 AS (SELECT doc_id, ${Words.LoweredSql} AS t " +
         "FROM documents), " +
-        "pg AS (SELECT doc_id, i, t[i] || ' ' || t[i+1] || ' ' || " +
-        "t[i+2] || ' ' || t[i+3] AS gram " +
-        "FROM d0, unnest(range(1, len(t) - 2)) AS s(i)), " +
+        s"pg AS (SELECT doc_id, i, ${Words.gramAtSql("t", "i", 4)} AS gram " +
+        s"FROM d0, unnest(${Words.startsSql("t", 4)}) AS s(i)), " +
         "bl AS (SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM pg) " +
         "GROUP BY gram HAVING count(*) >= 3), " +
         "cov AS (SELECT pg.doc_id, unnest(generate_series(pg.i, pg.i + 3)) " +
@@ -1528,7 +1511,7 @@ object Pipeline {
       (s"WITH RECURSIVE $NearDupEdgesCte, $ReachLabelCte, " +
         "dups AS (SELECT doc AS doc_id FROM lab WHERE doc <> cluster), " +
         "m AS (SELECT d.source, d.lang, " +
-        "CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_toks, " +
+        s"CAST(len(${Words.rawSql("d.text")}) AS BIGINT) AS n_toks, " +
         s"CAST(round((${TextQuality.QualitySql}) * 100) AS BIGINT) AS q2i, " +
         "(dup.doc_id IS NOT NULL) AS is_dup " +
         "FROM documents d LEFT JOIN dups dup ON d.doc_id = dup.doc_id), " +

@@ -76,7 +76,7 @@ object Scalars {
         .orderBy("l_orderkey", "l_linenumber")),
 
     "fn_array" -> ((s, dir) => {
-      val toks = split(col("text"), " ")
+      val toks = Words.raw
       Tables.table(s, dir, "documents").select(
         col("doc_id"),
         size(toks).cast("long").as("n_tok"),
@@ -196,7 +196,7 @@ object Scalars {
     // only (token, partial count) pairs cross the wire.
     "explode_udtf_shape" -> ((s, dir) =>
       Tables.table(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("token"))
+        .select(explode(Words.raw).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token"))
         .limit(20)),
@@ -325,13 +325,13 @@ object Scalars {
        "FROM lineitem ORDER BY l_orderkey, l_linenumber"),
     "fn_array" ->
       ("SELECT doc_id, " +
-       "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok, " +
-       "list_contains(string_split(text, ' '), 'data') AS has_data, " +
-       "list_sort(string_split(text, ' '))[1] AS first_tok, " +
-       "array_to_string(list_slice(list_sort(string_split(text, ' ')), 1, 3), ',') AS first3, " +
-       "CAST(list_sum(list_transform(string_split(text, ' '), x -> length(x))) AS BIGINT) AS sum_len, " +
-       "CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 4)) AS BIGINT) AS n_long, " +
-       "CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_uniq " +
+       s"CAST(len(${Words.RawSql}) AS BIGINT) AS n_tok, " +
+       s"list_contains(${Words.RawSql}, 'data') AS has_data, " +
+       s"list_sort(${Words.RawSql})[1] AS first_tok, " +
+       s"array_to_string(list_slice(list_sort(${Words.RawSql}), 1, 3), ',') AS first3, " +
+       s"CAST(list_sum(list_transform(${Words.RawSql}, x -> length(x))) AS BIGINT) AS sum_len, " +
+       s"CAST(len(list_filter(${Words.RawSql}, x -> length(x) > 4)) AS BIGINT) AS n_long, " +
+       s"CAST(len(list_distinct(${Words.RawSql})) AS BIGINT) AS n_uniq " +
        "FROM documents ORDER BY doc_id"),
     "fn_map" ->
       ("SELECT event_id, array_to_string(json_keys(props), ',') AS keys, " +
@@ -378,7 +378,7 @@ object Scalars {
        "FROM orders ORDER BY o_orderkey"),
     "explode_udtf_shape" ->
       ("SELECT token, count(*) AS cnt FROM " +
-       "(SELECT unnest(string_split(text, ' ')) AS token FROM documents) " +
+       s"(SELECT unnest(${Words.RawSql}) AS token FROM documents) " +
        "GROUP BY token ORDER BY cnt DESC, token LIMIT 20"),
     // DuckDB spells xor as a function (its ^ is exponentiation)
     "fn_bitwise" ->

@@ -33,13 +33,13 @@ object Text {
   val queries: Map[String, Q] = Map(
     "text_wordcount" -> ((s, dir) =>
       Tables.table(s, dir, "documents")
-        .select(explode(split(lower(col("text")), " ")).as("token"))
+        .select(explode(Words.lowered).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token"))),
 
     // tf·idf with idf = ln((N+1)/(df+1)) over the shared bm25Parts tf/df
-    // (one tf barrier feeds the scoring join and df); the corpus size N
-    // is joined in as a broadcast one-row aggregate, not collected at the
+    // (tf is counted inside each document's row); the corpus size N is
+    // joined in as a broadcast one-row aggregate, not collected at the
     // driver.
     "text_tfidf" -> ((s, dir) => {
       val p = bm25Parts(s, dir)
@@ -61,11 +61,11 @@ object Text {
       * normalization separate BM25 from tf·idf. Per query term the top
       * 10 docs by (score DESC, doc_id).
       *
-      * Scale: tf/df/dl are the same explode → two-phase hash aggregates
-      * as text_tfidf; the 5-term query relation and the two 1-row
-      * corpus stats (N, avgdl) broadcast; tf joins the BROADCAST query
-      * terms FIRST, so only rows for 5 terms reach the dl join and the
-      * per-term window — which Spark plans with a partial
+      * Scale: tf and dl come from one documents scan, counted inside the
+      * row (bm25Parts), and df is one two-phase hash aggregate over them;
+      * the 5-term query relation and the 1-row corpus stats (N, avgdl)
+      * broadcast; tf joins the BROADCAST query terms FIRST, so only rows
+      * for 5 terms reach the per-term window — which Spark plans with a partial
       * WindowGroupLimit (rank ≤ 10 applied map-side before the shuffle,
       * the join_lateral posture), so no term ever sorts a corpus-sized
       * partition in one task. avgdl is an exact BIGINT token count over
@@ -128,10 +128,10 @@ object Text {
       * token positions; pairs seen < 5× are dropped (the standard
       * low-count PMI blowup guard), top 20 by (pmi DESC, w1, w2).
       *
-      * Scale: the bigram relation is built MAP-SIDE by zipping the token
-      * array with its own tail (zip_with over two slices — adjacency is
-      * a property of the array, no per-doc lead() window and therefore
-      * no corpus-sized shuffle just to see the next token; the DuckDB
+      * Scale: the bigram relation is built MAP-SIDE from the shared word
+      * window ([[Words.pairs]] — adjacency is a property of the array, no
+      * per-doc lead() window and therefore no corpus-sized shuffle just
+      * to see the next token; the DuckDB
       * replay keeps the window formulation, which doubles as an
       * independent derivation of the pairs), then everything is
       * two-phase hash aggregates; unigram counts re-attach by two
@@ -142,13 +142,9 @@ object Text {
       * scale, which is the same reason the oracle doesn't CAST late). */
     "text_collocations" -> ((s, dir) => {
       val docs = Tables.table(s, dir, "documents")
-        .select(split(lower(col("text")), " ").as("t"))
+        .select(Words.lowered.as("t"))
       val toks = docs.select(explode(col("t")).as("term"))
-      val bi = docs
-        .select(explode(zip_with(
-          slice(col("t"), lit(1), size(col("t")) - 1),
-          slice(col("t"), lit(2), size(col("t")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
+      val bi = docs.select(explode(Words.pairs(col("t"))).as("p"))
         .select(col("p.w1"), col("p.w2"))
       val cxy = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
         .where(col("c_xy") >= 5)
@@ -161,8 +157,8 @@ object Text {
         .localCheckpoint(false)
       // exact-integer identities (r21, guide §2.4): Σ unigram counts ≡
       // token positions, and every doc contributes exactly len−1 bigram
-      // positions (split() never returns an empty array, and the
-      // zip_with-of-slices bigram build yields len−1 rows per doc), so
+      // positions (split() never returns an empty array, and the word
+      // window yields len−1 pairs per doc), so
       // nb = nu − |docs|. Replaces two more full explode passes over the
       // corpus with a vocab-sized sum and a row count.
       val nu = uni.agg(sum("c").as("nu"))
@@ -185,7 +181,7 @@ object Text {
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
              D.avg2(col("n_chars")).as("avg_chars"),
-             D.avg2(size(split(col("text"), " "))).as("avg_toks"))
+             D.avg2(size(Words.raw)).as("avg_toks"))
         .orderBy("lang", "source")),
 
     "dedup_exact" -> ((s, dir) =>
@@ -214,56 +210,50 @@ object Text {
         .orderBy("doc_a", "doc_b"))
   )
 
-  /** BM25 ranking (term, rnk, doc_id, score): the full scoring pipeline
-    * behind `text_bm25`, shared with `text_rrf_fusion` so the fused
-    * ranking can never drift from the declared one. Okapi BM25 with the
-    * standard k1 = 1.2, b = 0.75; query set DERIVED from the corpus
-    * (top-5 terms by (df DESC, term) — a sort-limit, so
-    * TakeOrderedAndProject holds top-5 per partition map-side, no
-    * single-task vocab sort); tf joins the BROADCAST query terms FIRST,
-    * so only 5 terms' rows reach the dl join and the per-term window
-    * (planned as a partial WindowGroupLimit). avgdl is an exact BIGINT
-    * token count over an exact doc count divided ONCE; one shared IEEE
-    * expression tree per row, rounded 6dp at the end. */
   /** The shared tokenize → tf/dl/df → derived query set → corpus stats
     * derivations behind text_tfidf, text_bm25 AND text_rrf_fusion's
     * second ranker — ONE definition so the fusion's inputs can never
     * drift from the declared rankings (r17 review: the rrf key originally re-derived
     * all four relations inline — two full corpus tokenize+aggregate
     * pipelines per run and a silent-drift risk the oracle side had
-    * already eliminated with its shared CTE prefix). */
-  private case class Bm25Parts(tf: DataFrame, dl: DataFrame, df: DataFrame,
+    * already eliminated with its shared CTE prefix).
+    *
+    * tf is [[termFreqs]]: one documents scan, counted inside the row,
+    * with no (doc_id, term) shuffle. The corpus token total is Σ tf over
+    * the barrier (≡ the sum of the word arrays' sizes), an exact BIGINT;
+    * summing sizes over documents instead would be a second documents
+    * scan, which PlanAuditSpec's plan sweep flags in text_rrf_fusion. */
+  private case class Bm25Parts(tf: DataFrame, df: DataFrame,
                                qterms: DataFrame, n: DataFrame,
                                stats: DataFrame)
   private def bm25Parts(s: org.apache.spark.sql.SparkSession,
                         dir: String): Bm25Parts = {
     val docs = Tables.table(s, dir, "documents")
-    val toks = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("term"))
-    // LAZY localCheckpoint barrier (the q15/join_fuzzy_blocked pattern):
-    // tf feeds FOUR consumers (scoring join, df, dl, corpus stats), and
-    // static planning evaluates the subtree once per reference — pushed
-    // join-key filters make the branches structurally different, so AQE
-    // exchange reuse never fires across them (the q21 rescan class;
-    // captured in plans/r21/text_bm25_before.txt: documents scanned and
-    // exploded once per branch, 0 ReusedExchange). The barrier computes
-    // the tokenize+explode+aggregate ONCE per invocation — transient
-    // executor-local storage, never cross-run state.
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    // dl and the corpus token total are EXACT-INTEGER derivable from tf
-    // (count over toks per doc ≡ sum of tf per doc) — deriving them from
-    // the checkpointed tf instead of toks drops two more full
-    // tokenize+explode passes over the corpus to re-aggregations of the
-    // (doc, term) relation (r21, guide §2.4).
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    // LAZY localCheckpoint barrier: tf feeds two to three references (the
+    // scoring joins and df), and static planning re-runs the scan and the
+    // per-row sort once per reference. Measured on 4 cores, warm, at
+    // sf0.1 replicated 10× (ScaleProbe replica): text_rrf_fusion 3.0 and
+    // 3.4 s with the barrier (two runs), 4.7 s without it.
+    val tf = termFreqs(docs).localCheckpoint(false)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val qterms = df.orderBy(col("df").desc, col("term")).limit(5)
     val n = docs.agg(count(lit(1)).as("n"))
     val stats = tf.agg(sum("tf").as("toktot")).crossJoin(n)
       .select(col("n"), (col("toktot").cast("double") / col("n")).as("avgdl"))
-    Bm25Parts(tf, dl, df, qterms, n, stats)
+    Bm25Parts(tf, df, qterms, n, stats)
   }
+
+  /** `(doc_id, dl, term, tf)` for any (doc_id, text) relation: each
+    * document's term frequencies counted inside its row
+    * ([[Words.valueCounts]] over its lowered words), with the document
+    * length dl = the word array's size. NULL-text documents have no
+    * rows. */
+  private[graft] def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Words.lowered.as("t"))
+      .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
+        inline(Words.valueCounts(col("t"))))
+      .select(col("doc_id"), col("dl"), col("v").as("term"),
+        col("c").cast("long").as("tf"))
 
   /** The text_tfidf scoring expression (tf · ln((N+1)/(df+1)), 6dp) —
     * shared with text_rrf_fusion's second ranker. */
@@ -273,9 +263,19 @@ object Text {
   private def bm25Top10(s: org.apache.spark.sql.SparkSession,
                         dir: String): DataFrame = bm25Top10(bm25Parts(s, dir))
 
-  /** Parts-taking overload so text_rrf_fusion derives BOTH rankers from
-    * ONE Bm25Parts instance — the two-call form built every shared
-    * subtree (tf/df/qterms/stats) twice per plan (r21). */
+  /** BM25 ranking (term, rnk, doc_id, score): the full scoring pipeline
+    * behind `text_bm25`, shared with `text_rrf_fusion` so the fused
+    * ranking can never drift from the declared one. Okapi BM25 with the
+    * standard k1 = 1.2, b = 0.75; query set DERIVED from the corpus
+    * (top-5 terms by (df DESC, term) — a sort-limit, so
+    * TakeOrderedAndProject holds top-5 per partition map-side, no
+    * single-task vocab sort); tf joins the BROADCAST query terms FIRST,
+    * so only 5 terms' rows reach the per-term window (planned as a
+    * partial WindowGroupLimit). avgdl is an exact BIGINT token count over
+    * an exact doc count divided ONCE; one shared IEEE expression tree per
+    * row, rounded 6dp at the end. Parts-taking so text_rrf_fusion derives
+    * BOTH rankers from ONE Bm25Parts instance — the two-call form built
+    * every shared subtree (tf/df/qterms/stats) twice per plan (r21). */
   private def bm25Top10(p: Bm25Parts): DataFrame = {
     val k1 = lit(1.2)
     val b = lit(0.75)
@@ -283,7 +283,6 @@ object Text {
     val score = idf * (col("tf") * (k1 + 1.0)) /
       (col("tf") + k1 * (lit(1.0) - b + b * (col("dl") / col("avgdl"))))
     val scored = p.tf.join(broadcast(p.qterms), "term")
-      .join(p.dl, "doc_id")
       .crossJoin(broadcast(p.stats))
       .select(col("term"), col("doc_id"), round(score, 6).as("score"))
     val w = org.apache.spark.sql.expressions.Window
@@ -309,7 +308,7 @@ object Text {
         t => md5(concat(lit(s"$i:"), t).cast("binary"))))
     }: _*)
     docs.select(col("doc_id"),
-        array_distinct(split(lower(col("text")), " ")).as("toks"))
+        array_distinct(Words.lowered).as("toks"))
       .select(col("doc_id"), sig.as("sig"))
   }
 
@@ -376,7 +375,7 @@ object Text {
     * bm25Top10 so a k1/b/idf change can never update one replay and
     * leave the other describing a different ranking. */
   private val Bm25RankedCte =
-    "toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term " +
+    s"toks AS (SELECT doc_id, unnest(${Words.LoweredSql}) AS term " +
     "FROM documents), " +
     "tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term), " +
     "dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id), " +
@@ -399,9 +398,7 @@ object Text {
     // left-associated double product tree inside ln, 6dp once.
     "text_collocations" ->
       ("WITH toks AS (SELECT doc_id, " +
-       "unnest(string_split(lower(text), ' ')) AS term, " +
-       "generate_subscripts(string_split(lower(text), ' '), 1) AS pos " +
-       "FROM documents), " +
+       Words.positionedSql("term", "pos") + " FROM documents), " +
        "bi AS (SELECT term AS w1, lead(term) OVER (PARTITION BY doc_id " +
        "ORDER BY pos) AS w2 FROM toks), " +
        "bi2 AS (SELECT w1, w2 FROM bi WHERE w2 IS NOT NULL), " +
@@ -434,7 +431,7 @@ object Text {
         .map(i => s"CASE WHEN a.s$i = b.s$i THEN 1 ELSE 0 END")
         .mkString(" + ")
       "WITH tok AS (SELECT DISTINCT doc_id, " +
-        "unnest(list_distinct(string_split(lower(text), ' '))) AS t " +
+        s"unnest(list_distinct(${Words.LoweredSql})) AS t " +
         "FROM documents), " +
         s"sigs AS (SELECT doc_id, $sigCols FROM tok GROUP BY doc_id), " +
         s"bands AS ($bandSel), " +
@@ -450,10 +447,10 @@ object Text {
     },
     "text_wordcount" ->
       ("SELECT token, count(*) AS cnt FROM " +
-       "(SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents) " +
+       s"(SELECT unnest(${Words.LoweredSql}) AS token FROM documents) " +
        "GROUP BY token ORDER BY cnt DESC, token"),
     "text_tfidf" ->
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term " +
+      (s"WITH toks AS (SELECT doc_id, unnest(${Words.LoweredSql}) AS term " +
        "FROM documents), " +
        "tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term), " +
        "df AS (SELECT term, count(*) AS df FROM tf GROUP BY term), " +
@@ -495,7 +492,7 @@ object Text {
        "(200 * sum(n_chars) + count(n_chars)) // (2 * count(n_chars)) " +
        "/ 100.0 AS avg_chars, " +
        "(200 * sum(nt) + count(nt)) // (2 * count(nt)) / 100.0 AS avg_toks " +
-       "FROM (SELECT *, len(string_split(text, ' ')) AS nt FROM documents) " +
+       s"FROM (SELECT *, len(${Words.RawSql}) AS nt FROM documents) " +
        "GROUP BY lang, source ORDER BY lang, source"),
     "dedup_exact" ->
       ("SELECT lang, count(DISTINCT lower(trim(text))) AS uniq_docs, " +

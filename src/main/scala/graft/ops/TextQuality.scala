@@ -14,6 +14,7 @@ import org.apache.spark.sql.functions._
   * all built-in higher-order functions running map-side inside whole-stage
   * codegen; only (key, partial-agg) pairs cross the shuffle. No UDFs, no
   * driver-side collection, so each op scales linearly with corpus bytes.
+  * Tokens, word n-grams and in-row value counts come from [[Words]].
   */
 /** The PII class patterns + redaction chain, shared by the
   * `text_pii_redact` query and its spec (which plants REAL body PII the
@@ -38,6 +39,7 @@ private[graft] object PiiRedact {
 }
 
 object TextQuality {
+  import Words.valueCounts
 
   /** Fixed per-language keyword lists. The synthetic corpus shares one
     * vocabulary across langs, so these grade the MECHANICS (deterministic
@@ -79,7 +81,7 @@ object TextQuality {
   /** Per-document sentiment score: sum of token valences, folded map-side
     * over the split — one pass, zero per-token shuffle rows. */
   private[graft] def sentimentScore: Column =
-    aggregate(split(lower(col("text")), " "), lit(0L),
+    aggregate(Words.lowered, lit(0L),
       (acc, t) => acc + sentimentValence(t))
 
   /** The lexicon as a DuckDB VALUES list, generated from the same Seq. */
@@ -87,11 +89,11 @@ object TextQuality {
     sentimentLexicon.map { case (w, v) => s"('$w', $v)" }.mkString(", ")
 
   /** Distinct lower-cased whitespace tokens. */
-  private val toks: Column = array_distinct(split(lower(col("text")), " "))
+  private val toks: Column = array_distinct(Words.lowered)
 
   /** Polynomial rolling hash of a token (fold over char codes, mod 1e9+7). */
   private def tokenHash(t: Column): Column =
-    aggregate(transform(split(t, ""), c => ascii(c).cast("long")),
+    aggregate(transform(Words.chars(t), c => ascii(c).cast("long")),
       lit(0L), (a, b) => (a * 31 + b) % 1000000007L)
 
   /** Weighted quality score over (text, n_chars) columns, rounded to 2dp —
@@ -101,7 +103,7 @@ object TextQuality {
     * on exact integer-derived doubles; parity with the DuckDB replica is
     * proven by text_quality's green oracle row. */
   def qualityScore: Column = {
-    val nToks = size(split(lower(col("text")), " "))
+    val nToks = size(Words.lowered)
     val stopRatio = size(array_intersect(toks,
       lit_arr(Seq("the", "a", "and", "of", "to")))).cast("double") / nToks
     val symRatio =
@@ -119,9 +121,9 @@ object TextQuality {
     * the oracles of `text_quality` and of the clean_pack pipelines. */
   private[ops] val QualitySql =
     "(CASE WHEN d.n_chars BETWEEN 50 AND 5000 THEN 0.4 ELSE 0.0 END) + " +
-    "(CASE WHEN d.n_chars * 1.0 / len(string_split(lower(d.text), ' ')) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
-    "(CASE WHEN len(list_intersect(list_distinct(string_split(lower(d.text), ' ')), " +
-    "['the','a','and','of','to'])) * 1.0 / len(string_split(lower(d.text), ' ')) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
+    s"(CASE WHEN d.n_chars * 1.0 / len(${Words.loweredSql("d.text")}) BETWEEN 3.0 AND 10.0 THEN 0.3 ELSE 0.0 END) + " +
+    s"(CASE WHEN len(list_intersect(list_distinct(${Words.loweredSql("d.text")}), " +
+    s"['the','a','and','of','to'])) * 1.0 / len(${Words.loweredSql("d.text")}) > 0.01 THEN 0.2 ELSE 0.0 END) + " +
     "(CASE WHEN len(regexp_replace(lower(d.text), '[a-z0-9 ]', '', 'g')) * 1.0 / d.n_chars < 0.1 THEN 0.1 ELSE 0.0 END)"
 
   /** RAKE stopword set — the fixed filler vocabulary across the corpus's
@@ -134,39 +136,14 @@ object TextQuality {
   private def rakeStopsSql: String =
     RakeStops.map(w => s"'$w'").mkString(", ")
 
-  /** Evaluates `v` once and hands it to `body` as a lambda variable.
-    * Higher-order functions evaluate their lambda bodies interpreted, per
-    * element, with no common-subexpression elimination, so a computed
-    * array named inside a lambda body would be recomputed for every
-    * element; a bound variable is a plain read. */
-  private def bind(v: Column)(body: Column => Column): Column =
-    get(transform(array(v), body), lit(0))
-
-  /** Value counts of an array, computed inside the row: the distinct
-    * values with their multiplicities, as `array<struct<v, c>>` in
-    * ascending binary order. Sorts once; a run starts at each 1-based
-    * position whose value differs (null-safe) from its left neighbour,
-    * and runs until the next start. `get` is 0-based and NULL off either
-    * end, so no index can throw under ANSI mode, and an empty array has
-    * no runs. Cost per row: one O(n log n) sort plus O(n). */
-  private def valueCounts(xs: Column): Column = bind(array_sort(xs)) { s =>
-    val n = size(s)
-    bind(filter(sequence(lit(1), n),
-        i => !(get(s, i - 1) <=> get(s, i - 2)))) { starts =>
-      transform(starts, (st, k) => struct(
-        get(s, st - 1).as("v"),
-        (coalesce(get(starts, k + 1), n + 1) - st).as("c")))
-    }
-  }
-
   /** Per-document repetition signals: most frequent word and its mass,
     * repeated-word mass, most frequent adjacent bigram's mass. Every
     * output depends on one document only, so everything is counted
-    * inside the row ([[valueCounts]]) — one scan, no shuffle before the
+    * inside the row ([[Words.valueCounts]]) — one scan, no shuffle before the
     * output sort. Ties on the top word break to the smallest word:
     * the (−count, word) minimum over the runs, the order a
-    * `row_number() over (c desc, w)` window picks by. Bigrams zip the
-    * token array with its own tail (the text_collocations idiom). All
+    * `row_number() over (c desc, w)` window picks by. Bigrams are the
+    * shared word window's ([[Words.grams]]). All
     * fractions are ratios of exact integer counts (bit-identical double
     * division in both engines, same posture as win_distribution)
     * rounded 6dp. Single-word and NULL-text documents have no bigram
@@ -174,14 +151,11 @@ object TextQuality {
     * for them). */
   private[graft] def repetition(docs: DataFrame): DataFrame = {
     val ws = col("ws")
-    val bigrams = zip_with(
-      slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
-      (a, b) => concat(a, lit(" "), b))
-    docs.select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
+    docs.select(col("doc_id"), Words.lowered.as("ws"))
       .where(size(ws) >= 2)
       .select(col("doc_id"), size(ws).cast("long").as("n_words"),
         valueCounts(ws).as("wc"),
-        array_max(transform(valueCounts(bigrams), _("c"))).as("bc"))
+        array_max(transform(valueCounts(Words.grams(ws, 2)), _("c"))).as("bc"))
       .select(col("doc_id"), col("n_words"), col("bc"),
         size(col("wc")).as("n_distinct"),
         array_min(transform(col("wc"),
@@ -210,7 +184,7 @@ object TextQuality {
   private[graft] def entropy(docs: DataFrame): DataFrame = {
     def p(x: Column) = x("c").cast("double") / col("n_toks")
     docs.where(col("text").isNotNull)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("ws"))
+      .select(col("doc_id"), Words.lowered.as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("long").as("n_toks"),
         valueCounts(col("ws")).as("wc"))
       .select(col("doc_id"), col("n_toks"),
@@ -245,7 +219,7 @@ object TextQuality {
         s, Tables.path(dir, "documents"), "rake_members_v1") {
         val toks = Tables.table(s, dir, "documents")
           .select(col("doc_id"),
-            posexplode(split(lower(col("text")), " ")))
+            posexplode(Words.lowered))
           .withColumnRenamed("col", "w")
         val wDoc = Window.partitionBy("doc_id").orderBy("pos")
         toks
@@ -285,7 +259,7 @@ object TextQuality {
     "text_heavy_hitters" -> ((s, dir) => {
       val cnt = Tables.table(s, dir, "documents")
         .select(col("source"),
-          explode(split(lower(col("text")), " ")).as("tok"))
+          explode(Words.lowered).as("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("cnt").desc, col("tok"))
@@ -356,7 +330,7 @@ object TextQuality {
     // Token counting: whitespace tokens vs a BPE-ish regex lex
     // ([a-z]+ | digit runs | single symbols), aggregated per lang.
     "text_tokens" -> ((s, dir) => {
-      val ws = size(split(col("text"), " "))
+      val ws = size(Words.raw)
       val re = size(regexp_extract_all(lower(col("text")),
         lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0)))
       Tables.table(s, dir, "documents")
@@ -376,7 +350,7 @@ object TextQuality {
       Tables.table(s, dir, "documents")
         .select(col("doc_id"),
           aggregate(
-            transform(split(lower(col("text")), " "), tokenHash(_)),
+            transform(Words.lowered, tokenHash(_)),
             lit(0L), (a, b) => (a * 131 + b) % 1000000007L).as("fp"))
         .orderBy("doc_id")),
 
@@ -545,9 +519,7 @@ object TextQuality {
     // 0.0 init ≡ Spark's aggregate left fold).
     "text_keywords_rake" ->
       ("WITH tok AS (SELECT doc_id, " +
-       "unnest(string_split(lower(text), ' ')) AS w, " +
-       "generate_subscripts(string_split(lower(text), ' '), 1) AS pos " +
-       "FROM documents), " +
+       Words.positionedSql("w", "pos") + " FROM documents), " +
        s"seg AS (SELECT doc_id, pos, w, w IN ($rakeStopsSql) AS is_stop, " +
        s"sum(CASE WHEN w IN ($rakeStopsSql) THEN 1 ELSE 0 END) " +
        "OVER (PARTITION BY doc_id ORDER BY pos) AS pid FROM tok), " +
@@ -606,7 +578,7 @@ object TextQuality {
       // both. Sums cast to BIGINT (DuckDB widens to HUGEINT).
       (s"WITH lex(word, valence) AS (VALUES $sentimentLexValues), " +
        "tok AS (SELECT doc_id, lang, source, " +
-       "unnest(string_split(lower(text), ' ')) AS word FROM documents), " +
+       s"unnest(${Words.LoweredSql}) AS word FROM documents), " +
        "scored AS (SELECT t.doc_id, t.lang, t.source, " +
        "CAST(coalesce(sum(l.valence), 0) AS BIGINT) AS score " +
        "FROM tok t LEFT JOIN lex l ON t.word = l.word " +
@@ -664,13 +636,13 @@ object TextQuality {
        "CAST(sum(qid) AS BIGINT) AS qid_sum " +
        "FROM u GROUP BY host ORDER BY host"),
     "text_heavy_hitters" ->
-      ("WITH c AS (SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
+      (s"WITH c AS (SELECT source, unnest(${Words.LoweredSql}) AS tok FROM documents), " +
         "g AS (SELECT source, tok, count(*) AS cnt FROM c GROUP BY 1, 2), " +
         "r AS (SELECT source, tok, cnt, row_number() OVER " +
         "(PARTITION BY source ORDER BY cnt DESC, tok) AS rnk FROM g) " +
         "SELECT source, rnk, tok, cnt FROM r WHERE rnk <= 5 ORDER BY source, rnk"),
     "text_langid" ->
-      ("WITH toks AS (SELECT lang, list_distinct(string_split(lower(text), ' ')) AS t FROM documents), " +
+      (s"WITH toks AS (SELECT lang, list_distinct(${Words.LoweredSql}) AS t FROM documents), " +
         "scored AS (SELECT lang, " +
         "len(list_intersect(t, ['the','a','scan','filter','sort'])) AS s_en, " +
         "len(list_intersect(t, ['der','die','das','und','agg'])) AS s_de, " +
@@ -691,14 +663,14 @@ object TextQuality {
       // CAST: DuckDB sum(INTEGER) yields HUGEINT, which its parquet writer
       // emits as double — byte-mismatching Spark's int64 despite equal
       // values. Cast every integer sum to BIGINT (diagnosed in VERDICT r2).
-      ("SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_ws, " +
+      (s"SELECT lang, CAST(sum(len(${Words.RawSql})) AS BIGINT) AS sum_ws, " +
         "CAST(sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]'))) AS BIGINT) AS sum_re, " +
-        "round(avg(len(string_split(text, ' '))), 2) AS avg_ws " +
+        s"round(avg(len(${Words.RawSql})), 2) AS avg_ws " +
         "FROM documents GROUP BY lang ORDER BY lang"),
     // Entropy fold replayed in the same token order (list ORDER BY w ≡
     // array_sort) with the same exact-int p = c/n and the proven ln pair.
     "text_entropy" ->
-      ("WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents), " +
+      (s"WITH tok AS (SELECT doc_id, unnest(${Words.LoweredSql}) AS w FROM documents), " +
         "wc AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w), " +
         "d AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_toks, " +
         "CAST(count(*) AS BIGINT) AS n_distinct, " +
@@ -716,9 +688,9 @@ object TextQuality {
        "substring(norm, 1, 40) AS head FROM n ORDER BY doc_id"),
     "text_fingerprint" ->
       ("SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(string_split(lower(text), ' '), " +
+        s"list_transform(${Words.LoweredSql}, " +
         "t -> list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(string_split(t, ''), c -> CAST(ascii(c) AS BIGINT))), " +
+        s"list_transform(${Words.charsSql("t")}, c -> CAST(ascii(c) AS BIGINT))), " +
         "(a, b) -> (a * 31 + b) % 1000000007))), " +
         "(a, b) -> (a * 131 + b) % 1000000007) AS fp FROM documents ORDER BY doc_id"),
     // count(*)/count(DISTINCT) are BIGINT in DuckDB (no HUGEINT hazard);
@@ -727,9 +699,7 @@ object TextQuality {
     // bigrams.
     "text_repetition" ->
       ("WITH toks AS (SELECT doc_id, " +
-        "unnest(string_split(lower(text), ' ')) AS w, " +
-        "generate_subscripts(string_split(lower(text), ' '), 1) AS pos " +
-        "FROM documents), " +
+        Words.positionedSql("w", "pos") + " FROM documents), " +
         "tot AS (SELECT doc_id, count(*) AS n_words, " +
         "count(DISTINCT w) AS n_distinct FROM toks GROUP BY 1), " +
         "wc AS (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2), " +

@@ -524,7 +524,7 @@ object Vector {
         .groupBy("label")
         .agg(count(lit(1)).as("n"),
              D.r2(avg("n_chars")).as("avg_chars"),
-             D.r2(avg(size(split(col("text"), " ")))).as("avg_toks"))
+             D.r2(avg(size(Words.raw))).as("avg_toks"))
         .orderBy("label")
     })
   )
@@ -713,7 +713,7 @@ object Vector {
        "FROM reach GROUP BY doc ORDER BY doc"),
     "multimodal_join" ->
       ("SELECT label, count(*) AS n, round(avg(n_chars), 2) AS avg_chars, " +
-       "round(avg(len(string_split(text, ' '))), 2) AS avg_toks " +
+       s"round(avg(len(${Words.RawSql})), 2) AS avg_toks " +
        "FROM documents JOIN embeddings ON doc_id = vec_id " +
        "GROUP BY label ORDER BY label"),
     // Power-iteration replay: three chained (project → fixed-point

@@ -725,6 +725,28 @@ class PlanAuditSpec extends AnyFunSuite {
         s"$k shuffles on a hash key — no longer row-local:\n${plans(k)}")
   }
 
+  test("text_tfidf, text_bm25 and text_rrf_fusion count tf inside the row") {
+    // tf is counted inside each document's row and sits behind one lazy
+    // barrier: the barrier's lineage (not executed yet, so whole) holds
+    // no shuffle, and no (doc_id, …) hash exchange feeds the df
+    // aggregate anywhere else in the plan.
+    import org.apache.spark.sql.execution.RDDScanExec
+    for (k <- Seq("text_tfidf", "text_bm25", "text_rrf_fusion")) {
+      val p = plans(k)
+      assert("Exchange hashpartitioning\\(doc_id".r.findFirstIn(p).isEmpty,
+        s"$k shuffles on doc_id — tf no longer row-local:\n$p")
+      sys.props("graft.staging") = "false"
+      val barriers =
+        try SparkEntry.queries(k)(spark, sf).queryExecution.sparkPlan
+          .collect { case r: RDDScanExec => r.rdd }.distinctBy(_.id)
+        finally sys.props.remove("graft.staging")
+      assert(barriers.size == 1, s"$k: expected one tf barrier")
+      val lineage = barriers.head.toDebugString
+      assert(!lineage.contains("Shuffled"),
+        s"$k: the tf barrier computes a shuffle:\n$lineage")
+    }
+  }
+
   test("text_pii_redact: one rollup shuffle, pruned scan, partial aggs") {
     // The scrub must scale as a scan: all regex work map-side inside the
     // projection, ONE (lang, source) rollup (partial+final — only

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * row (`text_repetition`, `text_entropy`): each is replayed on the
   * driver over an edge-case fixture, `text_entropy` is checked against
   * its explode + groupBy formulation on the corpus and the fixture, and
-  * both output schemas are pinned. */
+  * both output schemas are pinned. The term frequencies behind
+  * `text_tfidf`, `text_bm25` and `text_rrf_fusion` are counted inside the
+  * row the same way and checked against their explode + groupBy form. */
 class TextRowLocalSpec extends AnyFunSuite {
   import TestSpark._
   import graft.ops.TextQuality.{entropy, repetition}
@@ -120,6 +122,35 @@ class TextRowLocalSpec extends AnyFunSuite {
     assert(rowSet(declared) === rowSet(explodeEntropy(corpus)))
     assert(declared.count() > 0)
     assert(rowSet(entropy(fixture)) === rowSet(explodeEntropy(fixture)))
+  }
+
+  /** tf and dl as they were built before counting moved inside the row:
+    * explode → groupBy(doc_id, term), dl = Σ tf per doc. */
+  private def explodeTf(docs: DataFrame): DataFrame = {
+    val tf = docs
+      .select(col("doc_id"),
+        explode(split(lower(col("text")), " ")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    tf.join(tf.groupBy("doc_id").agg(sum("tf").as("dl")), "doc_id")
+      .select("doc_id", "dl", "term", "tf")
+  }
+
+  test("in-row tf ≡ explode + groupBy(doc_id, term) formulation") {
+    import graft.ops.Text.termFreqs
+    assert(rowSet(termFreqs(fixture)) === rowSet(explodeTf(fixture)))
+    // ties, empty tokens and the NULL-text doc (no rows) on the fixture
+    val tf = termFreqs(fixture).collect()
+      .map(r => (r.getLong(0), r.getString(2)) -> r.getLong(3)).toMap
+    assert(tf((1L, "a")) == 2L && tf((1L, "b")) == 2L && tf((1L, "c")) == 1L)
+    assert(tf((3L, "")) == 3L && tf((9L, "")) == 3L && tf((5L, "")) == 1L)
+    assert(!tf.keys.exists(_._1 == 6L))
+    val corpus = Tables.table(spark, sf, "documents")
+    val got = termFreqs(corpus)
+    assert(got.count() > 0)
+    assert(rowSet(got) === rowSet(explodeTf(corpus)))
+    assert(got.schema.map(f => f.name -> f.dataType) == Seq(
+      "doc_id" -> LongType, "dl" -> LongType,
+      "term" -> StringType, "tf" -> LongType))
   }
 
   test("text_repetition and text_entropy output schemas are pinned") {
